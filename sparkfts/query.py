@@ -34,7 +34,9 @@ from __future__ import annotations
 import math
 import os
 import re
-from typing import Iterable
+import threading
+from collections import OrderedDict
+from typing import Iterable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -49,15 +51,23 @@ def _bm25_idf(N: float, df: float) -> float:
     return math.log(1.0 + (N - df + 0.5) / (df + 0.5))
 
 
+def _row_order(rows: pd.DataFrame) -> np.ndarray:
+    """Positions that order one term's dictionary rows so concatenated
+    decoded docids come out globally ascending: by (shard, chunk) —
+    shards are contiguous ascending docid ranges and chunks are
+    docid-range-ordered within a shard (build.py encoder). Stable:
+    single-shard callers pass unique chunk ids, but topk_local scores
+    ALL shards' rows in one call, where chunk ids repeat across
+    shards."""
+    chunk = rows["chunk"].to_numpy()
+    if "shard" in rows.columns:
+        return np.lexsort((chunk, rows["shard"].to_numpy()))
+    return np.argsort(chunk, kind="stable")
+
+
 def _order_rows(rows: pd.DataFrame) -> pd.DataFrame:
-    """Order one term's dictionary rows so concatenated decoded docids
-    come out globally ascending: by (shard, chunk) — shards are
-    contiguous ascending docid ranges and chunks are docid-range-ordered
-    within a shard (build.py encoder). Stable sort: single-shard callers
-    pass unique chunk ids, but topk_local scores ALL shards' rows in one
-    call, where chunk ids repeat across shards."""
-    cols = ["shard", "chunk"] if "shard" in rows.columns else ["chunk"]
-    return rows.sort_values(cols, kind="stable")
+    """The rows themselves in _row_order."""
+    return rows.iloc[_row_order(rows)]
 
 
 # Block-decode telemetry (test/diagnostic only — plain dict increments,
@@ -70,15 +80,21 @@ def reset_decode_counters() -> None:
     DECODE_COUNTERS["blocks"] = 0
 
 
+def _ordered_cols(rows: pd.DataFrame, *cols: str) -> list[np.ndarray]:
+    """Object arrays of ``cols`` in _row_order (no per-row tuples)."""
+    o = _row_order(rows)
+    return [rows[c].to_numpy()[o] for c in cols]
+
+
 def _decode_term_rows(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Decode all chunks of one term → concatenated (docids, tfs, dls)
-    in globally ascending docid order (see _order_rows)."""
+    in globally ascending docid order (see _row_order)."""
     parts = []
-    for r in _order_rows(rows).itertuples():
-        DECODE_COUNTERS["blocks"] += len(r.block_n)
-        parts.append(codec.decode_postings(r.blob,
-                                           np.asarray(r.block_off),
-                                           np.asarray(r.block_n)))
+    for blob, offs, ns in zip(*_ordered_cols(rows, "blob", "block_off",
+                                             "block_n")):
+        DECODE_COUNTERS["blocks"] += len(ns)
+        parts.append(codec.decode_postings(blob, np.asarray(offs),
+                                           np.asarray(ns)))
     return (np.concatenate([p[0] for p in parts]),
             np.concatenate([p[1] for p in parts]),
             np.concatenate([p[2] for p in parts]))
@@ -88,15 +104,16 @@ def _decode_selected(rows: pd.DataFrame, keep_mask_per_row: list[np.ndarray],
                      ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Decode only the selected blocks of one term's chunk rows."""
     d, t, l = [], [], []
-    for (r, keep) in zip(_order_rows(rows).itertuples(),
-                         keep_mask_per_row):
+    for blob, offs, ns, keep in zip(*_ordered_cols(rows, "blob",
+                                                   "block_off", "block_n"),
+                                    keep_mask_per_row):
         sel = np.flatnonzero(keep)
         if sel.size == 0:
             continue
         DECODE_COUNTERS["blocks"] += int(sel.size)
-        offs = np.asarray(r.block_off)
-        ns = np.asarray(r.block_n)
-        buf = np.frombuffer(r.blob, dtype=np.uint8)
+        offs = np.asarray(offs)
+        ns = np.asarray(ns)
+        buf = np.frombuffer(blob, dtype=np.uint8)
         ends = codec.varint_ends(buf)   # one scan per blob, not per block
         for bi in sel:
             dd, tt, ll = codec.decode_block(buf, int(offs[bi]),
@@ -2020,6 +2037,87 @@ def sj_global_topk(tops: DataFrame, k: int) -> DataFrame:
             .select("qid", "rank", "docid", "score"))
 
 
+class _RowGroup(NamedTuple):
+    """One parquet row group of a driver-read table: its cache key,
+    fragment, id, footer min/max of the table's key column (None when
+    the footer has no statistics, so it is never pruned) and on-disk
+    (compressed) bytes."""
+    key: tuple[str, int]
+    frag: object
+    rg: int
+    lo: object
+    hi: object
+    nbytes: int
+
+
+class _RowGroupCatalog:
+    """The row groups of one parquet table, listed once per handle from
+    a pyarrow dataset's fragments (in the dataset's file order), with
+    the footer min/max of ``key`` — the column the table is sorted on
+    within a file: docid (docstore), th (postings), term (term_stats).
+    Pruning by those summary statistics is the footer-only half of a
+    point lookup; ``load`` decodes one surviving row group together
+    with its sorted key array, and ``take`` answers a lookup on loaded
+    row groups with searchsorted + Table.take."""
+
+    def __init__(self, dataset, key: str):
+        self.schema = dataset.schema
+        self.key = key
+        self.groups: list[_RowGroup] = []
+        for frag in dataset.get_fragments():
+            md = frag.metadata
+            for i in range(md.num_row_groups):
+                rg = md.row_group(i)
+                cols = [rg.column(j) for j in range(rg.num_columns)]
+                st = next(c for c in cols
+                          if c.path_in_schema == key).statistics
+                lo, hi = ((st.min, st.max) if st is not None
+                          and st.has_min_max else (None, None))
+                self.groups.append(_RowGroup(
+                    (frag.path, i), frag, i, lo, hi,
+                    sum(c.total_compressed_size for c in cols)))
+
+    def candidates(self, want: np.ndarray) -> list[_RowGroup]:
+        """Row groups whose [min, max] may hold a key of ``want``
+        (sorted, unique)."""
+        return [g for g in self.groups
+                if g.lo is None
+                or (np.searchsorted(want, g.lo, "left")
+                    < np.searchsorted(want, g.hi, "right"))]
+
+    def load(self, g: _RowGroup):
+        """((table, sorted keys, sort order or None), bytes held) for
+        one row group, read with the dataset schema so hive partition
+        columns come back exactly as a dataset scan gives them."""
+        tbl = g.frag.subset(row_group_ids=[g.rg]).to_table(
+            schema=self.schema)
+        keys = tbl.column(self.key).to_numpy(zero_copy_only=False)
+        order = (None if np.all(keys[:-1] <= keys[1:])
+                 else np.argsort(keys, kind="stable"))
+        skeys = keys if order is None else keys[order]
+        held = tbl.nbytes + skeys.nbytes + (0 if order is None
+                                            else order.nbytes)
+        if skeys.dtype == object:   # one str object per key
+            held += tbl.column(self.key).nbytes + 56 * skeys.size
+        return (tbl, skeys, order), held
+
+    def take(self, entries: list, want: np.ndarray):
+        """Rows whose key is in ``want`` from the loaded ``entries``,
+        concatenated in entry then row order."""
+        import pyarrow as pa
+        parts = []
+        for tbl, skeys, order in entries:
+            lo = np.searchsorted(skeys, want, "left")
+            n = np.searchsorted(skeys, want, "right") - lo
+            sel = np.arange(n.sum()) + np.repeat(lo - (np.cumsum(n) - n), n)
+            if order is not None:
+                sel = np.sort(order[sel])
+            if sel.size:
+                parts.append(tbl.take(sel))
+        return (pa.concat_tables(parts) if parts
+                else self.schema.empty_table())
+
+
 class FTSIndex:
     """Loaded index handle; query entry points."""
 
@@ -2068,6 +2166,22 @@ class FTSIndex:
         self._term_stats = spark.read.parquet(
             storage.path(root, "term_stats"))
         self._docstore = spark.read.parquet(storage.path(root, "docstore"))
+        # driver-local serving state (see _cached): one lock guards the
+        # term caches, the row-group cache and the read counters
+        self._lock = threading.Lock()
+        self._pa_ds = self._pa_docstore = None
+        self._catalogs: dict[str, _RowGroupCatalog] = {}
+        self._term_cache: "OrderedDict[str, pd.DataFrame]" = OrderedDict()
+        self._dec_cache: OrderedDict = OrderedDict()
+        self._part_cache: OrderedDict = OrderedDict()
+        self._rg_cache: OrderedDict = OrderedDict()
+        self._term_cache_sz: dict = {}
+        self._dec_cache_sz: dict = {}
+        self._part_cache_sz: dict = {}
+        self._rg_cache_sz: dict = {}
+        self._read_counters = dict.fromkeys(
+            ("row_groups_read", "row_groups_pruned", "row_groups_cached",
+             "bytes_read"), 0)
 
     # -- helpers -----------------------------------------------------
     def _field(self, field: str | None) -> tuple[str, float]:
@@ -3167,25 +3281,27 @@ class FTSIndex:
 
     def _pa_datasets(self):
         import pyarrow.dataset as ds
-        if not hasattr(self, "_pa_postings"):
-            # file listing once per handle, not per query
-            self._pa_postings = ds.dataset(
-                storage.path(self.root, "postings"),
-                format="parquet", partitioning="hive")
-            self._pa_term_stats = ds.dataset(
-                storage.path(self.root, "term_stats"), format="parquet")
-        return self._pa_postings, self._pa_term_stats
+        if self._pa_ds is None:
+            # file listing once per handle, not per query; one tuple
+            # assignment, so a concurrent caller never sees half of it
+            self._pa_ds = (
+                ds.dataset(storage.path(self.root, "postings"),
+                           format="parquet", partitioning="hive"),
+                ds.dataset(storage.path(self.root, "term_stats"),
+                           format="parquet"))
+        return self._pa_ds
 
     # serving-path cache bounds per handle (entries AND payload bytes —
     # a 256-entry cap over hot terms' decoded postings can still be GBs
     # on a large index, so bytes are the binding limit); the index is
     # an immutable snapshot, so entries never invalidate — rotation
-    # swaps in a NEW handle
+    # swaps in a NEW handle. The row-group cache has the byte cap only,
+    # with its own TERM_CACHE_BYTES budget.
     TERM_CACHE_CAP = 256
     TERM_CACHE_BYTES = 256 << 20
 
     @staticmethod
-    def _lru_evict(cache, sizes: dict, cap: int, byte_cap: int,
+    def _lru_evict(cache, sizes: dict, cap: float, byte_cap: int,
                    protect: set) -> None:
         """Evict from the front (LRU) until both caps hold, but NEVER a
         key the current call needs — callers move_to_end their keys
@@ -3200,89 +3316,144 @@ class FTSIndex:
             cache.pop(k)
             sizes.pop(k, None)
 
+    def _cached(self, cache, sizes: dict, keys: list, load,
+                cap: float) -> dict:
+        """key → value for ``keys`` from one of the handle's LRU caches.
+        ``load(missing)`` returns {key: (value, nbytes)} and runs
+        outside the handle's lock, so concurrent callers never wait on
+        each other's parquet reads; every cache change happens under
+        the lock. Values are immutable, and the call keeps the ones it
+        returns even if a concurrent call evicts them meanwhile."""
+        with self._lock:
+            got = {k: cache[k] for k in keys if k in cache}
+        miss = [k for k in dict.fromkeys(keys) if k not in got]
+        new = load(miss) if miss else {}
+        with self._lock:
+            for k, (v, nbytes) in new.items():
+                cache[k] = got[k] = v
+                sizes[k] = nbytes
+            for k in keys:
+                if k in cache:
+                    cache.move_to_end(k)
+            self._lru_evict(cache, sizes, cap, self.TERM_CACHE_BYTES,
+                            set(keys))
+        return {k: got[k] for k in keys}
+
+    def _catalog(self, table: str) -> _RowGroupCatalog:
+        """The row-group catalogue of one of the three driver-read
+        tables, listed on first use."""
+        with self._lock:
+            cat = self._catalogs.get(table)
+            if cat is None:
+                if table == "docstore":
+                    dset, key = self._pa_docstore_ds(), "docid"
+                else:
+                    post, ts = self._pa_datasets()
+                    dset, key = ((post, "th") if table == "postings"
+                                 else (ts, "term"))
+                cat = self._catalogs[table] = _RowGroupCatalog(dset, key)
+        return cat
+
+    def _rg_take(self, table: str, want: np.ndarray):
+        """Rows of ``table`` whose key is in ``want`` (sorted, unique),
+        in file then row order — what a pyarrow dataset scan filtered on
+        ``key.isin(want)`` returns. Row groups whose footer min/max
+        holds no wanted key are pruned; the rest are read once and then
+        served decoded from the row-group LRU."""
+        cat = self._catalog(table)
+        groups = cat.candidates(want)
+        byk = {g.key: g for g in groups}
+        read: list[_RowGroup] = []
+
+        def load(miss):
+            read.extend(byk[k] for k in miss)
+            return {k: cat.load(byk[k]) for k in miss}
+
+        got = self._cached(self._rg_cache, self._rg_cache_sz, list(byk),
+                           load, math.inf)
+        with self._lock:
+            c = self._read_counters
+            c["row_groups_pruned"] += len(cat.groups) - len(groups)
+            c["row_groups_read"] += len(read)
+            c["row_groups_cached"] += len(groups) - len(read)
+            c["bytes_read"] += sum(g.nbytes for g in read)
+        return cat.take([got[g.key] for g in groups], want)
+
+    def read_counters(self) -> dict[str, int]:
+        """What the driver-local reads did on this handle so far: row
+        groups read from disk, pruned by footer min/max, served from the
+        row-group cache, and the compressed bytes read."""
+        with self._lock:
+            return dict(self._read_counters)
+
+    def _read_term_rows(self, terms: list[str]) -> pd.DataFrame:
+        """Dictionary rows of ``terms``: th match, then the exact term
+        check (a th collision never leaks another term's rows)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        hs = np.unique(np.array([codec.term_hash(t) for t in terms],
+                                dtype=np.int64))
+        tbl = self._rg_take("postings", hs)
+        keep = pc.is_in(tbl.column("term"),
+                        value_set=pa.array(terms, pa.string()))
+        return tbl.filter(keep).to_pandas()
+
     def _local_term_rows(self, terms: list[str],
                          use_cache: bool = True) -> pd.DataFrame:
-        """Driver-side dictionary lookup via pyarrow dataset filters
-        (same th/term pushdown as the Spark path, no Spark job), behind
-        a per-handle LRU of term → dictionary rows: repeated serving
-        queries skip the parquet read entirely (the reference's
-        always-on ES keeps its segments hot; this is the snapshot-reader
-        analog). Negative entries (absent terms) are cached too.
+        """Driver-side dictionary lookup (the same th/term match as the
+        Spark path, no Spark job) on the row-group cache, behind a
+        per-handle LRU of term → dictionary rows: repeated serving
+        queries skip the lookup entirely (the reference's always-on ES
+        keeps its segments hot; this is the snapshot-reader analog).
+        Negative entries (absent terms) are cached too.
         ``use_cache=False`` reads through without populating (the
         decoded-postings cache keeps its own copy — storing the raw
         frames again would double the footprint of every hot term)."""
-        import pyarrow.dataset as ds
-        if not hasattr(self, "_term_cache"):
-            from collections import OrderedDict
-            self._term_cache: "OrderedDict[str, pd.DataFrame]" = \
-                OrderedDict()
-            self._term_cache_sz: dict[str, int] = {}
         cache = self._term_cache
-
-        def read(miss: list[str]) -> pd.DataFrame:
-            post, _ = self._pa_datasets()
-            hs = [codec.term_hash(t) for t in miss]
-            flt = ds.field("th").isin(hs) & ds.field("term").isin(miss)
-            return post.to_table(filter=flt).to_pandas()
-
         if not use_cache:
-            parts = [cache[t] for t in terms if t in cache]
-            miss = [t for t in terms if t not in cache]
+            with self._lock:
+                parts = [cache[t] for t in terms if t in cache]
+                miss = [t for t in terms if t not in cache]
             if miss:
-                parts.append(read(miss))
+                parts.append(self._read_term_rows(miss))
             return pd.concat(parts, ignore_index=True)
 
-        missing = [t for t in terms if t not in cache]
-        if missing:
-            got = read(missing)
-            for t in missing:
+        def load(miss):
+            got = self._read_term_rows(miss)
+            out = {}
+            for t in miss:
                 # per-term frame keeps its chunk/file order (scoring
                 # paths re-order by (shard, chunk) where needed)
                 sub = got[got["term"] == t]
-                cache[t] = sub
-                self._term_cache_sz[t] = int(sub["nbytes"].sum()) \
-                    if len(sub) else 0
-        parts = []
-        for t in terms:
-            cache.move_to_end(t)
-            parts.append(cache[t])
-        self._lru_evict(cache, self._term_cache_sz,
-                        self.TERM_CACHE_CAP, self.TERM_CACHE_BYTES,
-                        set(terms))
-        return pd.concat(parts, ignore_index=True)
+                out[t] = (sub, int(sub["nbytes"].sum()) if len(sub) else 0)
+            return out
+
+        got = self._cached(cache, self._term_cache_sz, terms, load,
+                           self.TERM_CACHE_CAP)
+        return pd.concat([got[t] for t in terms], ignore_index=True)
 
     def _decoded_terms(self, terms: list[str]) \
             -> dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]]:
         """term → decoded (docids, tfs, dls) in globally ascending docid
         order, behind a per-handle LRU: the second hit on a term skips
-        BOTH the dictionary parquet read and the varint decode. Absent
-        terms cache empty arrays. Reads bypass the raw-frame cache
+        BOTH the dictionary lookup and the varint decode. Absent terms
+        cache empty arrays. Reads bypass the raw-frame cache
         (use_cache=False) so hot terms aren't stored twice."""
-        if not hasattr(self, "_dec_cache"):
-            from collections import OrderedDict
-            self._dec_cache = OrderedDict()
-            self._dec_cache_sz: dict[str, int] = {}
-        cache = self._dec_cache
-        missing = [t for t in terms if t not in cache]
-        if missing:
-            pdf = self._local_term_rows(missing, use_cache=False)
+        def load(miss):
+            pdf = self._local_term_rows(miss, use_cache=False)
             e = np.empty(0, dtype=np.int64)
             # (a per-term decode thread pool was tried and REJECTED in
             # r8: the pandas term filter is GIL-bound, so threads
             # serialized on it and cold-query walls got WORSE)
-            for t in missing:
+            out = {}
+            for t in miss:
                 sub = pdf[pdf["term"] == t]
                 dec = _decode_term_rows(sub) if len(sub) else (e, e, e)
-                cache[t] = dec
-                self._dec_cache_sz[t] = sum(a.nbytes for a in dec)
-        out = {}
-        for t in terms:
-            cache.move_to_end(t)
-            out[t] = cache[t]
-        self._lru_evict(cache, self._dec_cache_sz,
-                        self.TERM_CACHE_CAP, self.TERM_CACHE_BYTES,
-                        set(terms))
-        return out
+                out[t] = (dec, sum(a.nbytes for a in dec))
+            return out
+
+        return self._cached(self._dec_cache, self._dec_cache_sz, terms,
+                            load, self.TERM_CACHE_CAP)
 
     def _decoded_partials(self, terms: list[str], avgdl: float
                           ) -> dict[str, tuple[np.ndarray, np.ndarray]]:
@@ -3292,65 +3463,38 @@ class FTSIndex:
         serving query skips the whole per-posting float pipeline, not
         just the decode. Computed ONCE from the decoded arrays with the
         same codec.bm25_partial call every scoring path uses —
-        bit-identical scores. Entries are keyed by term and remember
-        the avgdl they were computed under (multi-field handles score
-        each prefixed term with its own field avgdl, so the key is
-        stable; a mismatch recomputes)."""
-        if not hasattr(self, "_part_cache"):
-            from collections import OrderedDict
-            self._part_cache = OrderedDict()
-            self._part_cache_sz: dict[str, int] = {}
-        cache = self._part_cache
-        missing = [t for t in terms
-                   if t not in cache or cache[t][0] != avgdl]
-        if missing:
-            dec = self._decoded_terms(missing)
-            for t in missing:
-                d, tf, dl = dec[t]
+        bit-identical scores. Entries are keyed by (term, avgdl)
+        (multi-field handles score each prefixed term with its own
+        field avgdl, so the key is stable)."""
+        def load(miss):
+            dec = self._decoded_terms([t for t, _ in miss])
+            out = {}
+            for key in miss:
+                d, tf, dl = dec[key[0]]
                 part = (codec.bm25_partial(tf, dl, avgdl, self.k1,
                                            self.b)
                         if d.size else np.empty(0, dtype=np.float64))
-                cache[t] = (avgdl, d, part)
-                self._part_cache_sz[t] = d.nbytes + part.nbytes
-        out = {}
-        for t in terms:
-            cache.move_to_end(t)
-            _, d, part = cache[t]
-            out[t] = (d, part)
-        self._lru_evict(cache, self._part_cache_sz,
-                        self.TERM_CACHE_CAP, self.TERM_CACHE_BYTES,
-                        set(terms))
-        return out
+                out[key] = ((d, part), d.nbytes + part.nbytes)
+            return out
+
+        got = self._cached(self._part_cache, self._part_cache_sz,
+                           [(t, avgdl) for t in terms], load,
+                           self.TERM_CACHE_CAP)
+        return {t: v for (t, _), v in got.items()}
 
     def _local_df_counts(self, terms: list[str]) -> dict[str, float]:
-        import pyarrow.dataset as ds
-        if not hasattr(self, "_df_cache"):
-            from collections import OrderedDict
-            self._df_cache = OrderedDict()
-        missing = [t for t in terms if t not in self._df_cache]
-        if missing:
-            _, ts = self._pa_datasets()
-            trows = ts.to_table(filter=ds.field("term").isin(missing),
-                                columns=["term", "df"]).to_pandas()
-            got = dict(zip(trows["term"], trows["df"].astype(float)))
-            for t in missing:
-                self._df_cache[t] = got.get(t, 0.0)
-        out = {}
-        for t in terms:
-            self._df_cache.move_to_end(t)
-            if self._df_cache[t] > 0.0:
-                out[t] = self._df_cache[t]
-        # floats are tiny — entry cap only, generous multiple
-        while len(self._df_cache) > 64 * self.TERM_CACHE_CAP:
-            k = next(iter(self._df_cache))
-            if k in out or k in terms:
-                break
-            self._df_cache.pop(k)
-        return out
+        """term → df for the terms present in term_stats."""
+        if not terms:
+            return {}
+        tbl = self._rg_take("term_stats",
+                            np.array(sorted(set(terms)), dtype=object))
+        got = dict(zip(tbl.column("term").to_pylist(),
+                       tbl.column("df").to_numpy().astype(float)))
+        return {t: got[t] for t in terms if got.get(t, 0.0) > 0.0}
 
     def _pa_docstore_ds(self):
         import pyarrow.dataset as ds
-        if not hasattr(self, "_pa_docstore"):
+        if self._pa_docstore is None:
             self._pa_docstore = ds.dataset(
                 storage.path(self.root, "docstore"),
                 format="parquet", partitioning="hive")
@@ -4565,19 +4709,15 @@ class FTSIndex:
             self.b, k).reset_index(drop=True)
 
     def fetch_docs_local(self, docids: Iterable[int]) -> pd.DataFrame:
-        """Doc-store point fetch with NO Spark job: pyarrow dataset read
-        with the same shard partition pruning + docid pushdown as
-        fetch_docs (docstore rows are docid-sorted per shard, so parquet
-        row-group stats prune). Completes the ms-latency serving path."""
-        import pyarrow.dataset as ds
-        ids = sorted(int(d) for d in docids)
-        if not ids:
+        """Doc-store point fetch with NO Spark job: docid lookup on the
+        row-group cache (docstore rows are docid-sorted per shard, so
+        footer min/max prunes every row group but the owners). Each
+        stored row comes back once, in docid order. Completes the
+        ms-latency serving path."""
+        ids = np.unique(np.array([int(d) for d in docids], dtype=np.int64))
+        if not ids.size:
             return pd.DataFrame()
-        shards = sorted({(d - self.docid_offset) // self.docs_per_shard
-                         for d in ids})
-        flt = ds.field("shard").isin(shards) & ds.field("docid").isin(ids)
-        return (self._pa_docstore_ds().to_table(filter=flt).to_pandas()
-                .sort_values("docid").reset_index(drop=True))
+        return self._rg_take("docstore", ids).sort_by("docid").to_pandas()
 
     def suggest(self, text: str, size: int = 5, max_edits: int = 2,
                 prefix_length: int = 1, min_doc_freq: int = 1,
