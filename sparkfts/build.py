@@ -64,6 +64,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from . import codec
 from .analyzer import DEFAULT, TokenizerConfig, tokenize_series
 
+# Parquet page codec of the postings table. Measured both ways: the
+# apparent deltas of `uncompressed` (±20%+) did not replicate across
+# windows — co-tenant bandwidth bursts dominate any codec effect, and
+# snappy over the ~78 MB sf0.1 dictionary costs only ~0.2 core-s (blobs
+# are already varint-coded; snappy earns its keep mostly on the
+# block-metadata columns).
+POSTINGS_CODEC = "snappy"
+
 POSTING_SCHEMA = T.StructType([
     T.StructField("shard", T.IntegerType(), False),
     T.StructField("term", T.StringType(), False),
@@ -106,14 +114,6 @@ class BuildConfig:
     # multiple of shards_per_org.
     routing_col: str | None = None
     shards_per_org: int = 2
-    # parquet page codec for the postings table. Measured both ways in
-    # r8: apparent deltas (±20%+) did not replicate across windows —
-    # co-tenant bandwidth bursts dominate any codec effect, and the
-    # napkin cost of snappy over the ~78 MB sf0.1 dictionary is only
-    # ~0.2 core-s — so the r7 default stays and the knob exists for
-    # storage whose economics differ (blobs are already varint-coded;
-    # snappy earns its keep mostly on the block-metadata columns).
-    postings_codec: str = "snappy"
     # multi-field indexing (the reference's per-index template hook with
     # per-field analyzers, BaseESReducer.java:107-132): map of
     # column name → TokenizerConfig. Terms are stored field-prefixed
@@ -1052,7 +1052,7 @@ def build_index(spark: SparkSession, df: DataFrame, out_dir: str,
                                         schema=POSTING_SCHEMA)
         (enc_out.write.mode("overwrite")
                 .option("partitionOverwriteMode", pmode)
-                .option("compression", cfg.postings_codec)
+                .option("compression", POSTINGS_CODEC)
                 .partitionBy("shard")
                 .parquet(storage.path(out_dir, "postings")))
         th.join()
@@ -1443,7 +1443,7 @@ def build_many(spark: SparkSession, df: DataFrame, out_base: str,
                     .join(F.broadcast(gmap), "gshard")
                     .withColumnRenamed("_shard", "shard").drop("gshard")
                     .write.mode("overwrite").partitionBy(index_col, "shard")
-                    .option("compression", cfg0.postings_codec)
+                    .option("compression", POSTINGS_CODEC)
                     .parquet(_os.path.join(staging, "postings")))
             th.join()
             if errs:

@@ -136,7 +136,7 @@ def _classic_weights(idx, query: str):
     terms = sorted({t for t in tokenize_text(query, idx.tokenizer)})
     if not terms:
         return terms, {}, 0.0
-    dfs = idx._local_df_counts(terms)
+    dfs = idx._df(terms)
     idf = {t: float(classic_idf(float(idx.N), dfs.get(t, 0.0)))
            for t in terms}
     ssw = sum(w * w for w in idf.values())
@@ -147,45 +147,22 @@ def classic_topk_local(idx, query: str, k: int = 10,
                        mode: str = "or") -> pd.DataFrame:
     """Zero-Spark-job classic-similarity top-k on an FTSIndex OR a
     CombinedIndex (serving decoded-postings LRU — the same cache
-    topk_local uses). CombinedIndex: df/N are union-global, per-sub
+    topk_local uses): df/N pool over the index's segments, per-segment
     decoded postings merge exactly (disjoint docid spaces), and
     tombstoned docs drop before truncation."""
     if mode not in ("or", "and"):
         raise ValueError(f"mode {mode!r}: or|and")
-    empty = pd.DataFrame({"docid": pd.Series(dtype=np.int64),
-                          "score": pd.Series(dtype=np.float64)})
-    if hasattr(idx, "subs"):           # CombinedIndex
-        from .analyzer import tokenize_text
-        terms = sorted({t for t in tokenize_text(query, idx.tokenizer)})
-        if not terms:
-            return empty
-        df_tot = {t: 0.0 for t in terms}
-        for s in idx.subs:
-            for t, d in s._local_df_counts(terms).items():
-                df_tot[t] += d
-        idf = {t: float(classic_idf(float(idx.N), d))
-               for t, d in df_tot.items()}
-        ssw = sum(w * w for w in idf.values())
-        qn = 1.0 / np.sqrt(ssw) if ssw > 0 else 0.0
-        pt: dict = {}
-        for s in idx.subs:
-            for t, (d, tf, dl) in s._decoded_terms(terms).items():
-                if t in pt:
-                    p0 = pt[t]
-                    pt[t] = (np.concatenate([p0[0], d]),
-                             np.concatenate([p0[1], tf]),
-                             np.concatenate([p0[2], dl]))
-                else:
-                    pt[t] = (d, tf, dl)
-        tomb = idx.deleted_docids()
-        return _score_decoded_classic(pt, idf, k, mode, len(terms),
-                                      qn, excl=tomb if tomb.size
-                                      else None)
     terms, idf, qn = _classic_weights(idx, query)
     if not terms:
-        return empty
-    pt = idx._decoded_terms(terms)
-    return _score_decoded_classic(pt, idf, k, mode, len(terms), qn)
+        return pd.DataFrame({"docid": pd.Series(dtype=np.int64),
+                             "score": pd.Series(dtype=np.float64)})
+    pt: dict = {}
+    for s in idx.subs:
+        for t, arrs in s._decoded_terms(terms).items():
+            pt[t] = (tuple(np.concatenate(p) for p in zip(pt[t], arrs))
+                     if t in pt else arrs)
+    return _score_decoded_classic(pt, idf, k, mode, len(terms), qn,
+                                  excl=idx._excl())
 
 
 def classic_topk(idx, query: str, k: int = 10,

@@ -31,26 +31,13 @@ from pyspark.sql import SparkSession
 from .query import FTSIndex
 from .rotation import RotationRegistry
 
-# Every public query surface of FTSIndex is forwarded. An explicit
-# allowlist (not a blanket __getattr__ passthrough of anything) so a
-# typo'd method name still raises AttributeError naming ServingIndex.
-_FORWARDED = frozenset({
-    "topk", "topk_pandas", "topk_local", "topk_many",
-    "phrase_topk", "phrase_topk_local",
-    "match_docids", "match_docids_local",
-    "search", "search_local", "search_join",
-    "fetch_docs", "fetch_docs_local",
-    "possible_shards", "facet_counts", "facet_metrics",
-    "highlight", "explain",
-    "expand_terms", "pattern_topk", "pattern_topk_local",
-    "multi_match", "multi_match_local",
-    "phrase_prefix_topk", "phrase_prefix_topk_local",
-    "sorted_search", "count", "count_local", "facet_cardinality",
-    "facet_percentiles", "facet_top_hits",
-    "facet_histogram", "facet_date_histogram",
-    "mlt_terms", "more_like_this", "suggest",
-    "facet_range", "facet_missing", "facet_nested", "facet_filters",
-})
+# Every public method of FTSIndex is forwarded. An allowlist derived
+# from the class (not a blanket __getattr__ passthrough of anything),
+# so a typo'd method name still raises AttributeError naming
+# ServingIndex.
+_FORWARDED = frozenset(
+    name for name in dir(FTSIndex)
+    if not name.startswith("_") and callable(getattr(FTSIndex, name)))
 
 
 class ServingIndex:

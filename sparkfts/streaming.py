@@ -7,22 +7,27 @@ Design: `foreachBatch` builds a self-contained mini-index (same on-disk
 format as the batch build, build_index with num_shards small) per
 micro-batch under <root>/delta/batch=<id>/, with docids offset into an
 id space above the base index (offset ledger in <root>/delta/_log.json,
-idempotent per batch id → exactly-once on retry). Query time, a
-CombinedIndex unions the base + delta dictionaries and scores BM25 with
-UNION-global stats (N, df, avgdl summed/reweighted across sub-indexes),
-so results are exactly what a monolithic rebuild over base+delta rows
-would produce — verified against the brute-force oracle in tests.
+idempotent per batch id → exactly-once on retry). Deletes are
+tombstone files under <root>/delta/tombstones/ (Lucene live-docs).
 
-Block-max metadata stores (max_tf, min_dl) per block and the bound is
-evaluated at query time under the union's avgdl, so WAND pruning stays
-exact across base+delta — no special-casing needed.
+Query time, a CombinedIndex opens the ledger's generations as the
+segment list of query.SegmentedIndex — the one query layer FTSIndex
+uses too — so every surface pools BM25 statistics over the segments
+(results equal a monolithic rebuild over base+delta rows, verified
+against the brute-force oracle in tests) and drops tombstoned docs
+in-kernel. Block-max metadata stores (max_tf, min_dl) per block and the
+bound is evaluated at query time under the pooled avgdl, so WAND
+pruning stays exact across segments.
+
+compact / compact_merge fold the generations (and their tombstones)
+into a fresh base; nightly_rotate swaps it in.
 """
 from __future__ import annotations
 
 import contextlib
 import json
-import math
 import os
+import threading
 import time
 
 import numpy as np
@@ -31,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import storage
 from .build import BuildConfig, build_index
-from .query import FTSIndex, score_shard
+from .query import FTSIndex, SegmentedIndex, _pooled
 
 
 # ---------------------------------------------------------------- delta log
@@ -192,31 +197,30 @@ def start_stream_index(stream_df: DataFrame, base_root: str,
 
 
 # ----------------------------------------------------------- combined query
-class CombinedIndex:
-    """Query base + delta mini-indexes as one corpus with exact
-    union-global BM25 (B6) — the reference's 'search hits both the
-    rebuilt index and the realtime index' semantics.
-
-    ONE Spark job per query regardless of delta count: the sub-indexes'
-    dictionary rows (schema-identical parquet) are unioned with a `sub`
-    tag and scored in a single applyInPandas over (sub, shard) groups —
-    docid spaces are disjoint by the ledger's offset reservation, so the
-    per-group top-k merge is the same as the single-index path."""
+class CombinedIndex(SegmentedIndex):
+    """The base index plus its committed delta generations, queried as
+    one corpus — the reference's 'search hits both the rebuilt index
+    and the realtime index' semantics. Each generation is one segment
+    (``subs``: per-generation FTSIndex handles) and every query surface
+    is SegmentedIndex's: statistics pool over the generations, exactly
+    what a monolithic rebuild over base+delta rows computes, and
+    tombstoned docs (delete_docs) leave every surface. This class adds
+    only the delta ledger, the tombstones, and pandas results where
+    FTSIndex returns Spark DataFrames."""
 
     def __init__(self, spark: SparkSession, base_root: str):
         self.spark = spark
         self.base_root = base_root
-        self._tomb_key: tuple | None = None
-        self._tomb_val: np.ndarray | None = None
-        self.subs = [FTSIndex(spark, base_root)]
-        for e in read_delta_log(base_root):
-            self.subs.append(FTSIndex(spark, e["root"]))
+        self.subs = [FTSIndex(spark, base_root)] + [
+            FTSIndex(spark, e["root"]) for e in read_delta_log(base_root)]
         self.N = sum(s.N for s in self.subs)
-        self.avgdl = (sum(s.N * s.avgdl for s in self.subs) / self.N
-                      if self.N else 0.0)
+        self.avgdl = _pooled([(s.N, s.avgdl) for s in self.subs])
         s0 = self.subs[0]
-        self.k1, self.b = s0.k1, s0.b
-        self.tokenizer = s0.tokenizer
+        self.k1, self.b, self.tokenizer = s0.k1, s0.b, s0.tokenizer
+        # tombstone memo (deleted_docids), guarded for serving threads
+        self._lock = threading.Lock()
+        self._tomb_key: tuple | None = None
+        self._tomb_val = np.empty(0, dtype=np.int64)
         # Consistency check across index generations (the reference's
         # RealtimeIndexSelectionStrategy concern,
         # RealtimeIndexSelectionStrategyLagged.java:62-116): every
@@ -232,109 +236,6 @@ class CombinedIndex:
                 raise ValueError(
                     f"overlapping docid ranges across sub-indexes: "
                     f"{ra}[{a0},{a1}) vs {rb}[{b0},{b1})")
-
-    def _sub_for(self, docid: int) -> FTSIndex:
-        for s in self.subs:
-            if s.docid_offset <= docid < s.docid_offset + s.docid_span:
-                return s
-        raise KeyError(f"docid {docid} outside every sub-index range")
-
-    def _field(self, field: str | None) -> tuple[str, float]:
-        """(term prefix, UNION avgdl) for a query — multi-field support
-        across generations. Per-field union avgdl = Σ N_i·avgdl_i(fld)
-        / N (== total field tokens / N, exactly what a monolithic
-        rebuild computes). Mixed classic/multi-field generations are
-        refused (same common-strategy rule as org routing)."""
-        if all(s.fields is None for s in self.subs):
-            if field is not None:
-                raise ValueError("index was not built with fields")
-            return "", self.avgdl
-        if any(s.fields is None for s in self.subs):
-            raise ValueError(
-                "mixed multi-field and classic generations cannot be "
-                "queried together")
-        names = sorted(set().union(*[set(s.fields) for s in self.subs]))
-        if field is None or field not in names:
-            raise ValueError(
-                f"multi-field index: pick field= from {names}")
-        if all(field in s._field_n for s in self.subs):
-            # per-field doc counts in EVERY generation (type→field
-            # mapping): union avgdl over the field's OWN docs —
-            # Σ tokens_f / Σ n_f, what a monolithic per-type index
-            # computes
-            nf = sum(s._field_n[field] for s in self.subs)
-            avg = (sum(s._field_n[field] * float(s.fields[field])
-                       for s in self.subs) / nf if nf else 0.0)
-            return f"{field}:", avg
-        avg = (sum(s.N * float(s.fields.get(field, 0.0))
-                   for s in self.subs) / self.N if self.N else 0.0)
-        return f"{field}:", avg
-
-    def _fieldN(self, field: str | None) -> float:
-        """Union document count for idf: Σ per-generation field n when
-        EVERY generation stores it (type→field mapping), else the
-        union-global N (classic / legacy multi-field)."""
-        if field is not None and \
-                all(field in s._field_n for s in self.subs):
-            return float(sum(s._field_n[field] for s in self.subs))
-        return float(self.N)
-
-    def _org_range_map(self, org_subs, org: str):
-        """{(sub ordinal, shard): [lo, hi]} when EVERY generation has an
-        org_ranges table (contiguous-tenant docids); None → caller falls
-        back to the docid-set cogroup path."""
-        rngmap: dict[tuple[int, int], tuple[int, int]] = {}
-        for i, (s, _ps) in enumerate(org_subs):
-            ranges = s._org_ranges(org)
-            if ranges is None:
-                return None
-            for sh, rng in ranges.items():
-                rngmap[(i, sh)] = rng
-        return rngmap
-
-    def _org_rows_pruned(self, org_subs, terms: list[str], rngmap):
-        """Unioned posting rows, each sub pruned to the shards its
-        tenant interval map names."""
-        rows = None
-        for i, (s, _ps) in enumerate(org_subs):
-            shards = sorted(sh for (j, sh) in rngmap if j == i)
-            if not shards:
-                continue
-            r = (s._posting_rows(terms)
-                 .where(F.col("shard").isin(shards))
-                 .withColumn("sub", F.lit(i)))
-            rows = r if rows is None else rows.unionByName(r)
-        return rows
-
-    def _org_union(self, org_subs, terms: list[str], org: str):
-        """Unioned (posting rows, tenant docids), each tagged with its
-        sub-index ordinal and pruned to that generation's possible
-        shards — the shared assembly for every org-scoped query path."""
-        rows = parts = None
-        for i, (s, ps) in enumerate(org_subs):
-            r = (s._posting_rows(terms)
-                 .where(F.col("shard").isin(ps))
-                 .withColumn("sub", F.lit(i)))
-            d = (s._docstore.where(F.col("shard").isin(ps))
-                 .where(F.col(s.routing_col) == org)
-                 .select("shard", "docid").withColumn("sub", F.lit(i)))
-            rows = r if rows is None else rows.unionByName(r)
-            parts = d if parts is None else parts.unionByName(d)
-        return rows, parts
-
-    def _org_subs(self, org: str) -> list[tuple[FTSIndex, list[int]]]:
-        """(sub-index, its possible shards for org) — org-scoped queries
-        require EVERY generation routed (the reference refuses mixed
-        routing strategies across indices,
-        RealtimeIndexSelectionStrategyLagged.java:62-90); shard geometry
-        may differ per generation, so the pruning set is per-sub."""
-        bad = [s.root for s in self.subs if s.routing_col is None]
-        if bad:
-            raise ValueError(
-                f"org-scoped query needs every sub-index routed; "
-                f"unrouted: {bad}")
-        return [(s, s.possible_shards(org)) for s in self.subs]
-
 
     # -- deletes (tombstones) -----------------------------------------
     def delete_docs(self, docids) -> int:
@@ -382,7 +283,6 @@ class CombinedIndex:
             tmp = os.path.join(d, f".tmp-{n:06d}-{os.getpid()}")
             pq.write_table(pa.table({"docid": fresh}), tmp)
             os.replace(tmp, os.path.join(d, f"tomb-{n:06d}.parquet"))
-        self._tomb_key = None
         return int(fresh.size)
 
     def deleted_docids(self) -> np.ndarray:
@@ -392,1943 +292,32 @@ class CombinedIndex:
         d = _tombstone_dir(self.base_root)
         key = (tuple(sorted(os.listdir(d)))
                if os.path.isdir(d) else ())
-        if key != self._tomb_key:
-            self._tomb_val = read_tombstones(self.base_root)
-            self._tomb_key = key
-        return self._tomb_val
+        with self._lock:
+            if key == self._tomb_key:
+                return self._tomb_val
+        val = read_tombstones(self.base_root)
+        with self._lock:
+            self._tomb_key, self._tomb_val = key, val
+        return val
 
-    def _excl(self) -> np.ndarray | None:
-        """Sorted tombstoned docids for the kernels' ``excl`` param, or
-        None when there are no deletes. Every scoring kernel drops
-        these BEFORE its top-k truncation (query._drop_excl), so
-        per-group output is k rows — the old k+T over-fetch (fetch
-        k + tombstone-count per group, post-filter on the driver) is
-        gone; a large delete batch no longer inflates the rows every
-        group ships (VERDICT r5 #4)."""
-        tomb = self.deleted_docids()
-        return tomb if tomb.size else None
+    # -- pandas results where FTSIndex returns Spark DataFrames -------
+    topk = SegmentedIndex._topk_pd
+    multi_match = SegmentedIndex._multi_match_pd
+    phrase_topk = SegmentedIndex._phrase_topk_pd
+    phrase_prefix_topk = SegmentedIndex._phrase_prefix_topk_pd
 
-    def _tomb_filter(self):
-        """Driver-side row filter for non-truncating surfaces (full
-        match sets, docstore fetch): drops tombstoned docids from a
-        (docid, ...) frame. Exact regardless of order — no k anywhere."""
-        tomb = self.deleted_docids()
-        if tomb.size == 0:
-            return lambda pdf: pdf
-
-        def post(pdf: pd.DataFrame) -> pd.DataFrame:
-            if pdf.empty:
-                return pdf
-            keep = ~np.isin(pdf["docid"].to_numpy(np.int64), tomb)
-            return pdf[keep]
-
-        return post
-
-    def topk_local(self, query: str, k: int = 10, mode: str = "or",
-                   method: str = "wand", org: str | None = None,
-                   field: str | None = None,
-                   after: tuple[float, int] | None = None,
-                   min_should_match: int | None = None,
-                   raw_terms: list[str] | None = None,
-                   must_not: str | None = None,
-                   must: str | None = None,
-                   boosts: dict[str, float] | None = None
-                   ) -> pd.DataFrame:
-        """Low-latency base+delta query with NO Spark job (the realtime
-        leg at ms latency): pyarrow dictionary reads per sub-index,
-        union-global idf/avgdl, per-sub numpy scoring (docid ranges are
-        disjoint so per-sub results merge exactly), driver top-k.
-        Rank-identical to CombinedIndex.topk. With ``org`` (every
-        generation routed): per-sub shard pruning + tenant candidate
-        restriction, stats still union-global."""
-        import numpy as np
-        from .analyzer import tokenize_text
-        from .query import (_score_candidates, score_range_pt,
-                            fold_neg_terms, merge_excl_docids,
-                            _check_msm, _fold_must, _apply_boosts)
-        org_subs = self._org_subs(org) if org is not None else None
-        prefix, avgdl = self._field(field)
-        terms = (sorted(set(raw_terms)) if raw_terms is not None
-                 else sorted({prefix + t
-                              for t in tokenize_text(query,
-                                                     self.tokenizer)}))
-        neg = (sorted({prefix + t
-                       for t in tokenize_text(must_not, self.tokenizer)})
-               if must_not else [])
-        if must_not and not neg:
-            raise ValueError("must_not analyzed to zero terms")
-        mh = _check_msm(min_should_match, mode if not must else "or")
-        terms, mode, reqs = _fold_must(
-            (sorted({prefix + t
-                     for t in tokenize_text(must, self.tokenizer)})
-             if must else []), must, terms, mode, mh)
-        if neg and not terms:
-            raise ValueError(
-                "must_not requires a non-empty positive query; a "
-                "pure-negation match-all is a docstore predicate — "
-                "use filter= / match_docids")
-        negs = frozenset(neg)
-        empty = pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")})
-        if not terms:
-            return empty
-        df_tot = {t: 0.0 for t in terms}
-        for s in self.subs:
-            for t, d in s._local_df_counts(terms).items():
-                df_tot[t] += d
-        nf = self._fieldN(field)
-        idf = _apply_boosts(
-            {t: math.log(1.0 + (nf - d + 0.5) / (d + 0.5))
-             for t, d in df_tot.items()}, boosts, terms,
-            self.tokenizer, prefix)
-        if after is not None:
-            after = (float(after[0]), int(after[1]))
-        excl = self._excl()
-        parts = []
-        for i, s in enumerate(self.subs):
-            if org_subs is None:
-                # decoded-postings LRU path per generation (same cache
-                # FTSIndex.topk_local uses); union-global idf/avgdl,
-                # per-sub results merge exactly (disjoint docid ranges)
-                from .query import score_decoded
-                pt = s._decoded_terms(terms)
-                ex = (merge_excl_docids(
-                    excl, [d for d, _, _ in
-                           s._decoded_terms(neg).values()])
-                    if neg else excl)
-                parts.append(score_decoded(pt, idf, avgdl, self.k1,
-                                           self.b, k, mode, len(terms),
-                                           after=after, excl=ex,
-                                           min_hits=mh, req_terms=reqs))
-                continue
-            pdf = s._local_term_rows(sorted(set(terms) | negs))
-            pdf, ex = fold_neg_terms(pdf, negs, excl)
-            if pdf.empty:
-                continue
-            ps = org_subs[i][1]
-            ranges = s._org_ranges(org)
-            if ranges is not None:
-                # contiguous-tenant fast path, per generation
-                for sh in sorted(ranges):
-                    sub = pdf[pdf["shard"] == sh]
-                    if sub.empty:
-                        continue
-                    lo, hi = ranges[sh]
-                    parts.append(score_range_pt(
-                        sub, lo, hi, idf, avgdl, self.k1, self.b,
-                        k, mode, len(terms), after=after, excl=ex,
-                        min_hits=mh, req_terms=reqs))
-                continue
-            pdf = pdf[pdf["shard"].isin(ps)]
-            if pdf.empty:
-                continue
-            cand = s._local_org_docids(org, ps)
-            if cand.size == 0:
-                continue
-            pt = {t: pdf[pdf["term"] == t]
-                  for t in sorted(pdf["term"].unique())}
-            parts.append(_score_candidates(
-                pt, list(pt), cand, idf, avgdl, self.k1,
-                self.b, k, mode, len(terms), after=after, excl=ex,
-                min_hits=mh, req_terms=reqs))
-        if not parts:
-            return empty
-        return (pd.concat(parts)
-                .sort_values(["score", "docid"],
-                             ascending=[False, True])
-                .head(k).reset_index(drop=True))
-
-    def match_docids_local(self, query: str, mode: str = "and",
-                           field: str | None = None,
-                           org: str | None = None,
-                           raw_terms: list[str] | None = None
-                           ) -> pd.DataFrame:
-        """Boolean match over base + deltas with ZERO Spark jobs: docs
-        live in exactly one generation, so per-sub local matches union
-        exactly (no stats involved). Serving twin of match_docids.
-        Field validation happens ONCE against the union field set —
-        a field with zero tokens in one generation is absent from that
-        generation's stats json, so per-sub validation would wrongly
-        raise (the terms go to the subs pre-prefixed)."""
-        from .analyzer import tokenize_text
-        if org is not None:
-            self._org_subs(org)        # every generation must be routed
-        prefix, _ = self._field(field)
-        terms = (sorted(set(raw_terms)) if raw_terms is not None
-                 else sorted({prefix + t
-                              for t in tokenize_text(query,
-                                                     self.tokenizer)}))
-        parts = [s._match_docids_local_terms(terms, mode, org)
-                 for s in self.subs]
-        out = self._tomb_filter()(pd.concat(parts, ignore_index=True))
-        return (out.sort_values("docid").reset_index(drop=True)
-                if not out.empty else out)
-
-    def phrase_topk_local(self, query: str, k: int = 10,
-                          field: str | None = None,
-                          org: str | None = None,
-                          slop: int = 0) -> pd.DataFrame:
-        """Exact phrase over base + deltas with ZERO Spark jobs:
-        positions are per (generation, doc) so adjacency never crosses
-        sub-indexes; idf/avgdl are UNION-global (same stats the
-        distributed phrase_topk uses), so ranks match it exactly.
-        ``slop`` = the ES match_phrase slop (phrase_topk contract)."""
-        from .analyzer import tokenize_text
-        from .query import _bm25_idf, _phrase_shard, _check_slop
-        org_subs = self._org_subs(org) if org is not None else None
-        prefix, avgdl = self._field(field)
-        seq = [prefix + t for t in tokenize_text(query, self.tokenizer)]
-        empty = pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")})
-        if not seq:
-            return empty
-        slop = _check_slop(slop, seq)
-        uniq = sorted(set(seq))
-        df_tot = {t: 0.0 for t in uniq}
-        for s in self.subs:
-            for t, d in s._local_df_counts(uniq).items():
-                df_tot[t] += d
-        idf = {t: _bm25_idf(self._fieldN(field), d)
-               for t, d in df_tot.items()}
-        excl = self._excl()
-        parts = []
-        for i, s in enumerate(self.subs):
-            pdf = s._local_term_rows(uniq)
-            if pdf.empty:
-                continue
-            if org_subs is not None:
-                ranges = s._org_ranges(org)
-                if ranges is not None:
-                    for sh in sorted(ranges):
-                        sub = pdf[pdf["shard"] == sh]
-                        if sub.empty:
-                            continue
-                        parts.append(_phrase_shard(
-                            sub, seq, uniq, idf, avgdl, self.k1,
-                            self.b, k, org_range=ranges[sh], excl=excl,
-                            slop=slop))
-                    continue
-                ps = org_subs[i][1]
-                pdf = pdf[pdf["shard"].isin(ps)]
-                if pdf.empty:
-                    continue
-                cand = s._local_org_docids(org, ps)
-                if cand.size == 0:
-                    continue
-                parts.append(_phrase_shard(pdf, seq, uniq, idf, avgdl,
-                                           self.k1, self.b, k,
-                                           org_cand=cand, excl=excl,
-                                           slop=slop))
-                continue
-            parts.append(_phrase_shard(pdf, seq, uniq, idf, avgdl,
-                                       self.k1, self.b, k, excl=excl,
-                                       slop=slop))
-        if not parts:
-            return empty
-        return (pd.concat(parts)
-                .sort_values(["score", "docid"],
-                             ascending=[False, True])
-                .head(k).reset_index(drop=True))
-
-    def _fetch_parts(self, docids, local: bool) -> list[pd.DataFrame]:
-        tomb = self.deleted_docids()
-        if tomb.size:
-            ids = np.asarray(list(docids), dtype=np.int64)
-            docids = ids[~np.isin(ids, tomb)].tolist()
-        by_sub: dict[int, list[int]] = {}
-        for d in docids:
-            s = self._sub_for(int(d))
-            by_sub.setdefault(id(s), []).append(int(d))
-        parts = []
-        for s in self.subs:
-            ids = by_sub.get(id(s))
-            if ids:
-                parts.append(s.fetch_docs_local(ids) if local
-                             else s.fetch_docs(ids).toPandas())
-        return parts
+    def match_docids(self, *args, **kwargs) -> pd.DataFrame:
+        return super().match_docids(*args, **kwargs).toPandas()
 
     def fetch_docs(self, docids) -> pd.DataFrame:
-        """Geometry-aware pruned doc fetch: each docid routes to the ONE
-        sub-index whose id range owns it, and shard pruning uses THAT
-        generation's docs_per_shard — base and deltas may have entirely
-        different shard geometry."""
-        parts = self._fetch_parts(docids, local=False)
-        if not parts:
-            return pd.DataFrame()
-        return (pd.concat(parts, ignore_index=True)
-                .sort_values("docid").reset_index(drop=True))
+        return (super().fetch_docs(docids).toPandas()
+                .sort_values("docid", ignore_index=True))
 
-    def fetch_docs_local(self, docids) -> pd.DataFrame:
-        """fetch_docs with ZERO Spark jobs (per-generation pyarrow
-        point reads) — the realtime serving leg's doc fetch."""
-        parts = self._fetch_parts(docids, local=True)
-        if not parts:
-            return pd.DataFrame()
-        return (pd.concat(parts, ignore_index=True)
-                .sort_values("docid").reset_index(drop=True))
+    def pattern_topk(self, *args, **kwargs) -> pd.DataFrame:
+        return super().pattern_topk(*args, **kwargs).toPandas()
 
-    def search_local(self, query: str, k: int = 10, mode: str = "or",
-                     method: str = "wand", org: str | None = None,
-                     field: str | None = None,
-                     must_not: str | None = None,
-                     must: str | None = None,
-                     boosts: dict[str, float] | None = None
-                     ) -> pd.DataFrame:
-        """Full base+delta search (top-k + doc content) with zero Spark
-        jobs — the complete ms-latency answer to the reference's
-        always-on realtime cluster. ``must_not`` excludes docs
-        containing any of its terms (bool.must_not); ``must`` requires
-        ALL of its terms; ``boosts`` scales per-term weights (bool
-        must+should / boosting, topk contract)."""
-        hits = self.topk_local(query, k, mode, method, org=org,
-                               field=field, must_not=must_not,
-                               must=must, boosts=boosts)
-        if hits.empty:
-            return hits
-        docs = self.fetch_docs_local(hits["docid"].tolist())
-        out = hits.merge(docs.drop(columns=["shard"]), on="docid")
-        return (out.sort_values(["score", "docid"],
-                                ascending=[False, True])
-                .reset_index(drop=True))
-
-    def _union(self, mk) -> DataFrame:
-        dfs = [mk(s).withColumn("sub", F.lit(i))
-               for i, s in enumerate(self.subs)]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
-    def _idf(self, terms: list[str],
-             N: float | None = None) -> dict[str, float]:
-        """Union-global document frequencies in ONE job. ``N``
-        overrides the doc count (per-field n, type→field mapping)."""
-        rows = (self._union(lambda s: s._term_stats
-                            .where(F.col("term").isin(terms))
-                            .select("term", "df"))
-                .groupBy("term").agg(F.sum("df").alias("df")).collect())
-        df_tot = {t: 0.0 for t in terms}
-        for r in rows:
-            df_tot[r["term"]] = float(r["df"])
-        n = float(self.N) if N is None else float(N)
-        return {t: math.log(1.0 + (n - d + 0.5) / (d + 0.5))
-                for t, d in df_tot.items()}
-
-    def topk(self, query: str, k: int = 10, mode: str = "or",
-             method: str = "wand", org: str | None = None,
-             field: str | None = None, filter=None,
-             after: tuple[float, int] | None = None,
-             min_should_match: int | None = None,
-             raw_terms: list[str] | None = None,
-             must_not: str | None = None,
-             must: str | None = None,
-             boosts: dict[str, float] | None = None) -> pd.DataFrame:
-        """ONE Spark job over the unioned dictionaries. With ``org``
-        (every generation routed): each sub's rows are pruned to ITS
-        possible shards and the tenant's docids are cogrouped in per
-        (sub, shard) — stats stay union-global, so results equal the
-        unrestricted union ranking filtered to the org. With ``field``
-        (every generation multi-field): field-prefixed terms + the
-        union's per-field avgdl. With ``filter`` (SQL predicate over
-        docstore columns, same contract as FTSIndex.topk): each
-        generation's docstore scan evaluates the predicate and the
-        matching docids cogroup into scoring per (generation, shard) —
-        stats stay union-global, composes with ``org``. ``after`` is
-        the deep-pagination cursor (FTSIndex.topk contract; composes
-        with tombstones — deletes are excluded IN the kernels before
-        truncation, so groups return k rows, not k+T)."""
-        import numpy as np
-        from .analyzer import tokenize_text
-        from .query import (_check_msm, _fold_must, _apply_boosts,
-                            _score_candidates, cand_score_group,
-                            fold_neg_terms, _EMPTY_TOPK)
-        mh = _check_msm(min_should_match, mode if not must else "or")
-        org_subs = self._org_subs(org) if org is not None else None
-        prefix, avgdl = self._field(field)
-        terms = (sorted(set(raw_terms)) if raw_terms is not None
-                 else sorted({prefix + t
-                              for t in tokenize_text(query,
-                                                     self.tokenizer)}))
-        neg = (sorted({prefix + t
-                       for t in tokenize_text(must_not, self.tokenizer)})
-               if must_not else [])
-        if must_not and not neg:
-            raise ValueError("must_not analyzed to zero terms")
-        terms, mode, reqs = _fold_must(
-            (sorted({prefix + t
-                     for t in tokenize_text(must, self.tokenizer)})
-             if must else []), must, terms, mode, mh)
-        if neg and not terms:
-            raise ValueError(
-                "must_not requires a non-empty positive query; a "
-                "pure-negation match-all is a docstore predicate — "
-                "use filter= / match_docids")
-        if not terms:
-            return pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        idf = _apply_boosts(self._idf(terms, N=self._fieldN(field)),
-                            boosts, terms, self.tokenizer, prefix)
-        nq = len(terms)
-        k1, b = self.k1, self.b
-        if after is not None:
-            after = (float(after[0]), int(after[1]))
-        excl = self._excl()
-        allt = sorted(set(terms) | set(neg))
-        negs = frozenset(neg)
-
-        if filter is not None:
-            if org is not None and org_subs is not None and not org_subs:
-                return pd.DataFrame(
-                    {"docid": pd.Series(dtype="int64"),
-                     "score": pd.Series(dtype="float64")})
-
-            rows = self._union(lambda s: s._posting_rows(allt)
-                               if org is None else
-                               s._posting_rows(allt).where(
-                                   F.col("shard").isin(
-                                       s.possible_shards(org))))
-            parts = self._union(lambda s: s._filter_docs(filter, org))
-            allp = (rows.groupBy("sub", "shard")
-                    .cogroup(parts.groupBy("sub", "shard"))
-                    .applyInPandas(
-                        cand_score_group(idf, avgdl, k1, b, k, mode,
-                                         nq, after=after, excl=excl,
-                                         min_hits=mh, neg_terms=negs,
-                                         req_terms=reqs),
-                        schema="docid long, score double")
-                    .toPandas())
-        elif org_subs is not None:
-            empty_pd = pd.DataFrame(
-                {"docid": pd.Series(dtype=np.int64),
-                 "score": pd.Series(dtype=np.float64)})
-            rngmap = self._org_range_map(org_subs, org)
-            if rngmap is not None:
-                rows = self._org_rows_pruned(org_subs, allt, rngmap)
-                if rows is None:
-                    return empty_pd      # unknown tenant everywhere
-
-                def per_group_rng(pdf):
-                    key = (int(pdf["sub"].iloc[0]),
-                           int(pdf["shard"].iloc[0]))
-                    lo, hi = rngmap[key]
-                    from .query import score_range_pt
-                    pdf, ex = fold_neg_terms(pdf, negs, excl)
-                    if pdf.empty:
-                        return _EMPTY_TOPK.copy()
-                    return score_range_pt(pdf, lo, hi, idf, avgdl, k1,
-                                          b, k, mode, nq, after=after,
-                                          excl=ex, min_hits=mh,
-                                          req_terms=reqs)
-
-                allp = (rows.groupBy("sub", "shard")
-                        .applyInPandas(per_group_rng,
-                                       schema="docid long, score double")
-                        .toPandas())
-            else:
-                rows, parts = self._org_union(org_subs, allt, org)
-
-                def per_group_org(lpdf, rpdf):
-                    if lpdf.empty or rpdf.empty:
-                        return empty_pd
-                    lpdf, ex = fold_neg_terms(lpdf, negs, excl)
-                    if lpdf.empty:
-                        return empty_pd
-                    cand = np.sort(rpdf["docid"].to_numpy(np.int64))
-                    pt = {t: lpdf[lpdf["term"] == t]
-                          for t in sorted(lpdf["term"].unique())}
-                    return _score_candidates(pt, list(pt), cand, idf,
-                                             avgdl, k1, b, k, mode, nq,
-                                             after=after, excl=ex,
-                                             min_hits=mh,
-                                             req_terms=reqs)
-
-                allp = (rows.groupBy("sub", "shard")
-                        .cogroup(parts.groupBy("sub", "shard"))
-                        .applyInPandas(per_group_org,
-                                       schema="docid long, score double")
-                        .toPandas())
-        else:
-            def per_group(pdf):
-                # block bounds are (max_tf, min_dl) pairs evaluated at
-                # query time, so WAND stays exact under the union avgdl
-                pdf, ex = fold_neg_terms(pdf, negs, excl)
-                if pdf.empty:
-                    return _EMPTY_TOPK.copy()
-                return score_shard(pdf, idf, avgdl, k1, b, k, mode, nq,
-                                   method, after=after, excl=ex,
-                                   min_hits=mh, req_terms=reqs)
-
-            allp = (self._union(lambda s: s._posting_rows(allt))
-                    .groupBy("sub", "shard")
-                    .applyInPandas(per_group,
-                                   schema="docid long, score double")
-                    .toPandas())
-        if allp.empty:
-            return pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        return (allp.sort_values(["score", "docid"],
-                                 ascending=[False, True])
-                .head(k).reset_index(drop=True))
-
-    def _mm_prep(self, query: str, fields):
-        """(boosts, per-field prefixed terms, union idf, union
-        per-field avgdl, all terms) for multi_match over base + deltas
-        — stats are union-global per field, exactly what a monolithic
-        rebuild computes (same rule as topk(field=))."""
-        from .analyzer import tokenize_text
-        if all(s.fields is None for s in self.subs):
-            raise ValueError("multi_match needs multi-field "
-                             "generations (BuildConfig.fields)")
-        names = sorted(set().union(*(set(s.fields) for s in self.subs
-                                     if s.fields is not None)))
-        if fields is None:
-            boosts = {f: 1.0 for f in names}
-        elif isinstance(fields, (list, tuple, set)):
-            boosts = {f: 1.0 for f in fields}
-        else:
-            boosts = {f: float(w) for f, w in fields.items()}
-        bad = sorted(set(boosts) - set(names))
-        if bad:
-            raise ValueError(f"unknown fields {bad}; index has {names}")
-        field_terms, avgdls, idf = {}, {}, {}
-        for f in sorted(boosts):
-            prefix, avgdl = self._field(f)   # refuses mixed gens
-            ts = sorted({prefix + t
-                         for t in tokenize_text(query, self.tokenizer)})
-            field_terms[f] = ts
-            avgdls[f] = avgdl
-            idf.update(self._idf(ts, N=self._fieldN(f)))
-        return boosts, field_terms, avgdls, idf, sorted(
-            {t for ts in field_terms.values() for t in ts})
-
-    def multi_match(self, query: str, fields=None, k: int = 10,
-                    qtype: str = "best_fields",
-                    tie_breaker: float = 0.0, mode: str = "or",
-                    after: tuple[float, int] | None = None
-                    ) -> pd.DataFrame:
-        """ES multi_match over base + deltas (FTSIndex.multi_match
-        contract): ONE job over the unioned dictionaries, per-field
-        union stats, tombstones excluded from the combined ranking
-        in-kernel."""
-        from . import multimatch as mm
-        mm.check_mm_args(qtype, tie_breaker, mode)
-        boosts, field_terms, avgdls, idf, allt = \
-            self._mm_prep(query, fields)
-        empty = pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")})
-        if not allt:
-            return empty
-        if after is not None:
-            after = (float(after[0]), int(after[1]))
-        excl = self._excl()
-        k1, b = self.k1, self.b
-
-        def per_group(pdf):
-            return mm.score_multi_group(pdf, field_terms, boosts, idf,
-                                        avgdls, k1, b, k, qtype,
-                                        tie_breaker, mode, after=after,
-                                        excl=excl)
-
-        allp = (self._union(lambda s: s._posting_rows(allt))
-                .groupBy("sub", "shard")
-                .applyInPandas(per_group,
-                               schema="docid long, score double")
-                .toPandas())
-        if allp.empty:
-            return empty
-        return (allp.sort_values(["score", "docid"],
-                                 ascending=[False, True])
-                .head(k).reset_index(drop=True))
-
-    def multi_match_local(self, query: str, fields=None, k: int = 10,
-                          qtype: str = "best_fields",
-                          tie_breaker: float = 0.0, mode: str = "or",
-                          after: tuple[float, int] | None = None
-                          ) -> pd.DataFrame:
-        """Zero-job serving twin of multi_match over base + deltas,
-        rank-identical to it (disjoint per-generation docid ranges →
-        per-sub kernels merge exactly)."""
-        from . import multimatch as mm
-        mm.check_mm_args(qtype, tie_breaker, mode)
-        boosts, field_terms, avgdls, idf, allt = \
-            self._mm_prep(query, fields)
-        empty = pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")})
-        if not allt:
-            return empty
-        if after is not None:
-            after = (float(after[0]), int(after[1]))
-        excl = self._excl()
-        parts = []
-        for s in self.subs:
-            pdf = s._local_term_rows(allt)
-            if pdf.empty:
-                continue
-            parts.append(mm.score_multi_group(
-                pdf, field_terms, boosts, idf, avgdls, self.k1,
-                self.b, k, qtype, tie_breaker, mode, after=after,
-                excl=excl))
-        if not parts:
-            return empty
-        return (pd.concat(parts)
-                .sort_values(["score", "docid"],
-                             ascending=[False, True])
-                .head(k).reset_index(drop=True))
-
-    def phrase_prefix_topk(self, query: str, k: int = 10,
-                           field: str | None = None,
-                           max_expansions: int | None = None
-                           ) -> pd.DataFrame:
-        """match_phrase_prefix over base + deltas (FTSIndex contract):
-        union-wide expansion (dfs summed across generations before the
-        deterministic cap), union-global idf/avgdl, ONE job over the
-        unioned dictionaries, tombstones excluded in-kernel."""
-        from .analyzer import tokenize_text
-        from .multiterm import MAX_EXPANSIONS
-        from .query import _phrase_prefix_shard
-        me = MAX_EXPANSIONS if max_expansions is None else max_expansions
-        prefix, avgdl = self._field(field)
-        toks = tokenize_text(query, self.tokenizer)
-        empty = pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")})
-        if not toks:
-            return empty
-        fixed_seq = [prefix + t for t in toks[:-1]]
-        uniq_fixed = sorted(set(fixed_seq))
-        exps = self.expand_terms(toks[-1], "prefix", field=field,
-                                 max_expansions=me)
-        if not exps:
-            return empty
-        allt = sorted(set(uniq_fixed) | set(exps))
-        idf = self._idf(allt, N=self._fieldN(field))
-        excl = self._excl()
-        k1, b = self.k1, self.b
-
-        def per_group(pdf):
-            return _phrase_prefix_shard(pdf, fixed_seq, uniq_fixed,
-                                        exps, idf, avgdl, k1, b, k,
-                                        excl=excl)
-
-        allp = (self._union(lambda s: s._posting_rows(allt))
-                .groupBy("sub", "shard")
-                .applyInPandas(per_group,
-                               schema="docid long, score double")
-                .toPandas())
-        if allp.empty:
-            return empty
-        return (allp.sort_values(["score", "docid"],
-                                 ascending=[False, True])
-                .head(k).reset_index(drop=True))
-
-    def phrase_prefix_topk_local(self, query: str, k: int = 10,
-                                 field: str | None = None,
-                                 max_expansions: int | None = None
-                                 ) -> pd.DataFrame:
-        """Zero-job serving twin of phrase_prefix_topk over base +
-        deltas, rank-identical to it (disjoint docid ranges → per-sub
-        kernels merge exactly)."""
-        from .analyzer import tokenize_text
-        from .multiterm import MAX_EXPANSIONS
-        from .query import _phrase_prefix_shard
-        me = MAX_EXPANSIONS if max_expansions is None else max_expansions
-        prefix, avgdl = self._field(field)
-        toks = tokenize_text(query, self.tokenizer)
-        empty = pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")})
-        if not toks:
-            return empty
-        fixed_seq = [prefix + t for t in toks[:-1]]
-        uniq_fixed = sorted(set(fixed_seq))
-        exps = self.expand_terms(toks[-1], "prefix", field=field,
-                                 max_expansions=me)
-        if not exps:
-            return empty
-        allt = sorted(set(uniq_fixed) | set(exps))
-        idf = self._idf(allt, N=self._fieldN(field))
-        excl = self._excl()
-        parts = []
-        for s in self.subs:
-            pdf = s._local_term_rows(allt)
-            if pdf.empty:
-                continue
-            parts.append(_phrase_prefix_shard(
-                pdf, fixed_seq, uniq_fixed, exps, idf, avgdl,
-                self.k1, self.b, k, excl=excl))
-        if not parts:
-            return empty
-        return (pd.concat(parts)
-                .sort_values(["score", "docid"],
-                             ascending=[False, True])
-                .head(k).reset_index(drop=True))
-
-    # -- multi-term queries: prefix / wildcard / fuzzy ---------------
-    def expand_terms(self, pattern: str, kind: str = "prefix",
-                     field: str | None = None,
-                     max_expansions: int | None = None,
-                     fuzziness: int = 2, prefix_length: int = 0,
-                     distributed: bool = False) -> list[str]:
-        """Dictionary expansion over base + deltas: per-generation
-        pushed range scans, dfs SUMMED across generations before the
-        deterministic (df DESC, term ASC) cap — so the expansion equals
-        what a monolithic rebuild of all generations would produce
-        (up to per-generation pre-caps, which only bind past
-        max_expansions candidate terms per segment)."""
-        from . import multiterm
-        if max_expansions is None:
-            max_expansions = multiterm.MAX_EXPANSIONS
-        fp, _ = self._field(field)      # union-field validation
-        agg: dict[str, float] = {}
-        for s in self.subs:
-            for t, d in s._expand_candidates(
-                    pattern, kind, fp=fp, max_expansions=max_expansions,
-                    fuzziness=fuzziness, prefix_length=prefix_length,
-                    distributed=distributed):
-                agg[t] = agg.get(t, 0.0) + d
-        return multiterm.select_expansions(
-            list(agg), [agg[t] for t in agg], int(max_expansions))
-
-    def pattern_topk(self, pattern: str, kind: str = "prefix",
-                     k: int = 10, method: str = "wand",
-                     org: str | None = None, field: str | None = None,
-                     filter=None,
-                     after: tuple[float, int] | None = None,
-                     rewrite: str = "scoring_boolean",
-                     max_expansions: int | None = None,
-                     fuzziness: int = 2,
-                     prefix_length: int = 0) -> pd.DataFrame:
-        """Distributed prefix/wildcard/fuzzy top-k over base + deltas:
-        union-summed expansion, then the expanded terms ride the
-        unchanged union scoring pipeline (union-global idf, tombstones
-        excluded in-kernel)."""
-        terms = self.expand_terms(pattern, kind, field=field,
-                                  max_expansions=max_expansions,
-                                  fuzziness=fuzziness,
-                                  prefix_length=prefix_length,
-                                  distributed=True)
-        if rewrite == "constant_score":
-            m = self.match_docids("", mode="or", field=field, org=org,
-                                  raw_terms=terms)
-            out = m.head(k).reset_index(drop=True)
-            out["score"] = 1.0
-            return out
-        if rewrite != "scoring_boolean":
-            raise ValueError(
-                "rewrite must be scoring_boolean|constant_score")
-        return self.topk("", k=k, mode="or", method=method, org=org,
-                         field=field, filter=filter, after=after,
-                         raw_terms=terms)
-
-    def pattern_topk_local(self, pattern: str, kind: str = "prefix",
-                           k: int = 10, method: str = "wand",
-                           org: str | None = None,
-                           field: str | None = None,
-                           after: tuple[float, int] | None = None,
-                           rewrite: str = "scoring_boolean",
-                           max_expansions: int | None = None,
-                           fuzziness: int = 2,
-                           prefix_length: int = 0) -> pd.DataFrame:
-        """Zero-job serving twin of pattern_topk (pyarrow per-sub range
-        scans + local kernels), rank-identical to it."""
-        terms = self.expand_terms(pattern, kind, field=field,
-                                  max_expansions=max_expansions,
-                                  fuzziness=fuzziness,
-                                  prefix_length=prefix_length)
-        if rewrite == "constant_score":
-            m = self.match_docids_local("", mode="or", field=field,
-                                        org=org, raw_terms=terms)
-            out = m.head(k).reset_index(drop=True)
-            out["score"] = 1.0
-            return out
-        if rewrite != "scoring_boolean":
-            raise ValueError(
-                "rewrite must be scoring_boolean|constant_score")
-        return self.topk_local("", k=k, mode="or", method=method,
-                               org=org, field=field, after=after,
-                               raw_terms=terms)
-
-    def phrase_topk(self, query: str, k: int = 10,
-                    field: str | None = None,
-                    org: str | None = None,
-                    slop: int = 0) -> pd.DataFrame:
-        """Exact phrase query over base + deltas in ONE Spark job:
-        positions are per (generation, doc) so adjacency never crosses
-        sub-indexes; BM25 over the phrase's distinct terms uses
-        union-global stats — rank-identical to a monolithic rebuild's
-        phrase_topk (modulo generation-local docids). ``org`` (every
-        generation routed) restricts matching to the tenant's docs.
-        ``slop`` = the ES match_phrase slop (phrase_topk contract)."""
-        import numpy as np
-        from .analyzer import tokenize_text
-        from .query import _phrase_shard, _check_slop
-        org_subs = self._org_subs(org) if org is not None else None
-        prefix, avgdl = self._field(field)
-        seq = [prefix + t for t in tokenize_text(query, self.tokenizer)]
-        empty = pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")})
-        if not seq:
-            return empty
-        slop = _check_slop(slop, seq)
-        uniq = sorted(set(seq))
-        idf = self._idf(uniq, N=self._fieldN(field))
-        k1, b = self.k1, self.b
-        excl = self._excl()
-        schema = "docid long, score double"
-
-        if org_subs is not None:
-            rngmap = self._org_range_map(org_subs, org)
-            if rngmap is not None:
-                rows = self._org_rows_pruned(org_subs, uniq, rngmap)
-                if rows is None:
-                    return empty
-
-                def per_group_rng(pdf):
-                    key = (int(pdf["sub"].iloc[0]),
-                           int(pdf["shard"].iloc[0]))
-                    return _phrase_shard(pdf, seq, uniq, idf, avgdl,
-                                         k1, b, k, org_range=rngmap[key],
-                                         excl=excl, slop=slop)
-
-                allp = (rows.groupBy("sub", "shard")
-                        .applyInPandas(per_group_rng, schema=schema)
-                        .toPandas())
-            else:
-                rows, parts = self._org_union(org_subs, uniq, org)
-
-                def per_group_org(lpdf, rpdf):
-                    if lpdf.empty or rpdf.empty:
-                        return pd.DataFrame(
-                            {"docid": pd.Series(dtype=np.int64),
-                             "score": pd.Series(dtype=np.float64)})
-                    cand = np.sort(rpdf["docid"].to_numpy(np.int64))
-                    return _phrase_shard(lpdf, seq, uniq, idf, avgdl,
-                                         k1, b, k, org_cand=cand,
-                                         excl=excl, slop=slop)
-
-                allp = (rows.groupBy("sub", "shard")
-                        .cogroup(parts.groupBy("sub", "shard"))
-                        .applyInPandas(per_group_org, schema=schema)
-                        .toPandas())
-        else:
-            def per_group(pdf):
-                return _phrase_shard(pdf, seq, uniq, idf, avgdl, k1, b,
-                                     k, excl=excl, slop=slop)
-
-            allp = (self._union(lambda s: s._posting_rows(uniq))
-                    .groupBy("sub", "shard")
-                    .applyInPandas(per_group, schema=schema)
-                    .toPandas())
-        if allp.empty:
-            return empty
-        return (allp.sort_values(["score", "docid"],
-                                 ascending=[False, True])
-                .head(k).reset_index(drop=True))
-
-    def match_docids(self, query: str, mode: str = "and",
-                     field: str | None = None,
-                     org: str | None = None,
-                     filter=None,
-                     raw_terms: list[str] | None = None) -> pd.DataFrame:
-        """Boolean match over base + deltas (B7): docids containing all
-        (and) / any (or) query terms, ascending. Docid spaces are
-        disjoint across generations, so per-(sub, shard) results union
-        exactly. ``field`` scopes to one field of a multi-field build;
-        ``org`` (every generation routed) prunes each sub to the
-        tenant's shards and restricts matching to its docids — same
-        _org_range_map/_org_union assembly as topk/phrase_topk.
-        ``filter`` (SQL predicate over docstore columns) restricts to
-        docs satisfying it, composed as a conjunction with ``org``:
-        each generation's filtered (shard, docid) feed cogroups with
-        its own postings per (generation, shard), mirroring
-        FTSIndex.match_docids(filter=)."""
-        import numpy as np
-        from .analyzer import tokenize_text
-        from .query import _decode_term_rows
-        org_subs = self._org_subs(org) if org is not None else None
-        prefix, _ = self._field(field)
-        terms = (sorted(set(raw_terms)) if raw_terms is not None
-                 else sorted({prefix + t
-                              for t in tokenize_text(query,
-                                                     self.tokenizer)}))
-        empty = pd.DataFrame({"docid": pd.Series(dtype="int64")})
-        if not terms:
-            return empty
-        nq = len(terms)
-
-        def _match(pdf, restrict=lambda d: d):
-            res: np.ndarray | None = None
-            union: list[np.ndarray] = []
-            for t in sorted(pdf["term"].unique()):
-                d, _, _ = _decode_term_rows(pdf[pdf["term"] == t])
-                d = restrict(d)
-                if mode == "and":
-                    res = d if res is None else np.intersect1d(
-                        res, d, assume_unique=True)
-                else:
-                    union.append(d)
-            if mode == "and":
-                if pdf["term"].nunique() < nq or res is None:
-                    res = np.empty(0, dtype=np.int64)
-            else:
-                res = (np.unique(np.concatenate(union))
-                       if union else np.empty(0, dtype=np.int64))
-            return pd.DataFrame({"docid": res})
-
-        if filter is not None:
-            if org is not None and org_subs is None:
-                return empty
-
-            def mk_rows(s: FTSIndex):
-                r = s._posting_rows(terms)
-                if org is not None:
-                    r = r.where(F.col("shard")
-                                .isin(s.possible_shards(org)))
-                return r
-
-            def mk_fdocs(s: FTSIndex):
-                return s._filter_docs(filter, org)
-
-            def per_group_flt(lpdf, rpdf):
-                if lpdf.empty or rpdf.empty:
-                    return pd.DataFrame(
-                        {"docid": pd.Series(dtype=np.int64)})
-                cand = np.unique(rpdf["docid"].to_numpy(np.int64))
-                return _match(lpdf, lambda d: d[np.isin(
-                    d, cand, assume_unique=True)])
-
-            out = (self._union(mk_rows).groupBy("sub", "shard")
-                   .cogroup(self._union(mk_fdocs)
-                            .groupBy("sub", "shard"))
-                   .applyInPandas(per_group_flt, schema="docid long")
-                   .toPandas())
-            out = self._tomb_filter()(out)
-            return (out.sort_values("docid").reset_index(drop=True)
-                    if not out.empty else out)
-
-        if org_subs is not None:
-            rngmap = self._org_range_map(org_subs, org)
-            if rngmap is not None:
-                rows = self._org_rows_pruned(org_subs, terms, rngmap)
-                if rows is None:
-                    return empty
-
-                def per_group_rng(pdf):
-                    lo, hi = rngmap[(int(pdf["sub"].iloc[0]),
-                                     int(pdf["shard"].iloc[0]))]
-                    return _match(pdf, lambda d: d[(d >= lo) & (d <= hi)])
-
-                out = (rows.groupBy("sub", "shard")
-                       .applyInPandas(per_group_rng, schema="docid long")
-                       .toPandas())
-            else:
-                rows, parts = self._org_union(org_subs, terms, org)
-
-                def per_group_org(lpdf, rpdf):
-                    if lpdf.empty or rpdf.empty:
-                        return pd.DataFrame(
-                            {"docid": pd.Series(dtype=np.int64)})
-                    cand = np.sort(rpdf["docid"].to_numpy(np.int64))
-                    return _match(lpdf, lambda d: d[np.isin(
-                        d, cand, assume_unique=True)])
-
-                out = (rows.groupBy("sub", "shard")
-                       .cogroup(parts.groupBy("sub", "shard"))
-                       .applyInPandas(per_group_org, schema="docid long")
-                       .toPandas())
-        else:
-            out = (self._union(lambda s: s._posting_rows(terms))
-                   .groupBy("sub", "shard")
-                   .applyInPandas(lambda pdf: _match(pdf),
-                                  schema="docid long")
-                   .toPandas())
-        out = self._tomb_filter()(out)
-        return (out.sort_values("docid").reset_index(drop=True)
-                if not out.empty else out)
-
-    def facet_counts(self, query: str, by: str, k: int = 20,
-                     mode: str = "and", field: str | None = None,
-                     org: str | None = None, filter=None) -> DataFrame:
-        """Facet counts over base + deltas in ONE Spark job — the
-        streaming twin of FTSIndex.facet_counts (same contract:
-        (value, doc_count), count desc / value asc, top k, NULL facet
-        values uncounted). Each generation's postings cogroup with its
-        own docstore slice per (generation, shard); partial counts sum
-        across generations in one small shuffle — counts are
-        union-global without any per-generation driver merge."""
-        out = self._facet_partials(query, by, mode, field, org, filter)
-        if out is None:
-            return self.spark.createDataFrame(
-                [], "value string, doc_count long")
-        return (out.orderBy(F.desc("doc_count"), F.asc("value"))
-                .limit(k))
-
-    def _facet_partials(self, query: str, by: str, mode: str,
-                        field: str | None, org: str | None,
-                        filter) -> DataFrame | None:
-        """Shared bucket-agg plan over base + deltas (the streaming
-        twin of FTSIndex._facet_partials): unordered (value string,
-        doc_count long), or None for empty query / unknown tenant."""
-        from .analyzer import tokenize_text
-        from .query import facet_count_group
-        prefix, _ = self._field(field)
-        terms = sorted({prefix + t
-                        for t in tokenize_text(query, self.tokenizer)})
-        if not terms:
-            return None
-        if org is not None and not self._org_subs(org):
-            return None
-        nq = len(terms)
-
-        def mk_rows(s: FTSIndex):
-            r = s._posting_rows(terms)
-            if org is not None:
-                r = r.where(F.col("shard")
-                            .isin(s.possible_shards(org)))
-            return r
-
-        def mk_store(s: FTSIndex):
-            st = s._docstore
-            if org is not None:
-                st = (st.where(F.col("shard")
-                               .isin(s.possible_shards(org)))
-                      .where(F.col(s.routing_col) == org))
-            if filter is not None:
-                st = st.where(filter)
-            return st.select("shard", "docid",
-                             F.expr(by).cast("string").alias("value"))
-
-        # deleted docs leave the counts IN the kernel (excl=) — no
-        # broadcast anti-join stage on the docstore side
-        return (self._union(mk_rows).groupBy("sub", "shard")
-                .cogroup(self._union(mk_store).groupBy("sub", "shard"))
-                .applyInPandas(facet_count_group(mode, nq,
-                                                 excl=self._excl()),
-                               schema="value string, cnt long")
-                .groupBy("value").agg(F.sum("cnt").alias("doc_count")))
-
-    def facet_histogram(self, query: str, on: str, interval: float,
-                        mode: str = "and", field: str | None = None,
-                        org: str | None = None, filter=None,
-                        min_doc_count: int = 0) -> DataFrame:
-        """Histogram agg over base + deltas in ONE job — the streaming
-        twin of FTSIndex.facet_histogram (same contract: bucket =
-        floor(on/interval)·interval, (bucket double, doc_count long)
-        bucket asc, min_doc_count=0 gap-fills empty buckets)."""
-        from .query import FTSIndex as _FI
-        interval = float(interval)
-        if not interval > 0:
-            raise ValueError(f"interval must be > 0, got {interval}")
-        mdc = int(min_doc_count)
-        bexpr = f"CAST(FLOOR(({on}) / {interval!r}) AS BIGINT)"
-        out = self._facet_partials(query, bexpr, mode, field, org,
-                                   filter)
-        empty = self.spark.createDataFrame(
-            [], "bucket double, doc_count long")
-        if out is None:
-            return empty
-        counts = out.select(
-            F.col("value").cast("long").alias("idx"), "doc_count")
-        if mdc > 0:
-            return (counts.where(F.col("doc_count") >= mdc)
-                    .select((F.col("idx") * F.lit(interval))
-                            .alias("bucket"), "doc_count")
-                    .orderBy("bucket"))
-        return _FI._gapfill_hist(counts, interval)
-
-    def facet_range(self, query: str, on: str, ranges,
-                    mode: str = "and", field: str | None = None,
-                    org: str | None = None, filter=None) -> DataFrame:
-        """Range agg over base + deltas in ONE job — the streaming
-        twin of FTSIndex.facet_range (same contract: from-inclusive /
-        to-exclusive explicit buckets, caller's order, empty buckets
-        at 0, overlap legal, composite-key single pass)."""
-        from .query import FTSIndex as _FI
-        ranges = list(ranges)
-        whens, keys = _FI._range_case(on, ranges)
-        comp = ("nullif(concat_ws('|', " + ", ".join(
-            f"CASE WHEN {cond} THEN '{key}' END"
-            for key, cond in whens) + "), '')")
-        out = self._facet_partials(query, comp, mode, field, org,
-                                   filter)
-        empty = self.spark.createDataFrame(
-            [], "key string, doc_count long")
-        if out is None:
-            out = empty.withColumnRenamed("key", "value")
-        per_key = (out
-                   .select(F.explode(F.split("value", "[|]"))
-                           .alias("key"), "doc_count")
-                   .groupBy("key")
-                   .agg(F.sum("doc_count").alias("doc_count")))
-        grid = self.spark.createDataFrame(
-            [(k, i) for i, k in enumerate(keys)],
-            "key string, ord int")
-        return (grid.join(per_key, "key", "left")
-                .select("key", F.coalesce("doc_count", F.lit(0))
-                        .alias("doc_count"), "ord")
-                .orderBy("ord").drop("ord"))
-
-    def facet_nested(self, query: str, by: str, sub: str,
-                     k: int = 10, k_sub: int = 10, mode: str = "and",
-                     field: str | None = None, org: str | None = None,
-                     filter=None) -> DataFrame:
-        """Nested terms agg over base + deltas in ONE job — the
-        streaming twin of FTSIndex.facet_nested (same contract:
-        outer doc_count includes NULL-inner docs, inner buckets
-        non-NULL only, ES count-desc/value-asc ordering; composite
-        partials combine across generations before the windows)."""
-        from .query import FTSIndex as _FI
-        SEP, NULLMARK = "\x1f", "\x00"
-        comp = (f"CASE WHEN ({by}) IS NOT NULL THEN "
-                f"concat(CAST(({by}) AS STRING), '{SEP}', "
-                f"coalesce(CAST(({sub}) AS STRING), '{NULLMARK}')) "
-                f"END")
-        out = self._facet_partials(query, comp, mode, field, org,
-                                   filter)
-        if out is None:
-            return self.spark.createDataFrame(
-                [], "value string, doc_count long, sub_value string, "
-                    "sub_count long")
-        return _FI._nested_post(out, k, k_sub)
-
-    def facet_filters(self, query: str, filters: dict,
-                      mode: str = "and", field: str | None = None,
-                      org: str | None = None, filter=None) -> DataFrame:
-        """Filters agg over base + deltas in ONE job
-        (FTSIndex.facet_filters contract: named predicate buckets,
-        overlap legal, caller's order, empty buckets at 0)."""
-        filters = dict(filters)
-        if not filters:
-            raise ValueError("filters agg needs at least one bucket")
-        bad = [k for k in filters if "|" in k]
-        if bad:
-            raise ValueError(f"bucket names must not contain '|': "
-                             f"{bad}")
-        comp = ("nullif(concat_ws('|', " + ", ".join(
-            f"CASE WHEN ({pred}) THEN '{key}' END"
-            for key, pred in filters.items()) + "), '')")
-        out = self._facet_partials(query, comp, mode, field, org,
-                                   filter)
-        empty = self.spark.createDataFrame(
-            [], "key string, doc_count long")
-        if out is None:
-            out = empty.withColumnRenamed("key", "value")
-        per_key = (out
-                   .select(F.explode(F.split("value", "[|]"))
-                           .alias("key"), "doc_count")
-                   .groupBy("key")
-                   .agg(F.sum("doc_count").alias("doc_count")))
-        grid = self.spark.createDataFrame(
-            [(k, i) for i, k in enumerate(filters)],
-            "key string, ord int")
-        return (grid.join(per_key, "key", "left")
-                .select("key", F.coalesce("doc_count", F.lit(0))
-                        .alias("doc_count"), "ord")
-                .orderBy("ord").drop("ord"))
-
-    def facet_missing(self, query: str, by: str, mode: str = "and",
-                      field: str | None = None,
-                      org: str | None = None, filter=None) -> int:
-        """Missing agg over base + deltas (FTSIndex.facet_missing
-        contract): matched docs whose ``by`` is NULL."""
-        out = self._facet_partials(
-            query, f"CASE WHEN ({by}) IS NULL THEN 'm' END",
-            mode, field, org, filter)
-        if out is None:
-            return 0
-        rows = out.collect()
-        return int(rows[0]["doc_count"]) if rows else 0
-
-    def facet_date_histogram(self, query: str, on: str,
-                             interval: str = "day", mode: str = "and",
-                             field: str | None = None,
-                             org: str | None = None, filter=None,
-                             min_doc_count: int = 0) -> DataFrame:
-        """Date-histogram agg over base + deltas in ONE job — the
-        streaming twin of FTSIndex.facet_date_histogram (same
-        contract: date_trunc calendar buckets, (bucket timestamp,
-        doc_count long) bucket asc, min_doc_count=0 gap-fills)."""
-        from .query import FTSIndex as _FI
-        if interval not in _FI._DH_STEP:
-            raise ValueError(
-                f"interval must be one of {sorted(_FI._DH_STEP)}, "
-                f"got {interval!r}")
-        mdc = int(min_doc_count)
-        bexpr = f"date_trunc('{interval}', {on})"
-        out = self._facet_partials(query, bexpr, mode, field, org,
-                                   filter)
-        empty = self.spark.createDataFrame(
-            [], "bucket timestamp, doc_count long")
-        if out is None:
-            return empty
-        counts = out.select(
-            F.to_timestamp("value").alias("bkt"), "doc_count")
-        if mdc > 0:
-            return (counts.where(F.col("doc_count") >= mdc)
-                    .withColumnRenamed("bkt", "bucket")
-                    .orderBy("bucket"))
-        return _FI._gapfill_dh(counts, _FI._DH_STEP[interval])
-
-    def sorted_search(self, query: str, by: str, k: int = 10,
-                      mode: str = "and", descending: bool = True,
-                      field: str | None = None,
-                      org: str | None = None, filter=None
-                      ) -> DataFrame:
-        """Sort-by-field search over base + deltas in ONE job — the
-        streaming twin of FTSIndex.sorted_search (same contract:
-        (docid, sort_val), NULL keys omitted, per-(generation, shard)
-        PARTIAL top-k, global order/limit over (subs*shards)*k rows).
-        Tombstones leave the match set in-kernel."""
-        from .analyzer import tokenize_text
-        from .query import sort_match_group
-        prefix, _ = self._field(field)
-        terms = sorted({prefix + t
-                        for t in tokenize_text(query, self.tokenizer)})
-        empty = self.spark.createDataFrame(
-            [], "docid long, sort_val double")
-        if not terms:
-            return empty
-        if org is not None and not self._org_subs(org):
-            return empty
-        nq = len(terms)
-
-        def mk_rows(s: FTSIndex):
-            r = s._posting_rows(terms)
-            if org is not None:
-                r = r.where(F.col("shard")
-                            .isin(s.possible_shards(org)))
-            return r
-
-        def mk_store(s: FTSIndex):
-            st = s._docstore
-            if org is not None:
-                st = (st.where(F.col("shard")
-                               .isin(s.possible_shards(org)))
-                      .where(F.col(s.routing_col) == org))
-            if filter is not None:
-                st = st.where(filter)
-            return st.select("shard", "docid",
-                             F.expr(by).cast("double").alias("value"))
-
-        part = (self._union(mk_rows).groupBy("sub", "shard")
-                .cogroup(self._union(mk_store)
-                         .groupBy("sub", "shard"))
-                .applyInPandas(sort_match_group(mode, nq, k,
-                                                descending,
-                                                excl=self._excl()),
-                               schema="docid long, sort_val double"))
-        key = (F.desc("sort_val") if descending
-               else F.asc("sort_val"))
-        return part.orderBy(key, F.asc("docid")).limit(k)
-
-    def count(self, query: str, mode: str = "and",
-              field: str | None = None,
-              org: str | None = None, filter=None) -> int:
-        """Hit count over base + deltas (ES _count analog), tombstones
-        excluded — one job, per-group counts only."""
-        return int(len(self.match_docids(query, mode, field=field,
-                                         org=org, filter=filter)))
-
-    def count_local(self, query: str, mode: str = "and",
-                    field: str | None = None,
-                    org: str | None = None) -> int:
-        """Zero-job serving twin of count()."""
-        return int(len(self.match_docids_local(query, mode,
-                                               field=field, org=org)))
-
-    def facet_cardinality(self, query: str, by: str,
-                          mode: str = "and",
-                          field: str | None = None,
-                          org: str | None = None, filter=None,
-                          exact: bool = True,
-                          rsd: float = 0.05) -> int:
-        """ES cardinality agg over base + deltas (FTSIndex contract):
-        exact countDistinct for oracle parity, HyperLogLog++ sketches
-        (approx_count_distinct) as the 100-TB path; tombstones leave
-        the match set in-kernel."""
-        from .analyzer import tokenize_text
-        from .query import facet_count_group
-        prefix, _ = self._field(field)
-        terms = sorted({prefix + t
-                        for t in tokenize_text(query, self.tokenizer)})
-        if not terms:
-            return 0
-        if org is not None and not self._org_subs(org):
-            return 0
-        nq = len(terms)
-
-        def mk_rows(s: FTSIndex):
-            r = s._posting_rows(terms)
-            if org is not None:
-                r = r.where(F.col("shard")
-                            .isin(s.possible_shards(org)))
-            return r
-
-        def mk_store(s: FTSIndex):
-            st = s._docstore
-            if org is not None:
-                st = (st.where(F.col("shard")
-                               .isin(s.possible_shards(org)))
-                      .where(F.col(s.routing_col) == org))
-            if filter is not None:
-                st = st.where(filter)
-            return st.select("shard", "docid",
-                             F.expr(by).cast("string").alias("value"))
-
-        part = (self._union(mk_rows).groupBy("sub", "shard")
-                .cogroup(self._union(mk_store)
-                         .groupBy("sub", "shard"))
-                .applyInPandas(facet_count_group(mode, nq,
-                                                 excl=self._excl()),
-                               schema="value string, cnt long"))
-        agg = (F.countDistinct("value") if exact
-               else F.approx_count_distinct("value", rsd))
-        return int(part.agg(agg.alias("c")).collect()[0]["c"])
-
-    def facet_metrics(self, query: str, by: str, metric: str,
-                      k: int = 20, mode: str = "and",
-                      field: str | None = None,
-                      org: str | None = None, filter=None) -> DataFrame:
-        """Per-bucket metric stats over base + deltas in ONE Spark job
-        — the streaming twin of FTSIndex.facet_metrics (same contract).
-        Per-(generation, shard) partial stats combine across
-        generations in one small shuffle; tombstoned docs leave the
-        buckets IN the kernel (excl=)."""
-        from .analyzer import tokenize_text
-        from .query import _facet_metrics_finalize, facet_stats_group
-        prefix, _ = self._field(field)
-        terms = sorted({prefix + t
-                        for t in tokenize_text(query, self.tokenizer)})
-        empty = self.spark.createDataFrame(
-            [], "value string, doc_count long, metric_count long, "
-                "min double, max double, sum double, avg double")
-        if not terms:
-            return empty
-        if org is not None and not self._org_subs(org):
-            return empty
-        nq = len(terms)
-
-        def mk_rows(s: FTSIndex):
-            r = s._posting_rows(terms)
-            if org is not None:
-                r = r.where(F.col("shard")
-                            .isin(s.possible_shards(org)))
-            return r
-
-        def mk_store(s: FTSIndex):
-            st = s._docstore
-            if org is not None:
-                st = (st.where(F.col("shard")
-                               .isin(s.possible_shards(org)))
-                      .where(F.col(s.routing_col) == org))
-            if filter is not None:
-                st = st.where(filter)
-            return st.select(
-                "shard", "docid",
-                F.expr(by).cast("string").alias("value"),
-                F.expr(metric).cast("double").alias("metric"))
-
-        part = (self._union(mk_rows).groupBy("sub", "shard")
-                .cogroup(self._union(mk_store).groupBy("sub", "shard"))
-                .applyInPandas(facet_stats_group(mode, nq,
-                                                 excl=self._excl()),
-                               schema="value string, cnt long, "
-                                      "mcnt long, mn double, "
-                                      "mx double, sm double"))
-        return _facet_metrics_finalize(part, k)
-
-    def facet_percentiles(self, query: str, metric: str,
-                          percentiles=(25.0, 50.0, 75.0, 95.0, 99.0),
-                          by: str | None = None, k: int = 20,
-                          mode: str = "and",
-                          field: str | None = None,
-                          org: str | None = None, filter=None,
-                          exact: bool = True,
-                          accuracy: int = 10000) -> DataFrame:
-        """ES percentiles agg over base + deltas in ONE job — the
-        streaming twin of FTSIndex.facet_percentiles (same contract:
-        exact `percentile` for oracle parity, `percentile_approx`
-        quantile sketches as the 100-TB path). Tombstoned docs leave
-        the match set in-kernel; partial sketches combine across
-        generations in the one value-keyed exchange."""
-        from .analyzer import tokenize_text
-        from .query import (_facet_percentiles_finalize,
-                            facet_values_group)
-        prefix, _ = self._field(field)
-        terms = sorted({prefix + t
-                        for t in tokenize_text(query, self.tokenizer)})
-        ps = [float(p) for p in percentiles]
-        if not ps or not all(0.0 <= p <= 100.0 for p in ps):
-            raise ValueError("percentiles must be in [0, 100]")
-        empty = self.spark.createDataFrame(
-            [], "value string, doc_count long, p double, pctl double")
-        if not terms:
-            return empty
-        if org is not None and not self._org_subs(org):
-            return empty
-        nq = len(terms)
-
-        def mk_rows(s: FTSIndex):
-            r = s._posting_rows(terms)
-            if org is not None:
-                r = r.where(F.col("shard")
-                            .isin(s.possible_shards(org)))
-            return r
-
-        def mk_store(s: FTSIndex):
-            st = s._docstore
-            if org is not None:
-                st = (st.where(F.col("shard")
-                               .isin(s.possible_shards(org)))
-                      .where(F.col(s.routing_col) == org))
-            if filter is not None:
-                st = st.where(filter)
-            bucket = (F.expr(by).cast("string") if by is not None
-                      else F.lit("_all"))
-            return st.select("shard", "docid", bucket.alias("value"),
-                             F.expr(metric).cast("double")
-                             .alias("metric"))
-
-        part = (self._union(mk_rows).groupBy("sub", "shard")
-                .cogroup(self._union(mk_store).groupBy("sub", "shard"))
-                .applyInPandas(facet_values_group(mode, nq,
-                                                  excl=self._excl()),
-                               schema="value string, metric double"))
-        return _facet_percentiles_finalize(part, ps, k, exact,
-                                           accuracy)
-
-    def facet_top_hits(self, query: str, by: str,
-                       k_buckets: int = 10, k_hits: int = 3,
-                       mode: str = "and", field: str | None = None,
-                       org: str | None = None, filter=None
-                       ) -> DataFrame:
-        """ES top_hits agg over base + deltas in ONE job — the
-        streaming twin of FTSIndex.facet_top_hits. BM25 stats are
-        union-global (self._idf combines df across generations), so
-        each bucket's hits equal the combined topk ranking restricted
-        to the bucket; tombstones leave the candidate set before
-        scoring; the kernel's partial-count label carries the
-        generation, so counts never collapse across subs sharing a
-        shard number."""
-        from .analyzer import tokenize_text
-        from .query import _facet_top_hits_finalize, top_hits_group
-        prefix, avgdl = self._field(field)
-        terms = sorted({prefix + t
-                        for t in tokenize_text(query, self.tokenizer)})
-        empty = self.spark.createDataFrame(
-            [], "value string, doc_count long, rank int, "
-                "docid long, score double")
-        if not terms:
-            return empty
-        if org is not None and not self._org_subs(org):
-            return empty
-        nq = len(terms)
-        idf = self._idf(terms, N=self._fieldN(field))
-
-        def mk_rows(s: FTSIndex):
-            r = s._posting_rows(terms)
-            if org is not None:
-                r = r.where(F.col("shard")
-                            .isin(s.possible_shards(org)))
-            return r
-
-        def mk_store(s: FTSIndex):
-            st = s._docstore
-            if org is not None:
-                st = (st.where(F.col("shard")
-                               .isin(s.possible_shards(org)))
-                      .where(F.col(s.routing_col) == org))
-            if filter is not None:
-                st = st.where(filter)
-            return st.select("shard", "docid",
-                             F.expr(by).cast("string").alias("value"))
-
-        part = (self._union(mk_rows).groupBy("sub", "shard")
-                .cogroup(self._union(mk_store).groupBy("sub", "shard"))
-                .applyInPandas(
-                    top_hits_group(idf, avgdl, self.k1, self.b,
-                                   k_hits, mode, nq,
-                                   excl=self._excl()),
-                    schema="shard string, value string, cnt long, "
-                           "docid long, score double"))
-        return _facet_top_hits_finalize(part, k_buckets, k_hits)
-
-    def explain(self, query: str, docid: int,
-                field: str | None = None) -> pd.DataFrame:
-        """Per-term BM25 breakdown over base + deltas (ES `_explain`
-        analog): the doc lives in exactly one generation, so its
-        tf/dl decode from that sub-index, while idf/avgdl are
-        UNION-global — the left-to-right weight accumulation equals
-        the doc's CombinedIndex.topk/topk_local score bit-for-bit.
-        Tombstoned docs yield an empty frame (they no longer match)."""
-        from .analyzer import tokenize_text
-        from .query import _bm25_idf
-        from . import codec as _codec
-        empty = pd.DataFrame(
-            {"term": pd.Series(dtype=object),
-             "tf": pd.Series(dtype=np.int64),
-             "dl": pd.Series(dtype=np.int64),
-             "idf": pd.Series(dtype=np.float64),
-             "weight": pd.Series(dtype=np.float64)})
-        if np.isin(np.int64(docid), self.deleted_docids()):
-            return empty
-        prefix, avgdl = self._field(field)
-        terms = sorted({prefix + t
-                        for t in tokenize_text(query, self.tokenizer)})
-        if not terms:
-            return empty
-        df_tot = {t: 0.0 for t in terms}
-        for s in self.subs:
-            for t, d in s._local_df_counts(terms).items():
-                df_tot[t] += d
-        idf = {t: _bm25_idf(self._fieldN(field), d)
-               for t, d in df_tot.items()}
-        sub = self._sub_for(int(docid))
-        dec = sub._decoded_terms(terms)
-        rows = []
-        for t in terms:
-            d, tf, dl = dec[t]
-            i = np.searchsorted(d, docid)
-            if i < d.size and d[i] == docid:
-                w = float(idf[t] * _codec.bm25_partial(
-                    np.asarray([tf[i]], dtype=np.float64),
-                    np.asarray([dl[i]], dtype=np.float64),
-                    avgdl, self.k1, self.b)[0])
-                rows.append((t, int(tf[i]), int(dl[i]),
-                             float(idf[t]), w))
-        if not rows:
-            return empty
-        return pd.DataFrame(rows, columns=["term", "tf", "dl", "idf",
-                                           "weight"])
-
-    def highlight(self, query: str, k: int = 10, mode: str = "or",
-                  method: str = "wand", window: int = 12,
-                  col: str = "text", field: str | None = None,
-                  org: str | None = None, filter=None,
-                  local: bool = False, pre_tag: str = "<em>",
-                  post_tag: str = "</em>") -> pd.DataFrame:
-        """Highlighted search over base + deltas — same contract as
-        FTSIndex.highlight (tombstoned docs never appear: topk and the
-        doc fetch both exclude them), incl. ``mode="phrase"`` (r6)."""
-        from .analyzer import tokenize_text
-        from .highlight import highlight_hits
-        if field is not None and col == "text":
-            col = field
-        if mode == "phrase":
-            if filter is not None:
-                raise ValueError(
-                    "CombinedIndex phrase highlight does not take "
-                    "filter= (phrase_topk has no filter leg here)")
-            hits = (self.phrase_topk_local(query, k, org=org,
-                                           field=field)
-                    if local
-                    else self.phrase_topk(query, k, org=org,
-                                          field=field))
-        elif local:
-            if filter is not None:
-                raise ValueError(
-                    "highlight(local=True) does not take filter=")
-            hits = self.topk_local(query, k, mode, method, org=org,
-                                   field=field)
-        else:
-            hits = self.topk(query, k, mode, method, org=org,
-                             field=field, filter=filter)
-        if hits.empty:
-            return hits.assign(
-                fragment=pd.Series(dtype=object),
-                n_matches=pd.Series(dtype="int64"))
-        docs = self.fetch_docs_local(hits["docid"].tolist())
-        qterms = set(tokenize_text(query, self.tokenizer))
-        return highlight_hits(hits, docs, qterms, self.tokenizer,
-                              col=col, window=window, pre_tag=pre_tag,
-                              post_tag=post_tag)
-
-    def search(self, query: str, k: int = 10, mode: str = "or",
-               method: str = "wand", org: str | None = None,
-               field: str | None = None,
-               must_not: str | None = None,
-               must: str | None = None,
-               boosts: dict[str, float] | None = None) -> pd.DataFrame:
-        """Distributed full search over base + deltas (top-k + doc
-        content): the Spark-job twin of search_local, mirroring
-        FTSIndex.search — topk over the unioned dictionaries, then a
-        geometry-aware pruned fetch from each owning generation.
-        ``must_not`` excludes docs containing any of its terms;
-        ``must`` requires ALL of its terms; ``boosts`` scales
-        per-term weights (topk contract)."""
-        hits = self.topk(query, k, mode, method, org=org, field=field,
-                         must_not=must_not, must=must, boosts=boosts)
-        if hits.empty:
-            return hits
-        docs = self.fetch_docs(hits["docid"].tolist())
-        out = hits.merge(docs.drop(columns=["shard"]), on="docid")
-        return (out.sort_values(["score", "docid"],
-                                ascending=[False, True])
-                .reset_index(drop=True))
-
-    def suggest(self, text: str, size: int = 5, max_edits: int = 2,
-                prefix_length: int = 1, min_doc_freq: int = 1,
-                field: str | None = None,
-                suggest_mode: str = "missing") -> pd.DataFrame:
-        """ES term suggester over base + deltas (FTSIndex.suggest
-        contract with UNION-summed dfs: a candidate's df adds across
-        generations before ranking, exactly like pattern expansion)."""
-        from .analyzer import tokenize_text
-        from . import multiterm
-        if suggest_mode not in ("missing", "always"):
-            raise ValueError("suggest_mode is 'missing' or 'always'")
-        prefix, _ = self._field(field)
-        toks = list(dict.fromkeys(tokenize_text(text, self.tokenizer)))
-        dfs_self = {prefix + t: 0.0 for t in toks}
-        if toks:
-            for s in self.subs:
-                for t, d in s._local_df_counts(
-                        list(dfs_self)).items():
-                    dfs_self[t] += d
-        out = []
-        for tok in toks:
-            if (suggest_mode == "missing"
-                    and dfs_self.get(prefix + tok, 0.0) > 0):
-                continue
-            agg: dict[str, float] = {}
-            for s in self.subs:
-                for t, d in s._expand_candidates(
-                        tok, "fuzzy", fp=prefix,
-                        max_expansions=1 << 20,
-                        fuzziness=int(max_edits),
-                        prefix_length=int(prefix_length)):
-                    agg[t] = agg.get(t, 0.0) + d
-            if not agg:
-                continue
-            terms = sorted(agg)
-            bare = [t[len(prefix):] for t in terms]
-            dist = multiterm.levenshtein_batch(tok, bare)
-            ranked = sorted(
-                (int(d), -agg[t], s)
-                for s, t, d in zip(bare, terms, dist)
-                if d > 0 and agg[t] >= int(min_doc_freq))
-            for d, ndf, s in ranked[:int(size)]:
-                out.append((tok, s, d, float(-ndf)))
-        return pd.DataFrame(out, columns=["token", "suggestion",
-                                          "distance", "df"]).astype(
-            {"token": "str", "suggestion": "str",
-             "distance": "int64", "df": "float64"})
-
-    def mlt_terms(self, docid: int, field: str | None = None,
-                  col: str = "text", max_query_terms: int = 25,
-                  min_term_freq: int = 1,
-                  min_doc_freq: int = 2) -> list[str]:
-        """ES more_like_this term selection over base + deltas (the
-        FTSIndex.mlt_terms contract with UNION-global dfs): the
-        source doc lives in exactly one generation (geometry-pruned
-        point fetch), candidate dfs sum across generations."""
-        from collections import Counter
-        from .analyzer import tokenize_text
-        from .query import _bm25_idf
-        prefix, _ = self._field(field)
-        if field is not None and col == "text":
-            col = field
-        doc = self.fetch_docs_local([int(docid)])
-        if doc.empty:
-            raise ValueError(f"docid {int(docid)} not found")
-        if col not in doc.columns:
-            raise ValueError(f"column {col!r} not in doc store")
-        tf = Counter(prefix + t
-                     for t in tokenize_text(str(doc[col].iloc[0]),
-                                            self.tokenizer))
-        cand = sorted(t for t, c in tf.items()
-                      if c >= int(min_term_freq))
-        if not cand:
-            return []
-        dfs = {t: 0.0 for t in cand}
-        for s in self.subs:
-            for t, d in s._local_df_counts(cand).items():
-                dfs[t] += d
-        N = self._fieldN(field)
-        scored = sorted(
-            (-tf[t] * _bm25_idf(N, dfs[t]), t)
-            for t in cand if dfs[t] >= int(min_doc_freq))
-        return [t for _, t in scored[:int(max_query_terms)]]
-
-    def more_like_this(self, docid: int, k: int = 10,
-                       field: str | None = None, col: str = "text",
-                       max_query_terms: int = 25,
-                       min_term_freq: int = 1, min_doc_freq: int = 2,
-                       min_should_match: int | None = None,
-                       org: str | None = None, filter=None,
-                       local: bool = False) -> pd.DataFrame:
-        """more_like_this over base + deltas (FTSIndex contract:
-        mlt_terms selection → raw_terms OR scoring with union-global
-        stats, source doc dropped from a k+1 ranking; tombstones
-        excluded in-kernel)."""
-        terms = self.mlt_terms(docid, field=field, col=col,
-                               max_query_terms=max_query_terms,
-                               min_term_freq=min_term_freq,
-                               min_doc_freq=min_doc_freq)
-        if not terms:
-            return pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        kw = dict(query="", k=k + 1, mode="or", field=field,
-                  raw_terms=terms,
-                  min_should_match=min_should_match, org=org)
-        if local:
-            if filter is not None:
-                raise ValueError("filter= runs on the distributed "
-                                 "path; local=True composes with "
-                                 "org= only")
-            hits = self.topk_local(**kw)
-        else:
-            hits = self.topk(filter=filter, **kw)
-        return (hits[hits["docid"] != int(docid)].head(k)
-                .reset_index(drop=True))
-
-    def topk_many(self, queries: dict[str, tuple[str, str]], k: int = 10,
-                  method: str = "wand", field: str | None = None,
-                  org: str | None = None, filter=None,
-                  min_should_match: int | None = None,
-                  after: dict[str, tuple[float, int]] | None = None,
-                  must: str | None = None,
-                  boosts: dict[str, float] | None = None
-                  ) -> dict[str, pd.DataFrame]:
-        """Batched base+delta top-k: the WHOLE query set in ONE Spark
-        job over the unioned dictionaries (the streaming analog of
-        FTSIndex.topk_many), each result rank-identical to the
-        corresponding CombinedIndex.topk call. ``filter`` restricts
-        the whole batch like topk(filter=) — each generation's
-        matching docids cogroup in per (generation, shard), stats stay
-        union-global (r6). ``after`` maps qid → (score, docid)
-        pagination cursor, per-query, same contract as topk(after=)
-        (r7). ``must``/``boosts`` apply to the WHOLE batch
-        (FTSIndex.topk_many contract)."""
-        import numpy as np
-        from .analyzer import tokenize_text
-        from .query import (_QSET_EMPTY, score_query_set, _check_msm,
-                            _fold_must, _apply_boosts)
-        if after is not None:
-            after = {qid: (float(sc), int(d))
-                     for qid, (sc, d) in after.items()}
-        org_subs = self._org_subs(org) if org is not None else None
-        prefix, avgdl = self._field(field)
-        qterms = {qid: sorted({prefix + t for t in
-                               tokenize_text(q, self.tokenizer)})
-                  for qid, (q, _) in queries.items()}
-        modes = {qid: m for qid, (_, m) in queries.items()}
-        mh = (None if min_should_match is None
-              else _check_msm(min_should_match, "or"))
-        reqs = None
-        if must:
-            req_list = sorted({prefix + t for t in
-                               tokenize_text(must, self.tokenizer)})
-            reqs = {}
-            for qid in list(qterms):
-                t2, m2, rq = _fold_must(req_list, must, qterms[qid],
-                                        modes[qid], mh)
-                qterms[qid], modes[qid], reqs[qid] = t2, m2, rq
-        all_terms = sorted({t for ts in qterms.values() for t in ts})
-        if not all_terms:
-            return {qid: pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                                       "score": pd.Series(dtype="float64")})
-                    for qid in queries}
-        idf = _apply_boosts(self._idf(all_terms, N=self._fieldN(field)),
-                            boosts, all_terms, self.tokenizer, prefix)
-        k1, b = self.k1, self.b
-        excl = self._excl()
-        out_schema = "qid string, docid long, score double"
-
-        if filter is not None:
-            # bool-filter batch (r6): per-(generation, shard) cogroup
-            # with that generation's matching docids — composes with
-            # org (conjoined inside each _filter_docs)
-            def mk_rows(s: FTSIndex):
-                r = s._posting_rows(all_terms)
-                if org is not None:
-                    r = r.where(F.col("shard")
-                                .isin(s.possible_shards(org)))
-                return r
-
-            def per_group_flt(lpdf: pd.DataFrame,
-                              rpdf: pd.DataFrame) -> pd.DataFrame:
-                if lpdf.empty or rpdf.empty:
-                    return _QSET_EMPTY
-                cand = np.unique(rpdf["docid"].to_numpy(np.int64))
-                return score_query_set(lpdf, cand, qterms, modes, idf,
-                                       avgdl, k1, b, k, method,
-                                       excl=excl, min_hits=mh,
-                                       after=after, reqs=reqs)
-
-            tops = (self._union(mk_rows).groupBy("sub", "shard")
-                    .cogroup(self._union(
-                        lambda s: s._filter_docs(filter, org))
-                        .groupBy("sub", "shard"))
-                    .applyInPandas(per_group_flt, schema=out_schema)
-                    .toPandas())
-        elif org_subs is not None:
-            rngmap = self._org_range_map(org_subs, org)
-            if rngmap is not None:
-                rows = self._org_rows_pruned(org_subs, all_terms, rngmap)
-                tops = _QSET_EMPTY
-                if rows is not None:
-                    def per_group_rng(pdf):
-                        key = (int(pdf["sub"].iloc[0]),
-                               int(pdf["shard"].iloc[0]))
-                        return score_query_set(pdf, None, qterms, modes,
-                                               idf, avgdl, k1, b, k,
-                                               method, rng=rngmap[key],
-                                               excl=excl, min_hits=mh,
-                                               after=after,
-                                               reqs=reqs)
-
-                    tops = (rows.groupBy("sub", "shard")
-                            .applyInPandas(per_group_rng,
-                                           schema=out_schema)
-                            .toPandas())
-            else:
-                rows, parts = self._org_union(org_subs, all_terms, org)
-
-                def per_group_org(lpdf, rpdf):
-                    if lpdf.empty or rpdf.empty:
-                        return _QSET_EMPTY
-                    cand = np.sort(rpdf["docid"].to_numpy(np.int64))
-                    return score_query_set(lpdf, cand, qterms, modes,
-                                           idf, avgdl, k1, b, k, method,
-                                           excl=excl, min_hits=mh,
-                                           after=after, reqs=reqs)
-
-                tops = (rows.groupBy("sub", "shard")
-                        .cogroup(parts.groupBy("sub", "shard"))
-                        .applyInPandas(per_group_org, schema=out_schema)
-                        .toPandas())
-        else:
-            def per_group(pdf):
-                return score_query_set(pdf, None, qterms, modes, idf,
-                                       avgdl, k1, b, k, method,
-                                       excl=excl, min_hits=mh,
-                                       after=after, reqs=reqs)
-
-            tops = (self._union(lambda s: s._posting_rows(all_terms))
-                    .groupBy("sub", "shard")
-                    .applyInPandas(lambda pdf: per_group(pdf),
-                                   schema=out_schema)
-                    .toPandas())
-        out = {}
-        for qid in queries:
-            sub = tops[tops["qid"] == qid]
-            out[qid] = (sub.sort_values(["score", "docid"],
-                                        ascending=[False, True])
-                        .head(k)[["docid", "score"]]
-                        .reset_index(drop=True))
-        return out
-
-    def search_join(self, queries: DataFrame, k: int = 10,
-                    method: str = "wand", field: str | None = None,
-                    org: str | None = None, qid_col: str = "qid",
-                    query_col: str = "query",
-                    mode_col: str | None = None,
-                    default_mode: str = "or",
-                    n_buckets: int | None = None, filter=None,
-                    min_should_match: int | None = None,
-                    after_cols: tuple[str, str] | None = None
-                    ) -> DataFrame:
-        """Batch search as a join over base + deltas — the streaming
-        analog of FTSIndex.search_join (same contract: a DataFrame of
-        queries in, per-query (qid, rank, docid, score) top-k out,
-        or/and/phrase modes, filter= batch restriction, nothing
-        O(#queries) on the driver; see
-        that docstring for the plan shape). Union-global statistics come distributedly too:
-        df = SUM over generations' term_stats (one groupBy on the
-        query vocab — no driver collect), N/avgdl from the handle.
-        Docid spaces are disjoint by the ledger's reservation, so
-        per-(sub, shard, bucket) group results merge exactly in the
-        one global window. ``org=`` requires every generation routed
-        WITH contiguous-tenant ranges (the rngmap is O(subs × shards)
-        in the kernel closure). ``after_cols`` names per-query
-        pagination-cursor columns (FTSIndex.search_join contract,
-        r7)."""
-        from .query import (sj_attach_idf, sj_cand_rows, sj_global_topk,
-                            sj_make_qt_factory, sj_normalize_queries,
-                            sj_score_group_factory)
-        prefix, avgdl = self._field(field)
-        if default_mode not in ("or", "and", "phrase"):
-            raise ValueError(
-                f"default_mode {default_mode!r}: or|and|phrase")
-        B = int(n_buckets
-                or self.spark.conf.get("spark.sql.shuffle.partitions",
-                                       "32"))
-        q = sj_normalize_queries(queries, qid_col, query_col, mode_col,
-                                 default_mode, after_cols=after_cols)
-        make_qt = sj_make_qt_factory(q, self.tokenizer, prefix, B)
-        stats = (self._union(lambda s: s._term_stats
-                             .select("term", "df"))
-                 .groupBy("term").agg(F.sum("df").alias("df")))
-        qs = sj_attach_idf(make_qt(), stats, self._fieldN(field))
-        rngmap = None
-        if org is not None:
-            org_subs = self._org_subs(org)
-            rngmap = self._org_range_map(org_subs, org)
-            if rngmap is None:
-                raise ValueError(
-                    "search_join(org=...) needs contiguous-tenant "
-                    "ranges in EVERY generation; rebuild or use "
-                    "topk_many(org=...)")
-            keys = sorted(rngmap)
-        else:
-            keys = [(i, sh) for i, s in enumerate(self.subs)
-                    for sh in range(s.num_shards)]
-        empty = self.spark.createDataFrame(
-            [], "qid string, rank int, docid long, score double")
-        if not keys:
-            return empty          # unknown tenant
-        keys_df = self.spark.createDataFrame(
-            [(int(i), int(sh)) for i, sh in keys], "sub int, shard int")
-        qs_k = qs.crossJoin(F.broadcast(keys_df))
-        tb = make_qt().select("term", "bucket").distinct()
-        shards_of = {}
-        for i, sh in keys:
-            shards_of.setdefault(i, []).append(sh)
-        ps = None
-        for i, s in enumerate(self.subs):
-            if i not in shards_of:
-                continue
-            r = s._postings
-            if len(shards_of[i]) < s.num_shards:
-                r = r.where(F.col("shard").isin(sorted(shards_of[i])))
-            r = (r.join(F.broadcast(tb), "term")
-                 .withColumn("sub", F.lit(i)))
-            ps = r if ps is None else ps.unionByName(r)
-        rng_lookup = None
-        if rngmap is not None:
-            rm = rngmap
-            rng_lookup = (lambda lpdf:
-                          rm.get((int(lpdf["sub"].iloc[0]),
-                                  int(lpdf["shard"].iloc[0]))))
-        excl = self._excl()
-        if filter is not None:
-            # candidate side-channel (see FTSIndex.search_join): the
-            # filter's per-(sub, shard) docid set rides the postings
-            # side as sentinel rows; kernels restrict and truncate to
-            # k in-group. Tombstones are dropped from the candidate
-            # sets at encode time too, so the kernels never see them.
-            fps = None
-            for i, s in enumerate(self.subs):
-                if i not in shards_of:
-                    continue
-                fd = (s._filter_docs(filter, org)
-                      .withColumn("sub", F.lit(i)))
-                fps = fd if fps is None else fps.unionByName(fd)
-            buckets = make_qt().select("bucket").distinct()
-            ps = ps.unionByName(
-                sj_cand_rows(fps, ["sub", "shard"], buckets,
-                             excl=self.deleted_docids()))
-        from .query import _check_msm
-        score_group = sj_score_group_factory(
-            avgdl, self.k1, self.b, k, method, rng_lookup,
-            filtered=filter is not None, excl=excl,
-            min_hits=(None if min_should_match is None
-                      else _check_msm(min_should_match, "or")))
-        tops = (ps.groupBy("sub", "shard", "bucket")
-                .cogroup(qs_k.groupBy("sub", "shard", "bucket"))
-                .applyInPandas(score_group,
-                               schema="qid string, docid long, "
-                                      "score double"))
-        return sj_global_topk(tops, k)
+    def search(self, *args, **kwargs) -> pd.DataFrame:
+        return super().search(*args, **kwargs).toPandas()
 
 
 def compact(spark: SparkSession, base_root: str, out_root: str,

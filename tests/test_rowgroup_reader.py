@@ -149,12 +149,10 @@ def test_read_counters_cache_and_pruning(spark, plain, tmp_path):
     pd.testing.assert_frame_equal(got, scan_fetch(small, [600]))
 
 
-def test_concurrent_calls_match_serial(spark, plain):
-    """8 threads share one handle with a 3-term LRU (constant eviction
-    churn); every result equals a serial run on a fresh handle."""
-    terms = pq.read_table(os.path.join(plain, "term_stats"),
-                          columns=["term"]).column("term").to_pylist()
-
+def _threads_match_serial(open_handle, terms, call):
+    """8 threads × 50 seeded ``call(handle, query, mode)`` on one shared
+    handle with a 3-term LRU (constant eviction churn); every result
+    equals a serial run on a fresh handle."""
     def calls(seed: int):
         rng = random.Random(seed)
         out = []
@@ -168,16 +166,19 @@ def test_concurrent_calls_match_serial(spark, plain):
     def run(idx, plan):
         res = []
         for q, mode in plan:
-            hits = idx.topk_local(q, k=10, mode=mode)
+            hits = call(idx, q, mode)
             res.append((hits, idx.fetch_docs_local(hits["docid"].tolist())))
         return res
 
-    serial = FTSIndex(spark, plain)
-    serial.TERM_CACHE_CAP = 3
-    want = {s: run(serial, p) for s, p in plans.items()}
+    def cold():
+        idx = open_handle()
+        for s in idx.subs:
+            s.TERM_CACHE_CAP = 3
+        return idx
 
-    shared = FTSIndex(spark, plain)
-    shared.TERM_CACHE_CAP = 3
+    serial = cold()
+    want = {s: run(serial, p) for s, p in plans.items()}
+    shared = cold()
     got, errors = {}, []
 
     def worker(s):
@@ -202,4 +203,41 @@ def test_concurrent_calls_match_serial(spark, plain):
         for (gh, gd), (wh, wd) in zip(got[s], want[s]):
             pd.testing.assert_frame_equal(gh, wh)
             pd.testing.assert_frame_equal(gd, wd)
+    return shared
+
+
+def _terms(root):
+    return pq.read_table(os.path.join(root, "term_stats"),
+                         columns=["term"]).column("term").to_pylist()
+
+
+def test_concurrent_calls_match_serial(spark, plain, routed,
+                                       tmp_path_factory):
+    """One handle shared by 8 threads equals a serial run: a plain
+    FTSIndex, a CombinedIndex (base + one delta + tombstones, whose
+    tombstone memo is read by every call), and org-routed topk_local
+    (whose per-org range memo is read by every call)."""
+    shared = _threads_match_serial(
+        lambda: FTSIndex(spark, plain), _terms(plain),
+        lambda idx, q, mode: idx.topk_local(q, k=10, mode=mode))
     assert len(shared._term_cache) <= 3 and len(shared._dec_cache) <= 3
+
+    from sparkfts.streaming import CombinedIndex, make_batch_indexer
+    root = str(tmp_path_factory.mktemp("rg_combined"))
+    build_index(spark, spark.createDataFrame(make_transcripts(30, seed=6)),
+                root, order_cols=ORDER,
+                cfg=BuildConfig(num_shards=2, partitions=2))
+    make_batch_indexer(root, cfg=BuildConfig(num_shards=2, partitions=2))(
+        spark.createDataFrame(make_transcripts(10, seed=8)), batch_id=0)
+    ci = CombinedIndex(spark, root)
+    assert len(ci.subs) == 2
+    ci.delete_docs([1, 5, ci.subs[1].docid_offset + 2])
+    _threads_match_serial(
+        lambda: CombinedIndex(spark, root), _terms(root),
+        lambda idx, q, mode: idx.topk_local(q, k=10, mode=mode))
+
+    orgs = [f"org{i}" for i in range(5)]
+    _threads_match_serial(
+        lambda: FTSIndex(spark, routed), _terms(routed),
+        lambda idx, q, mode: idx.topk_local(
+            q, k=10, mode=mode, org=orgs[len(q) % len(orgs)]))

@@ -164,3 +164,25 @@ def test_serving_forwards_r7_surfaces(spark, two_generations, tmp_path):
                            metric="turn_idx", k=5, mode="or").toPandas()
     assert list(fm.columns) == ["value", "doc_count", "metric_count",
                                 "min", "max", "sum", "avg"]
+
+
+def test_serving_reaches_every_public_method(spark, two_generations,
+                                             tmp_path):
+    """The forwarded set is derived from FTSIndex itself: every public
+    FTSIndex method resolves to the current handle's bound method, and
+    read_counters sums what the handle read."""
+    root_a, _ = two_generations
+    reg = RotationRegistry(str(tmp_path))
+    reg.swap("conversations", reg.register(_version(root_a, "fw")))
+    srv = ServingIndex(spark, reg, "conversations")
+    handle = srv.handle()
+    public = [n for n in dir(FTSIndex)
+              if not n.startswith("_") and callable(getattr(FTSIndex, n))]
+    assert {"topk_local", "read_counters", "facet_top_hits"} <= set(public)
+    for name in public:
+        got = getattr(srv, name)
+        assert got.__self__ is handle and got.__func__ is getattr(
+            FTSIndex, name), name
+    srv.fetch_docs_local([0, 1])
+    assert srv.read_counters() == handle.read_counters()
+    assert srv.read_counters()["row_groups_read"] >= 1

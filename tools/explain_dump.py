@@ -167,6 +167,19 @@ def main(sf_dir: str) -> None:
         "with partition pruning.",
         fmt(hash_sample(docs, 0.25))))
 
+    ci = E._routed_delta_ci(spark, sf_dir)
+    n_tasks = sum(s.num_shards for s in ci.subs)
+    sections.append((
+        "CombinedIndex.topk (base + delta, no filter/org)",
+        f"Expect: NO Exchange — Range over the {n_tasks} (generation, "
+        f"shard) tasks of {len(ci.subs)} generations → "
+        "MapInArrow, each task reading its own shard directory with "
+        "the th/term pushdown. This is the plan topk builds "
+        "(SegmentedIndex._plan with fan_out=True; the kernel does not "
+        "change the plan).",
+        fmt(ci._plan(terms, lambda pdf, rng, cand: pdf[[]],
+                     "docid long, score double", fan_out=True))))
+
     out = ["# EXPLAIN — physical-plan evidence",
            "",
            f"Generated by `python tools/explain_dump.py {sf_dir}` "
