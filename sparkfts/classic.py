@@ -27,9 +27,9 @@ different dl can share a quantization bucket and tie where true
 1/sqrt(dl) would not.
 
 Scale: the local path scores from the serving decoded-postings LRU
-(zero Spark jobs); the distributed path runs one applyInPandas over
-the shard-pruned dictionary rows — the same plan shape as
-FTSIndex.topk's exact method.
+(zero Spark jobs); the distributed path runs the same kernel in the
+one-stage (segment, shard) fan-out every dictionary-scored surface
+uses (SegmentedIndex._plan).
 """
 from __future__ import annotations
 
@@ -167,31 +167,23 @@ def classic_topk_local(idx, query: str, k: int = 10,
 
 def classic_topk(idx, query: str, k: int = 10,
                  mode: str = "or") -> pd.DataFrame:
-    """Distributed classic-similarity top-k: one applyInPandas over
-    the shard-pruned dictionary rows (exact path), driver merge of
-    num_shards · k candidates — FTSIndex.topk's plan shape with the
-    classic contribution in the kernel."""
-    from .query import _decode_term_rows
+    """Distributed classic-similarity top-k on an FTSIndex OR a
+    CombinedIndex: the (segment, shard) fan-out topk runs
+    (SegmentedIndex._plan) with the classic contribution in the kernel,
+    tombstoned docs dropped in the kernel, driver merge of the groups'
+    k candidates — equal to classic_topk_local bit for bit."""
+    from .query import _EMPTY_TOPK, _decode_term_rows, _top
     if mode not in ("or", "and"):
         raise ValueError(f"mode {mode!r}: or|and")
     terms, idf, qn = _classic_weights(idx, query)
-    empty = pd.DataFrame({"docid": pd.Series(dtype=np.int64),
-                          "score": pd.Series(dtype=np.float64)})
     if not terms:
-        return empty
-    nq = len(terms)
+        return _EMPTY_TOPK.copy()
+    nq, excl = len(terms), idx._excl()
 
-    def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        pt = {}
-        for t in sorted(pdf["term"].unique()):
-            pt[t] = _decode_term_rows(pdf[pdf["term"] == t])
-        return _score_decoded_classic(pt, idf, k, mode, nq, qn)
+    def kernel(pdf, rng, cand):
+        pt = {t: _decode_term_rows(pdf[pdf["term"] == t])
+              for t in sorted(pdf["term"].unique())}
+        return _score_decoded_classic(pt, idf, k, mode, nq, qn, excl=excl)
 
-    allp = (idx._posting_rows(terms).groupBy("shard")
-            .applyInPandas(per_shard, schema="docid long, score double")
-            .toPandas())
-    if allp.empty:
-        return empty
-    return (allp.sort_values(["score", "docid"],
-                             ascending=[False, True])
-            .head(k).reset_index(drop=True))
+    return _top(idx._plan(terms, kernel, "docid long, score double")
+                .toPandas(), k)

@@ -15,8 +15,8 @@ to ``most_fields`` — pinned in tests.
 
 Spark shape: the multi-field index stores field-prefixed terms in ONE
 term-sorted dictionary, so all fields' postings arrive in the same
-pushed dictionary scan and the same per-shard exchange as a
-single-field query — multi_match costs one job, not one per field.
+(segment, shard) fan-out task as a single-field query — multi_match
+costs one job, not one per field.
 Scoring is exhaustive per shard (the per-field partial sums feed a
 dense fields×docs combine); the WAND upper-bound machinery doesn't
 transfer to dis_max without per-field bound bookkeeping, so pruning is

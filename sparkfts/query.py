@@ -2285,32 +2285,30 @@ class SegmentedIndex:
             out.update({(i, sh): r for sh, r in ranges.items()})
         return out
 
-    def _fan_out(self, allt: list[str], fn, schema: str = _TOPK_SCHEMA,
-                 keys=None) -> DataFrame | None:
+    def _fan_out(self, allt: list[str], fn, schema: str,
+                 keys=None) -> DataFrame:
         """ONE-job, ONE-stage fan-out over (segment, shard) tasks: each
-        task pyarrow-reads its own shard directory with the same th/term
-        pushdown the DataFrame plan uses and runs the same per-group
-        kernel ``fn`` (pdf → pdf) on the complete group — the
-        shard-local search pattern of a real cluster. The index is
-        already partitioned by shard on disk, so nothing shuffles:
-        mapInArrow over a task-id range replaces the two-stage scan →
-        Exchange → applyInPandas plan. ``keys`` lists the (segment,
-        shard) groups to read (None: all). The kernel sees the rows with
-        ``seg`` and ``shard`` columns. None when a root is not a
-        task-readable filesystem path."""
-        roots = [storage.path(s.root, "postings") for s in self.subs]
-        if not all(os.path.isdir(r) for r in roots):
-            return None
+        task pyarrow-reads its own shard directory with the th/term
+        pushdown and runs the per-group kernel ``fn`` (pdf → pdf) on the
+        complete group — the shard-local search pattern of a real
+        cluster. The index is already partitioned by shard on disk, so
+        nothing shuffles. Tasks go to the shards each segment listed
+        (FTSIndex._shard_dirs), intersected with ``keys`` (None: all); a
+        task that cannot read its listed shard fails the query instead
+        of dropping the shard's hits. The kernel sees the rows with
+        ``seg`` and ``shard`` columns."""
         import pyarrow as pa
+        roots = [storage.path(s.root, "postings") for s in self.subs]
         hs = [codec.term_hash(t) for t in allt]
         terms = list(allt)
-        if keys is None:
-            keys = [(i, sh) for i, s in enumerate(self.subs)
-                    for sh in range(s.num_shards)]
-        tasks = [(roots[i], i, sh) for i, sh in keys]
+        listed = [(i, sh) for i, s in enumerate(self.subs)
+                  for sh in s._shard_dirs()]
+        if keys is not None:
+            keys = set(keys)
+            listed = [key for key in listed if key in keys]
+        tasks = [(roots[i], i, sh) for i, sh in listed]
         # fan-out at the session's query-parallelism knob (shuffle
-        # partitions) — the width the grouped-map plan uses, and the
-        # width of the worker pool the build warmed
+        # partitions) — the width of the worker pool the build warmed
         try:
             p = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         except Exception:   # noqa: BLE001
@@ -2323,10 +2321,8 @@ class SegmentedIndex:
             for rb in batches:
                 for j in rb.column("id").to_pylist():
                     root, seg, s = tasks[int(j)]
-                    pth = _os.path.join(root, f"shard={s}")
-                    if not _os.path.isdir(pth):
-                        continue
-                    t = _ds.dataset(pth, format="parquet").to_table(
+                    t = _ds.dataset(_os.path.join(root, f"shard={s}"),
+                                    format="parquet").to_table(
                         filter=(_ds.field("th").isin(hs)
                                 & _ds.field("term").isin(terms)))
                     if t.num_rows == 0:
@@ -2343,8 +2339,7 @@ class SegmentedIndex:
                 .mapInArrow(reader, schema=schema))
 
     def _plan(self, terms: list[str], kernel, schema: str,
-              org: str | None = None, filter=None,
-              fan_out: bool = False) -> DataFrame | None:
+              org: str | None = None, filter=None) -> DataFrame | None:
         """The Spark plan running ``kernel(rows, rng, cand)`` once per
         (segment, shard) group of the query terms' dictionary rows.
         ``rng`` is a tenant's [lo, hi] docid interval in the group and
@@ -2352,9 +2347,8 @@ class SegmentedIndex:
         over docstore columns, ANDed with ``org``) or of a tenant on a
         legacy layout; both None when unrestricted. Candidate legs
         cogroup each segment's docstore (shard, docid) feed in; the
-        others run as the one-stage fan-out when ``fan_out`` and every
-        root is task-readable, else as a grouped map. None for a tenant
-        with no docs."""
+        others run as the one-stage fan-out (_fan_out). None for a
+        tenant with no docs."""
         shards = self._org_shards(org) if org is not None else None
         rng = (self._org_range_map(org) if org is not None
                and filter is None else None)
@@ -2375,22 +2369,14 @@ class SegmentedIndex:
 
             return _cogroup(self._rows(terms, shards), right, per_group,
                             schema)
-        keys = None
-        if rng is not None:
-            if not rng:
-                return None
-            keys = sorted(rng)
-
-            def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-                return kernel(pdf, rng[_group_key(pdf)], None)
-        else:
-            def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-                return kernel(pdf, None, None)
-        plan = self._fan_out(terms, fn, schema, keys) if fan_out else None
-        if plan is not None:
-            return plan
-        return (self._rows(terms, _by_seg(keys)).groupBy("seg", "shard")
-                .applyInPandas(fn, schema=schema))
+        if rng is None:
+            return self._fan_out(terms, lambda pdf: kernel(pdf, None, None),
+                                 schema)
+        if not rng:
+            return None
+        return self._fan_out(
+            terms, lambda pdf: kernel(pdf, rng[_group_key(pdf)], None),
+            schema, rng)
 
     def _store_plan(self, terms: list[str], org: str | None, filter,
                     cols: list[Column], kernel, schema: str) -> DataFrame:
@@ -2465,10 +2451,9 @@ class SegmentedIndex:
                  must: str | None = None,
                  boosts: dict[str, float] | None = None) -> pd.DataFrame:
         """Distributed top-k: per-(segment, shard) scoring fanned out as
-        one mapInArrow stage of shard-local readers (_fan_out;
-        grouped-map / cogroup plans for the filter / legacy-tenant legs
-        and non-local roots), driver merge of the groups' k candidates.
-        Returns (docid, score) as pandas.
+        one mapInArrow stage of shard-local readers (_fan_out; a cogroup
+        plan for the filter / legacy-tenant legs), driver merge of the
+        groups' k candidates. Returns (docid, score) as pandas.
 
         With ``org`` (routed indexes only): the dictionary read is
         partition-pruned to the org's shards_per_org shards and scoring
@@ -2556,7 +2541,7 @@ class SegmentedIndex:
                                method, excl=ex, **kw)
 
         plan = self._plan(sorted(set(terms) | negs), kernel, _TOPK_SCHEMA,
-                          org, filter, fan_out=True)
+                          org, filter)
         return _top(plan.toPandas() if plan is not None else _EMPTY_TOPK,
                     k)
 
@@ -2761,7 +2746,7 @@ class SegmentedIndex:
 
         plan = self._plan(all_terms, kernel,
                           "qid string, docid long, score double", org,
-                          filter, fan_out=True)
+                          filter)
         tops = _QSET_EMPTY if plan is None else plan.toPandas()
         out = {}
         for qid in queries:
@@ -2932,9 +2917,9 @@ class SegmentedIndex:
         ``fields`` is {field: boost} (or a list, boost 1.0; default =
         every indexed field). ``mode='and'`` requires ALL terms in a
         field for that field to match (dis_max over per-field ANDs).
-        One Spark job: every field's postings ride the same pushed
-        dictionary scan and per-group exchange (field-prefixed terms,
-        one dictionary). ``after`` pages the combined ranking."""
+        One Spark job, one stage: every field's postings ride the same
+        (segment, shard) fan-out tasks (field-prefixed terms, one
+        dictionary). ``after`` pages the combined ranking."""
         return self._sdf(self._multi_match_pd(query, fields, k, qtype,
                                               tie_breaker, mode, after))
 
@@ -3998,9 +3983,9 @@ class SegmentedIndex:
         occupies the next position. Expansion is the same pushed
         range scan pattern_topk uses (deterministic df DESC cap =
         Lucene top_terms_N); hits score by BM25 over the distinct
-        participating terms (phrase_topk's contract). One job: fixed
-        + expanded terms ride one dictionary scan and one per-group
-        exchange."""
+        participating terms (phrase_topk's contract). One job, one
+        stage: fixed + expanded terms ride the same (segment, shard)
+        fan-out tasks."""
         return self._sdf(self._phrase_prefix_topk_pd(query, k, field,
                                                      max_expansions))
 
@@ -4295,6 +4280,7 @@ class FTSIndex(SegmentedIndex):
         self._part_cache_sz: dict = {}
         self._rg_cache_sz: dict = {}
         self._pa_org = None
+        self._listed_shards: list[int] | None = None
         self._org_cache: OrderedDict = OrderedDict()
         self._org_cache_sz: dict = {}
         self._read_counters = dict.fromkeys(
@@ -4304,6 +4290,20 @@ class FTSIndex(SegmentedIndex):
     @property
     def subs(self) -> list["FTSIndex"]:
         return [self]
+
+    def _shard_dirs(self) -> list[int]:
+        """The shards with a postings directory: one os.listdir per
+        handle, memoized under the handle lock. The fan-out schedules
+        tasks for these shards only, so a shard without postings costs
+        no task, and a listed shard its task cannot read fails the
+        query."""
+        with self._lock:
+            if self._listed_shards is None:
+                self._listed_shards = sorted(
+                    int(d[len("shard="):]) for d in os.listdir(
+                        storage.path(self.root, "postings"))
+                    if d.startswith("shard="))
+            return self._listed_shards
 
     def _posting_rows(self, terms: list[str]) -> DataFrame:
         """Dictionary lookup: pushdown filter on `th` = md5-based int64
@@ -4668,16 +4668,7 @@ class FTSIndex(SegmentedIndex):
         """term → df for the terms present in term_stats: a driver-side
         pyarrow point read (term-sorted row groups, cached per handle) —
         the dictionary df lookup is vocab-scale, so a Spark job for it
-        would double every distributed query's fixed latency; non-local
-        roots keep the Spark read."""
-        if os.path.isdir(storage.path(self.root, "term_stats")):
-            return self._local_df_counts(terms)
-        rows = (self._term_stats
-                .where(F.col("term").isin(terms)).collect())
-        return {r["term"]: float(r["df"]) for r in rows}
-
-    def _local_df_counts(self, terms: list[str]) -> dict[str, float]:
-        """term → df for the terms present in term_stats."""
+        would double every distributed query's fixed latency."""
         if not terms:
             return {}
         tbl = self._rg_take("term_stats",

@@ -1,9 +1,9 @@
 """On-disk index layout + manifest/commit helpers.
 
-Layout under one index root (parquet directories; the thin-interface
-analog of the reference's scheme-switched SnapshotTransportStrategy.java:
-17-27 — Spark's Hadoop FS connectors pick the backend from the path
-scheme, so s3a://... works unchanged at scale):
+Layout under one index root (parquet directories). The stats, manifest
+and query-side reads use ``os`` and pyarrow directly, so a root is a
+driver-local or shared-mount path that every executor sees at the same
+name — not a Hadoop URI (s3a://, hdfs://, file://):
 
   <root>/docstore/shard=K/    input rows + docid + dl, sorted by docid
   <root>/postings/shard=K/    dictionary + compressed posting rows

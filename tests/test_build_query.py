@@ -459,3 +459,28 @@ def test_direct_feed_multi_file_input(spark, tmp_path):
     a = FTSIndex(spark, rdir).topk_pandas("batch window", k=8, mode="or")
     b = FTSIndex(spark, rone).topk_pandas("batch window", k=8, mode="or")
     pd.testing.assert_frame_equal(a, b)
+
+
+def test_fan_out_fails_closed_on_unreadable_shard(spark, tmp_path):
+    """The fan-out schedules the shards the handle listed; a listed
+    shard its task cannot read fails the query instead of silently
+    dropping that shard's hits."""
+    import os
+    root = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(make_transcripts(12, seed=5)),
+                root, order_cols=["conv_id", "turn_idx"],
+                cfg=BuildConfig(num_shards=3, partitions=3))
+    idx = FTSIndex(spark, root)
+    q = "alpha query index"
+    want = idx.topk(q, k=1000).toPandas()
+    shards = set((want["docid"] // idx.docs_per_shard).tolist())
+    assert len(shards) > 1, "fixture: hits must span shards"
+    gone = os.path.join(root, "postings", f"shard={min(shards)}")
+    moved = str(tmp_path / "moved")
+    os.rename(gone, moved)
+    try:
+        with pytest.raises(Exception, match=f"shard={min(shards)}"):
+            idx.topk_pandas(q, k=1000)
+    finally:
+        os.rename(moved, gone)
+    pd.testing.assert_frame_equal(idx.topk_pandas(q, k=1000), want)

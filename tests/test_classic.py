@@ -183,3 +183,31 @@ def test_classic_combined_union_equals_monolith(spark,
         assert after["docid"].tolist() == want["docid"].tolist()
         np.testing.assert_allclose(after["score"], want["score"],
                                    rtol=0, atol=0)
+
+
+def test_classic_topk_on_segments_equals_local(spark, tmp_path_factory):
+    """Distributed classic scoring runs over the segment list: on a
+    CombinedIndex (base + one delta + one tombstone) classic_topk equals
+    classic_topk_local on docids and on scores bit for bit, and the
+    tombstoned doc never comes back."""
+    from sparkfts.streaming import CombinedIndex, make_batch_indexer
+    cfg = BuildConfig(num_shards=2, partitions=2)
+    root = str(tmp_path_factory.mktemp("classic_segments"))
+    build_index(spark, spark.createDataFrame(make_transcripts(10, seed=81)),
+                root, order_cols=["conv_id", "turn_idx"], cfg=cfg)
+    make_batch_indexer(root, cfg=cfg)(
+        spark.createDataFrame(make_transcripts(4, seed=82)), batch_id=0)
+    ci = CombinedIndex(spark, root)
+    assert len(ci.subs) == 2
+    q = "alpha query index"
+    dead = int(classic_topk_local(ci, q, k=1)["docid"].iloc[0])
+    ci.delete_docs([dead])
+    for query, mode in [(q, "or"), ("alpha index", "and"),
+                        ("shard", "or")]:
+        want = classic_topk_local(ci, query, k=10 ** 6, mode=mode)
+        got = classic_topk(ci, query, k=10 ** 6, mode=mode)
+        assert got["docid"].tolist() == want["docid"].tolist(), query
+        np.testing.assert_allclose(got["score"], want["score"],
+                                   rtol=0, atol=0)
+        assert dead not in set(got["docid"])
+    assert len(classic_topk(ci, q, k=10 ** 6)) > 0

@@ -349,7 +349,7 @@ def test_kernel_output_bounded_under_large_tombstone_batch(env):
     terms = sorted({t for t in Q_OR.split()})
     pdf = base._local_term_rows(terms)
     pdf = pdf[pdf["shard"] == int(pdf["shard"].iloc[0])]
-    dfs = base._local_df_counts(terms)
+    dfs = base._df_counts(terms)
     idf = {t: _bm25_idf(float(ci.N), dfs.get(t, 0.0)) for t in terms}
     full = score_shard(pdf, idf, ci.avgdl, ci.k1, ci.b, 10 ** 6,
                        "or", len(terms), "exact")
@@ -390,7 +390,7 @@ def test_wand_theta_not_inflated_by_deleted_top_docs(env):
     terms = sorted({t for t in Q_OR.split()})
     pdf = base._local_term_rows(terms)
     pdf = pdf[pdf["shard"] == int(pdf["shard"].iloc[0])]
-    dfs = base._local_df_counts(terms)
+    dfs = base._df_counts(terms)
     idf = {t: _bm25_idf(float(ci.N), dfs.get(t, 0.0)) for t in terms}
     full = score_shard(pdf, idf, ci.avgdl, ci.k1, ci.b, 10 ** 6,
                        "or", len(terms), "exact")

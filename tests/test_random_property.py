@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 
 from sparkfts import BuildConfig, FTSIndex, build_index
+from sparkfts.classic import classic_topk
 from sparkfts.oracle import BM25Oracle
 
 VOCAB = ([f"w{i}" for i in range(25)]
@@ -190,10 +191,9 @@ def test_segment_list_differential(spark, tmp_path_factory, seed):
                 page, full.iloc[2:4].reset_index(drop=True))
 
 
-def test_combined_topk_single_stage(spark, tmp_path_factory):
-    """CombinedIndex.topk without filter/org runs as ONE job with ONE
-    stage — a mapInArrow fan-out over (generation, shard) tasks, no
-    Exchange."""
+@pytest.fixture(scope="module")
+def seg_ci(spark, tmp_path_factory):
+    """A CombinedIndex over a base and one delta generation."""
     from sparkfts.streaming import CombinedIndex, make_batch_indexer
     rng = np.random.default_rng(3)
     root = str(tmp_path_factory.mktemp("seglist_stage"))
@@ -203,15 +203,72 @@ def test_combined_topk_single_stage(spark, tmp_path_factory):
     make_batch_indexer(root, cfg=BuildConfig(num_shards=2, partitions=2))(
         spark.createDataFrame(_random_corpus(rng, 9).assign(
             conv_id=lambda d: "d" + d["conv_id"])), batch_id=0)
-    ci = CombinedIndex(spark, root)
+    return CombinedIndex(spark, root)
+
+
+@pytest.fixture(scope="module")
+def seg_ci_mf(spark, tmp_path_factory):
+    """A multi-field CombinedIndex (text + meta) over a base and one
+    delta generation."""
+    from sparkfts import TokenizerConfig
+    from sparkfts.streaming import CombinedIndex, make_batch_indexer
+    rng = np.random.default_rng(4)
+    cfg = BuildConfig(num_shards=2, partitions=2,
+                      fields={"text": TokenizerConfig(),
+                              "meta": TokenizerConfig()})
+
+    def corpus(n, tag):
+        pdf = _random_corpus(rng, n)
+        return pdf.assign(conv_id=tag + pdf["conv_id"],
+                          meta=[VOCAB[i % len(VOCAB)] for i in range(n)])
+
+    root = str(tmp_path_factory.mktemp("seglist_stage_mf"))
+    build_index(spark, spark.createDataFrame(corpus(20, "b")), root,
+                order_cols=["conv_id", "turn_idx"], cfg=cfg)
+    make_batch_indexer(root, cfg=cfg)(
+        spark.createDataFrame(corpus(8, "d")), batch_id=0)
+    return CombinedIndex(spark, root)
+
+
+SINGLE_STAGE = {
+    "topk": ("seg_ci", lambda ci: ci.topk("w0 w1 alpha", k=5)),
+    "phrase_topk": ("seg_ci", lambda ci: ci.phrase_topk("w0 w0", k=5)),
+    "phrase_prefix_topk": ("seg_ci",
+                           lambda ci: ci.phrase_prefix_topk("w0 w", k=5)),
+    "classic_topk": ("seg_ci",
+                     lambda ci: classic_topk(ci, "w0 w1 alpha", k=5)),
+    "multi_match": ("seg_ci_mf", lambda ci: ci.multi_match(
+        "w0 w1 alpha", fields={"text": 1.0, "meta": 2.0}, k=5)),
+    "match_docids": ("seg_ci",
+                     lambda ci: ci._match_sdf("w0 w1", mode="or")),
+}
+
+
+@pytest.mark.parametrize("surface", sorted(SINGLE_STAGE))
+def test_combined_topk_single_stage(spark, request, surface):
+    """Every dictionary-scored CombinedIndex surface without filter/org
+    runs as ONE job with ONE stage — a mapInArrow fan-out over
+    (generation, shard) tasks, no Exchange. match_docids' ascending
+    sort adds one Exchange, so its plan is checked instead: the
+    fan-out, no grouped-map pandas UDF."""
+    fixture, call = SINGLE_STAGE[surface]
+    ci = request.getfixturevalue(fixture)
+    if surface == "match_docids":
+        sdf = call(ci)
+        plan = sdf._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan, plan
+        assert "FlatMapGroupsInPandas" not in plan, plan
+        assert sdf.count() > 0
+        return
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    sc.setJobGroup("ci-stage", "combined topk")
+    group = f"ci-stage-{surface}"
+    sc.setJobGroup(group, surface)
     try:
-        got = ci.topk("w0 w1 alpha", k=5)
+        got = call(ci)
     finally:
         sc.setJobGroup(None, None)
-    jobs = tracker.getJobIdsForGroup("ci-stage")
+    jobs = tracker.getJobIdsForGroup(group)
     assert len(jobs) == 1, jobs
     assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
     assert len(got) == 5

@@ -168,17 +168,26 @@ def main(sf_dir: str) -> None:
         fmt(hash_sample(docs, 0.25))))
 
     ci = E._routed_delta_ci(spark, sf_dir)
-    n_tasks = sum(s.num_shards for s in ci.subs)
+    n_tasks = sum(len(s._shard_dirs()) for s in ci.subs)
     sections.append((
         "CombinedIndex.topk (base + delta, no filter/org)",
         f"Expect: NO Exchange — Range over the {n_tasks} (generation, "
         f"shard) tasks of {len(ci.subs)} generations → "
         "MapInArrow, each task reading its own shard directory with "
         "the th/term pushdown. This is the plan topk builds "
-        "(SegmentedIndex._plan with fan_out=True; the kernel does not "
-        "change the plan).",
+        "(SegmentedIndex._plan; the kernel does not change the plan).",
         fmt(ci._plan(terms, lambda pdf, rng, cand: pdf[[]],
-                     "docid long, score double", fan_out=True))))
+                     "docid long, score double"))))
+
+    sections.append((
+        "FTSIndex.phrase_topk (no filter/org)",
+        f"Expect: NO Exchange — Range over the {len(idx._shard_dirs())} "
+        "shard tasks → MapInArrow, the same fan-out as topk. This is "
+        "the plan phrase_topk builds (SegmentedIndex._plan; its "
+        "positional kernel runs inside the tasks and does not change "
+        "the plan).",
+        fmt(idx._plan(sorted(terms), lambda pdf, rng, cand: pdf[[]],
+                      "docid long, score double"))))
 
     out = ["# EXPLAIN — physical-plan evidence",
            "",
