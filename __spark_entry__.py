@@ -527,8 +527,9 @@ def q_filtered_search(spark, sf_dir):
     """Filtered BM25 (r5, the ES bool-filter analog): a SQL predicate
     over docstore columns restricts results while BM25 stats stay
     global. The predicate + (shard, docid) projection push down to the
-    docstore parquet scan; matching docids cogroup into the scoring
-    kernel per shard — nothing doc-scale on the driver."""
+    docstore parquet scan; one scan job collects the matching (shard,
+    docid) pairs, the driver encodes each shard's docid set, and each
+    shard's fan-out task scores against its set."""
     import pandas as _pd
     idx = _index_for(spark, sf_dir)
     parts = []

@@ -670,7 +670,11 @@ def _direct_postings_df(spark: SparkSession, direct: dict,
                             # aliases text_col the same way)
                             names=["shard", "docid", "text"])
 
-        yield from kernel(gen())
+        try:
+            yield from kernel(gen())
+        finally:
+            for pf in open_files.values():
+                pf.close()
 
     return (spark.range(0, len(todo_sorted),
                         numPartitions=max(1, min(p, len(todo_sorted))))
@@ -691,7 +695,7 @@ def _write_org_ranges(spark: SparkSession, out_dir: str,
     intervals spanning OTHER tenants' docids — a silent cross-tenant
     leak on every org-scoped query. On violation the table is not
     written (and any stale one is removed): queries fall back to the
-    exact docid-set cogroup path."""
+    exact docid-set path."""
     from . import storage
     grouped = (spark.read.parquet(storage.path(out_dir, "docstore"))
                .select("shard",

@@ -183,7 +183,8 @@ def varint_decode_at(b: np.ndarray, ends: np.ndarray, count: int,
 def encode_docid_set(docids: np.ndarray) -> bytes:
     """Delta+varint-encode a docid SET (deduped and sorted here) —
     the compact wire format for per-shard candidate sets flowing into
-    cogroup scoring kernels (search_join's filter restriction).
+    scoring kernels (filtered search's fan-out tasks and search_join's
+    filter restriction).
     ~1-2 bytes per docid for dense shard-local sets vs 8 raw."""
     d = np.unique(np.asarray(docids, dtype=np.int64))
     if d.size == 0:
@@ -379,12 +380,14 @@ def encode_postings_batch_cols(docids: np.ndarray, tfs: np.ndarray,
     n_g = np.diff(np.append(bfirst, n))           # postings per block
     P_g = np.add.reduceat(tfs, bfirst)            # positions per block
     # Every encoded value (docid absolutes/gaps, tfs, dls, position
-    # deltas) is bounded by max(docid, dl); when that fits uint32 the
-    # whole scatter-assembly runs at half the element width — LEB128
-    # output bytes are identical (value-determined), pinned by the
-    # dtype-equality leg of the codec golden test.
-    u32 = (n and int(docids.max()) < 2**32
-           and int(dls.max()) < 2**32)
+    # deltas) is bounded by the largest docid, tf, dl or position; when
+    # that fits uint32 the whole scatter-assembly runs at half the
+    # element width — LEB128 output bytes are identical (value-
+    # determined), pinned by the dtype-equality leg of the codec golden
+    # test. Anything larger takes the uint64 path, never a truncation.
+    u32 = (int(docids.max()) < 2**32 and int(dls.max()) < 2**32
+           and int(tfs.max()) < 2**32
+           and (positions.shape[0] == 0 or int(positions.max()) < 2**32))
     ud = np.uint32 if u32 else np.uint64
     # docid gaps: absolute at block starts, else delta to predecessor
     gaps = np.where(blk_start, docids,

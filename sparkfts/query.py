@@ -2050,14 +2050,6 @@ class _RowGroupCatalog:
 
 
 _TOPK_SCHEMA = "docid long, score double"
-_PD_TYPES = {"long": "int64", "double": "float64", "string": object,
-             "int": "int32"}
-
-
-def _empty(schema: str) -> pd.DataFrame:
-    """Empty pandas frame with the columns and dtypes of a DDL schema."""
-    return pd.DataFrame({n: pd.Series(dtype=_PD_TYPES[t])
-                         for n, t in (c.split() for c in schema.split(","))})
 
 
 def _pooled(pairs) -> float:
@@ -2274,8 +2266,8 @@ class SegmentedIndex:
     def _org_range_map(self, org: str):
         """{(segment, shard): (lo, hi)} tenant docid intervals when every
         segment has contiguous-tenant ranges ({} for an unknown tenant);
-        None on legacy layouts — callers cogroup the tenant's docid set
-        in instead."""
+        None on legacy layouts — callers restrict to the tenant's docid
+        sets instead."""
         self._org_shards(org)
         out: dict[tuple[int, int], tuple[int, int]] = {}
         for i, s in enumerate(self.subs):
@@ -2338,45 +2330,82 @@ class SegmentedIndex:
         return (self.spark.range(0, len(tasks), numPartitions=p)
                 .mapInArrow(reader, schema=schema))
 
+    def _cand_sets(self, filter, org: str | None
+                   ) -> dict[tuple[int, int], bytes]:
+        """{(segment, shard): codec.encode_docid_set of the group's
+        candidate docids}, non-empty groups only. With ``filter``: the
+        docs satisfying it (ANDed with ``org``), each segment's sets
+        from its memo (FTSIndex._filter_sets) and the segments that miss
+        computed together in one Spark job (_filter_job). Without: a
+        tenant on a legacy layout, read from the driver-local docstore
+        (no Spark job). Tombstones are never in a set; the kernels drop
+        them through ``excl``."""
+        shards = self._org_shards(org) if org is not None else None
+        out: dict[tuple[int, int], bytes] = {}
+        if filter is None:
+            for i, s in enumerate(self.subs):
+                for sh, d in s._local_org_docids(org, shards[i]).items():
+                    out[(i, sh)] = codec.encode_docid_set(d)
+            return out
+        miss = [i for i, s in enumerate(self.subs)
+                if not s._filter_memoized(filter, org)]
+        job = self._filter_job(filter, org, miss) if miss else {}
+
+        def compute(i):
+            if i not in job:    # evicted since the memo check
+                job.update(self._filter_job(filter, org, [i]))
+            return job[i]
+
+        for i, s in enumerate(self.subs):
+            sets = s._filter_sets(filter, org, lambda i=i: compute(i))
+            out.update({(i, sh): blob for sh, blob in sets.items()})
+        return out
+
+    def _filter_job(self, filter, org: str | None,
+                    segs: list[int]) -> dict[int, dict[int, bytes]]:
+        """ONE Spark job: {segment: {shard: encoded docid set}} of the
+        docs satisfying ``filter`` (ANDed with ``org``) in the segments
+        ``segs`` — the pruned docstore scans (_filter_docs), collected
+        as Arrow (about 16 B per matching doc; no Python task, no
+        Exchange) and encoded per (segment, shard) on the driver. The
+        memo keeps only the encoded sets (~1.5 B per docid)."""
+        want = set(segs)
+        pdf = self._union(lambda i, s: s._filter_docs(filter, org)
+                          if i in want else None).toPandas()
+        out: dict[int, dict[int, bytes]] = {i: {} for i in segs}
+        for (i, sh), d in pdf.groupby(["seg", "shard"])["docid"]:
+            out[int(i)][int(sh)] = codec.encode_docid_set(d.to_numpy())
+        return out
+
     def _plan(self, terms: list[str], kernel, schema: str,
               org: str | None = None, filter=None) -> DataFrame | None:
         """The Spark plan running ``kernel(rows, rng, cand)`` once per
-        (segment, shard) group of the query terms' dictionary rows.
-        ``rng`` is a tenant's [lo, hi] docid interval in the group and
-        ``cand`` the sorted candidate docids of a filter (SQL predicate
-        over docstore columns, ANDed with ``org``) or of a tenant on a
-        legacy layout; both None when unrestricted. Candidate legs
-        cogroup each segment's docstore (shard, docid) feed in; the
-        others run as the one-stage fan-out (_fan_out). None for a
-        tenant with no docs."""
-        shards = self._org_shards(org) if org is not None else None
-        rng = (self._org_range_map(org) if org is not None
-               and filter is None else None)
-        if filter is not None or (org is not None and rng is None):
-            right = (self._union(lambda i, s: s._filter_docs(filter, org))
-                     if filter is not None else self._union(
-                         lambda i, s: s._docstore
-                         .where(F.col("shard").isin(shards[i]))
-                         .where(F.col(s.routing_col) == org)
-                         .select("shard", "docid")))
-
-            def per_group(lpdf: pd.DataFrame,
-                          rpdf: pd.DataFrame) -> pd.DataFrame:
-                if lpdf.empty or rpdf.empty:
-                    return _empty(schema)
-                return kernel(lpdf, None,
-                              np.unique(rpdf["docid"].to_numpy(np.int64)))
-
-            return _cogroup(self._rows(terms, shards), right, per_group,
-                            schema)
-        if rng is None:
+        (segment, shard) group of the query terms' dictionary rows: the
+        one-stage fan-out (_fan_out) on every leg. ``rng`` is a
+        tenant's [lo, hi] docid interval in the group and ``cand`` the
+        group's sorted candidate docids — of a filter (SQL predicate or
+        Column over docstore columns, ANDed with ``org``) or of a tenant
+        on a legacy layout (_cand_sets); both None when unrestricted. A
+        candidate leg ships each group's encoded set in the task
+        closure and runs only the groups that have candidates. None
+        when no group can match."""
+        if filter is None and org is None:
             return self._fan_out(terms, lambda pdf: kernel(pdf, None, None),
                                  schema)
-        if not rng:
+        rng = self._org_range_map(org) if filter is None else None
+        if rng is not None:
+            if not rng:
+                return None
+            return self._fan_out(
+                terms, lambda pdf: kernel(pdf, rng[_group_key(pdf)], None),
+                schema, rng)
+        sets = self._cand_sets(filter, org)
+        if not sets:
             return None
         return self._fan_out(
-            terms, lambda pdf: kernel(pdf, rng[_group_key(pdf)], None),
-            schema, rng)
+            terms, lambda pdf: kernel(
+                pdf, None, codec.decode_docid_set(sets[_group_key(pdf)])),
+            schema, sets)
 
     def _store_plan(self, terms: list[str], org: str | None, filter,
                     cols: list[Column], kernel, schema: str) -> DataFrame:
@@ -2409,7 +2438,8 @@ class SegmentedIndex:
         """What the driver-local reads did so far, summed over the
         segments: row groups read from disk, pruned by footer min/max,
         served from the row-group cache, and the compressed bytes
-        read."""
+        read; and filter docid sets computed by a Spark job or served
+        from the memo (one count per segment and filtered call)."""
         out: dict[str, int] = {}
         for s in self.subs:
             with s._lock:
@@ -2451,24 +2481,29 @@ class SegmentedIndex:
                  must: str | None = None,
                  boosts: dict[str, float] | None = None) -> pd.DataFrame:
         """Distributed top-k: per-(segment, shard) scoring fanned out as
-        one mapInArrow stage of shard-local readers (_fan_out; a cogroup
-        plan for the filter / legacy-tenant legs), driver merge of the
-        groups' k candidates. Returns (docid, score) as pandas.
+        one mapInArrow stage of shard-local readers (_fan_out, every
+        leg), driver merge of the groups' k candidates. Returns (docid,
+        score) as pandas.
 
         With ``org`` (routed indexes only): the dictionary read is
         partition-pruned to the org's shards_per_org shards and scoring
         restricts to the tenant's docids (a docid interval per shard on
-        contiguous-tenant layouts, else the docid set cogrouped in from
-        the equally pruned doc store) — BM25 stats stay GLOBAL, so
-        scores equal the unrestricted ranking filtered to the org.
+        contiguous-tenant layouts, else the tenant's docid set per shard,
+        read driver-side from the equally pruned doc store) — BM25 stats
+        stay GLOBAL, so scores equal the unrestricted ranking filtered
+        to the org.
 
         With ``filter`` (a SQL predicate string or Column over docstore
         columns — the ES bool-filter analog): results restrict to docs
         satisfying the predicate, scores unchanged (stats stay global).
         The predicate and the (shard, docid) projection push down to
-        the docstore parquet scan; matching docids never touch the
-        driver — they cogroup into the scoring kernel per group.
-        Composes with ``org`` (conjunction) and ``field``.
+        the docstore parquet scan; one scan job collects the matching
+        (shard, docid) pairs, the driver encodes each shard's set
+        (~1.5 B per docid), and each fan-out task scores against its
+        shard's set. A string
+        predicate's sets are memoized on the handle, so a repeat costs
+        the fan-out alone (FTSIndex._filter_sets). Composes with
+        ``org`` (conjunction) and ``field``.
 
         ``after`` — (score, docid) deep-pagination cursor (the ES
         search_after analog): results rank STRICTLY after it, so page
@@ -2662,11 +2697,11 @@ class SegmentedIndex:
         return _merge_local(parts, k)
 
     def _tenant_groups(self, terms: list[str], org: str):
-        """Driver-side groups of a tenant-scoped local query: (dictionary
-        rows, [lo, hi] interval, None) per (segment, shard) on
+        """Driver-side groups of a tenant-scoped local query, one per
+        (segment, shard): (dictionary rows, [lo, hi] interval, None) on
         contiguous-tenant layouts, else (rows, None, the tenant's
-        sorted docids) per segment. Rows come from the per-segment LRU,
-        pruned to the tenant's shards."""
+        sorted docids in the shard). Rows come from the per-segment
+        LRU, pruned to the tenant's shards."""
         shards = self._org_shards(org)
         for i, s in enumerate(self.subs):
             pdf = s._local_term_rows(terms)
@@ -2674,15 +2709,14 @@ class SegmentedIndex:
             if pdf.empty:
                 continue
             ranges = s._org_ranges(org)
-            if ranges is None:
-                cand = s._local_org_docids(org, shards[i])
-                if cand.size:
-                    yield pdf, None, cand
-                continue
-            for sh in sorted(ranges):
+            groups = ({sh: (r, None) for sh, r in ranges.items()}
+                      if ranges is not None else
+                      {sh: (None, d) for sh, d in
+                       s._local_org_docids(org, shards[i]).items()})
+            for sh in sorted(groups):
                 sub = pdf[pdf["shard"] == sh]
                 if len(sub):
-                    yield sub, ranges[sh], None
+                    yield (sub, *groups[sh])
 
     def topk_many(self, queries: dict[str, tuple[str, str]], k: int = 10,
                   method: str = "wand", field: str | None = None,
@@ -2700,7 +2734,8 @@ class SegmentedIndex:
         ``topk`` call (same kernels per (query, group)). The dictionary
         read fetches the UNION of all query terms' rows once.
         ``field``/``org``/``filter`` apply to the whole batch (same
-        semantics as topk).
+        semantics and the same one-stage fan-out as topk; a filter's
+        docid sets come from the handle's memo or one scan job).
 
         ``after`` maps qid → (score, docid) pagination cursor: that
         query's page ranks strictly after it (same contract as
@@ -4266,8 +4301,8 @@ class FTSIndex(SegmentedIndex):
             storage.path(root, "term_stats"))
         self._docstore = spark.read.parquet(storage.path(root, "docstore"))
         # driver-local serving state (see _cached): one lock guards the
-        # term caches, the row-group cache, the per-org range memo and
-        # the read counters
+        # term caches, the row-group cache, the per-org range memo, the
+        # filter docid-set memo and the read counters
         self._lock = threading.Lock()
         self._pa_ds = self._pa_docstore = None
         self._catalogs: dict[str, _RowGroupCatalog] = {}
@@ -4283,9 +4318,12 @@ class FTSIndex(SegmentedIndex):
         self._listed_shards: list[int] | None = None
         self._org_cache: OrderedDict = OrderedDict()
         self._org_cache_sz: dict = {}
+        self._filter_cache: OrderedDict = OrderedDict()
+        self._filter_cache_sz: dict = {}
         self._read_counters = dict.fromkeys(
             ("row_groups_read", "row_groups_pruned", "row_groups_cached",
-             "bytes_read"), 0)
+             "bytes_read", "filter_sets_computed", "filter_sets_cached"),
+            0)
 
     @property
     def subs(self) -> list["FTSIndex"]:
@@ -4345,10 +4383,11 @@ class FTSIndex(SegmentedIndex):
 
     def _org_keep(self, org: str, shards: list[int]):
         """docids → bool mask of the tenant's docs in this segment (its
-        interval map, or the docstore docid set on legacy layouts)."""
+        interval map, or the docstore docid sets on legacy layouts)."""
         ranges = self._org_ranges(org)
         if ranges is None:
-            cand = self._local_org_docids(org, shards)
+            sets = list(self._local_org_docids(org, shards).values())
+            cand = np.concatenate(sets) if sets else np.empty(0, np.int64)
             return lambda d: np.isin(d, cand, assume_unique=True)
 
         def keep(d: np.ndarray) -> np.ndarray:
@@ -4362,8 +4401,9 @@ class FTSIndex(SegmentedIndex):
     def _filter_docs(self, filter: str | Column,
                      org: str | None = None) -> DataFrame:
         """(shard, docid) of docs satisfying a SQL predicate over
-        docstore columns — the candidate feed for filtered search. The
-        predicate plus the two-column projection push down to the
+        docstore columns — the scan behind filtered search's docid sets
+        (SegmentedIndex._filter_job) and search_join's candidate rows.
+        The predicate plus the two-column projection push down to the
         parquet scan (column-pruned: only shard, docid, and the
         predicate's columns are read); with ``org`` the scan is also
         partition-pruned to the tenant's shards and conjoined with the
@@ -4374,6 +4414,43 @@ class FTSIndex(SegmentedIndex):
                            .isin(self.possible_shards(org)))
                   .where(F.col(self.routing_col) == org))
         return fd.select("shard", "docid")
+
+    def _filter_memoized(self, filter, org: str | None) -> bool:
+        """Whether the filter docid-set memo holds (filter, org)."""
+        if not isinstance(filter, str):
+            return False
+        with self._lock:
+            return (filter, org) in self._filter_cache
+
+    def _filter_sets(self, filter, org: str | None,
+                     compute) -> dict[int, bytes]:
+        """shard → codec.encode_docid_set of this segment's docs
+        satisfying ``filter`` (ANDed with tenant ``org``); ``compute()``
+        runs the Spark job that finds them. A SQL string is memoized per
+        (filter, org) in one of the handle's LRUs: a root's docstore
+        never changes (the reason _org_ranges is memoized too), and
+        tombstones are never baked into a set. A Column runs the job on
+        every call: its printed form does not tell '1' from 1, so it is
+        no faithful key. Counts filter_sets_computed / _cached."""
+        computed = []
+
+        def load(miss):
+            sets = compute()
+            computed.append(sets)
+            return {k: (sets, 64 + sum(map(len, sets.values())))
+                    for k in miss}
+
+        if isinstance(filter, str):
+            key = (filter, org)
+            sets = self._cached(self._filter_cache, self._filter_cache_sz,
+                                [key], load, self.TERM_CACHE_CAP)[key]
+        else:
+            sets = compute()
+            computed.append(sets)
+        with self._lock:
+            self._read_counters["filter_sets_computed" if computed
+                                else "filter_sets_cached"] += 1
+        return sets
 
     # -- public API ---------------------------------------------------
     def possible_shards(self, org: str) -> list[int]:
@@ -4685,11 +4762,16 @@ class FTSIndex(SegmentedIndex):
                 format="parquet", partitioning="hive")
         return self._pa_docstore
 
-    def _local_org_docids(self, org: str, shards: list[int]) -> np.ndarray:
-        """Driver-side tenant candidate set: shard-pruned pyarrow read of
-        the doc store filtered to the org (no Spark job)."""
+    def _local_org_docids(self, org: str,
+                          shards: list[int]) -> dict[int, np.ndarray]:
+        """Driver-side tenant candidate sets, shard → sorted docids (shards
+        without the tenant's docs absent): a shard-pruned pyarrow read
+        of the doc store filtered to the org (no Spark job)."""
         import pyarrow.dataset as ds
         flt = (ds.field("shard").isin(shards)
                & (ds.field(self.routing_col) == org))
-        t = self._pa_docstore_ds().to_table(filter=flt, columns=["docid"])
-        return np.sort(t.column("docid").to_numpy().astype(np.int64))
+        t = self._pa_docstore_ds().to_table(filter=flt,
+                                            columns=["shard", "docid"])
+        sh = t.column("shard").to_numpy()
+        d = t.column("docid").to_numpy().astype(np.int64)
+        return {int(k): np.sort(d[sh == k]) for k in np.unique(sh)}

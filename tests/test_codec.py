@@ -174,3 +174,16 @@ def test_varint_writer_uint32_matches_uint64():
     from sparkfts.codec import varint_decode
     dec, _ = varint_decode(b, count=3)
     assert dec.tolist() == big.tolist()
+
+
+def test_batch_encoder_position_beyond_uint32_roundtrips():
+    """A position >= 2^32 with small docids and dls must take the uint64
+    path and decode back exactly, not be truncated to 32 bits."""
+    pos = np.array([7, 2**32 + 9], dtype=np.int64)
+    seg = codec.encode_postings_batch(
+        np.array([5]), np.array([2]), np.array([3]), pos,
+        np.array([0, 2]), np.array([0]))[0]
+    d, t, l, p = codec.decode_block(seg["blob"], int(seg["block_off"][0]),
+                                    1, with_positions=True)
+    assert d.tolist() == [5] and t.tolist() == [2] and l.tolist() == [3]
+    assert p.tolist() == pos.tolist()

@@ -467,3 +467,98 @@ def test_facet_metrics_null_metric_handling(idx, store):
             assert pd.isna(g_row.min) and pd.isna(g_row.avg)
         else:
             assert abs(g_row.sum - e_row.sum) < 1e-9
+
+
+# ------------------------------------------------------------------ #
+# filter docid sets: one-stage plan and per-handle memo               #
+# ------------------------------------------------------------------ #
+
+def _jobs_and_stages(spark, group, call):
+    """Run ``call`` under a job group → (result, [stages per job])."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        got = call()
+    finally:
+        sc.setJobGroup(None, None)
+    tracker = sc.statusTracker()
+    return got, [len(tracker.getJobInfo(j).stageIds)
+                 for j in sorted(tracker.getJobIdsForGroup(group))]
+
+
+@pytest.mark.parametrize("kind", ["fts", "combined"])
+def test_filtered_topk_memo_single_stage(spark, idx, combined, kind):
+    """A filtered topk on a fresh handle runs two one-stage jobs (the
+    candidate-set scan, then the fan-out) and memoizes the sets; the
+    repeat runs only the fan-out, one job with one stage — neither
+    plan has an Exchange."""
+    from sparkfts.streaming import CombinedIndex
+    h = (FTSIndex(spark, idx.root) if kind == "fts"
+         else CombinedIndex(spark, combined.base_root))
+
+    def call():
+        return h.topk_pandas("alpha query index", k=5,
+                             filter="role = 'user'")
+
+    first, stages = _jobs_and_stages(spark, f"flt-cold-{kind}", call)
+    assert stages == [1, 1], stages
+    c = h.read_counters()
+    assert c["filter_sets_computed"] == len(h.subs)
+    assert c["filter_sets_cached"] == 0
+    again, stages = _jobs_and_stages(spark, f"flt-warm-{kind}", call)
+    assert stages == [1], stages
+    c = h.read_counters()
+    assert c["filter_sets_computed"] == len(h.subs)
+    assert c["filter_sets_cached"] == len(h.subs)
+    assert len(first) == 5
+    pd.testing.assert_frame_equal(first, again)
+
+
+def test_filter_memo_keys_per_predicate(spark, idx, store):
+    """Two string predicates on one handle keep their own sets; a Column
+    predicate is never memoized and computes on every call."""
+    from pyspark.sql import functions as F
+    h = FTSIndex(spark, idx.root)
+    q = "alpha query index"
+    for _ in range(2):
+        for sql, pyf in FILTERS[:2]:
+            keep = set(store.loc[pyf(store), "docid"])
+            got = h.topk_pandas(q, k=6, filter=sql)
+            want = _expected_filtered(idx, q, 6, "or", keep)
+            assert got["docid"].tolist() == want["docid"].tolist(), sql
+    c = h.read_counters()
+    assert (c["filter_sets_computed"], c["filter_sets_cached"]) == (2, 2)
+    keep = set(store.loc[store["role"] == "user", "docid"])
+    want = _expected_filtered(idx, q, 6, "or", keep)
+    for _ in range(2):
+        got = h.topk_pandas(q, k=6, filter=F.col("role") == "user")
+        assert got["docid"].tolist() == want["docid"].tolist()
+    c = h.read_counters()
+    assert (c["filter_sets_computed"], c["filter_sets_cached"]) == (4, 2)
+
+
+def test_filter_memo_honours_later_tombstones(spark, tmp_path):
+    """Sets never hold tombstones: a doc deleted after the memo filled
+    leaves topk(filter=) and count(filter=) at once."""
+    from sparkfts.streaming import CombinedIndex, make_batch_indexer
+    cfg = BuildConfig(num_shards=2, partitions=2)
+    root = str(tmp_path / "tomb")
+    build_index(spark, spark.createDataFrame(make_transcripts(10, seed=91)),
+                root, order_cols=["conv_id", "turn_idx"], cfg=cfg)
+    make_batch_indexer(root, cfg=cfg)(
+        spark.createDataFrame(make_transcripts(4, seed=92)), batch_id=0)
+    ci = CombinedIndex(spark, root)
+    q, flt = "alpha query index", "role = 'user'"
+    before = ci.topk(q, k=5, filter=flt)
+    n_before = ci.count(q, mode="or", filter=flt)
+    assert len(before) == 5
+    gone = int(before["docid"].iloc[0])
+    assert ci.delete_docs([gone]) == 1
+    cached = ci.read_counters()["filter_sets_cached"]
+    after = ci.topk(q, k=5, filter=flt)
+    assert gone not in set(after["docid"])
+    assert after["docid"].tolist()[:4] == before["docid"].tolist()[1:]
+    assert ci.count(q, mode="or", filter=flt) == n_before - 1
+    c = ci.read_counters()
+    assert c["filter_sets_computed"] == len(ci.subs)
+    assert c["filter_sets_cached"] == cached + 2 * len(ci.subs)

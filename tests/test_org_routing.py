@@ -136,7 +136,7 @@ def test_org_ranges_contiguous_and_equal_to_set_path(
     and persist (shard, org) → [lo, hi] intervals, so org-scoped scoring
     carries two ints instead of the tenant's docid set. Contiguity must
     hold exactly (interval size == tenant's docs in shard), and the
-    range fast path must be rank-identical to the legacy cogroup path."""
+    range fast path must be rank-identical to the legacy docid-set path."""
     import pandas as pd
     from pyspark.sql import functions as F
     from sparkfts import BuildConfig, FTSIndex, build_index
@@ -158,13 +158,24 @@ def test_org_ranges_contiguous_and_equal_to_set_path(
         assert set(grp["docid"]) == set(range(lo, hi + 1)), (s, o)
     for org in sorted(store["org"].unique()):
         got = idx.topk_pandas("alpha index query", k=10, org=org)
-        # force the legacy docid-set cogroup path and compare
+        # force the legacy docid-set path and compare
         saved = idx._org_ranges
         idx._org_ranges = lambda o: None
+        sc = spark.sparkContext
+        sc.setJobGroup(f"legacy-{org}", org)
         try:
             legacy = idx.topk_pandas("alpha index query", k=10, org=org)
+            # the docid sets come from a driver-side read: the fan-out
+            # is the only job, and no plan cogroups them in
+            plan = (idx._match_sdf("alpha index query", mode="or", org=org)
+                    ._jdf.queryExecution().executedPlan().toString())
         finally:
+            sc.setJobGroup(None, None)
             idx._org_ranges = saved
+        jobs = sc.statusTracker().getJobIdsForGroup(f"legacy-{org}")
+        assert len(jobs) == 1, jobs
+        assert "MapInArrow" in plan, plan
+        assert "FlatMapCoGroupsInPandas" not in plan, plan
         assert got["docid"].tolist() == legacy["docid"].tolist(), org
         assert got["score"].to_numpy() == pytest.approx(
             legacy["score"].to_numpy(), abs=0), org   # bit-identical
@@ -207,4 +218,4 @@ def test_org_ranges_guard_refuses_non_contiguous_layout(
                     cfg=cfg, resume=True)
     idx = FTSIndex(spark, root)
     assert idx._org_ranges("o0") is None        # table refused
-    idx.topk_pandas("alpha", k=5, org="o0")     # cogroup path, no crash
+    idx.topk_pandas("alpha", k=5, org="o0")     # docid-set path, no crash

@@ -189,6 +189,20 @@ def main(sf_dir: str) -> None:
         fmt(idx._plan(sorted(terms), lambda pdf, rng, cand: pdf[[]],
                       "docid long, score double"))))
 
+    flt = "lang = 'en'"
+    idx.topk_pandas(" ".join(terms), k=5, filter=flt)   # fills the memo
+    sections.append((
+        "FTSIndex.topk(filter=), memo warm",
+        "Expect: NO Exchange — Range over the shard tasks that hold "
+        "docs satisfying the filter → MapInArrow, the same fan-out as "
+        "the unfiltered topk. Each task restricts scoring to its "
+        "shard's candidate docid set, which an earlier call computed "
+        "in one docstore scan job and the handle memoized; this "
+        "call runs no other job. This is the plan topk(filter=) builds "
+        "(SegmentedIndex._plan).",
+        fmt(idx._plan(sorted(terms), lambda pdf, rng, cand: pdf[[]],
+                      "docid long, score double", filter=flt))))
+
     out = ["# EXPLAIN — physical-plan evidence",
            "",
            f"Generated by `python tools/explain_dump.py {sf_dir}` "
