@@ -194,7 +194,8 @@ def _bare_scan_local_files(df: DataFrame) -> list[str] | None:
 
 
 def _conv_sizes_local(files: list[str], conv_col: str, turn_col: str,
-                      max_rows: int = 20_000_000
+                      max_rows: int = 20_000_000,
+                      max_bytes: int = 1 << 30
                       ) -> tuple[pd.DataFrame, dict | None] | None:
     """Driver-side twin of the grouped-path conv-sizes aggregation:
     one multithreaded pyarrow read of (conv, turn) + a hash group-by —
@@ -203,10 +204,11 @@ def _conv_sizes_local(files: list[str], conv_col: str, turn_col: str,
     conversation-count-scale table (the r2 "tiny tables don't get
     Spark jobs" rule applied to docid assignment; at sf0.1 this was
     ~0.3 s of the 16-core build and ~2.9 s of the pinned 1-CPU wall).
-    Row count is checked against the parquet FOOTERS before any data
-    is read; anything unexpected (missing/partition-only columns,
-    nulls, oversize) returns None and the Spark aggregation runs
-    unchanged.
+    Row count (``max_rows``) and the conv and turn columns'
+    uncompressed bytes (``max_bytes``) are checked against the parquet
+    FOOTERS before any data is read; anything unexpected
+    (missing/partition-only columns, nulls, oversize) returns None and
+    the Spark aggregation runs unchanged.
 
     Returns (sizes, direct) — ``direct`` is non-None iff the files'
     rows are PROVEN to already be in (conv-sorted, turn) order, i.e.
@@ -215,24 +217,33 @@ def _conv_sizes_local(files: list[str], conv_col: str, turn_col: str,
     When that holds the postings kernel can read its own shard row
     spans straight from the files — docid = row index — and the
     build's doc-granularity shuffle is pure overhead; ``direct``
-    carries the file/row-group layout the readers need."""
+    carries the file/row-group layout the readers need and the
+    column names every file physically holds (``columns``)."""
     try:
         import pyarrow as pa
         import pyarrow.parquet as pq
-        total = 0
+        total = nbytes = 0
         file_rows: list[int] = []
         rg_rows: list[list[int]] = []
+        physical: set[str] | None = None
         for f in files:
             md = pq.ParquetFile(f)
             names = set(md.schema_arrow.names)
             if conv_col not in names or turn_col not in names:
                 return None
+            physical = names if physical is None else physical & names
             m = md.metadata
             file_rows.append(m.num_rows)
             rg_rows.append([m.row_group(i).num_rows
                             for i in range(m.num_row_groups)])
             total += m.num_rows
-            if total > max_rows:
+            for i in range(m.num_row_groups):
+                rg = m.row_group(i)
+                nbytes += sum(
+                    rg.column(j).total_uncompressed_size
+                    for j in range(rg.num_columns)
+                    if rg.column(j).path_in_schema in (conv_col, turn_col))
+            if total > max_rows or nbytes > max_bytes:
                 return None
         tabs = [pq.read_table(f, columns=[conv_col, turn_col])
                 for f in files]
@@ -264,7 +275,8 @@ def _conv_sizes_local(files: list[str], conv_col: str, turn_col: str,
                                   np.arange(total, dtype=np.int64)):
                     direct = {"files": list(files),
                               "file_rows": file_rows,
-                              "rg_rows": rg_rows, "n": int(total)}
+                              "rg_rows": rg_rows, "n": int(total),
+                              "columns": sorted(physical)}
         except Exception:   # noqa: BLE001 — order proof is optional
             direct = None
         return out, direct
@@ -1030,6 +1042,7 @@ def build_index(spark: SparkSession, df: DataFrame, out_dir: str,
         # the proof does not cover.
         use_direct = (direct_meta is not None
                       and cfg.fields is None
+                      and text_col in direct_meta["columns"]
                       and isinstance(df.schema[text_col].dataType,
                                      T.StringType))
         if use_direct:

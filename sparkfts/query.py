@@ -801,43 +801,48 @@ def score_range_pt(pdf: pd.DataFrame, lo: int, hi: int,
                                    req_terms=req_terms)
 
 
-def facet_count_group(mode: str, n_query_terms: int,
-                      excl: np.ndarray | None = None):
-    """Cogroup kernel factory for facet counting: left = one shard's
-    dictionary rows for the query terms, right = that shard's docstore
-    slice projected to (docid, value). Emits PARTIAL (value, cnt) rows
-    — callers sum them with one small shuffle. Matching is boolean
-    (and/or); docs whose facet value is NULL are not counted (the ES
-    terms-agg default). ``excl`` (sorted tombstoned docids) leaves the
-    match set before counting — exact counts with no post-correction.
-    Shared by facet_counts and its bucket-agg variants."""
+def _bool_match(mode: str, n_query_terms: int,
+                excl: np.ndarray | None = None):
+    """Matcher (_store_plan) of the unscored bucket aggregations: one
+    shard's dictionary rows → its boolean match set as a sorted
+    (docid) frame. ``excl`` (sorted tombstoned docids) leaves the set,
+    so counts are exact with no post-correction."""
+    return lambda rows: pd.DataFrame(
+        {"docid": _boolean_match_group(rows, mode, n_query_terms, excl)})
 
-    def per_group(lpdf: pd.DataFrame,
-                  rpdf: pd.DataFrame) -> pd.DataFrame:
-        out_empty = pd.DataFrame({"value": pd.Series(dtype=object),
-                                  "cnt": pd.Series(dtype=np.int64)})
-        if lpdf.empty or rpdf.empty:
-            return out_empty
-        res = _boolean_match_group(lpdf, mode, n_query_terms, excl)
-        if res.size == 0:
-            return out_empty
-        hit = rpdf[np.isin(rpdf["docid"].to_numpy(np.int64), res,
-                           assume_unique=True)]
-        vc = hit["value"].value_counts()   # dropna: NULLs uncounted
-        if vc.empty:
-            return out_empty
-        return pd.DataFrame({"value": vc.index.astype(object),
-                             "cnt": vc.to_numpy(np.int64)})
 
-    return per_group
+def _scored_match(idf: dict[str, float], avgdl: float, k1: float,
+                  b: float, mode: str, n_query_terms: int,
+                  excl: np.ndarray | None = None):
+    """Matcher (_store_plan) of facet_top_hits: one shard's dictionary
+    rows → (docid, score) of every match, scored with GLOBAL BM25 stats
+    by the interval path over the whole docid space — bit-identical to
+    candidate scoring, so each bucket's hits equal the plain topk
+    ranking restricted to that bucket. Tombstones leave before
+    scoring."""
+    return lambda rows: score_range_pt(
+        rows, 0, np.iinfo(np.int64).max, idf, avgdl, k1, b, 1 << 62,
+        mode, n_query_terms, excl=excl)
+
+
+def facet_count_group(hit: pd.DataFrame) -> pd.DataFrame:
+    """Bucket-aggregation kernel (_store_plan) for facet counting:
+    ``hit`` = a docstore batch's matched rows (docid, value). Emits
+    PARTIAL (value, cnt) rows — callers sum them with one small
+    shuffle. Docs whose facet value is NULL are not counted (the ES
+    terms-agg default). Shared by facet_counts, its bucket-agg variants
+    and facet_cardinality."""
+    vc = hit["value"].value_counts()   # dropna: NULLs uncounted
+    return pd.DataFrame({"value": vc.index.astype(object),
+                         "cnt": vc.to_numpy(np.int64)})
 
 
 def _boolean_match_group(lpdf: pd.DataFrame, mode: str,
                          n_query_terms: int,
                          excl: np.ndarray | None) -> np.ndarray:
     """One shard's boolean match set (sorted docids) from its
-    dictionary rows — the shared matching step of facet_count_group /
-    facet_stats_group / sort_match_group."""
+    dictionary rows — the shared matching step of match_docids and the
+    unscored bucket aggregations (_bool_match)."""
     res: np.ndarray | None = None
     union: list[np.ndarray] = []
     for t in sorted(lpdf["term"].unique()):
@@ -859,92 +864,54 @@ def _boolean_match_group(lpdf: pd.DataFrame, mode: str,
     return res
 
 
-def sort_match_group(mode: str, n_query_terms: int, k: int,
-                     descending: bool,
-                     excl: np.ndarray | None = None):
-    """Cogroup kernel factory for sort-by-field search (the ES sort
-    clause — filter context, NO scoring): boolean-match the query per
-    shard exactly as the facet kernels do, then emit that shard's
-    top-k (docid, sort_val) by (sort_val, docid asc) — a per-shard
-    PARTIAL top-k. The caller's global order/limit runs over
-    num_shards * k rows; matched docs never shuffle. Docs whose sort
-    key is NULL are omitted (compose `filter="col IS NOT NULL"` /
-    a COALESCE expression for ES missing:_first/_last semantics).
-    ``excl`` (sorted tombstoned docids) leaves the match set first."""
+def sort_match_group(k: int, descending: bool):
+    """Bucket-aggregation kernel factory (_store_plan) for
+    sort-by-field search (the ES sort clause — filter context, NO
+    scoring): of a docstore batch's matched rows (docid, value), emit
+    the top-k (docid, sort_val) by (sort_val, docid asc) — a PARTIAL
+    top-k. The caller's global order/limit runs over batches * k rows;
+    matched docs never shuffle. Docs whose sort key is NULL are omitted
+    (compose `filter="col IS NOT NULL"` / a COALESCE expression for ES
+    missing:_first/_last semantics)."""
 
-    def per_group(lpdf: pd.DataFrame,
-                  rpdf: pd.DataFrame) -> pd.DataFrame:
-        out_empty = pd.DataFrame(
-            {"docid": pd.Series(dtype=np.int64),
-             "sort_val": pd.Series(dtype=np.float64)})
-        if lpdf.empty or rpdf.empty:
-            return out_empty
-        res = _boolean_match_group(lpdf, mode, n_query_terms, excl)
-        if res.size == 0:
-            return out_empty
-        hit = rpdf[np.isin(rpdf["docid"].to_numpy(np.int64), res,
-                           assume_unique=True)]
+    def per_batch(hit: pd.DataFrame) -> pd.DataFrame:
         hit = hit.dropna(subset=["value"])
-        if hit.empty:
-            return out_empty
         v = hit["value"].to_numpy(np.float64)
         d = hit["docid"].to_numpy(np.int64)
         order = np.lexsort((d, -v if descending else v))[:k]
         return pd.DataFrame({"docid": d[order], "sort_val": v[order]})
 
-    return per_group
+    return per_batch
 
 
-def facet_stats_group(mode: str, n_query_terms: int,
-                      excl: np.ndarray | None = None):
-    """Cogroup kernel factory for facet METRIC aggregation (the ES
-    stats/min/max/sum/avg aggs under a terms bucket): left = one
-    shard's dictionary rows for the query terms, right = that shard's
-    docstore slice projected to (docid, value, metric). Emits PARTIAL
-    per-value rows (value, cnt, mcnt, mn, mx, sm) — callers combine
-    them with one small shuffle (sums add, mins min, maxes max; avg =
-    total sm / total mcnt, exact because sums combine associatively).
-    NULL facet values are not bucketed (ES default); NULL metrics
-    count toward cnt but not mcnt/mn/mx/sm (SQL aggregate semantics).
-    Partial groups with no metric values emit (+inf, -inf, 0) so the
-    combine stays NaN-free; the final projection nulls them out when
-    the total mcnt is 0. Shared by facet_metrics."""
-
-    def per_group(lpdf: pd.DataFrame,
-                  rpdf: pd.DataFrame) -> pd.DataFrame:
-        out_empty = pd.DataFrame({
-            "value": pd.Series(dtype=object),
-            "cnt": pd.Series(dtype=np.int64),
-            "mcnt": pd.Series(dtype=np.int64),
-            "mn": pd.Series(dtype=np.float64),
-            "mx": pd.Series(dtype=np.float64),
-            "sm": pd.Series(dtype=np.float64)})
-        if lpdf.empty or rpdf.empty:
-            return out_empty
-        res = _boolean_match_group(lpdf, mode, n_query_terms, excl)
-        if res.size == 0:
-            return out_empty
-        hit = rpdf[np.isin(rpdf["docid"].to_numpy(np.int64), res,
-                           assume_unique=True)]
-        hit = hit[hit["value"].notna()]
-        if hit.empty:
-            return out_empty
-        g = hit.groupby("value", sort=False)
-        agg = g.agg(cnt=("docid", "size"), mcnt=("metric", "count"),
-                    mn=("metric", "min"), mx=("metric", "max"),
-                    sm=("metric", "sum")).reset_index()
-        nomet = agg["mcnt"] == 0
-        agg.loc[nomet, "mn"] = np.inf
-        agg.loc[nomet, "mx"] = -np.inf
-        agg.loc[nomet, "sm"] = 0.0
-        agg["value"] = agg["value"].astype(object)
-        return agg
-
-    return per_group
+def facet_stats_group(hit: pd.DataFrame) -> pd.DataFrame:
+    """Bucket-aggregation kernel (_store_plan) for facet METRIC
+    aggregation (the ES stats/min/max/sum/avg aggs under a terms
+    bucket): ``hit`` = a docstore batch's matched rows (docid, value,
+    metric). Emits PARTIAL per-value rows (value, cnt, mcnt, mn, mx,
+    sm) — callers combine them with one small shuffle (sums add, mins
+    min, maxes max; avg = total sm / total mcnt, exact because sums
+    combine associatively). NULL facet values are not bucketed (ES
+    default); NULL metrics count toward cnt but not mcnt/mn/mx/sm (SQL
+    aggregate semantics). Partial groups with no metric values emit
+    (+inf, -inf, 0) so the combine stays NaN-free; the final
+    projection nulls them out when the total mcnt is 0. Shared by
+    facet_metrics."""
+    hit = hit[hit["value"].notna()]
+    agg = (hit.groupby("value", sort=False)
+           .agg(cnt=("docid", "size"), mcnt=("metric", "count"),
+                mn=("metric", "min"), mx=("metric", "max"),
+                sm=("metric", "sum")).reset_index())
+    nomet = agg["mcnt"] == 0
+    agg.loc[nomet, "mn"] = np.inf
+    agg.loc[nomet, "mx"] = -np.inf
+    agg.loc[nomet, "sm"] = 0.0
+    agg["value"] = agg["value"].astype(object)
+    return agg
 
 
 def _facet_metrics_finalize(part: DataFrame, k: int) -> DataFrame:
-    """Combine per-shard partial stats rows into the final ES-stats
+    """Combine partial stats rows into the final ES-stats
     shape: (value, doc_count, metric_count, min, max, sum, avg)."""
     agg = (part.groupBy("value")
            .agg(F.sum("cnt").alias("doc_count"),
@@ -990,130 +957,74 @@ def _facet_percentiles_finalize(part: DataFrame, ps: list[float],
 
 def _facet_top_hits_finalize(part: DataFrame, k_buckets: int,
                              k_hits: int) -> DataFrame:
-    """Combine the kernel's per-(shard, bucket) partial top-hit rows
+    """Combine the kernel's per-(batch, bucket) partial top-hit rows
     into the final ES top_hits shape: (value, doc_count, rank, docid,
-    score). Per-shard partial counts collapse per (shard, value)
-    before summing (the kernel repeats cnt on each of a bucket's
-    rows); bucket selection is a broadcast join of the top-k_buckets
-    aggregate. Shared by facet_top_hits."""
-    from pyspark.sql import Window
-    counts = (part.select("shard", "value", "cnt").distinct()
-              .groupBy("value").agg(F.sum("cnt").alias("doc_count")))
-    buckets = (counts.orderBy(F.desc("doc_count"), F.asc("value"))
-               .limit(k_buckets))
-    w = Window.partitionBy("value").orderBy(F.desc("score"),
-                                            F.asc("docid"))
-    hits = (part.select("value", "docid", "score")
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k_hits))
-    return (hits.join(F.broadcast(buckets), "value")
+    score), in ONE aggregation per value: doc_count sums the partial
+    counts (the kernel puts each partial on one row) and the hits are
+    the first k_hits of the value's partial hits by (score desc, docid
+    asc); the top-k_buckets order/limit runs on those bucket rows.
+    Shared by facet_top_hits."""
+    hits = F.slice(F.array_sort(F.collect_list(F.struct(
+        (-F.col("score")).alias("neg"), "docid"))), 1, k_hits)
+    top = (part.groupBy("value")
+           .agg(F.sum("cnt").alias("doc_count"), hits.alias("hits"))
+           .orderBy(F.desc("doc_count"), F.asc("value"))
+           .limit(k_buckets))
+    return (top.select("value", "doc_count",
+                       F.posexplode("hits").alias("pos", "h"))
             .select("value", "doc_count",
-                    F.col("rank").cast("int").alias("rank"),
-                    "docid", "score")
+                    (F.col("pos") + 1).cast("int").alias("rank"),
+                    F.col("h.docid").alias("docid"),
+                    (-F.col("h.neg")).alias("score"))
             .orderBy(F.desc("doc_count"), F.asc("value"),
                      F.asc("rank")))
 
 
-def facet_values_group(mode: str, n_query_terms: int,
-                       excl: np.ndarray | None = None):
-    """Cogroup kernel factory for VALUE-LEVEL facet aggregation (the
-    ES percentiles-agg path): left = one shard's dictionary rows for
-    the query terms, right = its docstore slice projected to (docid,
-    value, metric). Emits the matched docs' (value, metric) rows —
-    one per matched doc with a non-NULL bucket AND metric (ES
-    percentiles skip missing values) — so the caller's aggregate
-    (exact `percentile` or the `percentile_approx` quantile sketch)
-    runs its map-side partial directly on the kernel's output
+def facet_values_group(hit: pd.DataFrame) -> pd.DataFrame:
+    """Bucket-aggregation kernel (_store_plan) for VALUE-LEVEL facet
+    aggregation (the ES percentiles-agg path): ``hit`` = a docstore
+    batch's matched rows (docid, value, metric). Emits their (value,
+    metric) rows — one per matched doc with a non-NULL bucket AND
+    metric (ES percentiles skip missing values) — so the caller's
+    aggregate (exact `percentile` or the `percentile_approx` quantile
+    sketch) runs its map-side partial directly on the kernel's output
     partitions: on the sketch path the exchange carries per-bucket
-    partial sketches, never raw docs. Tombstones leave the match set
-    in-kernel."""
-
-    def per_group(lpdf: pd.DataFrame,
-                  rpdf: pd.DataFrame) -> pd.DataFrame:
-        out_empty = pd.DataFrame(
-            {"value": pd.Series(dtype=object),
-             "metric": pd.Series(dtype=np.float64)})
-        if lpdf.empty or rpdf.empty:
-            return out_empty
-        res = _boolean_match_group(lpdf, mode, n_query_terms, excl)
-        if res.size == 0:
-            return out_empty
-        hit = rpdf[np.isin(rpdf["docid"].to_numpy(np.int64), res,
-                           assume_unique=True)]
-        hit = hit[hit["value"].notna() & hit["metric"].notna()]
-        if hit.empty:
-            return out_empty
-        return pd.DataFrame(
-            {"value": hit["value"].astype(object),
-             "metric": hit["metric"].to_numpy(np.float64)})
-
-    return per_group
+    partial sketches, never raw docs."""
+    hit = hit[hit["value"].notna() & hit["metric"].notna()]
+    return pd.DataFrame({"value": hit["value"].astype(object),
+                         "metric": hit["metric"].to_numpy(np.float64)})
 
 
-def top_hits_group(idf: dict[str, float], avgdl: float, k1: float,
-                   b: float, k_hits: int, mode: str,
-                   n_query_terms: int,
-                   excl: np.ndarray | None = None):
-    """Cogroup kernel factory for the ES top_hits agg nested under a
-    terms bucket: left = one shard's dictionary rows for the query
-    terms, right = its docstore slice projected to (docid, value).
-    Scores the matched docs with GLOBAL BM25 stats via the exact
-    candidate-scoring path (scores equal the plain topk ranking
-    restricted to each bucket — the ES contract: _score is the
-    query's, buckets just group the hits), then emits each bucket's
-    per-shard PARTIAL top-k_hits as (shard, value, cnt, docid,
-    score); ``cnt`` is the shard's partial bucket doc count, repeated
-    on each of that bucket's rows (callers collapse per (shard,
-    value) before summing — every non-empty bucket emits ≥1 hit row,
-    so no partial count is ever lost). NULL bucket values drop (ES
-    terms-agg default); tombstones leave the candidate set before
-    scoring."""
+def top_hits_group(k_hits: int):
+    """Bucket-aggregation kernel factory (_store_plan) for the ES
+    top_hits agg nested under a terms bucket: of a docstore batch's
+    matched rows (docid, value, score — _scored_match), emit each
+    bucket's PARTIAL top-k_hits by (score desc, docid asc) as (value,
+    cnt, docid, score); ``cnt`` is the batch's partial bucket doc count
+    on the bucket's first hit row and 0 on the others, so callers sum
+    it per value (every non-empty bucket emits ≥1 hit row, so no
+    partial count is ever lost). NULL bucket values drop (ES terms-agg
+    default)."""
 
-    def per_group(lpdf: pd.DataFrame,
-                  rpdf: pd.DataFrame) -> pd.DataFrame:
-        out_empty = pd.DataFrame(
-            {"shard": pd.Series(dtype=object),
-             "value": pd.Series(dtype=object),
-             "cnt": pd.Series(dtype=np.int64),
-             "docid": pd.Series(dtype=np.int64),
-             "score": pd.Series(dtype=np.float64)})
-        if lpdf.empty or rpdf.empty:
-            return out_empty
-        rpdf = rpdf[rpdf["value"].notna()]
-        if rpdf.empty:
-            return out_empty
-        cand = np.unique(rpdf["docid"].to_numpy(np.int64))
-        pt = {t: lpdf[lpdf["term"] == t]
-              for t in sorted(lpdf["term"].unique())}
-        scored = _score_candidates(pt, list(pt), cand, idf, avgdl,
-                                   k1, b, 1 << 62, mode,
-                                   n_query_terms, excl=excl)
-        if scored.empty:
-            return out_empty
-        hit = scored.merge(rpdf[["docid", "value"]], on="docid",
-                           how="inner")
-        # group label: distinct per cogroup key (segment, shard), so
-        # partial counts never collapse across segments sharing a
-        # shard number
-        shard = "|".join(str(lpdf[c].iloc[0])
-                         for c in ("seg", "shard")
-                         if c in lpdf.columns)
+    def per_batch(hit: pd.DataFrame) -> pd.DataFrame:
+        hit = hit[hit["value"].notna()]
         cnts = hit.groupby("value", sort=False)["docid"].transform(
             "size")
         order = np.lexsort((hit["docid"].to_numpy(np.int64),
                             -hit["score"].to_numpy(np.float64)))
         hs = hit.iloc[order]
-        cs = cnts.iloc[order]
-        keep = hs.groupby("value", sort=False).cumcount() < k_hits
-        hs, cs = hs[keep], cs[keep]
+        rank = hs.groupby("value", sort=False).cumcount().to_numpy()
+        keep = rank < k_hits
+        hs = hs[keep]
+        cs = np.where(rank[keep] == 0,
+                      cnts.iloc[order].to_numpy(np.int64)[keep], 0)
         return pd.DataFrame(
-            {"shard": shard,
-             "value": hs["value"].astype(object).to_numpy(),
-             "cnt": cs.to_numpy(np.int64),
+            {"value": hs["value"].astype(object).to_numpy(),
+             "cnt": cs,
              "docid": hs["docid"].to_numpy(np.int64),
              "score": hs["score"].to_numpy(np.float64)})
 
-    return per_group
+    return per_batch
 
 
 def _score_or_wand_after(per_term: dict[str, pd.DataFrame],
@@ -1818,74 +1729,25 @@ def sj_attach_idf(qt: DataFrame, stats: DataFrame, N: float) -> DataFrame:
                     "a_s", "a_d"))
 
 
-# Sentinel dictionary term for candidate-set side-channel rows: real
-# terms are "<prefix><analyzer token>" and neither part can contain a
-# NUL, so this can never collide with an indexed term.
-SJ_CAND_TERM = "\x00__cand__"
-
-
-def sj_cand_rows(fdocs: DataFrame, keys: list[str],
-                 buckets: DataFrame, excl: np.ndarray | None = None
-                 ) -> DataFrame:
-    """Filter-candidate side-channel for search_join(filter=): one
-    POSTING_SCHEMA-shaped sentinel row per (group keys × query bucket)
-    whose ``blob`` is the group's delta+varint-encoded matching docid
-    set — unioned into the postings side of the cogroup so the scoring
-    kernel restricts (and truncates to k) INSIDE the group instead of
-    emitting postings-scale rows into a semi-join (VERDICT r5 #3). The
-    per-bucket replication is the cost: |matches| × ~1.5 B × B buckets
-    on the wire, vs |matches| × |matching queries| full rows before.
-    ``excl`` (sorted tombstoned docids) is dropped from the set at
-    encode time, so deleted docs never reach the kernels at all."""
-
-    def enc(pdf: pd.DataFrame) -> pd.DataFrame:
-        d = pdf["docid"].to_numpy(np.int64)
-        if excl is not None and excl.size:
-            d = d[~np.isin(d, excl)]
-        row = {c: [pdf[c].iloc[0]] for c in keys}
-        row["blob"] = [codec.encode_docid_set(d)]
-        return pd.DataFrame(row)
-
-    blobs = fdocs.groupBy(*keys).applyInPandas(
-        enc, schema=", ".join(f"{c} int" for c in keys) + ", blob binary")
-    return (blobs.crossJoin(F.broadcast(buckets))
-            .select(*keys,
-                    F.lit(SJ_CAND_TERM).alias("term"),
-                    F.lit(0).cast("long").alias("th"),
-                    F.lit(0).cast("int").alias("chunk"),
-                    F.lit(0).cast("long").alias("df"),
-                    F.lit(0).cast("long").alias("cf"),
-                    F.col("blob"),
-                    F.array().cast("array<long>").alias("block_first"),
-                    F.array().cast("array<long>").alias("block_last"),
-                    F.array().cast("array<long>").alias("block_off"),
-                    F.array().cast("array<int>").alias("block_n"),
-                    F.array().cast("array<long>").alias("block_max_tf"),
-                    F.array().cast("array<long>").alias("block_min_dl"),
-                    F.length("blob").cast("long").alias("nbytes"),
-                    F.lit(0).cast("long").alias("enc_us"),
-                    F.col("bucket")))
-
-
 def sj_score_group_factory(avgdl: float, k1: float, b: float, k: int,
                            method: str, rng_lookup=None,
-                           filtered: bool = False,
+                           cand_sets: dict | None = None,
                            excl: np.ndarray | None = None,
                            min_hits: int | None = None):
-    """Cogroup kernel: rebuild the per-bucket qterms/modes/idf dicts
-    from the query side; or/and queries score in one score_query_set
-    pass, phrase queries each rebuild their token sequence from qpos
-    and run the shared positions kernel (_phrase_shard — the exact
-    kernel phrase_topk uses, so ranks/scores match it). ``rng_lookup``
-    (org-scoped paths) maps the postings pdf to the tenant's docid
-    interval for this group — None result means the tenant has no docs
-    here and the group is skipped. ``filtered``: the postings side
-    carries one SJ_CAND_TERM sentinel row (sj_cand_rows) whose blob is
-    this group's candidate docid set; scoring restricts to it in the
-    kernel so per-group output truncates to k (exact: BM25 stats stay
-    global, so results equal the unrestricted ranking filtered to the
-    candidates). A filtered group with no sentinel has no matching
-    docs in this shard — skipped."""
+    """search_join's cogroup kernel: rebuild the per-bucket
+    qterms/modes/idf dicts from the query side; or/and queries score in
+    one score_query_set pass, phrase queries each rebuild their token
+    sequence from qpos and run the shared positions kernel
+    (_phrase_shard — the exact kernel phrase_topk uses, so ranks/scores
+    match it). ``rng_lookup`` (org-scoped paths) maps the postings pdf
+    to the tenant's docid interval for this group — None result means
+    the tenant has no docs here and the group is skipped.
+    ``cand_sets`` (filter=): {(segment, shard): codec.encode_docid_set
+    of the group's candidate docids} (SegmentedIndex._cand_sets);
+    scoring restricts to the group's set in the kernel so per-group
+    output truncates to k (exact: BM25 stats stay global, so results
+    equal the unrestricted ranking filtered to the candidates). A group
+    without a set has no matching docs in this shard — skipped."""
 
     def score_group(lpdf: pd.DataFrame,
                     rpdf: pd.DataFrame) -> pd.DataFrame:
@@ -1894,25 +1756,18 @@ def sj_score_group_factory(avgdl: float, k1: float, b: float, k: int,
         bad = set(rpdf["mode"].unique()) - {"or", "and", "phrase"}
         if bad:
             raise ValueError(f"search_join: bad mode(s) {bad}")
-        cand = None
-        if filtered:
-            sent = (lpdf["term"] == SJ_CAND_TERM).to_numpy()
-            if not sent.any():
+        cand = rng = None
+        if cand_sets is not None:
+            # org composition already folded into the candidate set by
+            # _filter_docs(filter, org); cand drives the restriction
+            blob = cand_sets.get(_group_key(lpdf))
+            if blob is None:
                 return _QSET_EMPTY
-            cand = codec.decode_docid_set(
-                lpdf.loc[sent, "blob"].iloc[0])
-            lpdf = lpdf[~sent]
-            if cand.size == 0 or lpdf.empty:
-                return _QSET_EMPTY
-        rng = None
-        if rng_lookup is not None:
+            cand = codec.decode_docid_set(blob)
+        elif rng_lookup is not None:
             rng = rng_lookup(lpdf)
             if rng is None:
                 return _QSET_EMPTY
-        if cand is not None:
-            # org composition already folded into the candidate set by
-            # _filter_docs(filter, org); cand drives the restriction
-            rng = None
         ph = rpdf[rpdf["mode"] == "phrase"]
         nb = rpdf[rpdf["mode"] != "phrase"]
         if "a_s" in ph.columns and ph["a_s"].notna().any():
@@ -2095,12 +1950,35 @@ def _by_seg(keys) -> dict[int, list[int]] | None:
     return out
 
 
-def _cogroup(left: DataFrame, right: DataFrame, fn,
-             schema: str) -> DataFrame:
-    """Per-(segment, shard) cogroup of two seg-tagged plans."""
-    return (left.groupBy("seg", "shard")
-            .cogroup(right.groupBy("seg", "shard"))
-            .applyInPandas(fn, schema=schema))
+def _dict_reader(subs: list, terms: list[str]):
+    """``read(segment, shard)`` → the dictionary rows of ``terms`` in
+    the postings directory of one (segment, shard) of the segment list
+    ``subs``, as pandas with ``seg`` and ``shard`` columns: a pyarrow
+    read with the th/term pushdown, so row groups prune on the footer
+    min/max of th and the term IN-filter keeps exactness under hash
+    collisions. Runs inside tasks; a directory it
+    cannot read raises, which fails the query."""
+    roots = [storage.path(s.root, "postings") for s in subs]
+    hs = [codec.term_hash(t) for t in terms]
+    terms = list(terms)
+
+    def read(seg: int, shard: int) -> pd.DataFrame:
+        import os as _os
+        import pyarrow.dataset as _ds
+        pdf = _ds.dataset(_os.path.join(roots[seg], f"shard={shard}"),
+                          format="parquet").to_table(
+            filter=(_ds.field("th").isin(hs)
+                    & _ds.field("term").isin(terms))).to_pandas()
+        pdf["shard"] = shard
+        pdf["seg"] = seg
+        return pdf
+
+    return read
+
+
+def _sql_str(v: str) -> str:
+    """``v`` escaped for a single-quoted Spark SQL string literal."""
+    return v.replace("\\", "\\\\").replace("'", "\\'")
 
 
 class SegmentedIndex:
@@ -2236,19 +2114,6 @@ class SegmentedIndex:
             out = out.unionByName(d)
         return out
 
-    def _rows(self, terms: list[str], shards=None) -> DataFrame:
-        """Dictionary rows of ``terms`` in every segment (pushdown on
-        th and term); ``shards`` maps segment → the shards to read."""
-        def mk(i, s):
-            if shards is None:
-                return s._posting_rows(terms)
-            if i not in shards:
-                return None
-            return s._posting_rows(terms).where(
-                F.col("shard").isin(shards[i]))
-
-        return self._union(mk)
-
     def _org_shards(self, org: str) -> dict[int, list[int]]:
         """segment → the tenant's possible shards (the
         getPossibleRoutingHashes analog,
@@ -2277,28 +2142,29 @@ class SegmentedIndex:
             out.update({(i, sh): r for sh, r in ranges.items()})
         return out
 
+    def _listed(self) -> list[tuple[int, int]]:
+        """The (segment, shard) groups with a postings directory, as
+        each segment listed them once (FTSIndex._shard_dirs)."""
+        return [(i, sh) for i, s in enumerate(self.subs)
+                for sh in s._shard_dirs()]
+
     def _fan_out(self, allt: list[str], fn, schema: str,
                  keys=None) -> DataFrame:
         """ONE-job, ONE-stage fan-out over (segment, shard) tasks: each
-        task pyarrow-reads its own shard directory with the th/term
-        pushdown and runs the per-group kernel ``fn`` (pdf → pdf) on the
-        complete group — the shard-local search pattern of a real
-        cluster. The index is already partitioned by shard on disk, so
-        nothing shuffles. Tasks go to the shards each segment listed
-        (FTSIndex._shard_dirs), intersected with ``keys`` (None: all); a
-        task that cannot read its listed shard fails the query instead
-        of dropping the shard's hits. The kernel sees the rows with
-        ``seg`` and ``shard`` columns."""
+        task reads its own shard's dictionary rows (_dict_reader) and
+        runs the per-group kernel ``fn`` (pdf → pdf) on the complete
+        group — the shard-local search pattern of a real cluster. The
+        index is already partitioned by shard on disk, so nothing
+        shuffles. Tasks go to the listed shards (_listed), intersected
+        with ``keys`` (None: all); a task that cannot read its listed
+        shard fails the query instead of dropping the shard's hits. The
+        kernel sees the rows with ``seg`` and ``shard`` columns."""
         import pyarrow as pa
-        roots = [storage.path(s.root, "postings") for s in self.subs]
-        hs = [codec.term_hash(t) for t in allt]
-        terms = list(allt)
-        listed = [(i, sh) for i, s in enumerate(self.subs)
-                  for sh in s._shard_dirs()]
+        read = _dict_reader(self.subs, allt)
+        tasks = self._listed()
         if keys is not None:
             keys = set(keys)
-            listed = [key for key in listed if key in keys]
-        tasks = [(roots[i], i, sh) for i, sh in listed]
+            tasks = [key for key in tasks if key in keys]
         # fan-out at the session's query-parallelism knob (shuffle
         # partitions) — the width of the worker pool the build warmed
         try:
@@ -2308,20 +2174,11 @@ class SegmentedIndex:
         p = max(1, min(len(tasks), p))
 
         def reader(batches):
-            import os as _os
-            import pyarrow.dataset as _ds
             for rb in batches:
                 for j in rb.column("id").to_pylist():
-                    root, seg, s = tasks[int(j)]
-                    t = _ds.dataset(_os.path.join(root, f"shard={s}"),
-                                    format="parquet").to_table(
-                        filter=(_ds.field("th").isin(hs)
-                                & _ds.field("term").isin(terms)))
-                    if t.num_rows == 0:
+                    pdf = read(*tasks[int(j)])
+                    if pdf.empty:
                         continue
-                    pdf = t.to_pandas()
-                    pdf["shard"] = s
-                    pdf["seg"] = seg
                     out = fn(pdf)
                     if len(out):
                         yield pa.RecordBatch.from_pandas(
@@ -2408,13 +2265,24 @@ class SegmentedIndex:
             schema, sets)
 
     def _store_plan(self, terms: list[str], org: str | None, filter,
-                    cols: list[Column], kernel, schema: str) -> DataFrame:
-        """Cogroup of the query terms' dictionary rows with each
+                    cols: list[Column], match, kernel,
+                    schema: str) -> DataFrame:
+        """The bucket-aggregation plan: ONE mapInArrow stage over each
         segment's docstore slice projected to (shard, docid, *cols) —
-        column-pruned, tenant- and filter-restricted at the scan — per
-        (segment, shard): the bucket-aggregation plan. Matched docs
-        never shuffle; the kernel emits per-group partials."""
+        column-pruned, tenant- and filter-restricted at the scan, with
+        Spark evaluating the ``cols`` SQL. Each Arrow batch splits by
+        (segment, shard). Once per task and group, the task reads the
+        shard's dictionary rows for the query terms (_dict_reader) and
+        ``match`` turns them into the group's matched docs, a frame
+        with a ``docid`` column; each batch's docstore rows joined with
+        it go to ``kernel``, which emits the batch's partials. A shard
+        the segment did not list has no postings and is skipped; a
+        listed shard the task cannot read fails the query. Matched docs
+        never shuffle."""
+        import pyarrow as pa
         shards = self._org_shards(org) if org is not None else None
+        listed = set(self._listed())
+        read = _dict_reader(self.subs, terms)
 
         def store(i, s):
             st = s._docstore
@@ -2425,8 +2293,29 @@ class SegmentedIndex:
                 st = st.where(filter)
             return st.select("shard", "docid", *cols)
 
-        return _cogroup(self._rows(terms, shards), self._union(store),
-                        kernel, schema)
+        def task(batches):
+            memo: dict[tuple[int, int], pd.DataFrame | None] = {}
+            for rb in batches:
+                pdf = rb.to_pandas()
+                for (seg, sh), rpdf in pdf.groupby(["seg", "shard"],
+                                                   sort=False):
+                    key = (int(seg), int(sh))
+                    if key not in listed:
+                        continue
+                    if key not in memo:
+                        rows = read(*key)
+                        memo[key] = match(rows) if len(rows) else None
+                    if memo[key] is None:
+                        continue
+                    hit = rpdf.merge(memo[key], on="docid")
+                    if hit.empty:
+                        continue
+                    out = kernel(hit)
+                    if len(out):
+                        yield pa.RecordBatch.from_pandas(
+                            out, preserve_index=False)
+
+        return self._union(store).mapInArrow(task, schema)
 
     def _sdf(self, hits: pd.DataFrame) -> DataFrame:
         """(docid, score) hits as a Spark DataFrame."""
@@ -3030,7 +2919,10 @@ class SegmentedIndex:
           set's distinct (term, bucket) pairs against the postings
           table: the big side never shuffles for the join, and only
           matching rows enter the ONE exchange that cogroups
-          (segment, shard, bucket) postings with that bucket's queries.
+          (segment, shard, bucket) postings with that bucket's queries
+          — the one cogroup left in the engine: the query table is
+          itself big data, and an in-task read would re-read each
+          shard once per bucket.
           A hot term queried in many buckets replicates its rows up to
           B× — the classic replication/parallelism trade; B defaults to
           the session's shuffle partitions and is caller-tunable;
@@ -3049,13 +2941,15 @@ class SegmentedIndex:
 
         ``filter=`` (SQL predicate over docstore columns) restricts
         the WHOLE batch like ``topk(filter=)`` — stats stay global.
-        Plan shape: the filter's per-group docid set is delta+varint
-        encoded into ONE sentinel row per (segment, shard, bucket)
-        riding the postings side of the cogroup (sj_cand_rows), the
-        kernels score only those candidates and truncate to k per query
-        in-group, and the global window merges — per-group output is
-        O(k · queries in bucket), never postings-scale; nothing
-        doc-scale on the driver. Composes with ``org`` (conjunction).
+        Plan shape: the filter's per-(segment, shard) docid sets come
+        from the handle's memo or one docstore scan job (_cand_sets —
+        the same sets ``topk(filter=)`` uses; the job collects about
+        16 B per matching doc to the driver), ride the kernel closure
+        encoded (~1.5 B per docid), and only groups with candidates are
+        scheduled; the kernels score only those candidates and
+        truncate to k per query in-group, and the global window merges
+        — per-group output is O(k · queries in bucket), never
+        postings-scale. Composes with ``org`` (conjunction).
 
         ``after_cols=(score_col, docid_col)`` names per-query
         pagination-cursor columns in ``queries``: a non-NULL cursor
@@ -3091,7 +2985,13 @@ class SegmentedIndex:
         else:
             keys = [(i, sh) for i, s in enumerate(self.subs)
                     for sh in range(s.num_shards)]
-        if not keys:                   # unknown tenant
+        sets = None
+        if filter is not None:
+            # the filter's per-group docid sets (org folded in) ride the
+            # kernel closure; groups without candidates are not scheduled
+            sets = self._cand_sets(filter, org)
+            keys = [key for key in keys if key in sets]
+        if not keys:                   # unknown tenant / no candidates
             return spark.createDataFrame(
                 [], "qid string, rank int, docid long, score double")
         shards = _by_seg(keys)
@@ -3105,22 +3005,11 @@ class SegmentedIndex:
         ps = self._union(
             lambda i, s: s._postings.where(F.col("shard").isin(shards[i]))
             .join(F.broadcast(tb), "term") if i in shards else None)
-        excl = self._excl()
-        if filter is not None:
-            # candidate side-channel: the filter's per-group docid set
-            # rides the postings side as one sentinel row per (segment,
-            # shard, bucket), so kernels restrict and truncate to k
-            # IN-GROUP; tombstones leave the sets at encode time
-            fdocs = self._union(lambda i, s: s._filter_docs(filter, org)
-                                if i in shards else None)
-            buckets = make_qt().select("bucket").distinct()
-            ps = ps.unionByName(sj_cand_rows(fdocs, ["seg", "shard"],
-                                             buckets, excl=excl))
         score_group = sj_score_group_factory(
             avgdl, self.k1, self.b, k, method,
             None if rng is None else (lambda lpdf:
                                       rng.get(_group_key(lpdf))),
-            filtered=filter is not None, excl=excl,
+            cand_sets=sets, excl=self._excl(),
             min_hits=(None if min_should_match is None
                       else _check_msm(min_should_match, "or")))
         tops = (ps.groupBy("seg", "shard", "bucket")
@@ -3349,12 +3238,13 @@ class SegmentedIndex:
         context); ``org`` and ``filter`` restrict it exactly as in
         ``match_docids``.
 
-        Scale shape: postings of the query terms cogroup with the
-        shard's docstore slice (column-pruned to shard, docid, ``by``
-        and any filter columns — all pushed to the parquet scan); each
-        shard emits PARTIAL (value, count) rows, one small shuffle sums
-        them, and the top-k order/limit runs on counts, never on docs.
-        No driver materialization anywhere."""
+        Scale shape: one mapInArrow stage over the docstore slice
+        (column-pruned to shard, docid, ``by`` and any filter columns —
+        all pushed to the parquet scan), each task reading the query
+        terms' postings of its shards in-task (_store_plan);
+        each batch emits PARTIAL (value, count) rows, one small shuffle
+        sums them, and the top-k order/limit runs on counts, never on
+        docs. No driver materialization anywhere."""
         out = self._facet_partials(query, by, mode, field, org, filter)
         if out is None:
             return self.spark.createDataFrame(
@@ -3366,8 +3256,9 @@ class SegmentedIndex:
                         field: str | None, org: str | None,
                         filter) -> DataFrame | None:
         """Shared bucket-agg plan (terms / histogram / date_histogram):
-        per-group partial (value, count) rows from the postings ⋈
-        docstore cogroup, one combining shuffle. Returns the UNORDERED
+        per-batch partial (value, count) rows from the docstore stage
+        that reads postings in-task (_store_plan), one combining
+        shuffle. Returns the UNORDERED
         (value string, doc_count long) frame, or None for an empty
         query — callers order/limit/reshape."""
         terms = self._terms(query, self._field(field)[0])
@@ -3376,9 +3267,8 @@ class SegmentedIndex:
         return (self._store_plan(
                     terms, org, filter,
                     [F.expr(by).cast("string").alias("value")],
-                    facet_count_group(mode, len(terms),
-                                      excl=self._excl()),
-                    "value string, cnt long")
+                    _bool_match(mode, len(terms), self._excl()),
+                    facet_count_group, "value string, cnt long")
                 .groupBy("value").agg(F.sum("cnt").alias("doc_count")))
 
     @staticmethod
@@ -3623,7 +3513,7 @@ class SegmentedIndex:
             raise ValueError(f"bucket names must not contain '|': "
                              f"{bad}")
         comp = ("nullif(concat_ws('|', " + ", ".join(
-            f"CASE WHEN ({pred}) THEN '{key}' END"
+            f"CASE WHEN ({pred}) THEN '{_sql_str(key)}' END"
             for key, pred in filters.items()) + "), '')")
         out = self._facet_partials(query, comp, mode, field, org,
                                    filter)
@@ -3721,10 +3611,11 @@ class SegmentedIndex:
         expression for ES missing:_first/_last). ``org``/``filter``
         restrict exactly as in match_docids.
 
-        Scale shape: postings cogroup with the column-pruned docstore
-        slice per shard (same plan as facet_counts); each shard emits
-        its PARTIAL top-k (docid, sort_val) — the global order/limit
-        runs over num_shards * k rows, matched docs never shuffle."""
+        Scale shape: the column-pruned docstore slice with postings
+        read in-task (same plan as facet_counts, _store_plan); each
+        batch emits its PARTIAL top-k (docid, sort_val) — the global
+        order/limit runs over batches * k rows, matched docs never
+        shuffle."""
         terms = self._terms(query, self._field(field)[0])
         if not terms:
             return self.spark.createDataFrame(
@@ -3732,8 +3623,8 @@ class SegmentedIndex:
         part = self._store_plan(
             terms, org, filter,
             [F.expr(by).cast("double").alias("value")],
-            sort_match_group(mode, len(terms), k, descending,
-                             excl=self._excl()),
+            _bool_match(mode, len(terms), self._excl()),
+            sort_match_group(k, descending),
             "docid long, sort_val double")
         key = (F.desc("sort_val") if descending
                else F.asc("sort_val"))
@@ -3749,7 +3640,7 @@ class SegmentedIndex:
         """Distinct-value count of ``by`` (column or SQL expression)
         over the query's boolean matches — the ES ``cardinality``
         aggregation analog. ``exact=True`` counts exactly (countDistinct
-        over the per-shard partial facet rows — the oracle-parity
+        over the per-batch partial facet rows — the oracle-parity
         path); ``exact=False`` is the 100-TB path: Spark's
         HyperLogLog++ sketch (approx_count_distinct, relative error
         ``rsd``) combines map-side, so the exchange carries sketches,
@@ -3761,8 +3652,8 @@ class SegmentedIndex:
         part = self._store_plan(
             terms, org, filter,
             [F.expr(by).cast("string").alias("value")],
-            facet_count_group(mode, len(terms), excl=self._excl()),
-            "value string, cnt long")
+            _bool_match(mode, len(terms), self._excl()),
+            facet_count_group, "value string, cnt long")
         agg = (F.countDistinct("value") if exact
                else F.approx_count_distinct("value", rsd))
         return int(part.agg(agg.alias("c")).collect()[0]["c"])
@@ -3784,7 +3675,7 @@ class SegmentedIndex:
 
         Scale shape identical to facet_counts: the docstore scan is
         column-pruned to (shard, docid, by, metric, filter cols), each
-        shard emits per-value PARTIAL stats, one small shuffle
+        batch emits per-value PARTIAL stats, one small shuffle
         combines them (sums add, mins min) — avg is exact because it
         divides combined sums, never averages averages."""
         terms = self._terms(query, self._field(field)[0])
@@ -3796,7 +3687,8 @@ class SegmentedIndex:
             terms, org, filter,
             [F.expr(by).cast("string").alias("value"),
              F.expr(metric).cast("double").alias("metric")],
-            facet_stats_group(mode, len(terms), excl=self._excl()),
+            _bool_match(mode, len(terms), self._excl()),
+            facet_stats_group,
             "value string, cnt long, mcnt long, mn double, mx double, "
             "sm double")
         return _facet_metrics_finalize(part, k)
@@ -3841,7 +3733,8 @@ class SegmentedIndex:
             terms, org, filter,
             [bucket.alias("value"),
              F.expr(metric).cast("double").alias("metric")],
-            facet_values_group(mode, len(terms), excl=self._excl()),
+            _bool_match(mode, len(terms), self._excl()),
+            facet_values_group,
             "value string, metric double")
         return _facet_percentiles_finalize(part, ps, k, exact,
                                            accuracy)
@@ -3862,12 +3755,13 @@ class SegmentedIndex:
         each bucket's hits equal the plain topk ranking restricted to
         that bucket.
 
-        Scale shape: the per-shard kernel scores matched candidates
-        and emits each bucket's PARTIAL top-k_hits (plus a per-shard
-        partial count riding each row), so the exchange carries at
-        most shards × buckets × k_hits rows; the bucket-selection
-        top-k_buckets is a broadcast join against that small
-        aggregate — matched docs never shuffle."""
+        Scale shape: each task scores its shards' matches once
+        (_store_plan, _scored_match) and each docstore batch emits each
+        bucket's PARTIAL top-k_hits (plus the batch's partial count
+        riding its first row), so the one
+        exchange carries at most batches × buckets × k_hits rows into a
+        per-value aggregate of counts and hits; bucket selection orders
+        those bucket rows — matched docs never shuffle."""
         prefix, avgdl = self._field(field)
         terms = self._terms(query, prefix)
         if not terms:
@@ -3878,10 +3772,10 @@ class SegmentedIndex:
         part = self._store_plan(
             terms, org, filter,
             [F.expr(by).cast("string").alias("value")],
-            top_hits_group(idf, avgdl, self.k1, self.b, k_hits, mode,
-                           len(terms), excl=self._excl()),
-            "shard string, value string, cnt long, docid long, "
-            "score double")
+            _scored_match(idf, avgdl, self.k1, self.b, mode, len(terms),
+                          self._excl()),
+            top_hits_group(k_hits),
+            "value string, cnt long, docid long, score double")
         return _facet_top_hits_finalize(part, k_buckets, k_hits)
 
 
@@ -4401,8 +4295,8 @@ class FTSIndex(SegmentedIndex):
     def _filter_docs(self, filter: str | Column,
                      org: str | None = None) -> DataFrame:
         """(shard, docid) of docs satisfying a SQL predicate over
-        docstore columns — the scan behind filtered search's docid sets
-        (SegmentedIndex._filter_job) and search_join's candidate rows.
+        docstore columns — the scan behind the filter docid sets of
+        filtered search and search_join (SegmentedIndex._filter_job).
         The predicate plus the two-column projection push down to the
         parquet scan (column-pruned: only shard, docid, and the
         predicate's columns are read); with ``org`` the scan is also

@@ -366,6 +366,92 @@ def test_conv_sizes_local_matches_spark_agg(spark, tmp_path):
                              max_rows=5) is None
 
 
+def test_conv_sizes_local_byte_gate(spark, tmp_path, monkeypatch):
+    """The footer byte gate declines like the row gate, and the build's
+    docids then come from the Spark aggregation unchanged."""
+    from sparkfts import build
+    from sparkfts.fixtures import write_transcripts_parquet
+    src = str(tmp_path / "t.parquet")
+    write_transcripts_parquet(src, 30, seed=SEED)
+    assert build._conv_sizes_local([src], "conv_id", "turn_idx") \
+        is not None
+    assert build._conv_sizes_local([src], "conv_id", "turn_idx",
+                                   max_bytes=16) is None
+    bare = spark.read.parquet(src)
+    slow = build.assign_docids_grouped(
+        spark.createDataFrame(bare.toPandas()), "conv_id", "turn_idx")
+    gate = build._conv_sizes_local
+    monkeypatch.setattr(build, "_conv_sizes_local",
+                        lambda *a, **kw: gate(*a, **kw, max_bytes=16))
+    got = build.assign_docids_grouped(bare, "conv_id", "turn_idx")
+    assert got._sparkfts_direct is None
+
+    def docids(df):
+        return (df.select("conv_id", "turn_idx", "docid").toPandas()
+                .sort_values(["conv_id", "turn_idx"])
+                .reset_index(drop=True))
+
+    pd.testing.assert_frame_equal(docids(got), docids(slow))
+
+
+def test_direct_feed_needs_physical_text_column(spark, tmp_path,
+                                                monkeypatch):
+    """A text column the reader schema names but an input file does not
+    hold (that file's rows read it as NULL) declines the direct feed,
+    which reads the files' own columns; the build finishes like the
+    exchange plan."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+    from sparkfts import build
+    from sparkfts.fixtures import write_transcripts_parquet
+    src = str(tmp_path / "t.parquet")
+    write_transcripts_parquet(src, 20, seed=SEED)
+    t = pq.read_table(src)
+    half = len(t) // 2
+    files = [str(tmp_path / "a.parquet"), str(tmp_path / "b.parquet")]
+    pq.write_table(t.slice(0, half).append_column(
+        "body", t.column("text").slice(0, half)), files[0])
+    pq.write_table(t.slice(half), files[1])          # no body column
+    schema = spark.read.parquet(src).schema.add(
+        T.StructField("body", T.StringType()))
+    bare = spark.read.schema(schema).parquet(*files)
+    meta = build.assign_docids_grouped(bare, "conv_id", "turn_idx")
+    assert meta._sparkfts_direct is not None      # order proof holds
+    assert "text" in meta._sparkfts_direct["columns"]
+    assert "body" not in meta._sparkfts_direct["columns"]
+
+    def no_direct(*a, **kw):
+        raise AssertionError("direct feed engaged")
+
+    monkeypatch.setattr(build, "_direct_postings_df", no_direct)
+    cfg = BuildConfig(num_shards=4, partitions=2)
+    r1, r2 = str(tmp_path / "i1"), str(tmp_path / "i2")
+    s1 = build_index(spark, bare, r1, text_col="body",
+                     order_cols=["conv_id", "turn_idx"], cfg=cfg)
+    s2 = build_index(spark, spark.createDataFrame(bare.toPandas(),
+                                                  schema=schema),
+                     r2, text_col="body",
+                     order_cols=["conv_id", "turn_idx"], cfg=cfg)
+    assert s1["n_docs"] == s2["n_docs"] == len(t)
+
+    def postings(root):
+        p = (ds.dataset(root + "/postings", format="parquet",
+                        partitioning="hive").to_table().to_pandas()
+             .drop(columns=["enc_us"]))
+        for c in ("block_first", "block_last", "block_off", "block_n",
+                  "block_max_tf", "block_min_dl"):
+            p[c] = p[c].map(tuple)
+        return p.sort_values(["shard", "term", "chunk"],
+                             ignore_index=True)
+
+    pd.testing.assert_frame_equal(postings(r1), postings(r2))
+    a = FTSIndex(spark, r1).topk_pandas("alpha query", k=5, mode="or")
+    assert len(a)
+    pd.testing.assert_frame_equal(
+        a, FTSIndex(spark, r2).topk_pandas("alpha query", k=5, mode="or"))
+
+
 def test_direct_postings_feed_matches_exchange_plan(spark, tmp_path):
     """The no-shuffle shard-span postings feed (engaged when the bare
     scan's rows are proven to be in grouped-docid order) must produce
@@ -484,3 +570,29 @@ def test_fan_out_fails_closed_on_unreadable_shard(spark, tmp_path):
     finally:
         os.rename(moved, gone)
     pd.testing.assert_frame_equal(idx.topk_pandas(q, k=1000), want)
+
+
+def test_store_plan_fails_closed_on_unreadable_shard(spark, tmp_path):
+    """The bucket-aggregation stage reads each listed shard's postings
+    in-task; a listed shard it cannot read fails facet_counts, naming
+    the shard, instead of dropping that shard's docs from the counts."""
+    import os
+    root = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(make_transcripts(12, seed=5)),
+                root, order_cols=["conv_id", "turn_idx"],
+                cfg=BuildConfig(num_shards=3, partitions=3))
+    idx = FTSIndex(spark, root)
+    q = "alpha query index"
+    want = idx.facet_counts(q, by="role", mode="or").toPandas()
+    hits = idx.topk(q, k=1000).toPandas()
+    shard = int(hits["docid"].min() // idx.docs_per_shard)
+    gone = os.path.join(root, "postings", f"shard={shard}")
+    moved = str(tmp_path / "moved")
+    os.rename(gone, moved)
+    try:
+        with pytest.raises(Exception, match=f"shard={shard}"):
+            idx.facet_counts(q, by="role", mode="or").toPandas()
+    finally:
+        os.rename(moved, gone)
+    pd.testing.assert_frame_equal(
+        idx.facet_counts(q, by="role", mode="or").toPandas(), want)

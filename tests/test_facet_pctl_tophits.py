@@ -194,3 +194,52 @@ def test_combined_twins_and_tombstones(spark, tmp_path_factory):
         for f in glob.glob(os.path.join(_tombstone_dir(ci.base_root),
                                         "*")):
             os.remove(f)
+
+
+def test_store_plan_partials_batch_size_invariant(spark, tmp_path):
+    """The bucket-aggregation kernels emit per-Arrow-batch partials:
+    on a base + delta + tombstone CombinedIndex every surface returns
+    the same frame when the docstore batches hold 7 rows as at the
+    default batch size."""
+    from sparkfts.streaming import CombinedIndex, make_batch_indexer
+    cfg = BuildConfig(num_shards=2, partitions=2)
+    root = str(tmp_path / "bs")
+    build_index(spark, spark.createDataFrame(
+                    make_transcripts(14, seed=SEED)),
+                root, order_cols=["conv_id", "turn_idx"], cfg=cfg)
+    make_batch_indexer(root, cfg=cfg, order_cols=["conv_id", "turn_idx"])(
+        spark.createDataFrame(make_transcripts(6, seed=SEED + 1)),
+        batch_id=0)
+    ci = CombinedIndex(spark, root)
+    ci.delete_docs([int(d) for d in ci.topk(Q, k=3, mode="or")["docid"]])
+    calls = {
+        "facet_counts": lambda: ci.facet_counts(
+            Q, by="role", mode="or").toPandas(),
+        "facet_metrics": lambda: ci.facet_metrics(
+            Q, by="role", metric="turn_idx", mode="or").toPandas(),
+        "facet_percentiles": lambda: ci.facet_percentiles(
+            Q, metric="turn_idx", by="role", mode="or",
+            exact=True).toPandas(),
+        "facet_top_hits": lambda: ci.facet_top_hits(
+            Q, by="role", k_hits=4, mode="or").toPandas(),
+        "sorted_search": lambda: ci.sorted_search(
+            Q, by="turn_idx", k=25, mode="or").toPandas(),
+        "facet_cardinality": lambda: ci.facet_cardinality(
+            Q, by="turn_idx", mode="or", exact=True),
+    }
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    want = {name: call() for name, call in calls.items()}
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = {name: call() for name, call in calls.items()}
+    finally:
+        spark.conf.set(key, old)
+    assert len(want["facet_top_hits"]) > 0
+    assert want["facet_cardinality"] > 1
+    for name in calls:
+        if name == "facet_cardinality":
+            assert got[name] == want[name]
+        else:
+            pd.testing.assert_frame_equal(got[name], want[name],
+                                          obj=name)

@@ -562,3 +562,50 @@ def test_filter_memo_honours_later_tombstones(spark, tmp_path):
     c = ci.read_counters()
     assert c["filter_sets_computed"] == len(ci.subs)
     assert c["filter_sets_cached"] == cached + 2 * len(ci.subs)
+
+
+# ------------------------------------------------------------------ #
+# bucket aggregations and search_join(filter=): no grouped-map plans  #
+# ------------------------------------------------------------------ #
+
+STORE_PLANS = {
+    "facet_counts": lambda h: h.facet_counts("alpha query", by="role",
+                                             mode="or"),
+    "sorted_search": lambda h: h.sorted_search("alpha query",
+                                               by="turn_idx", mode="or"),
+    "facet_top_hits": lambda h: h.facet_top_hits("alpha query",
+                                                 by="role", mode="or"),
+}
+
+
+@pytest.mark.parametrize("kind", ["fts", "combined"])
+@pytest.mark.parametrize("surface", sorted(STORE_PLANS))
+def test_store_plan_is_map_in_arrow(idx, combined, kind, surface):
+    """Bucket aggregations read postings inside one mapInArrow stage
+    over the docstore slice: no cogroup of postings with docstore."""
+    h = idx if kind == "fts" else combined
+    sdf = STORE_PLANS[surface](h)
+    assert sdf.count() > 0
+    plan = sdf._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan, plan
+    assert "FlatMapCoGroupsInPandas" not in plan, plan
+
+
+def test_search_join_filter_uses_memo(spark, idx):
+    """search_join(filter=) takes its candidate sets from the handle's
+    filter memo, the sets topk(filter=) uses: a repeat is served from
+    it, and no grouped-map encoder sits in the plan."""
+    h = FTSIndex(spark, idx.root)
+    qdf = spark.createDataFrame([("a", "alpha query index")],
+                                "qid string, query string")
+    flt = "role = 'user'"
+    first = h.search_join(qdf, k=5, filter=flt).toPandas()
+    sdf = h.search_join(qdf, k=5, filter=flt)
+    c = h.read_counters()
+    assert (c["filter_sets_computed"], c["filter_sets_cached"]) == (1, 1)
+    pd.testing.assert_frame_equal(sdf.toPandas(), first)
+    plan = sdf._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    want = h.topk_pandas("alpha query index", k=5, filter=flt)
+    assert first.sort_values("rank")["docid"].tolist() == \
+        want["docid"].tolist()

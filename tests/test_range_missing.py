@@ -208,6 +208,19 @@ def test_filters_agg_matches_recount(idx, store):
         idx.facet_filters(q, {"a|b": "role = 'user'"})
 
 
+def test_filters_agg_quotes_in_bucket_names(idx):
+    """Bucket names holding a quote or a backslash come back verbatim,
+    in the caller's order, each counting what count(query, filter=pred)
+    counts."""
+    q = "alpha"
+    buckets = {"o'brien": "role = 'user'", "a\\b": "turn_idx >= 10"}
+    got = idx.facet_filters(q, buckets, mode="or").toPandas()
+    want = [(k, idx.count(q, mode="or", filter=pred))
+            for k, pred in buckets.items()]
+    assert list(map(tuple, got.itertuples(index=False))) == want
+    assert all(n > 0 for _, n in want)      # fixture sanity
+
+
 @pytest.mark.slow
 def test_combined_filters_agg(spark, tmp_path_factory):
     from sparkfts.streaming import CombinedIndex, make_batch_indexer

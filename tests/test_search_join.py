@@ -342,35 +342,31 @@ def test_combined_search_join_phrase(spark, combined):
 # ------------------------------------------------------------------ #
 
 def test_filtered_kernel_truncates_per_group(spark, idx):
-    """Drive sj_score_group_factory(filtered=True) directly with a
+    """Drive sj_score_group_factory(cand_sets=...) directly with a
     group whose candidate set matches FAR more docs than k: the kernel
     must emit exactly k rows per query (truncation happens INSIDE the
     group), and those k rows must equal the unrestricted ranking
     filtered to the candidates."""
     from sparkfts import codec
-    from sparkfts.query import (SJ_CAND_TERM, _bm25_idf,
-                                sj_score_group_factory)
+    from sparkfts.query import _bm25_idf, sj_score_group_factory
 
     ps = idx._postings.toPandas()
     term = (ps.groupby("term")["df"].sum().idxmax())  # hottest term
     lpdf = ps[ps["term"] == term].copy()
     shard = int(lpdf["shard"].iloc[0])
-    lpdf = lpdf[lpdf["shard"] == shard]
+    lpdf = lpdf[lpdf["shard"] == shard].assign(seg=0)
     store = idx._docstore.where(f"shard = {shard}").toPandas()
     cand = np.sort(store["docid"].to_numpy(np.int64))  # ALL shard docs
     k = 3
     assert int(lpdf["df"].sum()) > k, "fixture: need matches >> k"
-    sent = lpdf.iloc[:1].copy()
-    sent["term"] = SJ_CAND_TERM
-    sent["blob"] = [codec.encode_docid_set(cand)]
-    lpdf = pd.concat([lpdf, sent], ignore_index=True)
     idfv = float(_bm25_idf(float(idx.N),
                            float(ps[ps["term"] == term]["df"].sum())))
     rpdf = pd.DataFrame({"qid": ["q1"], "mode": ["or"],
                          "term": [term], "bucket": [0],
                          "qpos": [[0]], "idf": [idfv]})
-    kern = sj_score_group_factory(idx.avgdl, idx.k1, idx.b, k,
-                                  "wand", None, filtered=True)
+    kern = sj_score_group_factory(
+        idx.avgdl, idx.k1, idx.b, k, "wand", None,
+        cand_sets={(0, shard): codec.encode_docid_set(cand)})
     out = kern(lpdf, rpdf)
     assert len(out) == k, f"group emitted {len(out)} rows, want k={k}"
     want = idx.topk_pandas(term, k=1000, mode="or")
@@ -381,17 +377,17 @@ def test_filtered_kernel_truncates_per_group(spark, idx):
 
 
 def test_filtered_kernel_skips_group_without_candidates(spark, idx):
-    """filtered=True group with NO sentinel row (the shard has no docs
-    matching the filter) scores nothing — the skip path that lets a
-    selective filter prune whole shards."""
+    """A group absent from cand_sets (the shard has no docs matching
+    the filter) scores nothing — the skip path that lets a selective
+    filter prune whole shards."""
     from sparkfts.query import sj_score_group_factory
     ps = idx._postings.toPandas()
     term = ps["term"].iloc[0]
-    lpdf = ps[ps["term"] == term]
+    lpdf = ps[ps["term"] == term].assign(seg=0)
     rpdf = pd.DataFrame({"qid": ["q1"], "mode": ["or"], "term": [term],
                          "bucket": [0], "qpos": [[0]], "idf": [1.0]})
     kern = sj_score_group_factory(idx.avgdl, idx.k1, idx.b, 5,
-                                  "wand", None, filtered=True)
+                                  "wand", None, cand_sets={})
     assert kern(lpdf, rpdf).empty
 
 

@@ -203,6 +203,35 @@ def main(sf_dir: str) -> None:
         fmt(idx._plan(sorted(terms), lambda pdf, rng, cand: pdf[[]],
                       "docid long, score double", filter=flt))))
 
+    sections.append((
+        "FTSIndex.facet_counts",
+        "Expect: ONE Exchange — hashpartitioning on `value` between the "
+        "partial and final sum of the counts. Below it: the docstore "
+        "scan (column-pruned to shard, docid and the `by` and filter "
+        "columns, the filter pushed) → the `by` Project → MapInArrow, "
+        "each task reading its shards' dictionary rows with the th/term "
+        "pushdown. No FlatMapCoGroupsInPandas, no postings scan in the "
+        "plan and no Exchange of postings or docstore rows. This is the "
+        "plan every bucket aggregation builds "
+        "(SegmentedIndex._store_plan).",
+        fmt(idx.facet_counts(" ".join(terms), by="lang", k=10,
+                             mode="or", filter="n_chars >= 200"))))
+
+    qdf = spark.createDataFrame([("a", " ".join(terms))],
+                                "qid string, query string")
+    sections.append((
+        "FTSIndex.search_join(filter=)",
+        "Expect: the plan of the unfiltered search_join, restricted to "
+        "the shards that hold docs satisfying the filter: the postings "
+        "scan broadcast-joins the query vocabulary (whose distinct is "
+        "one small Exchange), one Exchange per cogroup side on (seg, "
+        "shard, bucket), then the qid window Exchange — four in all. "
+        "No docstore scan, no FlatMapGroupsInPandas encoder "
+        "and no Union: the per-shard candidate sets come from the "
+        "handle's filter memo (filled by the topk(filter=) call above) "
+        "and ride the kernel closure.",
+        fmt(idx.search_join(qdf, k=5, filter=flt))))
+
     out = ["# EXPLAIN — physical-plan evidence",
            "",
            f"Generated by `python tools/explain_dump.py {sf_dir}` "
