@@ -193,9 +193,17 @@ def _bare_scan_local_files(df: DataFrame) -> list[str] | None:
     return out or None
 
 
+# Byte gate of the driver-side conv-sizes read: the footers'
+# uncompressed bytes of the conv and turn columns, i.e. what the
+# Python driver (outside the JVM heap) materializes. 48 B a row is a
+# 36-char UUID conv key with its 4-byte offset plus an int64 turn, so
+# the gate admits any such table under _conv_sizes_local's 20M-row
+# gate, and wider keys decline before any data is read.
+_CONV_SIZES_MAX_BYTES = 20_000_000 * 48
+
+
 def _conv_sizes_local(files: list[str], conv_col: str, turn_col: str,
-                      max_rows: int = 20_000_000,
-                      max_bytes: int = 1 << 30
+                      max_rows: int = 20_000_000
                       ) -> tuple[pd.DataFrame, dict | None] | None:
     """Driver-side twin of the grouped-path conv-sizes aggregation:
     one multithreaded pyarrow read of (conv, turn) + a hash group-by —
@@ -205,7 +213,8 @@ def _conv_sizes_local(files: list[str], conv_col: str, turn_col: str,
     Spark jobs" rule applied to docid assignment; at sf0.1 this was
     ~0.3 s of the 16-core build and ~2.9 s of the pinned 1-CPU wall).
     Row count (``max_rows``) and the conv and turn columns'
-    uncompressed bytes (``max_bytes``) are checked against the parquet
+    uncompressed bytes (_CONV_SIZES_MAX_BYTES) are checked against the
+    parquet
     FOOTERS before any data is read; anything unexpected
     (missing/partition-only columns, nulls, oversize) returns None and
     the Spark aggregation runs unchanged.
@@ -243,7 +252,7 @@ def _conv_sizes_local(files: list[str], conv_col: str, turn_col: str,
                     rg.column(j).total_uncompressed_size
                     for j in range(rg.num_columns)
                     if rg.column(j).path_in_schema in (conv_col, turn_col))
-            if total > max_rows or nbytes > max_bytes:
+            if total > max_rows or nbytes > _CONV_SIZES_MAX_BYTES:
                 return None
         tabs = [pq.read_table(f, columns=[conv_col, turn_col])
                 for f in files]

@@ -43,6 +43,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from . import codec, multiterm, storage
+from .placement import repartition_exact
 from .analyzer import (TokenizerConfig, jvm_tokens, tokenize_series,
                        tokenize_text)
 
@@ -803,32 +804,47 @@ def score_range_pt(pdf: pd.DataFrame, lo: int, hi: int,
 
 def _bool_match(mode: str, n_query_terms: int,
                 excl: np.ndarray | None = None):
-    """Matcher (_store_plan) of the unscored bucket aggregations: one
-    shard's dictionary rows → its boolean match set as a sorted
-    (docid) frame. ``excl`` (sorted tombstoned docids) leaves the set,
-    so counts are exact with no post-correction."""
-    return lambda rows: pd.DataFrame(
-        {"docid": _boolean_match_group(rows, mode, n_query_terms, excl)})
+    """Matcher (_store_plan) of the unscored bucket aggregations: (one
+    shard's dictionary rows, the group's docstore rows) → the docstore
+    rows in the shard's boolean match set. ``excl`` (sorted tombstoned
+    docids) leaves the set, so counts are exact with no
+    post-correction."""
+
+    def match(rows: pd.DataFrame, grp: pd.DataFrame) -> pd.DataFrame:
+        res = _boolean_match_group(rows, mode, n_query_terms, excl)
+        return grp[np.isin(grp["docid"].to_numpy(np.int64), res)]
+
+    return match
 
 
 def _scored_match(idf: dict[str, float], avgdl: float, k1: float,
                   b: float, mode: str, n_query_terms: int,
                   excl: np.ndarray | None = None):
-    """Matcher (_store_plan) of facet_top_hits: one shard's dictionary
-    rows → (docid, score) of every match, scored with GLOBAL BM25 stats
-    by the interval path over the whole docid space — bit-identical to
-    candidate scoring, so each bucket's hits equal the plain topk
-    ranking restricted to that bucket. Tombstones leave before
-    scoring."""
-    return lambda rows: score_range_pt(
-        rows, 0, np.iinfo(np.int64).max, idf, avgdl, k1, b, 1 << 62,
-        mode, n_query_terms, excl=excl)
+    """Matcher (_store_plan) of facet_top_hits: (one shard's dictionary
+    rows, the group's docstore rows) → the matched docstore rows with
+    their ``score``. Only the group's docids are candidates, so a
+    tenant- or filter-restricted slice decodes just the blocks that
+    overlap its docs; scores use GLOBAL BM25 stats and are
+    bit-identical to unrestricted scoring (_score_candidates), so each
+    bucket's hits equal the plain topk ranking restricted to that
+    bucket. Tombstones leave before scoring."""
+
+    def match(rows: pd.DataFrame, grp: pd.DataFrame) -> pd.DataFrame:
+        pt = {t: rows[rows["term"] == t]
+              for t in sorted(rows["term"].unique())}
+        cand = np.unique(grp["docid"].to_numpy(np.int64))
+        scored = _score_candidates(pt, list(pt), cand, idf, avgdl, k1,
+                                   b, 1 << 62, mode, n_query_terms,
+                                   excl=excl)
+        return grp.merge(scored, on="docid")
+
+    return match
 
 
 def facet_count_group(hit: pd.DataFrame) -> pd.DataFrame:
     """Bucket-aggregation kernel (_store_plan) for facet counting:
-    ``hit`` = a docstore batch's matched rows (docid, value). Emits
-    PARTIAL (value, cnt) rows — callers sum them with one small
+    ``hit`` = a (segment, shard) group's matched rows (docid, value).
+    Emits PARTIAL (value, cnt) rows — callers sum them with one small
     shuffle. Docs whose facet value is NULL are not counted (the ES
     terms-agg default). Shared by facet_counts, its bucket-agg variants
     and facet_cardinality."""
@@ -867,29 +883,29 @@ def _boolean_match_group(lpdf: pd.DataFrame, mode: str,
 def sort_match_group(k: int, descending: bool):
     """Bucket-aggregation kernel factory (_store_plan) for
     sort-by-field search (the ES sort clause — filter context, NO
-    scoring): of a docstore batch's matched rows (docid, value), emit
-    the top-k (docid, sort_val) by (sort_val, docid asc) — a PARTIAL
-    top-k. The caller's global order/limit runs over batches * k rows;
-    matched docs never shuffle. Docs whose sort key is NULL are omitted
-    (compose `filter="col IS NOT NULL"` / a COALESCE expression for ES
-    missing:_first/_last semantics)."""
+    scoring): of a (segment, shard) group's matched rows (docid,
+    value), emit the top-k (docid, sort_val) by (sort_val, docid asc)
+    — a PARTIAL top-k. The caller's global order/limit runs over
+    groups * k rows; matched docs never shuffle. Docs whose sort key
+    is NULL are omitted (compose `filter="col IS NOT NULL"` / a
+    COALESCE expression for ES missing:_first/_last semantics)."""
 
-    def per_batch(hit: pd.DataFrame) -> pd.DataFrame:
+    def per_group(hit: pd.DataFrame) -> pd.DataFrame:
         hit = hit.dropna(subset=["value"])
         v = hit["value"].to_numpy(np.float64)
         d = hit["docid"].to_numpy(np.int64)
         order = np.lexsort((d, -v if descending else v))[:k]
         return pd.DataFrame({"docid": d[order], "sort_val": v[order]})
 
-    return per_batch
+    return per_group
 
 
 def facet_stats_group(hit: pd.DataFrame) -> pd.DataFrame:
     """Bucket-aggregation kernel (_store_plan) for facet METRIC
     aggregation (the ES stats/min/max/sum/avg aggs under a terms
-    bucket): ``hit`` = a docstore batch's matched rows (docid, value,
-    metric). Emits PARTIAL per-value rows (value, cnt, mcnt, mn, mx,
-    sm) — callers combine them with one small shuffle (sums add, mins
+    bucket): ``hit`` = a (segment, shard) group's matched rows (docid,
+    value, metric). Emits PARTIAL per-value rows (value, cnt, mcnt, mn,
+    mx, sm) — callers combine them with one small shuffle (sums add, mins
     min, maxes max; avg = total sm / total mcnt, exact because sums
     combine associatively). NULL facet values are not bucketed (ES
     default); NULL metrics count toward cnt but not mcnt/mn/mx/sm (SQL
@@ -957,7 +973,7 @@ def _facet_percentiles_finalize(part: DataFrame, ps: list[float],
 
 def _facet_top_hits_finalize(part: DataFrame, k_buckets: int,
                              k_hits: int) -> DataFrame:
-    """Combine the kernel's per-(batch, bucket) partial top-hit rows
+    """Combine the kernel's per-(group, bucket) partial top-hit rows
     into the final ES top_hits shape: (value, doc_count, rank, docid,
     score), in ONE aggregation per value: doc_count sums the partial
     counts (the kernel puts each partial on one row) and the hits are
@@ -982,9 +998,9 @@ def _facet_top_hits_finalize(part: DataFrame, k_buckets: int,
 
 def facet_values_group(hit: pd.DataFrame) -> pd.DataFrame:
     """Bucket-aggregation kernel (_store_plan) for VALUE-LEVEL facet
-    aggregation (the ES percentiles-agg path): ``hit`` = a docstore
-    batch's matched rows (docid, value, metric). Emits their (value,
-    metric) rows — one per matched doc with a non-NULL bucket AND
+    aggregation (the ES percentiles-agg path): ``hit`` = a (segment,
+    shard) group's matched rows (docid, value, metric). Emits their
+    (value, metric) rows — one per matched doc with a non-NULL bucket AND
     metric (ES percentiles skip missing values) — so the caller's
     aggregate (exact `percentile` or the `percentile_approx` quantile
     sketch) runs its map-side partial directly on the kernel's output
@@ -997,16 +1013,16 @@ def facet_values_group(hit: pd.DataFrame) -> pd.DataFrame:
 
 def top_hits_group(k_hits: int):
     """Bucket-aggregation kernel factory (_store_plan) for the ES
-    top_hits agg nested under a terms bucket: of a docstore batch's
-    matched rows (docid, value, score — _scored_match), emit each
-    bucket's PARTIAL top-k_hits by (score desc, docid asc) as (value,
-    cnt, docid, score); ``cnt`` is the batch's partial bucket doc count
-    on the bucket's first hit row and 0 on the others, so callers sum
-    it per value (every non-empty bucket emits ≥1 hit row, so no
+    top_hits agg nested under a terms bucket: of a (segment, shard)
+    group's matched rows (docid, value, score — _scored_match), emit
+    each bucket's PARTIAL top-k_hits by (score desc, docid asc) as
+    (value, cnt, docid, score); ``cnt`` is the group's partial bucket
+    doc count on the bucket's first hit row and 0 on the others, so
+    callers sum it per value (every non-empty bucket emits ≥1 hit row, so no
     partial count is ever lost). NULL bucket values drop (ES terms-agg
     default)."""
 
-    def per_batch(hit: pd.DataFrame) -> pd.DataFrame:
+    def per_group(hit: pd.DataFrame) -> pd.DataFrame:
         hit = hit[hit["value"].notna()]
         cnts = hit.groupby("value", sort=False)["docid"].transform(
             "size")
@@ -1024,7 +1040,7 @@ def top_hits_group(k_hits: int):
              "docid": hs["docid"].to_numpy(np.int64),
              "score": hs["score"].to_numpy(np.float64)})
 
-    return per_batch
+    return per_group
 
 
 def _score_or_wand_after(per_term: dict[str, pd.DataFrame],
@@ -2148,6 +2164,16 @@ class SegmentedIndex:
         return [(i, sh) for i, s in enumerate(self.subs)
                 for sh in s._shard_dirs()]
 
+    def _width(self, n: int) -> int:
+        """Task count for ``n`` (segment, shard) groups: the session's
+        query-parallelism knob (shuffle partitions — the width of the
+        worker pool the build warmed), at most ``n``."""
+        try:
+            p = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        except Exception:   # noqa: BLE001
+            p = self.spark.sparkContext.defaultParallelism
+        return max(1, min(n, p))
+
     def _fan_out(self, allt: list[str], fn, schema: str,
                  keys=None) -> DataFrame:
         """ONE-job, ONE-stage fan-out over (segment, shard) tasks: each
@@ -2165,13 +2191,7 @@ class SegmentedIndex:
         if keys is not None:
             keys = set(keys)
             tasks = [key for key in tasks if key in keys]
-        # fan-out at the session's query-parallelism knob (shuffle
-        # partitions) — the width of the worker pool the build warmed
-        try:
-            p = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:   # noqa: BLE001
-            p = self.spark.sparkContext.defaultParallelism
-        p = max(1, min(len(tasks), p))
+        p = self._width(len(tasks))
 
         def reader(batches):
             for rb in batches:
@@ -2267,22 +2287,30 @@ class SegmentedIndex:
     def _store_plan(self, terms: list[str], org: str | None, filter,
                     cols: list[Column], match, kernel,
                     schema: str) -> DataFrame:
-        """The bucket-aggregation plan: ONE mapInArrow stage over each
-        segment's docstore slice projected to (shard, docid, *cols) —
-        column-pruned, tenant- and filter-restricted at the scan, with
-        Spark evaluating the ``cols`` SQL. Each Arrow batch splits by
-        (segment, shard). Once per task and group, the task reads the
-        shard's dictionary rows for the query terms (_dict_reader) and
-        ``match`` turns them into the group's matched docs, a frame
-        with a ``docid`` column; each batch's docstore rows joined with
-        it go to ``kernel``, which emits the batch's partials. A shard
-        the segment did not list has no postings and is skipped; a
-        listed shard the task cannot read fails the query. Matched docs
-        never shuffle."""
+        """The bucket-aggregation plan: each segment's docstore slice
+        projected to (shard, docid, *cols) — column-pruned, tenant- and
+        filter-restricted at the scan, with Spark evaluating the
+        ``cols`` SQL — placed by (segment, shard) with each group on
+        exactly one task and the groups spread evenly over the tasks
+        (placement.repartition_exact), sorted by (segment, shard), then
+        ONE mapInArrow stage. A task thus holds every docstore row of
+        its groups and sees each group contiguously: per group it
+        reads the shard's dictionary rows for the query terms once
+        (_dict_reader), ``match`` (dictionary rows, group rows) returns
+        the group's matched rows and ``kernel`` emits the group's
+        partials, and then the group is dropped. A shard the segment
+        did not list has no postings and is skipped; a listed shard the
+        task cannot read fails the query. Only the projected slice
+        shuffles; postings and matched docs never do."""
         import pyarrow as pa
         shards = self._org_shards(org) if org is not None else None
         listed = set(self._listed())
+        groups = sorted(key for key in listed
+                        if shards is None or key[1] in shards[key[0]])
+        if not groups:
+            return self.spark.createDataFrame([], schema)
         read = _dict_reader(self.subs, terms)
+        m = 1 + max(sh for _, sh in groups)     # group ordinal seg*m+shard
 
         def store(i, s):
             st = s._docstore
@@ -2293,29 +2321,36 @@ class SegmentedIndex:
                 st = st.where(filter)
             return st.select("shard", "docid", *cols)
 
-        def task(batches):
-            memo: dict[tuple[int, int], pd.DataFrame | None] = {}
-            for rb in batches:
-                pdf = rb.to_pandas()
-                for (seg, sh), rpdf in pdf.groupby(["seg", "shard"],
-                                                   sort=False):
-                    key = (int(seg), int(sh))
-                    if key not in listed:
-                        continue
-                    if key not in memo:
-                        rows = read(*key)
-                        memo[key] = match(rows) if len(rows) else None
-                    if memo[key] is None:
-                        continue
-                    hit = rpdf.merge(memo[key], on="docid")
-                    if hit.empty:
-                        continue
-                    out = kernel(hit)
-                    if len(out):
-                        yield pa.RecordBatch.from_pandas(
-                            out, preserve_index=False)
+        def group(key, parts):
+            if not parts:
+                return
+            rows = read(*key)
+            if rows.empty:
+                return
+            hit = match(rows, pd.concat(parts, ignore_index=True))
+            out = kernel(hit) if len(hit) else hit
+            if len(out):
+                yield pa.RecordBatch.from_pandas(out, preserve_index=False)
 
-        return self._union(store).mapInArrow(task, schema)
+        def task(batches):
+            key, parts = None, []
+            for rb in batches:
+                for (seg, sh), g in rb.to_pandas().groupby(
+                        ["seg", "shard"], sort=False):
+                    if (int(seg), int(sh)) != key:
+                        yield from group(key, parts)
+                        key, parts = (int(seg), int(sh)), []
+                    if key in listed:
+                        parts.append(g)
+            yield from group(key, parts)
+
+        plan = self._union(store).withColumn(
+            "_g", F.col("seg") * m + F.col("shard"))
+        return (repartition_exact(plan, [i * m + sh for i, sh in groups],
+                                  self._width(len(groups)), "_g")
+                .drop("_g")
+                .sortWithinPartitions("seg", "shard")
+                .mapInArrow(task, schema))
 
     def _sdf(self, hits: pd.DataFrame) -> DataFrame:
         """(docid, score) hits as a Spark DataFrame."""
@@ -2944,12 +2979,13 @@ class SegmentedIndex:
         Plan shape: the filter's per-(segment, shard) docid sets come
         from the handle's memo or one docstore scan job (_cand_sets —
         the same sets ``topk(filter=)`` uses; the job collects about
-        16 B per matching doc to the driver), ride the kernel closure
-        encoded (~1.5 B per docid), and only groups with candidates are
-        scheduled; the kernels score only those candidates and
-        truncate to k per query in-group, and the global window merges
-        — per-group output is O(k · queries in bucket), never
-        postings-scale. Composes with ``org`` (conjunction).
+        16 B per matching doc to the driver, so a broad filter on a
+        very large index is bounded by driver memory), ride the kernel
+        closure encoded (~1.5 B per docid), and only groups with
+        candidates are scheduled; the kernels score only those
+        candidates and truncate to k per query in-group, and the
+        global window merges — per-group output is O(k · queries in
+        bucket), never postings-scale. Composes with ``org`` (conjunction).
 
         ``after_cols=(score_col, docid_col)`` names per-query
         pagination-cursor columns in ``queries``: a non-NULL cursor
@@ -3238,13 +3274,14 @@ class SegmentedIndex:
         context); ``org`` and ``filter`` restrict it exactly as in
         ``match_docids``.
 
-        Scale shape: one mapInArrow stage over the docstore slice
-        (column-pruned to shard, docid, ``by`` and any filter columns —
-        all pushed to the parquet scan), each task reading the query
-        terms' postings of its shards in-task (_store_plan);
-        each batch emits PARTIAL (value, count) rows, one small shuffle
-        sums them, and the top-k order/limit runs on counts, never on
-        docs. No driver materialization anywhere."""
+        Scale shape: the docstore slice (column-pruned to shard,
+        docid, ``by`` and any filter columns — all pushed to the
+        parquet scan) is grouped by (segment, shard) into one
+        mapInArrow stage whose tasks read each group's query-term
+        postings in-task (_store_plan); each group emits PARTIAL
+        (value, count) rows, one small shuffle sums them, and the
+        top-k order/limit runs on counts, never on docs. No driver
+        materialization anywhere."""
         out = self._facet_partials(query, by, mode, field, org, filter)
         if out is None:
             return self.spark.createDataFrame(
@@ -3256,9 +3293,9 @@ class SegmentedIndex:
                         field: str | None, org: str | None,
                         filter) -> DataFrame | None:
         """Shared bucket-agg plan (terms / histogram / date_histogram):
-        per-batch partial (value, count) rows from the docstore stage
-        that reads postings in-task (_store_plan), one combining
-        shuffle. Returns the UNORDERED
+        per-(segment, shard) partial (value, count) rows from the
+        docstore stage that reads postings in-task (_store_plan), one
+        combining shuffle. Returns the UNORDERED
         (value string, doc_count long) frame, or None for an empty
         query — callers order/limit/reshape."""
         terms = self._terms(query, self._field(field)[0])
@@ -3613,9 +3650,9 @@ class SegmentedIndex:
 
         Scale shape: the column-pruned docstore slice with postings
         read in-task (same plan as facet_counts, _store_plan); each
-        batch emits its PARTIAL top-k (docid, sort_val) — the global
-        order/limit runs over batches * k rows, matched docs never
-        shuffle."""
+        (segment, shard) group emits its PARTIAL top-k (docid,
+        sort_val) — the global order/limit runs over groups * k rows,
+        matched docs never shuffle."""
         terms = self._terms(query, self._field(field)[0])
         if not terms:
             return self.spark.createDataFrame(
@@ -3640,7 +3677,7 @@ class SegmentedIndex:
         """Distinct-value count of ``by`` (column or SQL expression)
         over the query's boolean matches — the ES ``cardinality``
         aggregation analog. ``exact=True`` counts exactly (countDistinct
-        over the per-batch partial facet rows — the oracle-parity
+        over the per-group partial facet rows — the oracle-parity
         path); ``exact=False`` is the 100-TB path: Spark's
         HyperLogLog++ sketch (approx_count_distinct, relative error
         ``rsd``) combines map-side, so the exchange carries sketches,
@@ -3675,7 +3712,7 @@ class SegmentedIndex:
 
         Scale shape identical to facet_counts: the docstore scan is
         column-pruned to (shard, docid, by, metric, filter cols), each
-        batch emits per-value PARTIAL stats, one small shuffle
+        group emits per-value PARTIAL stats, one small shuffle
         combines them (sums add, mins min) — avg is exact because it
         divides combined sums, never averages averages."""
         terms = self._terms(query, self._field(field)[0])
@@ -3755,11 +3792,11 @@ class SegmentedIndex:
         each bucket's hits equal the plain topk ranking restricted to
         that bucket.
 
-        Scale shape: each task scores its shards' matches once
-        (_store_plan, _scored_match) and each docstore batch emits each
-        bucket's PARTIAL top-k_hits (plus the batch's partial count
-        riding its first row), so the one
-        exchange carries at most batches × buckets × k_hits rows into a
+        Scale shape: per (segment, shard) group of the docstore slice,
+        its task scores only the group's docs (_store_plan,
+        _scored_match) and emits each bucket's PARTIAL top-k_hits (plus
+        the group's partial count riding its first row), so the
+        exchange carries at most groups × buckets × k_hits rows into a
         per-value aggregate of counts and hits; bucket selection orders
         those bucket rows — matched docs never shuffle."""
         prefix, avgdl = self._field(field)

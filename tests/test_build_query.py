@@ -375,14 +375,11 @@ def test_conv_sizes_local_byte_gate(spark, tmp_path, monkeypatch):
     write_transcripts_parquet(src, 30, seed=SEED)
     assert build._conv_sizes_local([src], "conv_id", "turn_idx") \
         is not None
-    assert build._conv_sizes_local([src], "conv_id", "turn_idx",
-                                   max_bytes=16) is None
     bare = spark.read.parquet(src)
     slow = build.assign_docids_grouped(
         spark.createDataFrame(bare.toPandas()), "conv_id", "turn_idx")
-    gate = build._conv_sizes_local
-    monkeypatch.setattr(build, "_conv_sizes_local",
-                        lambda *a, **kw: gate(*a, **kw, max_bytes=16))
+    monkeypatch.setattr(build, "_CONV_SIZES_MAX_BYTES", 16)
+    assert build._conv_sizes_local([src], "conv_id", "turn_idx") is None
     got = build.assign_docids_grouped(bare, "conv_id", "turn_idx")
     assert got._sparkfts_direct is None
 

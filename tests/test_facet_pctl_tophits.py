@@ -197,10 +197,14 @@ def test_combined_twins_and_tombstones(spark, tmp_path_factory):
 
 
 def test_store_plan_partials_batch_size_invariant(spark, tmp_path):
-    """The bucket-aggregation kernels emit per-Arrow-batch partials:
-    on a base + delta + tombstone CombinedIndex every surface returns
-    the same frame when the docstore batches hold 7 rows as at the
-    default batch size."""
+    """The bucket-aggregation kernels see each (segment, shard) group
+    whole: on a base + delta + tombstone CombinedIndex every surface
+    returns the same frame when the docstore batches hold 7 rows and
+    every docstore file is its own split (a shard's docstore spread
+    over several tasks) as at the defaults, and the facet count
+    partials number at most one per (group, value)."""
+    from pyspark.sql import functions as F
+    from sparkfts.query import _bool_match, facet_count_group
     from sparkfts.streaming import CombinedIndex, make_batch_indexer
     cfg = BuildConfig(num_shards=2, partitions=2)
     root = str(tmp_path / "bs")
@@ -210,6 +214,9 @@ def test_store_plan_partials_batch_size_invariant(spark, tmp_path):
     make_batch_indexer(root, cfg=cfg, order_cols=["conv_id", "turn_idx"])(
         spark.createDataFrame(make_transcripts(6, seed=SEED + 1)),
         batch_id=0)
+    # a shard's docstore is several files, each its own split below
+    files = glob.glob(os.path.join(root, "docstore", "shard=*", "*.parquet"))
+    assert len(files) > cfg.num_shards
     ci = CombinedIndex(spark, root)
     ci.delete_docs([int(d) for d in ci.topk(Q, k=3, mode="or")["docid"]])
     calls = {
@@ -227,14 +234,26 @@ def test_store_plan_partials_batch_size_invariant(spark, tmp_path):
         "facet_cardinality": lambda: ci.facet_cardinality(
             Q, by="turn_idx", mode="or", exact=True),
     }
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     want = {name: call() for name, call in calls.items()}
-    old = spark.conf.get(key)
-    spark.conf.set(key, "7")
+    small = {"spark.sql.execution.arrow.maxRecordsPerBatch": "7",
+             "spark.sql.files.maxPartitionBytes": "1k"}
+    old = {key: spark.conf.get(key) for key in small}
+    for key, v in small.items():
+        spark.conf.set(key, v)
     try:
         got = {name: call() for name, call in calls.items()}
+        terms = ci._terms(Q)
+        part = ci._store_plan(
+            terms, None, None, [F.col("role").alias("value")],
+            _bool_match("or", len(terms), ci._excl()),
+            facet_count_group, "value string, cnt long").toPandas()
     finally:
-        spark.conf.set(key, old)
+        for key, v in old.items():
+            spark.conf.set(key, v)
+    assert part.groupby("value").size().max() <= len(ci._listed())
+    assert (part.groupby("value")["cnt"].sum().sort_index().tolist()
+            == want["facet_counts"].set_index("value")["doc_count"]
+            .sort_index().tolist())
     assert len(want["facet_top_hits"]) > 0
     assert want["facet_cardinality"] > 1
     for name in calls:

@@ -205,15 +205,19 @@ def main(sf_dir: str) -> None:
 
     sections.append((
         "FTSIndex.facet_counts",
-        "Expect: ONE Exchange — hashpartitioning on `value` between the "
-        "partial and final sum of the counts. Below it: the docstore "
-        "scan (column-pruned to shard, docid and the `by` and filter "
-        "columns, the filter pushed) → the `by` Project → MapInArrow, "
-        "each task reading its shards' dictionary rows with the th/term "
-        "pushdown. No FlatMapCoGroupsInPandas, no postings scan in the "
-        "plan and no Exchange of postings or docstore rows. This is the "
-        "plan every bucket aggregation builds "
-        "(SegmentedIndex._store_plan).",
+        "Expect: TWO Exchanges. Bottom up: the docstore scan "
+        "(column-pruned to shard, docid and the `by` and filter "
+        "columns, the filter pushed) → the `by` Project → an Exchange "
+        "on the exact placement key of each row's (seg, shard) group "
+        "(placement.repartition_exact) and a Sort on (seg, shard), so "
+        "each MapInArrow task holds whole "
+        "(segment, shard) groups and sees each group contiguously → "
+        "MapInArrow, each task reading a group's dictionary rows once "
+        "with the th/term pushdown → the partial sum, the Exchange on "
+        "`value` and the final sum of the counts. No "
+        "FlatMapCoGroupsInPandas, no postings scan in the plan and no "
+        "Exchange of postings rows. This is the plan every bucket "
+        "aggregation builds (SegmentedIndex._store_plan).",
         fmt(idx.facet_counts(" ".join(terms), by="lang", k=10,
                              mode="or", filter="n_chars >= 200"))))
 
