@@ -7,23 +7,40 @@ predicate pushdown on the term column — rows are term-sorted within each
 shard file, so row-group min/max stats prune), score BM25 per shard
 (docs live in exactly one shard, so per-shard scores are final given
 global idf), take per-shard top-k, merge k·num_shards candidates on the
-driver. Scoring methods:
+driver.
 
-  exact : decode every posting of every query term, vectorized numpy
-          aggregation (np.unique + bincount).
-  wand  : block-max pruning — exact top-k, but only decodes blocks that
-          can contain a doc whose score upper bound reaches a lower bound
-          on the k-th best score. Two phases per shard:
-            seed : decode each term's top-m blocks by upper bound
-                   (ub = idf · block_max_partial); the k-th largest
-                   partial sum over decoded postings is a valid lower
-                   bound θ on the true k-th best score.
-            sweep: piecewise-constant UB(docid) from block interval
-                   boundaries; candidate region = {UB ≥ θ}; decode only
-                   blocks intersecting it; score candidates exactly.
-          Docs outside the region have true score ≤ UB < θ ≤ k-th best,
-          so the result is identical to exhaustive scoring (ties included,
-          since the region test is ≥).
+Scoring: every bag-of-words surface (topk, topk_local, topk_many,
+search_join, multi-term patterns) scores one group's dictionary rows
+through ``score_shard``, which takes one of three restrictions:
+
+  cand= : a sorted docid set (a tenant's or a filter's candidates);
+  rng=  : an inclusive docid interval (a contiguous tenant);
+  none  : every doc.
+
+A restricted call decodes only the blocks whose [block_first,
+block_last] range meets the restriction and keeps the postings inside
+it (_score_candidates); method='exact' is the same path with nothing
+restricted, the reference the pruned methods are tested against. The
+pruned default (method='wand') restricts as it goes:
+
+  and / must : rarest-first conjunction — each next required term
+               decodes only the blocks meeting the candidates so far,
+               and its postings there become the candidates; should
+               terms then decode only blocks meeting the survivors.
+  or         : block-max WAND (Ding & Suel, SIGIR 2011), two phases:
+                 seed : decode each term's top-m blocks by upper bound
+                        (ub = idf · block_max_partial) → a lower bound θ
+                        on the k-th best score: the k-th partial sum on
+                        a first page; under a search_after cursor, the
+                        k-th score among seed docs the decode proves
+                        complete and ranked after the cursor.
+                 sweep: piecewise-constant UB(docid) from block
+                        boundaries; the live region {UB ≥ θ} is itself
+                        a restriction (sorted intervals), scored
+                        exhaustively.
+               Docs outside the region have true score ≤ UB < θ ≤
+               k-th best, so the result is identical to exhaustive
+               scoring (ties included, since the region test is ≥).
 
 Scores are float64 end-to-end with a fixed summation order (ascending
 term, then ascending docid) so results are rank-identical to the
@@ -31,6 +48,7 @@ brute-force oracle; ties broken by docid ascending.
 """
 from __future__ import annotations
 
+import functools
 import math
 import os
 import re
@@ -81,49 +99,111 @@ def reset_decode_counters() -> None:
     DECODE_COUNTERS["blocks"] = 0
 
 
-def _ordered_cols(rows: pd.DataFrame, *cols: str) -> list[np.ndarray]:
-    """Object arrays of ``cols`` in _row_order (no per-row tuples)."""
-    o = _row_order(rows)
-    return [rows[c].to_numpy()[o] for c in cols]
+class _Blocks:
+    """One term's chunk rows in _row_order: per row its blob, block
+    byte offsets and block sizes (``blob``/``off``/``n``), plus any
+    per-block column flattened across rows (``flat``). ``first`` /
+    ``last`` are the flat block docid bounds — block i holds docids in
+    [first[i], last[i]], and the bounds ascend and are disjoint. A flat
+    keep-mask over the blocks splits back into rows by len(n[r])."""
+
+    def __init__(self, rows: pd.DataFrame):
+        self._rows, self._o = rows, _row_order(rows)
+        self.blob, self.off, self.n = (
+            rows[c].to_numpy()[self._o]
+            for c in ("blob", "block_off", "block_n"))
+
+    def flat(self, col: str) -> np.ndarray:
+        return np.concatenate([np.asarray(a) for a in
+                               self._rows[col].to_numpy()[self._o]])
+
+    @functools.cached_property
+    def first(self) -> np.ndarray:
+        return self.flat("block_first")
+
+    @functools.cached_property
+    def last(self) -> np.ndarray:
+        return self.flat("block_last")
 
 
-def _decode_term_rows(rows: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode all chunks of one term → concatenated (docids, tfs, dls)
-    in globally ascending docid order (see _row_order)."""
-    parts = []
-    for blob, offs, ns in zip(*_ordered_cols(rows, "blob", "block_off",
-                                             "block_n")):
-        DECODE_COUNTERS["blocks"] += len(ns)
-        parts.append(codec.decode_postings(blob, np.asarray(offs),
-                                           np.asarray(ns)))
-    return (np.concatenate([p[0] for p in parts]),
-            np.concatenate([p[1] for p in parts]),
-            np.concatenate([p[2] for p in parts]))
-
-
-def _decode_selected(rows: pd.DataFrame, keep_mask_per_row: list[np.ndarray],
-                     ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode only the selected blocks of one term's chunk rows."""
-    d, t, l = [], [], []
-    for blob, offs, ns, keep in zip(*_ordered_cols(rows, "blob",
-                                                   "block_off", "block_n"),
-                                    keep_mask_per_row):
-        sel = np.flatnonzero(keep)
-        if sel.size == 0:
-            continue
-        DECODE_COUNTERS["blocks"] += int(sel.size)
-        offs = np.asarray(offs)
-        ns = np.asarray(ns)
-        buf = np.frombuffer(blob, dtype=np.uint8)
-        ends = codec.varint_ends(buf)   # one scan per blob, not per block
-        for bi in sel:
-            dd, tt, ll = codec.decode_block(buf, int(offs[bi]),
-                                            int(ns[bi]), ends=ends)
-            d.append(dd); t.append(tt); l.append(ll)
-    if not d:
+def _decode_blocks(bl: _Blocks, keep: np.ndarray | None,
+                   ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode the blocks of ``bl`` flagged in the flat mask ``keep``
+    (None: every block) → ascending (docids, tfs, dls). Each row's
+    selected blocks decode in one vectorized codec call."""
+    parts, pos = [], 0
+    for blob, offs, ns in zip(bl.blob, bl.off, bl.n):
+        offs, ns = np.asarray(offs), np.asarray(ns)
+        if keep is not None:
+            sel = keep[pos:pos + ns.shape[0]]
+            pos += ns.shape[0]
+            offs, ns = offs[sel], ns[sel]
+        if ns.size:
+            DECODE_COUNTERS["blocks"] += int(ns.size)
+            parts.append(codec.decode_postings(blob, offs, ns))
+    if not parts:
         e = np.empty(0, dtype=np.int64)
         return e, e.copy(), e.copy()
-    return np.concatenate(d), np.concatenate(t), np.concatenate(l)
+    d, tf, dl = zip(*parts)
+    return np.concatenate(d), np.concatenate(tf), np.concatenate(dl)
+
+
+def _decode_term_rows(rows: pd.DataFrame
+                      ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decode all chunks of one term → concatenated (docids, tfs, dls)
+    in globally ascending docid order (see _row_order)."""
+    return _decode_blocks(_Blocks(rows), None)
+
+
+def _stab(lo: np.ndarray, hi: np.ndarray, first: np.ndarray,
+          last: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Sorted disjoint inclusive intervals [lo, hi] against spans
+    [first, last] → (i, meets): i is the first interval ending at or
+    after each span's first, and meets flags the spans that overlap
+    it — the spans that overlap any interval, as the intervals
+    ascend."""
+    i = np.searchsorted(hi, first)
+    n = hi.shape[0]
+    return i, (i < n) & (lo[np.minimum(i, n - 1)] <= last)
+
+
+# A restriction is a sorted unique docid array (a tenant's or a
+# filter's candidate set) or inclusive intervals (lo, hi) — two ints
+# for a contiguous tenant, or two sorted disjoint arrays for WAND's
+# live region. These two helpers hold the only difference between the
+# kinds: which blocks meet it, and which postings fall inside it.
+
+def _meets(restrict, first: np.ndarray, last: np.ndarray) -> np.ndarray:
+    """Mask of the blocks [first, last] holding a docid of ``restrict``."""
+    if isinstance(restrict, np.ndarray):
+        return (np.searchsorted(restrict, first, side="left")
+                < np.searchsorted(restrict, last, side="right"))
+    lo, hi = (np.atleast_1d(v) for v in restrict)
+    return _stab(lo, hi, first, last)[1]
+
+
+def _inside(restrict, d: np.ndarray) -> np.ndarray:
+    """Mask of the docids ``d`` inside ``restrict``."""
+    if isinstance(restrict, np.ndarray):
+        p = np.searchsorted(restrict, d)
+        sel = p < restrict.shape[0]
+        sel[sel] = restrict[p[sel]] == d[sel]
+        return sel
+    lo, hi = (np.atleast_1d(v) for v in restrict)
+    return _stab(lo, hi, d, d)[1]
+
+
+def _decode_in(bl: _Blocks, restrict
+               ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One term's postings inside ``restrict`` (None: all of them):
+    decode only the blocks that meet it, keep the postings inside."""
+    if restrict is None:
+        return _decode_blocks(bl, None)
+    d, tf, dl = _decode_blocks(bl, _meets(restrict, bl.first, bl.last))
+    if d.size:
+        m = _inside(restrict, d)
+        d, tf, dl = d[m], tf[m], dl[m]
+    return d, tf, dl
 
 
 def _drop_excl(docids: np.ndarray,
@@ -134,9 +214,7 @@ def _drop_excl(docids: np.ndarray,
     BEFORE top-k truncation, so per-group output is k rows, not k+T."""
     if excl is None or excl.size == 0 or docids.size == 0:
         return None
-    p = np.searchsorted(excl, docids)
-    hit = p < excl.shape[0]
-    hit[hit] = excl[p[hit]] == docids[hit]
+    hit = _inside(excl, docids)
     return ~hit if hit.any() else None
 
 
@@ -201,6 +279,46 @@ def _topk_frame(uniq: np.ndarray, scores: np.ndarray,
     return pd.DataFrame({"docid": uniq[order], "score": scores[order]})
 
 
+def _after_mask(docids: np.ndarray, scores: np.ndarray,
+                after: tuple[float, int]) -> np.ndarray:
+    """Docs ranked STRICTLY after the (score, docid) cursor ``after``
+    (deep pagination, the ES search_after analog). Score equality is
+    exact because cursor scores come from this same fixed-order
+    pipeline."""
+    s0, d0 = float(after[0]), int(after[1])
+    return (scores < s0) | ((scores == s0) & (docids > d0))
+
+
+def _finish_topk(uniq: np.ndarray, scores: np.ndarray, k: int,
+                 mode: str, n_query_terms: int, hits: np.ndarray | None,
+                 after: tuple[float, int] | None,
+                 excl: np.ndarray | None, min_hits: int | None,
+                 req_hits: np.ndarray | None = None,
+                 n_req: int = 0) -> pd.DataFrame:
+    """The tail of every exhaustive aggregation: per-doc summed
+    ``scores`` and match counts ``hits`` → keep the docs that qualify,
+    drop tombstones, apply the cursor, take top-k (see _aggregate_topk
+    for the qualification rules)."""
+    m = None
+    if req_hits is not None:
+        m = req_hits == n_req
+        if min_hits is not None and min_hits >= 1:
+            m &= (hits - req_hits) >= min_hits
+    elif mode == "and":
+        m = hits == n_query_terms
+    elif min_hits is not None and min_hits > 1:
+        m = hits >= min_hits
+    if m is not None:
+        uniq, scores = uniq[m], scores[m]
+    m = _drop_excl(uniq, excl)
+    if m is not None:
+        uniq, scores = uniq[m], scores[m]
+    if after is not None:
+        m = _after_mask(uniq, scores, after)
+        uniq, scores = uniq[m], scores[m]
+    return _topk_frame(uniq, scores, k)
+
+
 def _aggregate_topk(docids: np.ndarray, contribs: np.ndarray, k: int,
                     mode: str, n_query_terms: int,
                     after: tuple[float, int] | None = None,
@@ -210,11 +328,9 @@ def _aggregate_topk(docids: np.ndarray, contribs: np.ndarray, k: int,
                     n_req: int = 0) -> pd.DataFrame:
     """Group contributions by docid (fixed input order ⇒ fixed summation
     order) and take top-k by (score desc, docid asc). ``after`` =
-    (score, docid) cursor for deep pagination (the ES search_after
-    analog): keep only docs ranked STRICTLY after it — score equality
-    is exact because cursor scores come from this same fixed-order
-    pipeline. ``excl`` (sorted tombstoned docids) drops deleted docs
-    after aggregation but BEFORE truncation — exact, since every
+    (score, docid) cursor: keep only docs ranked strictly after it
+    (_after_mask). ``excl`` (sorted tombstoned docids) drops deleted
+    docs after aggregation but BEFORE truncation — exact, since every
     contribution was already summed. ``min_hits`` (OR-mode; the ES
     minimum_should_match analog) keeps docs matching at least that
     many distinct query terms — "and" is min_hits == n_query_terms,
@@ -227,10 +343,10 @@ def _aggregate_topk(docids: np.ndarray, contribs: np.ndarray, k: int,
     the ES minimum_should_match-with-must semantics. Scores still sum
     over every matched term, required and optional alike."""
     if docids.size == 0:
-        return pd.DataFrame({"docid": pd.Series(dtype=np.int64),
-                             "score": pd.Series(dtype=np.float64)})
+        return _EMPTY_TOPK.copy()
     mn = int(docids.min())
     rng = int(docids.max()) - mn + 1
+    req_hits = None
     if rng <= 16 * docids.size + 65536 and rng <= (1 << 24):
         # Dense-range scatter: docid spans in this engine are shard- or
         # index-local and near-dense, so bincount over (max-min+1) bins
@@ -262,202 +378,8 @@ def _aggregate_topk(docids: np.ndarray, contribs: np.ndarray, k: int,
         if req_mask is not None:
             req_hits = np.bincount(inv[req_mask],
                                    minlength=uniq.shape[0])
-    if req_mask is not None:
-        m = req_hits == n_req
-        if min_hits is not None and min_hits >= 1:
-            m &= (hits - req_hits) >= min_hits
-        uniq, scores = uniq[m], scores[m]
-    elif mode == "and":
-        m = hits == n_query_terms
-        uniq, scores = uniq[m], scores[m]
-    elif min_hits is not None and min_hits > 1:
-        m = hits >= min_hits
-        uniq, scores = uniq[m], scores[m]
-    m = _drop_excl(uniq, excl)
-    if m is not None:
-        uniq, scores = uniq[m], scores[m]
-    if after is not None:
-        s0, d0 = float(after[0]), int(after[1])
-        m = (scores < s0) | ((scores == s0) & (uniq > d0))
-        uniq, scores = uniq[m], scores[m]
-    return _topk_frame(uniq, scores, k)
-
-
-def _score_and_pruned(per_term: dict[str, pd.DataFrame], terms: list[str],
-                      idf: dict[str, float], avgdl: float, k1: float,
-                      b: float, k: int, n_query_terms: int,
-                      after: tuple[float, int] | None = None,
-                      excl: np.ndarray | None = None) -> pd.DataFrame:
-    """AND-mode scoring with block-range pruning (exact): decode the
-    rarest term fully; for each further term (ascending df) keep only the
-    blocks whose [block_first, block_last] range intersects the current
-    candidate set, shrinking candidates as we go — a hot+rare AND decodes
-    only the hot term's blocks that overlap the rare term's docids,
-    instead of every posting of every term. Summation runs in ascending
-    term order afterwards, so scores are bit-identical to the exhaustive
-    path."""
-    empty = pd.DataFrame({"docid": pd.Series(dtype=np.int64),
-                          "score": pd.Series(dtype=np.float64)})
-    if len(terms) < n_query_terms:
-        return empty  # a query term is absent from this shard → no doc qualifies
-    tdf = {t: int(per_term[t]["df"].sum()) for t in terms}
-    by_rarity = sorted(terms, key=lambda t: (tdf[t], t))
-
-    decoded: dict[str, tuple] = {}
-    rare = by_rarity[0]
-    d0, tf0, dl0 = _decode_term_rows(per_term[rare])
-    decoded[rare] = (d0, tf0, dl0)
-    cand = d0
-    m0 = _drop_excl(cand, excl)
-    if m0 is not None:
-        cand = cand[m0]     # deletes out before any block pruning work
-    for t in by_rarity[1:]:
-        if cand.size == 0:
-            return empty
-        rows = _order_rows(per_term[t])
-        firsts = np.concatenate([np.asarray(r.block_first)
-                                 for r in rows.itertuples()])
-        lasts = np.concatenate([np.asarray(r.block_last)
-                                for r in rows.itertuples()])
-        # block [f,l] holds a candidate iff some cand in [f,l]
-        lo = np.searchsorted(cand, firsts, side="left")
-        hi = np.searchsorted(cand, lasts, side="right")
-        keep = lo < hi
-        masks, pos = [], 0
-        for r in rows.itertuples():
-            sz = len(r.block_n)
-            masks.append(keep[pos:pos + sz]); pos += sz
-        d, tf, dl = _decode_selected(rows, masks)
-        # restrict this term's postings to candidates, and candidates to
-        # docs that contain this term too
-        p = np.searchsorted(d, cand)
-        ok = (p < d.shape[0])
-        ok[ok] = d[p[ok]] == cand[ok]
-        cand = cand[ok]
-        j = p[ok]
-        decoded[t] = (d[j], tf[j], dl[j])
-    if cand.size == 0:
-        return empty
-    scores = np.zeros(cand.shape[0], dtype=np.float64)
-    for t in sorted(terms):   # fixed ascending-term summation order
-        d, tf, dl = decoded[t]
-        j = np.searchsorted(d, cand)   # cand ⊆ d by construction
-        scores += idf[t] * codec.bm25_partial(tf[j], dl[j], avgdl, k1, b)
-    if after is not None:
-        s0, d0_ = float(after[0]), int(after[1])
-        m = (scores < s0) | ((scores == s0) & (cand > d0_))
-        cand, scores = cand[m], scores[m]
-    return _topk_frame(cand, scores, k)
-
-
-def _score_bool_pruned(per_term: dict[str, pd.DataFrame],
-                       req: frozenset, shoulds: list[str],
-                       idf: dict[str, float], avgdl: float, k1: float,
-                       b: float, k: int,
-                       after: tuple[float, int] | None = None,
-                       excl: np.ndarray | None = None,
-                       min_hits: int | None = None) -> pd.DataFrame:
-    """Lucene bool must+should scoring with block-range pruning
-    (exact, r7): the REQUIRED terms drive candidate generation exactly
-    like _score_and_pruned (rarest-first conjunction, block pruning);
-    the optional (should) terms then decode ONLY the blocks whose
-    [block_first, block_last] range intersects the surviving
-    candidates, adding their contributions where they match — a hot
-    should term next to a selective must decodes a tiny fraction of
-    its postings. ``min_hits`` (ES minimum_should_match under a must)
-    counts SHOULD matches only. Summation runs in ascending term
-    order, bit-identical to the exhaustive req_mask path."""
-    empty = pd.DataFrame({"docid": pd.Series(dtype=np.int64),
-                          "score": pd.Series(dtype=np.float64)})
-    req_present = [t for t in sorted(req) if t in per_term]
-    if len(req_present) < len(req):
-        return empty   # a required term is absent from this shard
-    tdf = {t: int(per_term[t]["df"].sum()) for t in req_present}
-    by_rarity = sorted(req_present, key=lambda t: (tdf[t], t))
-
-    decoded: dict[str, tuple] = {}
-    rare = by_rarity[0]
-    d0, tf0, dl0 = _decode_term_rows(per_term[rare])
-    decoded[rare] = (d0, tf0, dl0)
-    cand = d0
-    m0 = _drop_excl(cand, excl)
-    if m0 is not None:
-        cand = cand[m0]
-    for t in by_rarity[1:]:
-        if cand.size == 0:
-            return empty
-        rows = _order_rows(per_term[t])
-        firsts = np.concatenate([np.asarray(r.block_first)
-                                 for r in rows.itertuples()])
-        lasts = np.concatenate([np.asarray(r.block_last)
-                                for r in rows.itertuples()])
-        lo = np.searchsorted(cand, firsts, side="left")
-        hi = np.searchsorted(cand, lasts, side="right")
-        keep = lo < hi
-        masks, pos = [], 0
-        for r in rows.itertuples():
-            sz = len(r.block_n)
-            masks.append(keep[pos:pos + sz]); pos += sz
-        d, tf, dl = _decode_selected(rows, masks)
-        p = np.searchsorted(d, cand)
-        ok = (p < d.shape[0])
-        ok[ok] = d[p[ok]] == cand[ok]
-        cand = cand[ok]
-        j = p[ok]
-        decoded[t] = (d[j], tf[j], dl[j])
-    if cand.size == 0:
-        return empty
-
-    # should terms: candidate-restricted block decode + hit counting.
-    # positions are unique per term (one posting per doc), so plain
-    # fancy-index += is well-defined.
-    sh_hits = np.zeros(cand.shape[0], dtype=np.int64)
-    sh_decoded: dict[str, tuple] = {}
-    for t in shoulds:
-        if t in decoded or t not in per_term:
-            continue
-        rows = _order_rows(per_term[t])
-        firsts = np.concatenate([np.asarray(r.block_first)
-                                 for r in rows.itertuples()])
-        lasts = np.concatenate([np.asarray(r.block_last)
-                                for r in rows.itertuples()])
-        lo = np.searchsorted(cand, firsts, side="left")
-        hi = np.searchsorted(cand, lasts, side="right")
-        keep = lo < hi
-        masks, pos = [], 0
-        for r in rows.itertuples():
-            sz = len(r.block_n)
-            masks.append(keep[pos:pos + sz]); pos += sz
-        d, tf, dl = _decode_selected(rows, masks)
-        if d.size:
-            p = np.searchsorted(cand, d)
-            sel = p < cand.shape[0]
-            sel[sel] = cand[p[sel]] == d[sel]
-            d, tf, dl, p = d[sel], tf[sel], dl[sel], p[sel]
-        else:
-            p = np.empty(0, dtype=np.int64)
-        sh_decoded[t] = (p, tf, dl)
-        sh_hits[p] += 1
-
-    scores = np.zeros(cand.shape[0], dtype=np.float64)
-    for t in sorted(set(decoded) | set(sh_decoded)):
-        if t in decoded:
-            d, tf, dl = decoded[t]
-            j = np.searchsorted(d, cand)   # cand ⊆ d by construction
-            scores += idf[t] * codec.bm25_partial(tf[j], dl[j],
-                                                  avgdl, k1, b)
-        else:
-            p, tf, dl = sh_decoded[t]
-            scores[p] += idf[t] * codec.bm25_partial(tf, dl,
-                                                     avgdl, k1, b)
-    if min_hits is not None and min_hits >= 1:
-        m = sh_hits >= min_hits
-        cand, scores = cand[m], scores[m]
-    if after is not None:
-        s0, d0_ = float(after[0]), int(after[1])
-        m = (scores < s0) | ((scores == s0) & (cand > d0_))
-        cand, scores = cand[m], scores[m]
-    return _topk_frame(cand, scores, k)
+    return _finish_topk(uniq, scores, k, mode, n_query_terms, hits,
+                        after, excl, min_hits, req_hits, n_req)
 
 
 def score_partials(pp: dict[str, tuple[np.ndarray, np.ndarray]],
@@ -484,9 +406,7 @@ def score_partials(pp: dict[str, tuple[np.ndarray, np.ndarray]],
     live = [(t, pp[t][0], pp[t][1]) for t in sorted(pp)
             if pp[t][0].size]
     if not live:
-        return _aggregate_topk(np.empty(0, np.int64),
-                               np.empty(0, np.float64), k, mode,
-                               n_query_terms, after=after)
+        return _EMPTY_TOPK.copy()
     if req_terms is None:
         n = sum(d.shape[0] for _, d, _ in live)
         mn = min(int(d[0]) for _, d, _ in live)
@@ -507,22 +427,9 @@ def score_partials(pp: dict[str, tuple[np.ndarray, np.ndarray]],
             else:
                 uniq = np.flatnonzero(dscore)
                 hits = None
-            scores = dscore[uniq]
-            uniq = uniq + mn
-            if mode == "and":
-                m = hits == n_query_terms
-                uniq, scores = uniq[m], scores[m]
-            elif min_hits is not None and min_hits > 1:
-                m = hits >= min_hits
-                uniq, scores = uniq[m], scores[m]
-            m = _drop_excl(uniq, excl)
-            if m is not None:
-                uniq, scores = uniq[m], scores[m]
-            if after is not None:
-                s0, d0 = float(after[0]), int(after[1])
-                m = (scores < s0) | ((scores == s0) & (uniq > d0))
-                uniq, scores = uniq[m], scores[m]
-            return _topk_frame(uniq, scores, k)
+            return _finish_topk(uniq + mn, dscore[uniq], k, mode,
+                                n_query_terms, hits, after, excl,
+                                min_hits)
     all_d, all_c, all_r = [], [], []
     for t, d, part in live:
         all_d.append(d)
@@ -538,56 +445,300 @@ def score_partials(pp: dict[str, tuple[np.ndarray, np.ndarray]],
 
 
 def _score_candidates(per_term: dict[str, pd.DataFrame],
-                      terms: list[str], cand: np.ndarray,
+                      terms: list[str], restrict,
                       idf: dict[str, float], avgdl: float, k1: float,
                       b: float, k: int, mode: str, n_query_terms: int,
                       after: tuple[float, int] | None = None,
                       excl: np.ndarray | None = None,
                       min_hits: int | None = None,
                       req_terms: frozenset | None = None) -> pd.DataFrame:
-    """Score ONLY the given candidate docids (sorted unique) — the
-    org-scoped search path: per term, decode just the blocks whose
-    [block_first, block_last] range intersects the candidate set, then
-    restrict postings to candidates. Summation order (ascending term,
-    concatenated) matches the exhaustive path, so scores are
-    bit-identical to unrestricted scoring filtered to the candidates.
-    ``req_terms``: bool must+should qualification (see _aggregate_topk)."""
-    me = _drop_excl(cand, excl)
-    if me is not None:
-        cand = cand[me]     # deletes out of the candidate set up front
+    """Exhaustive scoring of the docs inside ``restrict``: a sorted
+    unique docid array (a tenant's or a filter's candidates), an
+    inclusive (lo, hi) interval (a contiguous tenant — the task
+    carries two ints instead of a docid array), or None (every doc —
+    the method='exact' reference path). Per term, decode just the
+    blocks that meet the restriction and keep the postings inside it
+    (_decode_in). Summation order (ascending term, concatenated)
+    matches every other path, so scores are bit-identical to
+    unrestricted scoring filtered to the restriction. ``req_terms``:
+    bool must+should qualification (see _aggregate_topk)."""
+    if isinstance(restrict, np.ndarray):
+        me = _drop_excl(restrict, excl)
+        if me is not None:
+            restrict = restrict[me]   # deletes out of the set up front
     all_d, all_c, all_r = [], [], []
     for t in sorted(terms):
-        rows = _order_rows(per_term[t])
-        firsts = np.concatenate([np.asarray(r.block_first)
-                                 for r in rows.itertuples()])
-        lasts = np.concatenate([np.asarray(r.block_last)
-                                for r in rows.itertuples()])
-        lo = np.searchsorted(cand, firsts, side="left")
-        hi = np.searchsorted(cand, lasts, side="right")
-        keep = lo < hi
-        masks, pos = [], 0
-        for r in rows.itertuples():
-            sz = len(r.block_n)
-            masks.append(keep[pos:pos + sz]); pos += sz
-        d, tf, dl = _decode_selected(rows, masks)
-        if d.size:
-            p = np.searchsorted(cand, d)
-            sel = (p < cand.shape[0])
-            sel[sel] = cand[p[sel]] == d[sel]
-            d, tf, dl = d[sel], tf[sel], dl[sel]
+        d, tf, dl = _decode_in(_Blocks(per_term[t]), restrict)
         all_d.append(d)
         all_c.append(idf[t] * codec.bm25_partial(tf, dl, avgdl, k1, b))
         if req_terms is not None:
             all_r.append(np.full(d.shape[0], t in req_terms, dtype=bool))
-    if not all_d:
-        return _aggregate_topk(np.empty(0, np.int64),
-                               np.empty(0, np.float64), k, mode,
-                               n_query_terms, after=after)
     rq = np.concatenate(all_r) if req_terms is not None else None
     return _aggregate_topk(np.concatenate(all_d), np.concatenate(all_c),
                            k, mode, n_query_terms, after=after,
-                           min_hits=min_hits, req_mask=rq,
+                           excl=excl, min_hits=min_hits, req_mask=rq,
                            n_req=len(req_terms) if req_terms else 0)
+
+
+def _score_bool_pruned(per_term: dict[str, pd.DataFrame],
+                       req: frozenset, shoulds: list[str],
+                       idf: dict[str, float], avgdl: float, k1: float,
+                       b: float, k: int,
+                       after: tuple[float, int] | None = None,
+                       excl: np.ndarray | None = None,
+                       min_hits: int | None = None) -> pd.DataFrame:
+    """Lucene bool must+should scoring with block-range pruning
+    (exact): the REQUIRED terms drive candidate generation rarest
+    first — the rarest decodes in full, and each next one decodes only
+    the blocks meeting the candidates so far, its postings inside them
+    becoming the new candidates. The optional (should) terms then
+    decode only the blocks meeting the final candidates and add their
+    contributions where they match. AND mode is ``req`` = every term
+    and no shoulds: a hot+rare AND decodes only the hot term's blocks
+    that overlap the rare term's docids. ``min_hits`` (ES
+    minimum_should_match under a must) counts SHOULD matches only.
+    Summation runs in ascending term order, bit-identical to the
+    exhaustive req_mask path."""
+    req_present = [t for t in sorted(req) if t in per_term]
+    if len(req_present) < len(req):
+        return _EMPTY_TOPK.copy()   # a required term is absent here
+    rare, *rest = sorted(req_present,
+                         key=lambda t: (int(per_term[t]["df"].sum()), t))
+    decoded = {rare: _decode_term_rows(per_term[rare])}
+    cand = decoded[rare][0]
+    m0 = _drop_excl(cand, excl)
+    if m0 is not None:
+        cand = cand[m0]     # deletes out before any block pruning work
+    for t in rest:
+        if cand.size == 0:
+            return _EMPTY_TOPK.copy()
+        decoded[t] = _decode_in(_Blocks(per_term[t]), cand)
+        cand = decoded[t][0]
+    if cand.size == 0:
+        return _EMPTY_TOPK.copy()
+
+    # should terms: positions are unique per term (one posting per
+    # doc), so plain fancy-index += is well-defined
+    sh_hits = np.zeros(cand.shape[0], dtype=np.int64)
+    sh_decoded: dict[str, tuple] = {}
+    for t in shoulds:
+        if t in decoded or t not in per_term:
+            continue
+        d, tf, dl = _decode_in(_Blocks(per_term[t]), cand)
+        p = np.searchsorted(cand, d)
+        sh_decoded[t] = (p, tf, dl)
+        sh_hits[p] += 1
+
+    scores = np.zeros(cand.shape[0], dtype=np.float64)
+    for t in sorted(set(decoded) | set(sh_decoded)):
+        if t in decoded:
+            d, tf, dl = decoded[t]
+            j = np.searchsorted(d, cand)   # cand ⊆ d by construction
+            scores += idf[t] * codec.bm25_partial(tf[j], dl[j],
+                                                  avgdl, k1, b)
+        else:
+            p, tf, dl = sh_decoded[t]
+            scores[p] += idf[t] * codec.bm25_partial(tf, dl,
+                                                     avgdl, k1, b)
+    if min_hits is not None and min_hits >= 1:
+        m = sh_hits >= min_hits
+        cand, scores = cand[m], scores[m]
+    if after is not None:
+        m = _after_mask(cand, scores, after)
+        cand, scores = cand[m], scores[m]
+    return _topk_frame(cand, scores, k)
+
+
+def _seed_sums(parts: list[tuple[np.ndarray, np.ndarray]],
+               excl: np.ndarray | None
+               ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Decoded (docids, contributions) pairs, listed in ascending-term
+    order, minus tombstones → (docids, partial sums, hit counts).
+    np.add.at sums in input order, so a doc decoded under every term
+    gets its exact full score."""
+    sd = np.concatenate([d for d, _ in parts])
+    sc = np.concatenate([c for _, c in parts])
+    m = _drop_excl(sd, excl)
+    if m is not None:
+        sd, sc = sd[m], sc[m]
+    uniq, inv = np.unique(sd, return_inverse=True)
+    part = np.zeros(uniq.shape[0])
+    np.add.at(part, inv, sc)
+    return uniq, part, np.bincount(inv, minlength=uniq.shape[0])
+
+
+def _theta_page1(bls, contrib, seed, terms, k, after, excl, min_hits):
+    """θ for a first page: the k-th largest partial sum over the seed
+    decode is a lower bound on the k-th best score (partials only
+    grow). Tombstones leave the pool first, so a deleted doc never
+    lifts θ above a survivor's score. Seed hit counts UNDERESTIMATE
+    true hits, so requiring >= min_hits only shrinks the pool."""
+    uniq, part, hits = _seed_sums([contrib(t, seed[t]) for t in terms],
+                                  excl)
+    if uniq.size == 0:
+        return 0.0
+    if min_hits is not None and min_hits > 1:
+        part = part[hits >= min_hits]
+    return float(np.sort(part)[-k]) if part.shape[0] >= k else 0.0
+
+
+def _theta_cursor(bls, contrib, seed, terms, k, after, excl, min_hits):
+    """θ for a page after a cursor (VERDICT r5 #6). The first-page
+    seed is unsound here: a seed doc's PARTIAL sum can sit under the
+    cursor score while its full score exceeds it. So θ comes only from
+    seed docs the decode PROVES complete — a doc lying outside every
+    undecoded block of every term, whose partial IS its full score.
+    Multi-term queries rarely finish complete in one round (a sparse
+    term's undecoded blocks span wide docid ranges), so a SECOND
+    bounded round decodes exactly the blocks that stab the ≤ 4k
+    highest-partial incomplete docs. θ = k-th best complete score
+    ranking strictly after the cursor; a complete doc's hit count is
+    exact, so the min_hits test is exact for the pool."""
+    got = {t: [contrib(t, seed[t])] for t in terms}
+    undec = {t: ~seed[t] for t in terms}
+
+    def sums():
+        uniq, part, hits = _seed_sums([p for t in terms for p in got[t]],
+                                      excl)
+        complete = np.ones(uniq.shape[0], dtype=bool)
+        for t in terms:
+            um = undec[t]
+            if um.any():
+                complete &= ~_stab(bls[t].first[um], bls[t].last[um],
+                                   uniq, uniq)[1]
+        return uniq, part, hits, complete
+
+    uniq, part, hits, complete = sums()
+    inc = ~complete
+    if inc.any():
+        docs2 = np.sort(uniq[inc][np.argsort(-part[inc])[:4 * k]])
+        for t in terms:
+            uidx = np.flatnonzero(undec[t])
+            if uidx.size == 0:
+                continue
+            i, ok = _stab(bls[t].first[uidx], bls[t].last[uidx],
+                          docs2, docs2)
+            if not ok.any():
+                continue
+            keep = np.zeros(undec[t].shape[0], dtype=bool)
+            keep[uidx[np.unique(i[ok])]] = True
+            got[t].append(contrib(t, keep))
+            undec[t] &= ~keep
+        uniq, part, hits, complete = sums()
+    if uniq.size == 0:
+        return 0.0
+    qual = complete & _after_mask(uniq, part, after)
+    if min_hits is not None and min_hits > 1:
+        qual &= hits >= min_hits
+    qs = part[qual]
+    return float(np.sort(qs)[-k]) if qs.shape[0] >= k else 0.0
+
+
+def _score_wand(per_term: dict[str, pd.DataFrame], terms: list[str],
+                idf: dict[str, float], avgdl: float, k1: float, b: float,
+                k: int, n_query_terms: int,
+                after: tuple[float, int] | None = None,
+                excl: np.ndarray | None = None,
+                min_hits: int | None = None) -> pd.DataFrame:
+    """OR-mode block-max WAND (exact top-k; see the module docstring):
+    seed → θ (_theta_page1, or _theta_cursor under a cursor) → sweep
+    the live region {UB ≥ θ} → score it exhaustively."""
+    bls = {t: _Blocks(per_term[t]) for t in terms}
+    # block upper bound computed AT QUERY TIME from (max_tf, min_dl):
+    # the BM25 partial is increasing in tf and decreasing in dl, so
+    # partial(max_tf, min_dl) dominates every posting in the block
+    # under the avgdl of THIS query (exact for any corpus composition,
+    # including base+delta streaming unions).
+    ub = {t: idf[t] * codec.bm25_partial(
+              bls[t].flat("block_max_tf"), bls[t].flat("block_min_dl"),
+              avgdl, k1, b)
+          for t in terms}
+
+    def contrib(t: str, keep: np.ndarray):
+        d, tf, dl = _decode_blocks(bls[t], keep)
+        return d, idf[t] * codec.bm25_partial(tf, dl, avgdl, k1, b)
+
+    # seed: each term's top-m blocks by ub
+    m_seed = max(1, -(-k // codec.BLOCK)) + 1
+    seed = {}
+    for t in terms:
+        seed[t] = np.zeros(ub[t].shape[0], dtype=bool)
+        seed[t][np.argsort(-ub[t])[:m_seed]] = True
+    theta = (_theta_page1 if after is None else _theta_cursor)(
+        bls, contrib, seed, terms, k, after, excl, min_hits)
+
+    # sweep: piecewise-constant sum of block ubs over docid space; the
+    # live region is the union of intervals [bounds[i], bounds[i+1])
+    # whose sum reaches θ
+    xs = np.concatenate([a for t in terms
+                         for a in (bls[t].first, bls[t].last + 1)])
+    ds = np.concatenate([a for t in terms for a in (ub[t], -ub[t])])
+    order = np.argsort(xs, kind="stable")
+    xs, ds = xs[order], ds[order]
+    bounds = np.unique(xs)
+    seg_ub = np.cumsum(np.add.reduceat(
+        ds, np.searchsorted(xs, bounds, side="left")))
+    live = seg_ub >= theta if theta > 0 else np.ones_like(seg_ub, dtype=bool)
+    nxt = np.append(bounds[1:], np.iinfo(np.int64).max)
+    region = (bounds[live], nxt[live] - 1)
+    all_d, all_c = [], []
+    for t in terms:
+        d, tf, dl = _decode_in(bls[t], region)
+        all_d.append(d)
+        all_c.append(idf[t] * codec.bm25_partial(tf, dl, avgdl, k1, b))
+    return _aggregate_topk(np.concatenate(all_d), np.concatenate(all_c),
+                           k, "or", n_query_terms, after=after, excl=excl,
+                           min_hits=min_hits)
+
+
+def score_shard(pdf: pd.DataFrame, idf: dict[str, float], avgdl: float,
+                k1: float, b: float, k: int, mode: str,
+                n_query_terms: int, method: str = "wand", *,
+                after: tuple[float, int] | None = None,
+                excl: np.ndarray | None = None,
+                min_hits: int | None = None,
+                req_terms: frozenset | None = None,
+                rng: tuple[int, int] | None = None,
+                cand: np.ndarray | None = None) -> pd.DataFrame:
+    """Score one group's dictionary rows (every query term) → top-k:
+    the one BM25 kernel of every bag-of-words surface.
+
+    ``rng`` ([lo, hi] — a contiguous tenant's docids) or ``cand``
+    (sorted unique docids — a tenant's or a filter's set) restricts
+    scoring to those docs: _score_candidates decodes only the blocks
+    that meet the restriction. Otherwise ``method='exact'`` decodes
+    everything (the reference path), and the pruned default runs AND
+    and bool must+should through the rarest-first conjunction
+    (_score_bool_pruned) and OR through block-max WAND (_score_wand),
+    cursor-aware under ``after``. Every branch is exact at any cursor
+    depth.
+
+    ``excl`` (sorted tombstoned docids) is excluded before truncation
+    in every branch; on the WAND path it also leaves the θ seed, so a
+    high-scoring deleted doc can never inflate θ above a live doc's
+    score. ``min_hits`` is the OR-mode match-count floor, counting
+    should terms only under ``req_terms`` (Lucene bool must+should:
+    the required subset of the terms)."""
+    if pdf.empty:
+        return _EMPTY_TOPK.copy()
+    terms = sorted(pdf["term"].unique())
+    per_term = {t: pdf[pdf["term"] == t] for t in terms}
+    kw = dict(after=after, excl=excl, min_hits=min_hits)
+    if rng is not None or cand is not None or method == "exact":
+        restrict = (int(rng[0]), int(rng[1])) if rng is not None else cand
+        return _score_candidates(per_term, terms, restrict, idf, avgdl,
+                                 k1, b, k, mode, n_query_terms,
+                                 req_terms=req_terms, **kw)
+    if mode == "and":
+        if len(terms) < n_query_terms:
+            return _EMPTY_TOPK.copy()   # a query term is absent here
+        req_terms, kw["min_hits"] = frozenset(terms), None
+    if req_terms:
+        return _score_bool_pruned(
+            per_term, req_terms, [t for t in terms if t not in req_terms],
+            idf, avgdl, k1, b, k, **kw)
+    return _score_wand(per_term, terms, idf, avgdl, k1, b, k,
+                       n_query_terms, **kw)
 
 
 def _fold_must(req_list: list[str], must: str | None,
@@ -649,6 +800,15 @@ def _apply_boosts(idf: dict[str, float], boosts, terms: list[str],
     return out
 
 
+def _check_k(k: int) -> None:
+    """Validate a top-k size on the driver, before any job: slicing
+    [:k] with k < 0 keeps all but the last rows of each group, and
+    k = 0 breaks _topk_frame's partition pre-selection (in an
+    executor, on a fan-out query)."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+
+
 def _check_slop(slop, seq: list[str]) -> int:
     """Validate the ES match_phrase ``slop``: non-negative, and with
     slop > 0 the phrase terms must be distinct (a single occurrence
@@ -694,16 +854,16 @@ def score_query_set(pdf: pd.DataFrame, cand, qterms: dict[str, list[str]],
                     after: dict | None = None,
                     reqs: dict | None = None) -> pd.DataFrame:
     """Score a whole query SET against one shard's dictionary rows in
-    one pass (the topk_many and search_join kernel).
-    ``cand`` (sorted unique docids) or ``rng`` ([lo, hi] interval — the
-    contiguous-tenant fast path) restricts scoring to a tenant's docs;
-    neither = unrestricted. ``excl`` (sorted tombstoned docids) is
-    excluded in-kernel before each query's top-k truncation. ``after``
-    maps qid → (score, docid) pagination cursor (r7): that query's
-    results rank strictly after it, same contract as topk(after=).
-    ``reqs`` maps qid → required-term frozenset (batch bool
-    must+should, r7): that query's docs must match all of them, same
-    contract as topk(must=)."""
+    one pass (the topk_many and search_join kernel), one score_shard
+    call per query. ``cand`` (sorted unique docids) or ``rng`` ([lo,
+    hi] interval — the contiguous-tenant fast path) restricts scoring
+    to a tenant's docs; neither = unrestricted. ``excl`` (sorted
+    tombstoned docids) is excluded in-kernel before each query's top-k
+    truncation. ``after`` maps qid → (score, docid) pagination cursor
+    (r7): that query's results rank strictly after it, same contract
+    as topk(after=). ``reqs`` maps qid → required-term frozenset
+    (batch bool must+should, r7): that query's docs must match all of
+    them, same contract as topk(must=)."""
     outs = []
     for qid, terms in qterms.items():
         if not terms:
@@ -711,96 +871,16 @@ def score_query_set(pdf: pd.DataFrame, cand, qterms: dict[str, list[str]],
         sub = pdf[pdf["term"].isin(terms)]
         if sub.empty:
             continue
-        mh = min_hits if modes[qid] == "or" else None
-        af = after.get(qid) if after else None
-        rq = reqs.get(qid) if reqs else None
-        if rng is not None:
-            out = score_range_pt(sub, rng[0], rng[1], idf, avgdl, k1, b,
-                                 k, modes[qid], len(terms), excl=excl,
-                                 min_hits=mh, after=af, req_terms=rq)
-        elif cand is None:
-            out = score_shard(sub, idf, avgdl, k1, b, k,
-                              modes[qid], len(terms), method, excl=excl,
-                              min_hits=mh, after=af, req_terms=rq)
-        else:
-            pt = {t: sub[sub["term"] == t]
-                  for t in sorted(sub["term"].unique())}
-            out = _score_candidates(pt, list(pt), cand, idf, avgdl,
-                                    k1, b, k, modes[qid], len(terms),
-                                    excl=excl, min_hits=mh, after=af,
-                                    req_terms=rq)
+        out = score_shard(
+            sub, idf, avgdl, k1, b, k, modes[qid], len(terms), method,
+            excl=excl, rng=rng, cand=cand,
+            min_hits=min_hits if modes[qid] == "or" else None,
+            after=after.get(qid) if after else None,
+            req_terms=reqs.get(qid) if reqs else None)
         outs.append(out.assign(qid=qid))
     if not outs:
         return _QSET_EMPTY
     return pd.concat(outs)[["qid", "docid", "score"]]
-
-
-def _score_candidates_range(per_term: dict[str, pd.DataFrame],
-                            terms: list[str], lo: int, hi: int,
-                            idf: dict[str, float], avgdl: float,
-                            k1: float, b: float, k: int, mode: str,
-                            n_query_terms: int,
-                            after: tuple[float, int] | None = None,
-                            excl: np.ndarray | None = None,
-                            min_hits: int | None = None,
-                            req_terms: frozenset | None = None
-                            ) -> pd.DataFrame:
-    """Score ONLY docids in [lo, hi] — the contiguous-tenant fast path:
-    routed builds rank docs by org within each shard, so a tenant's
-    candidate set is an interval and the task carries TWO ints instead
-    of the tenant's docid array. Block pruning on [block_first,
-    block_last] ∩ [lo, hi]; summation order matches _score_candidates
-    (ascending term, concatenated), so scores are bit-identical to the
-    set-based path over the same candidates. ``req_terms``: bool
-    must+should qualification (see _aggregate_topk)."""
-    all_d, all_c, all_r = [], [], []
-    for t in sorted(terms):
-        rows = _order_rows(per_term[t])
-        firsts = np.concatenate([np.asarray(r.block_first)
-                                 for r in rows.itertuples()])
-        lasts = np.concatenate([np.asarray(r.block_last)
-                                for r in rows.itertuples()])
-        keep = (lasts >= lo) & (firsts <= hi)
-        masks, pos = [], 0
-        for r in rows.itertuples():
-            sz = len(r.block_n)
-            masks.append(keep[pos:pos + sz]); pos += sz
-        d, tf, dl = _decode_selected(rows, masks)
-        if d.size:
-            sel = (d >= lo) & (d <= hi)
-            d, tf, dl = d[sel], tf[sel], dl[sel]
-        all_d.append(d)
-        all_c.append(idf[t] * codec.bm25_partial(tf, dl, avgdl, k1, b))
-        if req_terms is not None:
-            all_r.append(np.full(d.shape[0], t in req_terms, dtype=bool))
-    if not all_d:
-        return _aggregate_topk(np.empty(0, np.int64),
-                               np.empty(0, np.float64), k, mode,
-                               n_query_terms, after=after)
-    rq = np.concatenate(all_r) if req_terms is not None else None
-    return _aggregate_topk(np.concatenate(all_d), np.concatenate(all_c),
-                           k, mode, n_query_terms, after=after,
-                           excl=excl, min_hits=min_hits, req_mask=rq,
-                           n_req=len(req_terms) if req_terms else 0)
-
-
-def score_range_pt(pdf: pd.DataFrame, lo: int, hi: int,
-                   idf: dict[str, float], avgdl: float, k1: float,
-                   b: float, k: int, mode: str, n_query_terms: int,
-                   after: tuple[float, int] | None = None,
-                   excl: np.ndarray | None = None,
-                   min_hits: int | None = None,
-                   req_terms: frozenset | None = None) -> pd.DataFrame:
-    """Range-restricted scoring of one shard's dictionary rows — the
-    single entry point every contiguous-tenant fast path goes through
-    (topk, topk_many, topk_local)."""
-    pt = {t: pdf[pdf["term"] == t] for t in sorted(pdf["term"].unique())}
-    return _score_candidates_range(pt, list(pt), lo, hi, idf, avgdl,
-                                   k1, b, k, mode, n_query_terms,
-                                   after=after, excl=excl,
-                                   min_hits=min_hits,
-                                   req_terms=req_terms)
-
 
 def _bool_match(mode: str, n_query_terms: int,
                 excl: np.ndarray | None = None):
@@ -825,17 +905,14 @@ def _scored_match(idf: dict[str, float], avgdl: float, k1: float,
     their ``score``. Only the group's docids are candidates, so a
     tenant- or filter-restricted slice decodes just the blocks that
     overlap its docs; scores use GLOBAL BM25 stats and are
-    bit-identical to unrestricted scoring (_score_candidates), so each
+    bit-identical to unrestricted scoring (score_shard's cand=), so each
     bucket's hits equal the plain topk ranking restricted to that
     bucket. Tombstones leave before scoring."""
 
     def match(rows: pd.DataFrame, grp: pd.DataFrame) -> pd.DataFrame:
-        pt = {t: rows[rows["term"] == t]
-              for t in sorted(rows["term"].unique())}
         cand = np.unique(grp["docid"].to_numpy(np.int64))
-        scored = _score_candidates(pt, list(pt), cand, idf, avgdl, k1,
-                                   b, 1 << 62, mode, n_query_terms,
-                                   excl=excl)
+        scored = score_shard(rows, idf, avgdl, k1, b, 1 << 62, mode,
+                             n_query_terms, excl=excl, cand=cand)
         return grp.merge(scored, on="docid")
 
     return match
@@ -1043,359 +1120,6 @@ def top_hits_group(k_hits: int):
     return per_group
 
 
-def _score_or_wand_after(per_term: dict[str, pd.DataFrame],
-                         terms: list[str], idf: dict[str, float],
-                         avgdl: float, k1: float, b: float, k: int,
-                         n_query_terms: int, after: tuple[float, int],
-                         excl: np.ndarray | None = None,
-                         min_hits: int | None = None) -> pd.DataFrame:
-    """Cursor-aware block-max pruning for OR-mode deep pagination
-    (exact; VERDICT r5 #6). The plain WAND seed is unsound here: a
-    seed doc's PARTIAL sum can sit under the cursor score while its
-    full score exceeds it, so a θ taken from partials could prune
-    genuinely qualifying docs. Instead, θ comes only from seed docs
-    the decode PROVES complete — a doc is complete when, for every
-    query term, it lies outside all UNDECODED block ranges (block
-    [first, last] metadata, no extra decode), so its partial IS its
-    full score. Multi-term queries rarely finish complete in one
-    round (a sparse term's undecoded blocks span wide docid ranges),
-    so a SECOND bounded round decodes exactly the blocks that stab
-    the highest-partial incomplete docs (≤ 4k of them), completing
-    them. θ = k-th best complete score ranking strictly after the
-    cursor — a valid lower bound on the page's k-th score — then the
-    standard upper-bound sweep prunes blocks exactly as the
-    first-page path does. Deep pages decode the seed plus only the
-    blocks whose ub-sum clears θ, instead of every posting."""
-    s0, d0 = float(after[0]), int(after[1])
-    tinfo = {}
-    for t in terms:
-        rows = _order_rows(per_term[t])
-        firsts = np.concatenate([np.asarray(r.block_first)
-                                 for r in rows.itertuples()])
-        lasts = np.concatenate([np.asarray(r.block_last)
-                                for r in rows.itertuples()])
-        maxtf = np.concatenate([np.asarray(r.block_max_tf)
-                                for r in rows.itertuples()])
-        mindl = np.concatenate([np.asarray(r.block_min_dl)
-                                for r in rows.itertuples()])
-        ub = idf[t] * codec.bm25_partial(maxtf, mindl, avgdl, k1, b)
-        row_sizes = [len(r.block_n) for r in rows.itertuples()]
-        tinfo[t] = (rows, firsts, lasts, ub, row_sizes)
-
-    dec_d: dict[str, list] = {t: [] for t in terms}
-    dec_c: dict[str, list] = {t: [] for t in terms}
-    undec: dict[str, np.ndarray] = {}
-
-    def decode_marked(t: str, keep: np.ndarray) -> None:
-        rows, firsts, lasts, ub, row_sizes = tinfo[t]
-        masks, pos = [], 0
-        for sz in row_sizes:
-            masks.append(keep[pos:pos + sz]); pos += sz
-        d, tf, dl = _decode_selected(rows, masks)
-        dec_d[t].append(d)
-        dec_c[t].append(idf[t] * codec.bm25_partial(tf, dl, avgdl,
-                                                    k1, b))
-        undec[t] = undec[t] & ~keep if t in undec else ~keep
-
-    def aggregate():
-        ds = [a for t in terms for a in dec_d[t]]   # ascending-term
-        cs = [a for t in terms for a in dec_c[t]]
-        sd = np.concatenate(ds) if ds else np.empty(0, np.int64)
-        sc = np.concatenate(cs) if cs else np.empty(0, np.float64)
-        m = _drop_excl(sd, excl)
-        if m is not None:
-            sd, sc = sd[m], sc[m]
-        if sd.size == 0:
-            return (np.empty(0, np.int64), np.empty(0, np.float64),
-                    np.empty(0, np.int64))
-        uniq, inv = np.unique(sd, return_inverse=True)
-        part = np.zeros(uniq.shape[0])
-        np.add.at(part, inv, sc)    # ascending-term order: bit-exact
-        return uniq, part, np.bincount(inv, minlength=uniq.shape[0])
-
-    def completeness(uniq: np.ndarray) -> np.ndarray:
-        complete = np.ones(uniq.shape[0], dtype=bool)
-        for t in terms:
-            um = undec[t]
-            if not um.any():
-                continue
-            _, firsts, lasts, _, _ = tinfo[t]
-            uf, ul = firsts[um], lasts[um]
-            # block ranges of one term are disjoint and ascending
-            # (docids strictly increase across its ordered blocks), so
-            # a single searchsorted candidate decides the stab
-            j = np.searchsorted(ul, uniq)
-            hit = j < ul.shape[0]
-            hit[hit] = uf[j[hit]] <= uniq[hit]
-            complete &= ~hit
-        return complete
-
-    # round 1: decode each term's top-m blocks by ub
-    m_seed = max(1, -(-k // codec.BLOCK)) + 1
-    for t in terms:
-        ub = tinfo[t][3]
-        top = np.argsort(-ub)[:m_seed]
-        keep = np.zeros(ub.shape[0], dtype=bool)
-        keep[top] = True
-        decode_marked(t, keep)
-    uniq, part, nhits = aggregate()
-    complete = completeness(uniq)
-
-    # round 2 (bounded): complete the ≤4k highest-partial incomplete
-    # docs by decoding exactly the blocks that stab them
-    inc = ~complete
-    if inc.any():
-        docs2 = uniq[inc]
-        order = np.argsort(-part[inc])[:4 * k]
-        docs2 = np.sort(docs2[order])
-        for t in terms:
-            um = undec[t]
-            if not um.any():
-                continue
-            _, firsts, lasts, _, _ = tinfo[t]
-            uidx = np.flatnonzero(um)
-            uf, ul = firsts[uidx], lasts[uidx]
-            j = np.searchsorted(ul, docs2)
-            ok = j < ul.shape[0]
-            ok[ok] = uf[j[ok]] <= docs2[ok]
-            if not ok.any():
-                continue
-            keep = np.zeros(um.shape[0], dtype=bool)
-            keep[uidx[np.unique(j[ok])]] = True
-            decode_marked(t, keep)
-        uniq, part, nhits = aggregate()
-        complete = completeness(uniq)
-
-    theta = 0.0
-    if uniq.size:
-        qual = complete & ((part < s0) | ((part == s0) & (uniq > d0)))
-        if min_hits is not None and min_hits > 1:
-            # a COMPLETE doc's hit count is exact, so the msm test is
-            # exact for the theta pool
-            qual &= nhits >= min_hits
-        qs_ = part[qual]
-        if qs_.shape[0] >= k:
-            theta = float(np.sort(qs_)[-k])
-
-    # sweep: identical upper-bound machinery to the first-page path
-    pts, deltas = [], []
-    for t in terms:
-        _, firsts, lasts, ub, _ = tinfo[t]
-        pts.append(firsts); deltas.append(ub)
-        pts.append(lasts + 1); deltas.append(-ub)
-    xs = np.concatenate(pts)
-    ds_ = np.concatenate(deltas)
-    order = np.argsort(xs, kind="stable")
-    xs, ds_ = xs[order], ds_[order]
-    bounds = np.unique(xs)
-    seg_ub = np.add.reduceat(ds_, np.searchsorted(xs, bounds,
-                                                  side="left"))
-    seg_ub = np.cumsum(seg_ub)
-    live = (seg_ub >= theta if theta > 0
-            else np.ones_like(seg_ub, dtype=bool))
-    starts = bounds[live]
-    nxt = np.append(bounds[1:], np.iinfo(np.int64).max)
-    ends = nxt[live]
-
-    all_d, all_c = [], []
-    for t in terms:
-        rows, firsts, lasts, ub, row_sizes = tinfo[t]
-        ii = np.searchsorted(ends, firsts, side="right")
-        keep = ((ii < starts.shape[0])
-                & (starts[np.minimum(ii, starts.shape[0] - 1)]
-                   <= lasts))
-        masks, pos = [], 0
-        for sz in row_sizes:
-            masks.append(keep[pos:pos + sz]); pos += sz
-        d, tf, dl = _decode_selected(rows, masks)
-        if d.size:
-            jj = np.searchsorted(ends, d, side="right")
-            inlive = ((jj < starts.shape[0])
-                      & (starts[np.minimum(jj, starts.shape[0] - 1)]
-                         <= d))
-            d, tf, dl = d[inlive], tf[inlive], dl[inlive]
-        all_d.append(d)
-        all_c.append(idf[t] * codec.bm25_partial(tf, dl, avgdl, k1, b))
-    if not all_d:
-        return _aggregate_topk(np.empty(0, np.int64),
-                               np.empty(0, np.float64), k, "or",
-                               n_query_terms, after=after)
-    return _aggregate_topk(np.concatenate(all_d),
-                           np.concatenate(all_c), k, "or",
-                           n_query_terms, after=after, excl=excl,
-                           min_hits=min_hits)
-
-
-def score_shard(pdf: pd.DataFrame, idf: dict[str, float], avgdl: float,
-                k1: float, b: float, k: int, mode: str,
-                n_query_terms: int, method: str = "wand",
-                after: tuple[float, int] | None = None,
-                excl: np.ndarray | None = None,
-                min_hits: int | None = None,
-                req_terms: frozenset | None = None) -> pd.DataFrame:
-    """Score one shard's dictionary rows (all query terms) → top-k.
-    With ``after`` (deep-pagination cursor), OR-mode WAND switches to
-    the cursor-aware pruned path (_score_or_wand_after, r6): exact at
-    any depth, pruning via a θ seeded from docs the seed decode proves
-    COMPLETE (method='exact' keeps the exhaustive reference behavior).
-    ``excl`` (sorted tombstoned docids) is excluded before truncation
-    in every branch; on the WAND path it is also dropped from the
-    θ-seed so a high-scoring deleted doc can never inflate θ above a
-    live doc's score (θ stays a lower bound on the k-th SURVIVOR).
-
-    ``req_terms`` (Lucene bool must+should, r7): required subset of
-    the terms — candidates must match all of them; the pruned path is
-    conjunction-driven (_score_bool_pruned), which subsumes WAND here
-    because the musts bound the candidate set, and is exact at any
-    cursor depth."""
-    terms = sorted(pdf["term"].unique())
-    per_term = {t: pdf[pdf["term"] == t] for t in terms}
-    if req_terms:
-        shoulds = [t for t in terms if t not in req_terms]
-        if method == "exact":
-            all_d, all_c, all_r = [], [], []
-            for t in terms:
-                d, tf, dl = _decode_term_rows(per_term[t])
-                all_d.append(d)
-                all_c.append(idf[t] * codec.bm25_partial(tf, dl, avgdl,
-                                                         k1, b))
-                all_r.append(np.full(d.shape[0], t in req_terms,
-                                     dtype=bool))
-            if not all_d:
-                return _aggregate_topk(np.empty(0, np.int64),
-                                       np.empty(0, np.float64), k,
-                                       mode, n_query_terms, after=after)
-            return _aggregate_topk(
-                np.concatenate(all_d), np.concatenate(all_c), k, mode,
-                n_query_terms, after=after, excl=excl,
-                min_hits=min_hits, req_mask=np.concatenate(all_r),
-                n_req=len(req_terms))
-        return _score_bool_pruned(per_term, req_terms, shoulds, idf,
-                                  avgdl, k1, b, k, after=after,
-                                  excl=excl, min_hits=min_hits)
-    if after is not None and mode != "and":
-        if method == "wand":
-            return _score_or_wand_after(per_term, terms, idf, avgdl,
-                                        k1, b, k, n_query_terms,
-                                        after, excl, min_hits=min_hits)
-        method = "exact"
-
-    if method == "exact":
-        # exhaustive reference path: decode every posting of every term
-        all_d, all_c = [], []
-        for t in terms:
-            d, tf, dl = _decode_term_rows(per_term[t])
-            all_d.append(d)
-            all_c.append(idf[t] * codec.bm25_partial(tf, dl, avgdl, k1, b))
-        if not all_d:
-            return _aggregate_topk(np.empty(0, np.int64),
-                                   np.empty(0, np.float64), k, mode,
-                                   n_query_terms, after=after)
-        return _aggregate_topk(np.concatenate(all_d), np.concatenate(all_c),
-                               k, mode, n_query_terms, after=after,
-                               excl=excl, min_hits=min_hits)
-
-    if mode == "and":
-        return _score_and_pruned(per_term, terms, idf, avgdl, k1, b, k,
-                                 n_query_terms, after=after, excl=excl)
-
-    # ---- block-max pruning (exact top-k; see module docstring) ----
-    # Per term: flat arrays over all blocks of all chunk rows.
-    tinfo = {}
-    for t in terms:
-        rows = _order_rows(per_term[t])
-        firsts = np.concatenate([np.asarray(r.block_first) for r in rows.itertuples()])
-        lasts = np.concatenate([np.asarray(r.block_last) for r in rows.itertuples()])
-        # block upper bound computed AT QUERY TIME from (max_tf, min_dl):
-        # the BM25 partial is increasing in tf and decreasing in dl, so
-        # partial(max_tf, min_dl) dominates every posting in the block
-        # under the avgdl of THIS query (exact for any corpus composition,
-        # including base+delta streaming unions).
-        maxtf = np.concatenate([np.asarray(r.block_max_tf) for r in rows.itertuples()])
-        mindl = np.concatenate([np.asarray(r.block_min_dl) for r in rows.itertuples()])
-        ub = idf[t] * codec.bm25_partial(maxtf, mindl, avgdl, k1, b)
-        row_sizes = [len(r.block_n) for r in rows.itertuples()]
-        tinfo[t] = (rows, firsts, lasts, ub, row_sizes)
-
-    # seed: decode each term's top-m blocks by ub → lower bound θ on k-th best
-    m_seed = max(1, -(-k // codec.BLOCK)) + 1
-    seed_d, seed_c = [], []
-    for t in terms:
-        rows, firsts, lasts, ub, row_sizes = tinfo[t]
-        top = np.argsort(-ub)[:m_seed]
-        keep = np.zeros(ub.shape[0], dtype=bool)
-        keep[top] = True
-        masks, pos = [], 0
-        for sz in row_sizes:
-            masks.append(keep[pos:pos + sz]); pos += sz
-        d, tf, dl = _decode_selected(rows, masks)
-        seed_d.append(d)
-        seed_c.append(idf[t] * codec.bm25_partial(tf, dl, avgdl, k1, b))
-    sd = np.concatenate(seed_d) if seed_d else np.empty(0, np.int64)
-    sc = np.concatenate(seed_c) if seed_c else np.empty(0, np.float64)
-    ms = _drop_excl(sd, excl)
-    if ms is not None:
-        sd, sc = sd[ms], sc[ms]
-    if sd.size:
-        uniq, inv = np.unique(sd, return_inverse=True)
-        part = np.zeros(uniq.shape[0])
-        np.add.at(part, inv, sc)
-        if min_hits is not None and min_hits > 1:
-            # seed hit counts UNDERESTIMATE true hits, so requiring
-            # >= min_hits here only shrinks the theta pool — theta
-            # stays a valid lower bound on the k-th qualifying score
-            h = np.bincount(inv, minlength=uniq.shape[0])
-            part = part[h >= min_hits]
-        theta = float(np.sort(part)[-k]) if part.shape[0] >= k else 0.0
-    else:
-        theta = 0.0
-
-    # sweep: piecewise-constant sum of block ubs over docid space
-    pts, deltas = [], []
-    for t in terms:
-        _, firsts, lasts, ub, _ = tinfo[t]
-        pts.append(firsts); deltas.append(ub)
-        pts.append(lasts + 1); deltas.append(-ub)
-    xs = np.concatenate(pts)
-    ds = np.concatenate(deltas)
-    order = np.argsort(xs, kind="stable")
-    xs, ds = xs[order], ds[order]
-    bounds = np.unique(xs)
-    # cumulative ub at each boundary start
-    seg_ub = np.add.reduceat(ds, np.searchsorted(xs, bounds, side="left"))
-    seg_ub = np.cumsum(seg_ub)
-    live = seg_ub >= theta if theta > 0 else np.ones_like(seg_ub, dtype=bool)
-    # candidate intervals [bounds[i], bounds[i+1]) where live
-    starts = bounds[live]
-    nxt = np.append(bounds[1:], np.iinfo(np.int64).max)
-    ends = nxt[live]  # exclusive
-
-    all_d, all_c = [], []
-    for t in terms:
-        rows, firsts, lasts, ub, row_sizes = tinfo[t]
-        # block [f,l] intersects some candidate interval [s,e)?
-        # idx of first interval with end > f; intersects iff start <= l
-        ii = np.searchsorted(ends, firsts, side="right")
-        keep = (ii < starts.shape[0]) & (starts[np.minimum(ii, starts.shape[0] - 1)] <= lasts)
-        masks, pos = [], 0
-        for sz in row_sizes:
-            masks.append(keep[pos:pos + sz]); pos += sz
-        d, tf, dl = _decode_selected(rows, masks)
-        if d.size:
-            # restrict to candidate docids
-            jj = np.searchsorted(ends, d, side="right")
-            inlive = (jj < starts.shape[0]) & (starts[np.minimum(jj, starts.shape[0] - 1)] <= d)
-            d, tf, dl = d[inlive], tf[inlive], dl[inlive]
-        all_d.append(d)
-        all_c.append(idf[t] * codec.bm25_partial(tf, dl, avgdl, k1, b))
-    if not all_d:
-        return _aggregate_topk(np.empty(0, np.int64), np.empty(0, np.float64),
-                               k, mode, n_query_terms, after=after)
-    return _aggregate_topk(np.concatenate(all_d), np.concatenate(all_c),
-                           k, "or", n_query_terms, after=after, excl=excl,
-                           min_hits=min_hits)
-
-
 def _decode_term_rows_pos(rows: pd.DataFrame):
     """Decode all chunks of one term WITH positions → (docids, tfs, dls,
     positions, posting→position-slice bounds)."""
@@ -1409,6 +1133,25 @@ def _decode_term_rows_pos(rows: pd.DataFrame):
     ll = np.concatenate(l); pp = np.concatenate(p)
     pb = np.concatenate(([0], np.cumsum(tt)))
     return dd, tt, ll, pp, pb
+
+
+def _start_keys(data, offset: int, docs: np.ndarray, M: np.int64,
+                L: int) -> np.ndarray:
+    """Phrase-start keys d*M + (pos - offset + L) for one term's
+    occurrences (``data`` from _decode_term_rows_pos) restricted to
+    ``docs`` (sorted, ⊆ the term's posting docids): the occurrence of
+    phrase slot ``offset`` at position pos votes for the phrase start
+    pos - offset of doc d."""
+    dd, tt, _ll, pp, pb = data
+    j = np.searchsorted(dd, docs)
+    lens = tt[j]
+    total = int(lens.sum())
+    if total == 0:
+        return np.empty(0, dtype=np.int64)
+    cum = np.concatenate(([0], np.cumsum(lens)))
+    gather = (np.arange(total, dtype=np.int64)
+              - np.repeat(cum[:-1], lens) + np.repeat(pb[j], lens))
+    return np.repeat(docs, lens) * M + (pp[gather] - offset + L)
 
 
 def _phrase_shard(pdf: pd.DataFrame, seq: list[str], uniq: list[str],
@@ -1435,13 +1178,11 @@ def _phrase_shard(pdf: pd.DataFrame, seq: list[str], uniq: list[str],
     phrase terms with slop>0 are rejected at the API layer (a single
     occurrence could legally serve two slots of the same term in one
     window, which Lucene forbids)."""
-    out_empty = pd.DataFrame({"docid": pd.Series(dtype=np.int64),
-                              "score": pd.Series(dtype=np.float64)})
     per_term = {}
     for t in uniq:
         sub = pdf[pdf["term"] == t]
         if sub.empty:
-            return out_empty  # a phrase term missing from this shard
+            return _EMPTY_TOPK.copy()  # a phrase term missing here
         per_term[t] = _decode_term_rows_pos(sub)
     # AND candidates
     cand = None
@@ -1449,16 +1190,16 @@ def _phrase_shard(pdf: pd.DataFrame, seq: list[str], uniq: list[str],
         d = per_term[t][0]
         cand = d if cand is None else np.intersect1d(cand, d,
                                                      assume_unique=True)
-    if org_cand is not None and cand is not None:
-        cand = np.intersect1d(cand, org_cand, assume_unique=True)
-    if org_range is not None and cand is not None:
-        cand = cand[(cand >= org_range[0]) & (cand <= org_range[1])]
-    if cand is not None:
-        me = _drop_excl(cand, excl)
-        if me is not None:
-            cand = cand[me]
-    if cand is None or cand.size == 0:
-        return out_empty
+    if cand is None:
+        return _EMPTY_TOPK.copy()
+    for restrict in (org_cand, org_range):
+        if restrict is not None:
+            cand = cand[_inside(restrict, cand)]
+    me = _drop_excl(cand, excl)
+    if me is not None:
+        cand = cand[me]
+    if cand.size == 0:
+        return _EMPTY_TOPK.copy()
     # Vectorized adjacency over flat position arrays (no per-doc Python
     # loop): for phrase offset i, each occurrence of seq[i] at position p
     # in doc d votes for phrase-start key d*M + (p - i + L). A key
@@ -1472,19 +1213,8 @@ def _phrase_shard(pdf: pd.DataFrame, seq: list[str], uniq: list[str],
     M = np.int64(maxpos + 2 * L + 2 + s)
     keys = []
     for i, t in enumerate(seq):
-        dd, tt, ll, pp, pb = per_term[t]
-        j = np.searchsorted(dd, cand)          # cand ⊆ dd by construction
-        lens = tt[j]
-        starts = pb[j]
-        total = int(lens.sum())
-        if total == 0:
-            return out_empty
-        cum = np.concatenate(([0], np.cumsum(lens)))
-        gather = (np.arange(total, dtype=np.int64)
-                  - np.repeat(cum[:-1], lens) + np.repeat(starts, lens))
-        posi = pp[gather]
-        docs = np.repeat(cand, lens)
-        base = docs * M + (posi - i + L + s)
+        # slot i's anchor with the window's slack folded in: offset i - s
+        base = _start_keys(per_term[t], i - s, cand, M, L)
         if s == 0:
             keys.append(base)
         else:
@@ -1497,7 +1227,7 @@ def _phrase_shard(pdf: pd.DataFrame, seq: list[str], uniq: list[str],
     uk, counts = np.unique(allk, return_counts=True)
     hits = uk[counts == L]
     if hits.size == 0:
-        return out_empty
+        return _EMPTY_TOPK.copy()
     marr = np.unique(hits // M)
     scores = np.zeros(marr.shape[0], dtype=np.float64)
     for t in uniq:  # fixed ascending-term summation order
@@ -1524,14 +1254,12 @@ def _phrase_prefix_shard(pdf: pd.DataFrame, fixed_seq: list[str],
     completes >= 1 occurrence there) — the same 'BM25 over the
     phrase's distinct terms' contract phrase_topk documents. ``excl``
     (sorted tombstoned docids) leaves the candidate set first."""
-    out_empty = pd.DataFrame({"docid": pd.Series(dtype=np.int64),
-                              "score": pd.Series(dtype=np.float64)})
     L = len(fixed_seq) + 1
     per_term = {}
     for t in uniq_fixed:
         sub = pdf[pdf["term"] == t]
         if sub.empty:
-            return out_empty  # a required fixed term missing here
+            return _EMPTY_TOPK.copy()  # a required fixed term missing here
         per_term[t] = _decode_term_rows_pos(sub)
     pe = {}
     for e in exps:
@@ -1542,7 +1270,7 @@ def _phrase_prefix_shard(pdf: pd.DataFrame, fixed_seq: list[str],
         if not sub.empty:
             pe[e] = _decode_term_rows_pos(sub)
     if not pe:
-        return out_empty
+        return _EMPTY_TOPK.copy()
     if uniq_fixed:
         cand = None
         for t in uniq_fixed:
@@ -1555,34 +1283,18 @@ def _phrase_prefix_shard(pdf: pd.DataFrame, fixed_seq: list[str],
     if me is not None:
         cand = cand[me]
     if cand.size == 0:
-        return out_empty
+        return _EMPTY_TOPK.copy()
     maxpos = max(int(v[3].max()) if v[3].size else 0
                  for v in list(per_term.values()) + list(pe.values()))
     M = np.int64(maxpos + L + 2)
-
-    def start_keys(data, offset: int, docs: np.ndarray) -> np.ndarray:
-        """Phrase-start keys d*M + (pos - offset + L) for one term's
-        occurrences restricted to ``docs`` (sorted, ⊆ the term's
-        posting docids)."""
-        dd, tt, _ll, pp, pb = data
-        j = np.searchsorted(dd, docs)
-        lens = tt[j]
-        total = int(lens.sum())
-        if total == 0:
-            return np.empty(0, dtype=np.int64)
-        cum = np.concatenate(([0], np.cumsum(lens)))
-        gather = (np.arange(total, dtype=np.int64)
-                  - np.repeat(cum[:-1], lens) + np.repeat(pb[j], lens))
-        return np.repeat(docs, lens) * M + (pp[gather] - offset + L)
-
     if fixed_seq:
-        keys = [start_keys(per_term[t], i, cand)
+        keys = [_start_keys(per_term[t], i, cand, M, L)
                 for i, t in enumerate(fixed_seq)]
         allk = np.concatenate(keys)
         uk, counts = np.unique(allk, return_counts=True)
         starts = uk[counts == len(fixed_seq)]
         if starts.size == 0:
-            return out_empty
+            return _EMPTY_TOPK.copy()
     else:
         starts = None   # single-token prefix: any occurrence matches
     matched_e: dict[str, np.ndarray] = {}
@@ -1599,12 +1311,12 @@ def _phrase_prefix_shard(pdf: pd.DataFrame, fixed_seq: list[str],
         if starts is None:
             matched_e[e] = docs_e
             continue
-        ke = start_keys(pe[e], L - 1, docs_e)
+        ke = _start_keys(pe[e], L - 1, docs_e, M, L)
         hit = np.intersect1d(starts, ke)
         if hit.size:
             matched_e[e] = np.unique(hit // M)
     if not matched_e:
-        return out_empty
+        return _EMPTY_TOPK.copy()
     marr = np.unique(np.concatenate(list(matched_e.values())))
     scores = np.zeros(marr.shape[0], dtype=np.float64)
     for t in uniq_fixed:  # fixed ascending-term summation order
@@ -2470,6 +2182,7 @@ class SegmentedIndex:
         scales by the weight, so pruned paths stay exact. Keys are
         analyzed and must be query (or must) terms; weights finite
         positive. Composes with everything above."""
+        _check_k(k)
         prefix, avgdl, terms, mode, mh, reqs, neg = self._bool_terms(
             query, field, mode, min_should_match, raw_terms, must_not,
             must)
@@ -2485,19 +2198,8 @@ class SegmentedIndex:
 
         def kernel(pdf, rng, cand):
             pdf, ex = fold_neg_terms(pdf, negs, excl)
-            if pdf.empty:
-                return _EMPTY_TOPK.copy()
-            if rng is not None:
-                return score_range_pt(pdf, rng[0], rng[1], idf, avgdl, k1,
-                                      b, k, mode, nq, excl=ex, **kw)
-            if cand is not None:
-                pt = {t: pdf[pdf["term"] == t]
-                      for t in sorted(pdf["term"].unique())}
-                return _score_candidates(pt, list(pt), cand, idf, avgdl,
-                                         k1, b, k, mode, nq, excl=ex,
-                                         **kw)
             return score_shard(pdf, idf, avgdl, k1, b, k, mode, nq,
-                               method, excl=ex, **kw)
+                               method, excl=ex, rng=rng, cand=cand, **kw)
 
         plan = self._plan(sorted(set(terms) | negs), kernel, _TOPK_SCHEMA,
                           org, filter)
@@ -2565,16 +2267,20 @@ class SegmentedIndex:
         (interval map, or the docid set read driver-side from the
         shard-pruned doc store) — rank-identical to topk(org=...).
 
-        The org=None path serves from the per-segment BM25-partials LRU:
-        the FIRST query on a term pays a full decode (warming the cache
-        — deliberate for a serving handle; the always-on reference
-        keeps segments hot the same way), so ``method`` block pruning
-        applies only on the org paths. One-shot cold queries that must
-        not warm a cache belong on the distributed topk(). ``after`` is
+        Neither leg prunes by ``method``; it is kept for signature
+        parity with topk(). The org=None path serves from the
+        per-segment BM25-partials LRU and scores the cached partials
+        exhaustively: the FIRST query on a term pays a full decode
+        (warming the cache — deliberate for a serving handle; the
+        always-on reference keeps segments hot the same way). The
+        tenant legs decode only the blocks that meet the tenant's
+        interval or docid set. One-shot cold queries that must not
+        warm a cache belong on the distributed topk(). ``after`` is
         the deep-pagination cursor, ``min_should_match`` the OR-mode
         match-count floor, ``must_not`` the bool-negation exclusion,
         ``must`` the required terms, ``boosts`` per-term weights — same
         contracts as topk()."""
+        _check_k(k)
         prefix, avgdl, terms, mode, mh, reqs, neg = self._bool_terms(
             query, field, mode, min_should_match, raw_terms, must_not,
             must)
@@ -2606,18 +2312,9 @@ class SegmentedIndex:
         for pdf, rng, cand in self._tenant_groups(
                 sorted(set(terms) | negs), org):
             pdf, ex = fold_neg_terms(pdf, negs, excl)
-            if pdf.empty:
-                continue
-            if rng is not None:
-                parts.append(score_range_pt(pdf, rng[0], rng[1], idf,
-                                            avgdl, k1, b, k, mode, nq,
-                                            excl=ex, **kw))
-            else:
-                pt = {t: pdf[pdf["term"] == t]
-                      for t in sorted(pdf["term"].unique())}
-                parts.append(_score_candidates(pt, list(pt), cand, idf,
-                                               avgdl, k1, b, k, mode, nq,
-                                               excl=ex, **kw))
+            parts.append(score_shard(pdf, idf, avgdl, k1, b, k, mode, nq,
+                                     method, excl=ex, rng=rng, cand=cand,
+                                     **kw))
         return _merge_local(parts, k)
 
     def _tenant_groups(self, terms: list[str], org: str):
@@ -2673,6 +2370,7 @@ class SegmentedIndex:
         shared per-term idf so every query's use of a boosted term
         scales identically (topk(boosts=) contract; keys must appear in
         the batch's term union)."""
+        _check_k(k)
         prefix, avgdl = self._field(field)
         if after is not None:
             after = {qid: (float(s), int(d))
@@ -2761,6 +2459,7 @@ class SegmentedIndex:
         the matching terms (rewrite=scoring_boolean). With
         rewrite=constant_score every matching doc scores 1.0 and top-k
         is the first k docids (the ES 1.x prefix/wildcard default)."""
+        _check_k(k)
         terms = self.expand_terms(pattern, kind, field=field,
                                   max_expansions=max_expansions,
                                   fuzziness=fuzziness,
@@ -2792,6 +2491,7 @@ class SegmentedIndex:
         """Serving twin of pattern_topk: pyarrow dictionary range scan
         + the zero-job local scoring kernels. Rank-identical to
         pattern_topk (same expansion rule, same kernels)."""
+        _check_k(k)
         terms = self.expand_terms(pattern, kind, field=field,
                                   max_expansions=max_expansions,
                                   fuzziness=fuzziness,
@@ -2841,6 +2541,7 @@ class SegmentedIndex:
                         after: tuple[float, int] | None = None
                         ) -> pd.DataFrame:
         """:meth:`multi_match` as pandas."""
+        _check_k(k)
         from . import multimatch as mm
         mm.check_mm_args(qtype, tie_breaker, mode)
         boosts, field_terms, avgdls, idf, allt = self._mm_prep(query,
@@ -2890,6 +2591,7 @@ class SegmentedIndex:
         """Zero-job serving twin of multi_match (pyarrow dictionary
         reads + the same numpy kernel per segment), rank-identical to
         it."""
+        _check_k(k)
         from . import multimatch as mm
         mm.check_mm_args(qtype, tie_breaker, mode)
         boosts, field_terms, avgdls, idf, allt = self._mm_prep(query,
@@ -2993,6 +2695,7 @@ class SegmentedIndex:
         1) — batch deep-exports page per query without re-ranking
         from page 1. The cursor rides the query rows into the
         kernels, so the plan shape is unchanged. or/and modes only."""
+        _check_k(k)
         prefix, avgdl = self._field(field)
         if default_mode not in ("or", "and", "phrase"):
             raise ValueError(
@@ -3823,6 +3526,7 @@ class SegmentedIndex:
                         filter: str | Column | None = None,
                         slop: int = 0) -> pd.DataFrame:
         """:meth:`phrase_topk` as pandas."""
+        _check_k(k)
         prefix, avgdl = self._field(field)
         seq = [prefix + t for t in tokenize_text(query, self.tokenizer)]
         if not seq:
@@ -3882,6 +3586,7 @@ class SegmentedIndex:
         one call (docs live in exactly one shard, so the call equals
         the per-shard + merge result). Rank-identical to phrase_topk.
         ``slop`` = the ES match_phrase slop (phrase_topk contract)."""
+        _check_k(k)
         prefix, avgdl = self._field(field)
         seq = [prefix + t for t in tokenize_text(query, self.tokenizer)]
         if org is not None:
@@ -3925,6 +3630,7 @@ class SegmentedIndex:
                                max_expansions: int =
                                multiterm.MAX_EXPANSIONS) -> pd.DataFrame:
         """:meth:`phrase_prefix_topk` as pandas."""
+        _check_k(k)
         q = self._phrase_prefix_terms(query, field, max_expansions)
         if q is None:
             return _EMPTY_TOPK.copy()
@@ -3963,6 +3669,7 @@ class SegmentedIndex:
         """Zero-job serving twin of phrase_prefix_topk (driver-side
         dictionary reads + the same kernel per segment), rank-identical
         to it."""
+        _check_k(k)
         q = self._phrase_prefix_terms(query, field, max_expansions)
         if q is None:
             return _EMPTY_TOPK.copy()
@@ -4159,6 +3866,7 @@ class SegmentedIndex:
         ranking k+1 and dropping it (it occupies at most one slot).
         ``local=True`` runs the zero-Spark-job twin. Returns (docid,
         score) pandas."""
+        _check_k(k)
         terms = self.mlt_terms(docid, field=field, col=col,
                                max_query_terms=max_query_terms,
                                min_term_freq=min_term_freq,

@@ -192,6 +192,18 @@ def test_topk_many_matches_individual_topk(index, oracle):
             want["score"].to_numpy(), abs=0)
 
 
+@pytest.mark.parametrize("k", [0, -1])
+def test_k_below_one_rejected_on_driver(index, k):
+    """A top-k size below 1 raises before any scoring: a negative k
+    would slice [:k] and keep all but the last rows of each group."""
+    with pytest.raises(ValueError, match="k must be >= 1"):
+        index.topk_local("the", k=k)
+    with pytest.raises(ValueError, match="k must be >= 1"):
+        index.topk_pandas("the", k=k)
+    with pytest.raises(ValueError, match="k must be >= 1"):
+        index.topk_many({"a": ("the", "or")}, k=k)
+
+
 def test_local_fetch_and_search_no_spark_job(spark, index, oracle):
     """fetch_docs_local/search_local must match the distributed path and
     launch zero Spark jobs."""
