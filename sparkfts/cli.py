@@ -18,6 +18,15 @@ import json
 import sys
 
 
+def _print_rows(out) -> None:
+    """One JSON line per result row of a Spark or pandas DataFrame."""
+    rows = (out.collect() if hasattr(out, "collect")
+            else out.to_dict("records"))
+    for row in rows:
+        print(json.dumps(row.asDict() if hasattr(row, "asDict") else row,
+                         default=str))
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="sparkfts")
     p.add_argument("--master", default=None,
@@ -429,8 +438,7 @@ def main(argv: list[str] | None = None) -> int:
                        if args.local
                        else classic_topk(idx, args.q, args.k,
                                          args.mode))
-                for row in out.to_dict("records"):
-                    print(json.dumps(row, default=str))
+                _print_rows(out)
                 return 0
             if after is not None:
                 if args.phrase or args.highlight:
@@ -502,12 +510,7 @@ def main(argv: list[str] | None = None) -> int:
                 out = (idx.multi_match_local(args.q, **mmkw)
                        if args.local
                        else idx.multi_match(args.q, **mmkw))
-                rows = (out.collect() if hasattr(out, "collect")
-                        else out.to_dict("records"))
-                for row in rows:
-                    print(json.dumps(
-                        row.asDict() if hasattr(row, "asDict")
-                        else row, default=str))
+                _print_rows(out)
                 return 0
             if args.kind != "match":
                 if args.phrase or args.phrase_prefix \
@@ -535,12 +538,7 @@ def main(argv: list[str] | None = None) -> int:
                 else:
                     out = idx.pattern_topk(args.q, filter=args.filter,
                                            **mt)
-                rows = (out.collect() if hasattr(out, "collect")
-                        else out.to_dict("records"))
-                for row in rows:
-                    print(json.dumps(
-                        row.asDict() if hasattr(row, "asDict")
-                        else row, default=str))
+                _print_rows(out)
                 return 0
             if args.highlight:
                 if args.fetch:
@@ -566,12 +564,7 @@ def main(argv: list[str] | None = None) -> int:
                        else idx.phrase_prefix_topk(
                            args.q, args.k, field=args.field,
                            max_expansions=me))
-                rows = (out.collect() if hasattr(out, "collect")
-                        else out.to_dict("records"))
-                for row in rows:
-                    print(json.dumps(
-                        row.asDict() if hasattr(row, "asDict")
-                        else row, default=str))
+                _print_rows(out)
                 return 0
             elif args.phrase:
                 if args.mode != "or" or args.method != "wand":
@@ -607,11 +600,7 @@ def main(argv: list[str] | None = None) -> int:
             else:
                 out = idx.topk(args.q, args.k, args.mode, args.method,
                                **kw)
-            rows = (out.collect() if hasattr(out, "collect")
-                    else out.to_dict("records"))
-            for row in rows:
-                print(json.dumps(row.asDict() if hasattr(row, "asDict")
-                                 else row, default=str))
+            _print_rows(out)
         elif args.cmd == "suggest":
             from .query import FTSIndex
             idx = FTSIndex(spark, args.index)
@@ -621,8 +610,7 @@ def main(argv: list[str] | None = None) -> int:
                               min_doc_freq=args.min_doc_freq,
                               field=args.field,
                               suggest_mode=args.suggest_mode)
-            for row in out.to_dict("records"):
-                print(json.dumps(row, default=str))
+            _print_rows(out)
         elif args.cmd == "agg":
             from .query import FTSIndex
             idx = FTSIndex(spark, args.index)
@@ -711,8 +699,7 @@ def main(argv: list[str] | None = None) -> int:
                 out = idx.facet_top_hits(args.q, by=args.by,
                                          k_buckets=args.k,
                                          k_hits=args.k_hits, **kw)
-            for row in out.collect():
-                print(json.dumps(row.asDict(), default=str))
+            _print_rows(out)
         elif args.cmd == "delete":
             from .streaming import CombinedIndex
             ci = CombinedIndex(spark, args.base)
@@ -791,9 +778,8 @@ def main(argv: list[str] | None = None) -> int:
                     return 1
                 qv = [float(x)
                       for x in t.column(args.vec_col)[0].as_py()]
-                rows = idx.topk_local(
-                    qv, k=args.k, nprobe=args.nprobe,
-                    max_hamming=args.max_hamming).to_dict("records")
+                out = idx.topk_local(qv, k=args.k, nprobe=args.nprobe,
+                                     max_hamming=args.max_hamming)
             else:
                 from pyspark.sql import functions as F
                 qrow = (spark.read.parquet(args.input)
@@ -803,11 +789,9 @@ def main(argv: list[str] | None = None) -> int:
                     print(json.dumps({"error": "query id not found"}))
                     return 1
                 qv = [float(x) for x in qrow[0]]
-                rows = [r.asDict() for r in
-                        idx.topk(qv, k=args.k, nprobe=args.nprobe,
-                                 max_hamming=args.max_hamming).collect()]
-            for row in rows:
-                print(json.dumps(row, default=str))
+                out = idx.topk(qv, k=args.k, nprobe=args.nprobe,
+                               max_hamming=args.max_hamming)
+            _print_rows(out)
         elif args.cmd == "ingest-delta":
             from .build import BuildConfig
             from .streaming import make_batch_indexer

@@ -42,6 +42,22 @@ pruned default (method='wand') restricts as it goes:
                k-th best, so the result is identical to exhaustive
                scoring (ties included, since the region test is ≥).
 
+One query body per scored surface: a prep (SegmentedIndex._topk_q,
+_mm_q, _phrase_q, _phrase_prefix_q) validates the input, analyzes the
+query, computes idf and returns (terms to read, kernel(rows, rng,
+cand)), or None when nothing can match. Two runners execute it:
+
+  _run       : the one-stage fan-out (_plan) over (segment, shard)
+               tasks, then the driver's global top-k (_top);
+  _run_local : the same kernel over driver-side groups read through
+               the per-segment LRUs (_local_groups), no Spark job.
+
+The *_local twins differ from the distributed surfaces only in the
+runner, so they are rank-identical by construction. Cache-served legs
+stay beside it where an input selects them: topk_local without org=
+(BM25-partials LRU), match_docids_local without org= and
+classic_topk_local (decoded-postings LRU).
+
 Scores are float64 end-to-end with a fixed summation order (ascending
 term, then ascending docid) so results are rank-identical to the
 brute-force oracle; ties broken by docid ascending.
@@ -89,16 +105,6 @@ def _order_rows(rows: pd.DataFrame) -> pd.DataFrame:
     return rows.iloc[_row_order(rows)]
 
 
-# Block-decode telemetry (test/diagnostic only — plain dict increments,
-# no locking): lets tests prove a pruned path decoded FEWER blocks than
-# the exhaustive one, e.g. cursor-aware WAND on deep pages.
-DECODE_COUNTERS = {"blocks": 0}
-
-
-def reset_decode_counters() -> None:
-    DECODE_COUNTERS["blocks"] = 0
-
-
 class _Blocks:
     """One term's chunk rows in _row_order: per row its blob, block
     byte offsets and block sizes (``blob``/``off``/``n``), plus any
@@ -139,7 +145,6 @@ def _decode_blocks(bl: _Blocks, keep: np.ndarray | None,
             pos += ns.shape[0]
             offs, ns = offs[sel], ns[sel]
         if ns.size:
-            DECODE_COUNTERS["blocks"] += int(ns.size)
             parts.append(codec.decode_postings(blob, offs, ns))
     if not parts:
         e = np.empty(0, dtype=np.int64)
@@ -955,6 +960,22 @@ def _boolean_match_group(lpdf: pd.DataFrame, mode: str,
     if me is not None:
         res = res[me]
     return res
+
+
+def _match_kernel(mode: str, n_query_terms: int,
+                  excl: np.ndarray | None):
+    """match_docids' group kernel(rows, rng, cand) → (docid) frame:
+    the boolean match set restricted to a tenant interval or a
+    candidate set."""
+    def kernel(pdf, rng, cand):
+        d = _boolean_match_group(pdf, mode, n_query_terms, excl)
+        if rng is not None:
+            d = d[(d >= rng[0]) & (d <= rng[1])]
+        if cand is not None:
+            d = d[np.isin(d, cand, assume_unique=True)]
+        return pd.DataFrame({"docid": d})
+
+    return kernel
 
 
 def sort_match_group(k: int, descending: bool):
@@ -1996,6 +2017,56 @@ class SegmentedIndex:
                 pdf, None, codec.decode_docid_set(sets[_group_key(pdf)])),
             schema, sets)
 
+    def _run(self, q, k: int, org: str | None = None,
+             filter=None) -> pd.DataFrame:
+        """Distributed runner of a prepared query ``q`` — (terms to
+        read, kernel(rows, rng, cand), …) or None when nothing can
+        match: the _plan fan-out, then the driver's global top-k."""
+        if q is None:
+            return _EMPTY_TOPK.copy()
+        plan = self._plan(*q[:2], _TOPK_SCHEMA, org, filter)
+        return _top(plan.toPandas() if plan is not None else _EMPTY_TOPK,
+                    k)
+
+    def _run_local(self, q, k: int, org: str | None = None
+                   ) -> pd.DataFrame:
+        """Zero-job runner of the same ``q``: its kernel over the
+        driver-side groups (_local_groups), then _merge_local."""
+        if q is None:
+            return _EMPTY_TOPK.copy()
+        terms, kernel = q[:2]
+        return _merge_local([kernel(*g) for g in
+                             self._local_groups(terms, org)], k)
+
+    def _local_groups(self, terms: list[str], org: str | None):
+        """Driver-side (rows, rng, cand) groups of ``terms``'
+        dictionary rows, read through each segment's LRU — what
+        _plan's tasks see, without a Spark job. ``org=None``: one
+        unrestricted group per segment (a doc lives in one shard, so a
+        segment's rows form an exact group). With ``org``: one group
+        per (segment, tenant shard), restricted by the tenant's [lo,
+        hi] interval on contiguous-tenant layouts, else by its sorted
+        docids in the shard."""
+        shards = self._org_shards(org) if org is not None else None
+        for i, s in enumerate(self.subs):
+            pdf = s._local_term_rows(terms)
+            if org is None:
+                if len(pdf):
+                    yield pdf, None, None
+                continue
+            pdf = pdf[pdf["shard"].isin(shards[i])]
+            if pdf.empty:
+                continue
+            ranges = s._org_ranges(org)
+            groups = ({sh: (r, None) for sh, r in ranges.items()}
+                      if ranges is not None else
+                      {sh: (None, d) for sh, d in
+                       s._local_org_docids(org, shards[i]).items()})
+            for sh in sorted(groups):
+                sub = pdf[pdf["shard"] == sh]
+                if len(sub):
+                    yield (sub, *groups[sh])
+
     def _store_plan(self, terms: list[str], org: str | None, filter,
                     cols: list[Column], match, kernel,
                     schema: str) -> DataFrame:
@@ -2106,6 +2177,44 @@ class SegmentedIndex:
                 "use filter= / match_docids")
         return prefix, avgdl, terms, mode, mh, reqs, neg
 
+    def _topk_q(self, query: str, k: int, mode: str, method: str,
+                org: str | None, field: str | None, after,
+                min_should_match, raw_terms, must_not, must, boosts):
+        """The prepared bool query of topk / topk_local: (terms to
+        read, kernel(rows, rng, cand), cached(segment)), or None when
+        nothing can match. ``cached`` scores a whole segment from its
+        BM25-partials LRU under the pooled avgdl — the same
+        ascending-term summation as the kernel, so bit-identical."""
+        _check_k(k)
+        prefix, avgdl, terms, mode, mh, reqs, neg = self._bool_terms(
+            query, field, mode, min_should_match, raw_terms, must_not,
+            must)
+        if after is not None:
+            after = (float(after[0]), int(after[1]))
+        if org is not None:
+            self._org_shards(org)              # raises if unrouted
+        if not terms:
+            return None
+        idf = _apply_boosts(self._idf_map(terms, N=self._fieldN(field)),
+                            boosts, terms, self.tokenizer, prefix)
+        nq, k1, b = len(terms), self.k1, self.b
+        negs, excl = frozenset(neg), self._excl()
+        kw = dict(after=after, min_hits=mh, req_terms=reqs)
+
+        def kernel(pdf, rng, cand):
+            pdf, ex = fold_neg_terms(pdf, negs, excl)
+            return score_shard(pdf, idf, avgdl, k1, b, k, mode, nq,
+                               method, excl=ex, rng=rng, cand=cand, **kw)
+
+        def cached(s):
+            ex = (merge_excl_docids(
+                excl, [d for d, _, _ in s._decoded_terms(neg).values()])
+                if neg else excl)
+            return score_partials(s._decoded_partials(terms, avgdl), idf,
+                                  k, mode, nq, excl=ex, **kw)
+
+        return sorted(set(terms) | negs), kernel, cached
+
     def _topk_pd(self, query: str, k: int = 10, mode: str = "or",
                  method: str = "wand", org: str | None = None,
                  field: str | None = None,
@@ -2182,29 +2291,9 @@ class SegmentedIndex:
         scales by the weight, so pruned paths stay exact. Keys are
         analyzed and must be query (or must) terms; weights finite
         positive. Composes with everything above."""
-        _check_k(k)
-        prefix, avgdl, terms, mode, mh, reqs, neg = self._bool_terms(
-            query, field, mode, min_should_match, raw_terms, must_not,
-            must)
-        if after is not None:
-            after = (float(after[0]), int(after[1]))
-        if not terms:
-            return _EMPTY_TOPK.copy()
-        idf = _apply_boosts(self._idf_map(terms, N=self._fieldN(field)),
-                            boosts, terms, self.tokenizer, prefix)
-        nq, k1, b = len(terms), self.k1, self.b
-        negs, excl = frozenset(neg), self._excl()
-        kw = dict(after=after, min_hits=mh, req_terms=reqs)
-
-        def kernel(pdf, rng, cand):
-            pdf, ex = fold_neg_terms(pdf, negs, excl)
-            return score_shard(pdf, idf, avgdl, k1, b, k, mode, nq,
-                               method, excl=ex, rng=rng, cand=cand, **kw)
-
-        plan = self._plan(sorted(set(terms) | negs), kernel, _TOPK_SCHEMA,
-                          org, filter)
-        return _top(plan.toPandas() if plan is not None else _EMPTY_TOPK,
-                    k)
+        return self._run(self._topk_q(
+            query, k, mode, method, org, field, after, min_should_match,
+            raw_terms, must_not, must, boosts), k, org, filter)
 
     def topk(self, query: str, k: int = 10, mode: str = "or",
              method: str = "wand", org: str | None = None,
@@ -2253,91 +2342,20 @@ class SegmentedIndex:
                    must: str | None = None,
                    boosts: dict[str, float] | None = None
                    ) -> pd.DataFrame:
-        """Low-latency single-node query path: driver-side dictionary
-        reads (no Spark job at all) + the same numpy scoring kernels,
-        one call per segment (per (segment, shard) on tenant intervals)
-        and a driver merge — exact, docs live in one group. This is the
-        latency-parity answer to the reference's always-on ES cluster
-        (ms, not Spark-job seconds); the distributed topk() path exists
-        for indexes too large for one reader. Returns (docid, score)
-        pandas, rank-identical to topk().
-
-        With ``org`` (routed indexes only): dictionary rows are pruned to
-        the tenant's shards and scoring restricts to the org's docids
-        (interval map, or the docid set read driver-side from the
-        shard-pruned doc store) — rank-identical to topk(org=...).
-
-        Neither leg prunes by ``method``; it is kept for signature
-        parity with topk(). The org=None path serves from the
-        per-segment BM25-partials LRU and scores the cached partials
-        exhaustively: the FIRST query on a term pays a full decode
-        (warming the cache — deliberate for a serving handle; the
-        always-on reference keeps segments hot the same way). The
-        tenant legs decode only the blocks that meet the tenant's
-        interval or docid set. One-shot cold queries that must not
-        warm a cache belong on the distributed topk(). ``after`` is
-        the deep-pagination cursor, ``min_should_match`` the OR-mode
-        match-count floor, ``must_not`` the bool-negation exclusion,
-        ``must`` the required terms, ``boosts`` per-term weights — same
-        contracts as topk()."""
-        _check_k(k)
-        prefix, avgdl, terms, mode, mh, reqs, neg = self._bool_terms(
-            query, field, mode, min_should_match, raw_terms, must_not,
-            must)
-        if after is not None:
-            after = (float(after[0]), int(after[1]))
-        if org is not None:
-            self._org_shards(org)              # raises if unrouted
-        if not terms:
-            return _EMPTY_TOPK.copy()
-        idf = _apply_boosts(self._idf_map(terms, N=self._fieldN(field)),
-                            boosts, terms, self.tokenizer, prefix)
-        nq, k1, b = len(terms), self.k1, self.b
-        negs, excl = frozenset(neg), self._excl()
-        kw = dict(after=after, min_hits=mh, req_terms=reqs)
-        parts = []
-        if org is None:
-            # serving hot path: cached per-term BM25 partials under the
-            # pooled avgdl, the same ascending-term summation every
-            # exhaustive path uses — bit-identical to the cold path
-            for s in self.subs:
-                ex = (merge_excl_docids(
-                    excl, [d for d, _, _ in
-                           s._decoded_terms(neg).values()])
-                    if neg else excl)
-                parts.append(score_partials(
-                    s._decoded_partials(terms, avgdl), idf, k, mode, nq,
-                    excl=ex, **kw))
-            return _merge_local(parts, k)
-        for pdf, rng, cand in self._tenant_groups(
-                sorted(set(terms) | negs), org):
-            pdf, ex = fold_neg_terms(pdf, negs, excl)
-            parts.append(score_shard(pdf, idf, avgdl, k1, b, k, mode, nq,
-                                     method, excl=ex, rng=rng, cand=cand,
-                                     **kw))
-        return _merge_local(parts, k)
-
-    def _tenant_groups(self, terms: list[str], org: str):
-        """Driver-side groups of a tenant-scoped local query, one per
-        (segment, shard): (dictionary rows, [lo, hi] interval, None) on
-        contiguous-tenant layouts, else (rows, None, the tenant's
-        sorted docids in the shard). Rows come from the per-segment
-        LRU, pruned to the tenant's shards."""
-        shards = self._org_shards(org)
-        for i, s in enumerate(self.subs):
-            pdf = s._local_term_rows(terms)
-            pdf = pdf[pdf["shard"].isin(shards[i])]
-            if pdf.empty:
-                continue
-            ranges = s._org_ranges(org)
-            groups = ({sh: (r, None) for sh, r in ranges.items()}
-                      if ranges is not None else
-                      {sh: (None, d) for sh, d in
-                       s._local_org_docids(org, shards[i]).items()})
-            for sh in sorted(groups):
-                sub = pdf[pdf["shard"] == sh]
-                if len(sub):
-                    yield (sub, *groups[sh])
+        """Zero-job top-k: driver-side dictionary reads and the same
+        kernels as topk(), merged on the driver — the latency-parity
+        answer to the reference's always-on ES cluster. Every keyword
+        has topk()'s contract (``method`` is accepted for signature
+        parity; neither leg reads it). ``org=None`` serves from each
+        segment's BM25-partials LRU: a term's first query pays a full
+        decode that warms the cache, so one-shot cold queries belong
+        on topk(). Rank-identical to topk()."""
+        q = self._topk_q(query, k, mode, method, org, field, after,
+                         min_should_match, raw_terms, must_not, must,
+                         boosts)
+        if q is None or org is not None:
+            return self._run_local(q, k, org)
+        return _merge_local([q[2](s) for s in self.subs], k)
 
     def topk_many(self, queries: dict[str, tuple[str, str]], k: int = 10,
                   method: str = "wand", field: str | None = None,
@@ -2488,9 +2506,8 @@ class SegmentedIndex:
                            multiterm.MAX_EXPANSIONS,
                            fuzziness: int = 2,
                            prefix_length: int = 0) -> pd.DataFrame:
-        """Serving twin of pattern_topk: pyarrow dictionary range scan
-        + the zero-job local scoring kernels. Rank-identical to
-        pattern_topk (same expansion rule, same kernels)."""
+        """Zero-job pattern_topk (driver-side dictionary range scan);
+        rank-identical to pattern_topk."""
         _check_k(k)
         terms = self.expand_terms(pattern, kind, field=field,
                                   max_expansions=max_expansions,
@@ -2507,12 +2524,15 @@ class SegmentedIndex:
                                raw_terms=terms)
 
     # -- multi_match ---------------------------------------------------
-    def _mm_prep(self, query: str, fields):
-        """(boosts, per-field terms, per-field avgdl, idf, all terms)
-        for a multi_match query — shared by the distributed and local
-        paths. idf uses each FIELD's N and df (the field-prefixed
-        dictionary keeps them isolated); boosts fold in at the
-        per-field score level, never into the stats."""
+    def _mm_q(self, query: str, fields, k: int, qtype: str,
+              tie_breaker: float, mode: str, after):
+        """The prepared multi_match query: (terms to read, kernel), or
+        None when nothing can match. idf uses each FIELD's N and df
+        (the field-prefixed dictionary keeps them isolated); boosts
+        fold in at the per-field score level, never into the stats."""
+        _check_k(k)
+        from . import multimatch as mm
+        mm.check_mm_args(qtype, tie_breaker, mode)
         if all(s.fields is None for s in self.subs):
             raise ValueError("multi_match needs a multi-field index "
                              "(BuildConfig.fields)")
@@ -2532,24 +2552,11 @@ class SegmentedIndex:
             prefix, avgdls[f] = self._field(f)
             field_terms[f] = self._terms(query, prefix)
             idf.update(self._idf_map(field_terms[f], N=self._fieldN(f)))
-        return boosts, field_terms, avgdls, idf, sorted(
-            {t for ts in field_terms.values() for t in ts})
-
-    def _multi_match_pd(self, query: str, fields=None, k: int = 10,
-                        qtype: str = "best_fields",
-                        tie_breaker: float = 0.0, mode: str = "or",
-                        after: tuple[float, int] | None = None
-                        ) -> pd.DataFrame:
-        """:meth:`multi_match` as pandas."""
-        _check_k(k)
-        from . import multimatch as mm
-        mm.check_mm_args(qtype, tie_breaker, mode)
-        boosts, field_terms, avgdls, idf, allt = self._mm_prep(query,
-                                                               fields)
         if after is not None:
             after = (float(after[0]), int(after[1]))
+        allt = sorted({t for ts in field_terms.values() for t in ts})
         if not allt:
-            return _EMPTY_TOPK.copy()
+            return None
         k1, b, excl = self.k1, self.b, self._excl()
 
         def kernel(pdf, rng, cand):
@@ -2558,7 +2565,16 @@ class SegmentedIndex:
                                         tie_breaker, mode, after=after,
                                         excl=excl)
 
-        return _top(self._plan(allt, kernel, _TOPK_SCHEMA).toPandas(), k)
+        return allt, kernel
+
+    def _multi_match_pd(self, query: str, fields=None, k: int = 10,
+                        qtype: str = "best_fields",
+                        tie_breaker: float = 0.0, mode: str = "or",
+                        after: tuple[float, int] | None = None
+                        ) -> pd.DataFrame:
+        """:meth:`multi_match` as pandas."""
+        return self._run(self._mm_q(query, fields, k, qtype, tie_breaker,
+                                    mode, after), k)
 
     def multi_match(self, query: str, fields=None, k: int = 10,
                     qtype: str = "best_fields",
@@ -2588,28 +2604,9 @@ class SegmentedIndex:
                           tie_breaker: float = 0.0, mode: str = "or",
                           after: tuple[float, int] | None = None
                           ) -> pd.DataFrame:
-        """Zero-job serving twin of multi_match (pyarrow dictionary
-        reads + the same numpy kernel per segment), rank-identical to
-        it."""
-        _check_k(k)
-        from . import multimatch as mm
-        mm.check_mm_args(qtype, tie_breaker, mode)
-        boosts, field_terms, avgdls, idf, allt = self._mm_prep(query,
-                                                               fields)
-        if after is not None:
-            after = (float(after[0]), int(after[1]))
-        if not allt:
-            return _EMPTY_TOPK.copy()
-        excl = self._excl()
-        parts = []
-        for s in self.subs:
-            pdf = s._local_term_rows(allt)
-            if len(pdf):
-                parts.append(mm.score_multi_group(
-                    pdf, field_terms, boosts, idf, avgdls, self.k1,
-                    self.b, k, qtype, tie_breaker, mode, after=after,
-                    excl=excl))
-        return _merge_local(parts, k)
+        """Zero-job multi_match; rank-identical to multi_match."""
+        return self._run_local(self._mm_q(query, fields, k, qtype,
+                                          tie_breaker, mode, after), k)
 
     # -- batch search as a join ----------------------------------------
     def search_join(self, queries: DataFrame, k: int = 10,
@@ -2830,16 +2827,16 @@ class SegmentedIndex:
         from .highlight import highlight_hits
         if field is not None and col == "text":
             col = field
+        if local and filter is not None:
+            raise ValueError(
+                "highlight(local=True) does not take filter= "
+                "(predicate evaluation is a docstore scan)")
         if mode == "phrase":
             hits = (self.phrase_topk_local(query, k, org=org, field=field)
-                    if local and filter is None
+                    if local
                     else self._phrase_topk_pd(query, k, org=org,
                                               field=field, filter=filter))
         elif local:
-            if filter is not None:
-                raise ValueError(
-                    "highlight(local=True) does not take filter= "
-                    "(predicate evaluation is a docstore scan)")
             hits = self.topk_local(query, k, mode, method, org=org,
                                    field=field)
         else:
@@ -2872,19 +2869,13 @@ class SegmentedIndex:
         prefix, _ = self._field(field)
         terms = (sorted(set(raw_terms)) if raw_terms is not None
                  else self._terms(query, prefix))
+        if org is not None:
+            self._org_shards(org)              # raises if unrouted
         if not terms:
             return self.spark.createDataFrame([], "docid long")
-        nq, excl = len(terms), self._excl()
-
-        def kernel(pdf, rng, cand):
-            d = _boolean_match_group(pdf, mode, nq, excl)
-            if rng is not None:
-                d = d[(d >= rng[0]) & (d <= rng[1])]
-            if cand is not None:
-                d = d[np.isin(d, cand, assume_unique=True)]
-            return pd.DataFrame({"docid": d})
-
-        plan = self._plan(terms, kernel, "docid long", org, filter)
+        plan = self._plan(terms, _match_kernel(mode, len(terms),
+                                               self._excl()),
+                          "docid long", org, filter)
         if plan is None:
             return self.spark.createDataFrame([], "docid long")
         return plan.sort("docid")
@@ -2898,12 +2889,8 @@ class SegmentedIndex:
                            org: str | None = None,
                            raw_terms: list[str] | None = None
                            ) -> pd.DataFrame:
-        """Boolean match with ZERO Spark jobs (the serving twin of
-        match_docids): docids containing all (and) / any (or) query
-        terms, ascending pandas. org=None serves from the decoded-
-        postings LRU; org paths restrict to the tenant's interval map
-        (or docid set) exactly like topk_local. ``raw_terms`` replaces
-        the analyzer pass."""
+        """Zero-job match_docids as ascending pandas docids (org=None
+        reads the decoded-postings LRU); identical to match_docids."""
         prefix, _ = self._field(field)
         return self._match_local(
             sorted(set(raw_terms)) if raw_terms is not None
@@ -2911,36 +2898,33 @@ class SegmentedIndex:
 
     def _match_local(self, terms: list[str], mode: str,
                      org: str | None) -> pd.DataFrame:
-        """Core of match_docids_local over already-prefixed terms: per
-        segment, combine the terms' docid sets; segments own disjoint
-        docids, so the union of their matches is exact."""
-        shards = self._org_shards(org) if org is not None else None
+        """Core of match_docids_local over already-prefixed terms:
+        org=None combines each segment's decoded-postings LRU arrays;
+        a tenant runs match_docids' kernel over _local_groups. Segments
+        own disjoint docids, so the union of their matches is exact."""
+        if org is not None:
+            self._org_shards(org)              # raises if unrouted
         if not terms:
             return pd.DataFrame({"docid": pd.Series(dtype="int64")})
         excl = self._excl()
-        parts = []
-        for i, s in enumerate(self.subs):
-            if org is None:
+        if org is not None:
+            kernel = _match_kernel(mode, len(terms), excl)
+            parts = [kernel(*g)["docid"].to_numpy()
+                     for g in self._local_groups(terms, org)]
+        else:
+            parts = []
+            for s in self.subs:
                 docs = [d for d, _, _ in s._decoded_terms(terms).values()]
-            else:
-                pdf = s._local_term_rows(terms)
-                pdf = pdf[pdf["shard"].isin(shards[i])]
-                keep = s._org_keep(org, shards[i])
-                docs = []
-                for t in terms:
-                    sub = pdf[pdf["term"] == t]
-                    d = (_decode_term_rows(sub)[0] if len(sub)
-                         else np.empty(0, dtype=np.int64))
-                    docs.append(d[keep(d)])
-            if mode == "and":
-                res = docs[0]
-                for d in docs[1:]:
-                    res = np.intersect1d(res, d, assume_unique=True)
-            else:
-                res = np.unique(np.concatenate(docs))
-            m = _drop_excl(res, excl)
-            parts.append(res if m is None else res[m])
-        return pd.DataFrame({"docid": np.sort(np.concatenate(parts))})
+                if mode == "and":
+                    res = docs[0]
+                    for d in docs[1:]:
+                        res = np.intersect1d(res, d, assume_unique=True)
+                else:
+                    res = np.unique(np.concatenate(docs))
+                m = _drop_excl(res, excl)
+                parts.append(res if m is None else res[m])
+        return pd.DataFrame({"docid": np.sort(np.concatenate(
+            [np.empty(0, dtype=np.int64)] + parts))})
 
     def count(self, query: str, mode: str = "and",
               field: str | None = None, org: str | None = None,
@@ -3520,17 +3504,17 @@ class SegmentedIndex:
 
 
     # -- phrase queries ----------------------------------------------
-    def _phrase_topk_pd(self, query: str, k: int = 10,
-                        field: str | None = None,
-                        org: str | None = None,
-                        filter: str | Column | None = None,
-                        slop: int = 0) -> pd.DataFrame:
-        """:meth:`phrase_topk` as pandas."""
+    def _phrase_q(self, query: str, k: int, field: str | None,
+                  org: str | None, slop: int):
+        """The prepared phrase query: (its distinct terms, kernel), or
+        None when the query analyzes to nothing."""
         _check_k(k)
         prefix, avgdl = self._field(field)
         seq = [prefix + t for t in tokenize_text(query, self.tokenizer)]
+        if org is not None:
+            self._org_shards(org)              # raises if unrouted
         if not seq:
-            return _EMPTY_TOPK.copy()
+            return None
         slop = _check_slop(slop, seq)
         uniq = sorted(set(seq))
         idf = self._idf_map(uniq, N=self._fieldN(field))
@@ -3541,9 +3525,16 @@ class SegmentedIndex:
                                  org_cand=cand, org_range=rng, excl=excl,
                                  slop=slop)
 
-        plan = self._plan(uniq, kernel, _TOPK_SCHEMA, org, filter)
-        return _top(plan.toPandas() if plan is not None else _EMPTY_TOPK,
-                    k)
+        return uniq, kernel
+
+    def _phrase_topk_pd(self, query: str, k: int = 10,
+                        field: str | None = None,
+                        org: str | None = None,
+                        filter: str | Column | None = None,
+                        slop: int = 0) -> pd.DataFrame:
+        """:meth:`phrase_topk` as pandas."""
+        return self._run(self._phrase_q(query, k, field, org, slop), k,
+                         org, filter)
 
     def phrase_topk(self, query: str, k: int = 10,
                     field: str | None = None,
@@ -3580,37 +3571,17 @@ class SegmentedIndex:
                           field: str | None = None,
                           org: str | None = None,
                           slop: int = 0) -> pd.DataFrame:
-        """Exact phrase query with ZERO Spark jobs (the serving twin of
-        phrase_topk): driver-side dictionary read + the same vectorized
-        flat-array adjacency kernel over all of a segment's shards in
-        one call (docs live in exactly one shard, so the call equals
-        the per-shard + merge result). Rank-identical to phrase_topk.
-        ``slop`` = the ES match_phrase slop (phrase_topk contract)."""
-        _check_k(k)
-        prefix, avgdl = self._field(field)
-        seq = [prefix + t for t in tokenize_text(query, self.tokenizer)]
-        if org is not None:
-            self._org_shards(org)              # raises if unrouted
-        if not seq:
-            return _EMPTY_TOPK.copy()
-        slop = _check_slop(slop, seq)
-        uniq = sorted(set(seq))
-        idf = self._idf_map(uniq, N=self._fieldN(field))
-        kw = dict(excl=self._excl(), slop=slop)
-        groups = (((s._local_term_rows(uniq), None, None)
-                   for s in self.subs) if org is None
-                  else self._tenant_groups(uniq, org))
-        parts = [_phrase_shard(pdf, seq, uniq, idf, avgdl, self.k1,
-                               self.b, k, org_range=rng, org_cand=cand,
-                               **kw)
-                 for pdf, rng, cand in groups if len(pdf)]
-        return _merge_local(parts, k)
+        """Zero-job phrase_topk (``slop`` included); rank-identical
+        to phrase_topk."""
+        return self._run_local(self._phrase_q(query, k, field, org, slop),
+                               k, org)
 
-    def _phrase_prefix_terms(self, query: str, field: str | None,
-                             max_expansions: int):
-        """(avgdl, fixed token sequence, its distinct terms, prefix
-        expansions, idf) of a match_phrase_prefix query, or None when
-        nothing can match."""
+    def _phrase_prefix_q(self, query: str, k: int, field: str | None,
+                         max_expansions: int):
+        """The prepared match_phrase_prefix query: (fixed terms plus
+        the prefix's expansions, kernel), or None when nothing can
+        match."""
+        _check_k(k)
         prefix, avgdl = self._field(field)
         toks = tokenize_text(query, self.tokenizer)
         if not toks:
@@ -3623,26 +3594,21 @@ class SegmentedIndex:
         uniq_fixed = sorted(set(fixed_seq))
         idf = self._idf_map(sorted(set(uniq_fixed) | set(exps)),
                             N=self._fieldN(field))
-        return avgdl, fixed_seq, uniq_fixed, exps, idf
-
-    def _phrase_prefix_topk_pd(self, query: str, k: int = 10,
-                               field: str | None = None,
-                               max_expansions: int =
-                               multiterm.MAX_EXPANSIONS) -> pd.DataFrame:
-        """:meth:`phrase_prefix_topk` as pandas."""
-        _check_k(k)
-        q = self._phrase_prefix_terms(query, field, max_expansions)
-        if q is None:
-            return _EMPTY_TOPK.copy()
-        avgdl, fixed_seq, uniq_fixed, exps, idf = q
         k1, b, excl = self.k1, self.b, self._excl()
 
         def kernel(pdf, rng, cand):
             return _phrase_prefix_shard(pdf, fixed_seq, uniq_fixed, exps,
                                         idf, avgdl, k1, b, k, excl=excl)
 
-        return _top(self._plan(sorted(idf), kernel, _TOPK_SCHEMA)
-                    .toPandas(), k)
+        return sorted(idf), kernel
+
+    def _phrase_prefix_topk_pd(self, query: str, k: int = 10,
+                               field: str | None = None,
+                               max_expansions: int =
+                               multiterm.MAX_EXPANSIONS) -> pd.DataFrame:
+        """:meth:`phrase_prefix_topk` as pandas."""
+        return self._run(self._phrase_prefix_q(query, k, field,
+                                               max_expansions), k)
 
     def phrase_prefix_topk(self, query: str, k: int = 10,
                            field: str | None = None,
@@ -3666,23 +3632,9 @@ class SegmentedIndex:
                                  max_expansions: int =
                                  multiterm.MAX_EXPANSIONS
                                  ) -> pd.DataFrame:
-        """Zero-job serving twin of phrase_prefix_topk (driver-side
-        dictionary reads + the same kernel per segment), rank-identical
-        to it."""
-        _check_k(k)
-        q = self._phrase_prefix_terms(query, field, max_expansions)
-        if q is None:
-            return _EMPTY_TOPK.copy()
-        avgdl, fixed_seq, uniq_fixed, exps, idf = q
-        excl = self._excl()
-        parts = []
-        for s in self.subs:
-            pdf = s._local_term_rows(sorted(idf))
-            if len(pdf):
-                parts.append(_phrase_prefix_shard(
-                    pdf, fixed_seq, uniq_fixed, exps, idf, avgdl,
-                    self.k1, self.b, k, excl=excl))
-        return _merge_local(parts, k)
+        """Zero-job phrase_prefix_topk; rank-identical to it."""
+        return self._run_local(self._phrase_prefix_q(query, k, field,
+                                                     max_expansions), k)
 
     # -- doc fetch and full search -------------------------------------
     def fetch_docs_local(self, docids: Iterable[int]) -> pd.DataFrame:
@@ -4019,23 +3971,6 @@ class FTSIndex(SegmentedIndex):
 
         return self._cached(self._org_cache, self._org_cache_sz, [org],
                             load, math.inf)[org]
-
-    def _org_keep(self, org: str, shards: list[int]):
-        """docids → bool mask of the tenant's docs in this segment (its
-        interval map, or the docstore docid sets on legacy layouts)."""
-        ranges = self._org_ranges(org)
-        if ranges is None:
-            sets = list(self._local_org_docids(org, shards).values())
-            cand = np.concatenate(sets) if sets else np.empty(0, np.int64)
-            return lambda d: np.isin(d, cand, assume_unique=True)
-
-        def keep(d: np.ndarray) -> np.ndarray:
-            m = np.zeros(d.shape[0], dtype=bool)
-            for lo, hi in ranges.values():
-                m |= (d >= lo) & (d <= hi)
-            return m
-
-        return keep
 
     def _filter_docs(self, filter: str | Column,
                      org: str | None = None) -> DataFrame:

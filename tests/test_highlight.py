@@ -125,6 +125,20 @@ def test_highlight_with_filter(idx):
     assert hl["docid"].tolist() == want["docid"].tolist()
 
 
+@pytest.mark.parametrize("mode", ["or", "phrase"])
+def test_highlight_local_rejects_filter(idx, spark, mode):
+    """local=True never runs a Spark job, so filter= (a docstore scan)
+    is refused on every mode — the phrase leg included."""
+    sc = spark.sparkContext
+    sc.setJobGroup("hl-local-filter", "hl-local-filter")
+    with pytest.raises(ValueError, match="local"):
+        idx.highlight("alpha query", k=3, mode=mode, local=True,
+                      filter="role = 'user'")
+    jobs = sc.statusTracker().getJobIdsForGroup("hl-local-filter")
+    sc.setJobGroup(None, None)
+    assert len(jobs) == 0
+
+
 def test_highlight_empty_query(idx):
     out = idx.highlight("...", k=5)
     assert out.empty

@@ -145,7 +145,24 @@ def test_combined_pages_with_deletes(spark, tmp_path_factory):
     assert gotl["docid"].tolist() == want["docid"].tolist()
 
 
-def test_or_wand_after_prunes_blocks():
+def _decoded_blocks(monkeypatch, fn):
+    """(fn(), blocks decoded while it ran): counts through a wrapper
+    around codec.decode_postings, whose block_n argument holds one
+    entry per block."""
+    from sparkfts import codec
+    real, n = codec.decode_postings, [0]
+
+    def counting(blob, block_off, block_n, *a, **kw):
+        n[0] += len(block_n)
+        return real(blob, block_off, block_n, *a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(codec, "decode_postings", counting)
+        out = fn()
+    return out, n[0]
+
+
+def test_or_wand_after_prunes_blocks(monkeypatch):
     """VERDICT r5 #6: OR-mode cursor pages prune via cursor-aware WAND
     (theta from seed docs PROVEN complete) instead of decoding every
     posting. Synthetic one-term postings with a strong tf spread (the
@@ -169,14 +186,10 @@ def test_or_wand_after_prunes_blocks():
     cur = (float(full["score"].iloc[k - 1]),
            int(full["docid"].iloc[k - 1]))   # cursor at end of page 1
 
-    Q.reset_decode_counters()
-    e = Q.score_shard(lpdf, idf, 40.0, 1.2, 0.75, k, "or", 1,
-                      "exact", after=cur)
-    exact_blocks = Q.DECODE_COUNTERS["blocks"]
-    Q.reset_decode_counters()
-    w = Q.score_shard(lpdf, idf, 40.0, 1.2, 0.75, k, "or", 1,
-                      "wand", after=cur)
-    wand_blocks = Q.DECODE_COUNTERS["blocks"]
+    e, exact_blocks = _decoded_blocks(monkeypatch, lambda: Q.score_shard(
+        lpdf, idf, 40.0, 1.2, 0.75, k, "or", 1, "exact", after=cur))
+    w, wand_blocks = _decoded_blocks(monkeypatch, lambda: Q.score_shard(
+        lpdf, idf, 40.0, 1.2, 0.75, k, "or", 1, "wand", after=cur))
 
     assert w["docid"].tolist() == e["docid"].tolist()
     np.testing.assert_allclose(w["score"], e["score"], rtol=0, atol=0)
@@ -209,7 +222,7 @@ def test_or_wand_after_multiterm_parity(spark, tmp_path_factory):
                                atol=1e-9)
 
 
-def test_or_wand_after_prunes_blocks_multiterm():
+def test_or_wand_after_prunes_blocks_multiterm(monkeypatch):
     """r6 second seed round: on a multi-term query, docs decoded under
     one term are usually INCOMPLETE after round 1 (another term's
     undecoded block ranges stab them). The bounded round 2 decodes
@@ -245,14 +258,10 @@ def test_or_wand_after_prunes_blocks_multiterm():
     cur = (float(full["score"].iloc[k - 1]),
            int(full["docid"].iloc[k - 1]))
 
-    Q.reset_decode_counters()
-    e = Q.score_shard(lpdf, idf, 40.0, 1.2, 0.75, k, "or", 2,
-                      "exact", after=cur)
-    exact_blocks = Q.DECODE_COUNTERS["blocks"]
-    Q.reset_decode_counters()
-    w = Q.score_shard(lpdf, idf, 40.0, 1.2, 0.75, k, "or", 2,
-                      "wand", after=cur)
-    wand_blocks = Q.DECODE_COUNTERS["blocks"]
+    e, exact_blocks = _decoded_blocks(monkeypatch, lambda: Q.score_shard(
+        lpdf, idf, 40.0, 1.2, 0.75, k, "or", 2, "exact", after=cur))
+    w, wand_blocks = _decoded_blocks(monkeypatch, lambda: Q.score_shard(
+        lpdf, idf, 40.0, 1.2, 0.75, k, "or", 2, "wand", after=cur))
 
     assert w["docid"].tolist() == e["docid"].tolist()
     np.testing.assert_allclose(w["score"], e["score"], rtol=0, atol=0)

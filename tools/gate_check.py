@@ -43,6 +43,9 @@ def main(sf_dir: str, only: list[str] | None = None) -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
+    # the BPE trained-merges oracle learns from the corpus it reads;
+    # point it at the one under test unless the caller chose another
+    os.environ.setdefault("SPARKFTS_ORACLE_SF_DIR", sf_dir)
     qs, os_ = E.queries(), E.oracle_sql()
     if only:
         qs = {k: v for k, v in qs.items()
