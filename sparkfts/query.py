@@ -160,6 +160,47 @@ def _decode_term_rows(rows: pd.DataFrame
     return _decode_blocks(_Blocks(rows), None)
 
 
+_DECODE_COLS = ["term", "shard", "chunk", "blob", "block_off", "block_n"]
+
+
+def _decode_term_table(tbl, ti: np.ndarray, nterms: int
+                       ) -> list[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """Decode the Arrow dictionary rows ``tbl`` (_DECODE_COLS) of
+    ``nterms`` terms, row r belonging to term ti[r], in ONE codec call
+    → per term its (docids, tfs, dls), equal to _decode_term_rows of
+    the term's rows. The rows are ordered by (term, shard, chunk) —
+    per term the _row_order — and decode straight from the ``blob``
+    column's data buffer, each block offset shifted by its row's blob
+    start. Exact because every blob ends on a varint terminator, so
+    blob boundaries survive the concatenation, and each block's first
+    gap is absolute, so the blocks decode independently."""
+    e = np.empty(0, dtype=np.int64)
+    if tbl.num_rows == 0:
+        return [(e, e, e)] * nterms
+    o = np.lexsort((tbl.column("chunk").to_numpy(),
+                    tbl.column("shard").to_numpy(), ti))
+    t = tbl.take(o).combine_chunks()
+    blob = t.column("blob").chunk(0)
+    _, boffs, data = blob.buffers()
+    starts = np.frombuffer(boffs, dtype=np.int32, count=len(blob) + 1,
+                           offset=4 * blob.offset).astype(np.int64)
+    bn = t.column("block_n").chunk(0)
+    nb = bn.value_lengths().to_numpy()
+    n = bn.flatten().to_numpy()
+    off = (t.column("block_off").chunk(0).flatten().to_numpy()
+           + np.repeat(starts[:-1] - starts[0], nb))
+    d, tf, dl = codec.decode_postings(
+        np.frombuffer(data, dtype=np.uint8)[starts[0]:starts[-1]], off, n)
+    # posting bounds of each term: rows → blocks → postings
+    rows = np.searchsorted(ti[o], np.arange(nterms + 1))
+    blocks = np.concatenate(([0], np.cumsum(nb)))[rows]
+    p = np.concatenate(([0], np.cumsum(n)))[blocks]
+    # copies: a cached view would keep the whole load's arrays alive
+    # under one term's byte count
+    return [tuple(a[p[j]:p[j + 1]].copy() for a in (d, tf, dl))
+            for j in range(nterms)]
+
+
 def _stab(lo: np.ndarray, hi: np.ndarray, first: np.ndarray,
           last: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Sorted disjoint inclusive intervals [lo, hi] against spans
@@ -1636,9 +1677,11 @@ class _RowGroupCatalog:
             held += tbl.column(self.key).nbytes + 56 * skeys.size
         return (tbl, skeys, order), held
 
-    def take(self, entries: list, want: np.ndarray):
+    def take(self, entries: list, want: np.ndarray,
+             columns: list[str] | None = None):
         """Rows whose key is in ``want`` from the loaded ``entries``,
-        concatenated in entry then row order."""
+        concatenated in entry then row order; ``columns`` (None: all)
+        projects before the take, so other columns are never copied."""
         import pyarrow as pa
         parts = []
         for tbl, skeys, order in entries:
@@ -1648,9 +1691,12 @@ class _RowGroupCatalog:
             if order is not None:
                 sel = np.sort(order[sel])
             if sel.size:
-                parts.append(tbl.take(sel))
-        return (pa.concat_tables(parts) if parts
-                else self.schema.empty_table())
+                parts.append((tbl if columns is None
+                              else tbl.select(columns)).take(sel))
+        if parts:
+            return pa.concat_tables(parts)
+        empty = self.schema.empty_table()
+        return empty if columns is None else empty.select(columns)
 
 
 _TOPK_SCHEMA = "docid long, score double"
@@ -2145,8 +2191,10 @@ class SegmentedIndex:
         """What the driver-local reads did so far, summed over the
         segments: row groups read from disk, pruned by footer min/max,
         served from the row-group cache, and the compressed bytes
-        read; and filter docid sets computed by a Spark job or served
-        from the memo (one count per segment and filtered call)."""
+        read; filter docid sets computed by a Spark job or served
+        from the memo (one count per segment and filtered call); and
+        the terms the decoded-postings cache loaded on a miss (absent
+        terms included) with the postings decoded for them."""
         out: dict[str, int] = {}
         for s in self.subs:
             with s._lock:
@@ -2407,6 +2455,8 @@ class SegmentedIndex:
                                         modes[qid], mh)
                 qterms[qid], modes[qid], reqs[qid] = t2, m2, rq
         all_terms = sorted({t for ts in qterms.values() for t in ts})
+        if org is not None:
+            self._org_shards(org)              # raises if unrouted
         if not all_terms:
             return {qid: _EMPTY_TOPK.copy() for qid in queries}
         idf = _apply_boosts(
@@ -3652,7 +3702,7 @@ class SegmentedIndex:
         # generations built from different inputs may type a column
         # differently (e.g. an all-null one); promote to a common schema
         return (pa.concat_tables(parts, promote_options="permissive")
-                .sort_by("docid").to_pandas())
+                .sort_by("docid").to_pandas(use_threads=False))
 
     def fetch_docs(self, docids: Iterable[int]) -> DataFrame:
         """Doc-store fetch (B9): per owning segment, a shard-pruned +
@@ -3913,7 +3963,8 @@ class FTSIndex(SegmentedIndex):
         self._filter_cache_sz: dict = {}
         self._read_counters = dict.fromkeys(
             ("row_groups_read", "row_groups_pruned", "row_groups_cached",
-             "bytes_read", "filter_sets_computed", "filter_sets_cached"),
+             "bytes_read", "filter_sets_computed", "filter_sets_cached",
+             "terms_decoded", "postings_decoded"),
             0)
 
     @property
@@ -4194,12 +4245,14 @@ class FTSIndex(SegmentedIndex):
                 cat = self._catalogs[table] = _RowGroupCatalog(dset, key)
         return cat
 
-    def _rg_take(self, table: str, want: np.ndarray):
+    def _rg_take(self, table: str, want: np.ndarray,
+                 columns: list[str] | None = None):
         """Rows of ``table`` whose key is in ``want`` (sorted, unique),
         in file then row order — what a pyarrow dataset scan filtered on
-        ``key.isin(want)`` returns. Row groups whose footer min/max
-        holds no wanted key are pruned; the rest are read once and then
-        served decoded from the row-group LRU."""
+        ``key.isin(want)`` returns — as Arrow, projected to ``columns``
+        (None: all) before the take. Row groups whose footer min/max
+        holds no wanted key are pruned; the rest are read once, whole,
+        and then served decoded from the row-group LRU."""
         cat = self._catalog(table)
         groups = cat.candidates(want)
         byk = {g.key: g for g in groups}
@@ -4217,40 +4270,37 @@ class FTSIndex(SegmentedIndex):
             c["row_groups_read"] += len(read)
             c["row_groups_cached"] += len(groups) - len(read)
             c["bytes_read"] += sum(g.nbytes for g in read)
-        return cat.take([got[g.key] for g in groups], want)
+        return cat.take([got[g.key] for g in groups], want, columns)
 
-    def _read_term_rows(self, terms: list[str]) -> pd.DataFrame:
-        """Dictionary rows of ``terms``: th match, then the exact term
-        check (a th collision never leaks another term's rows)."""
+    def _term_table(self, terms: list[str],
+                    columns: list[str] | None = None):
+        """(rows, ti): the dictionary rows of ``terms`` as Arrow — th
+        match on the row-group cache, then the exact term check (a th
+        collision never leaks another term's rows) — and each row's
+        index in ``terms``. ``columns`` (None: all; else ``term``
+        among them) projects the rows."""
         import pyarrow as pa
         import pyarrow.compute as pc
         hs = np.unique(np.array([codec.term_hash(t) for t in terms],
                                 dtype=np.int64))
-        tbl = self._rg_take("postings", hs)
-        keep = pc.is_in(tbl.column("term"),
-                        value_set=pa.array(terms, pa.string()))
-        return tbl.filter(keep).to_pandas()
+        tbl = self._rg_take("postings", hs, columns)
+        ti = pc.fill_null(pc.index_in(
+            tbl.column("term"), value_set=pa.array(terms, pa.string())),
+            -1).to_numpy()
+        keep = ti >= 0
+        return tbl.filter(keep), ti[keep]
 
-    def _local_term_rows(self, terms: list[str],
-                         use_cache: bool = True) -> pd.DataFrame:
+    def _read_term_rows(self, terms: list[str]) -> pd.DataFrame:
+        """Dictionary rows of ``terms`` as pandas (see _term_table)."""
+        return self._term_table(terms)[0].to_pandas()
+
+    def _local_term_rows(self, terms: list[str]) -> pd.DataFrame:
         """Driver-side dictionary lookup (the same th/term match as the
         Spark path, no Spark job) on the row-group cache, behind a
         per-handle LRU of term → dictionary rows: repeated serving
         queries skip the lookup entirely (the reference's always-on ES
         keeps its segments hot; this is the snapshot-reader analog).
-        Negative entries (absent terms) are cached too.
-        ``use_cache=False`` reads through without populating (the
-        decoded-postings cache keeps its own copy — storing the raw
-        frames again would double the footprint of every hot term)."""
-        cache = self._term_cache
-        if not use_cache:
-            with self._lock:
-                parts = [cache[t] for t in terms if t in cache]
-                miss = [t for t in terms if t not in cache]
-            if miss:
-                parts.append(self._read_term_rows(miss))
-            return pd.concat(parts, ignore_index=True)
-
+        Negative entries (absent terms) are cached too."""
         def load(miss):
             got = self._read_term_rows(miss)
             out = {}
@@ -4261,29 +4311,29 @@ class FTSIndex(SegmentedIndex):
                 out[t] = (sub, int(sub["nbytes"].sum()) if len(sub) else 0)
             return out
 
-        got = self._cached(cache, self._term_cache_sz, terms, load,
-                           self.TERM_CACHE_CAP)
+        got = self._cached(self._term_cache, self._term_cache_sz, terms,
+                           load, self.TERM_CACHE_CAP)
         return pd.concat([got[t] for t in terms], ignore_index=True)
 
     def _decoded_terms(self, terms: list[str]) \
             -> dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]]:
         """term → decoded (docids, tfs, dls) in globally ascending docid
         order, behind a per-handle LRU: the second hit on a term skips
-        BOTH the dictionary lookup and the varint decode. Absent terms
-        cache empty arrays. Reads bypass the raw-frame cache
-        (use_cache=False) so hot terms aren't stored twice."""
+        BOTH the dictionary lookup and the varint decode. A miss load
+        stays in Arrow and numpy: the missed terms' rows, projected to
+        the decode columns, go through _decode_term_table — one codec
+        call for the whole load. Absent terms cache empty arrays. The
+        raw-frame cache is bypassed, so hot terms aren't stored
+        twice."""
         def load(miss):
-            pdf = self._local_term_rows(miss, use_cache=False)
-            e = np.empty(0, dtype=np.int64)
-            # (a per-term decode thread pool was tried and REJECTED in
-            # r8: the pandas term filter is GIL-bound, so threads
-            # serialized on it and cold-query walls got WORSE)
-            out = {}
-            for t in miss:
-                sub = pdf[pdf["term"] == t]
-                dec = _decode_term_rows(sub) if len(sub) else (e, e, e)
-                out[t] = (dec, sum(a.nbytes for a in dec))
-            return out
+            tbl, ti = self._term_table(miss, _DECODE_COLS)
+            dec = _decode_term_table(tbl, ti, len(miss))
+            with self._lock:
+                c = self._read_counters
+                c["terms_decoded"] += len(miss)
+                c["postings_decoded"] += sum(d.size for d, _, _ in dec)
+            return {t: (v, sum(a.nbytes for a in v))
+                    for t, v in zip(miss, dec)}
 
         return self._cached(self._dec_cache, self._dec_cache_sz, terms,
                             load, self.TERM_CACHE_CAP)

@@ -143,3 +143,12 @@ def test_unrouted_org_rejected_by_both_twins(combined):
                     "match_docids_local"):
         with pytest.raises(ValueError, match="routing"):
             getattr(combined, surface)("...", field="text", org="o1")
+
+
+def test_unrouted_org_rejected_by_topk_many(combined):
+    """topk_many(org=) on an unrouted index raises like topk, also when
+    the whole batch analyzes to no terms."""
+    for batch in ({"a": ("...", "or")},
+                  {"a": ("...", "or"), "b": ("alpha query", "and")}):
+        with pytest.raises(ValueError, match="routing"):
+            combined.topk_many(batch, field="text", org="o1")

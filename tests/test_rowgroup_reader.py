@@ -241,3 +241,102 @@ def test_concurrent_calls_match_serial(spark, plain, routed,
         lambda: FTSIndex(spark, routed), _terms(routed),
         lambda idx, q, mode: idx.topk_local(
             q, k=10, mode=mode, org=orgs[len(q) % len(orgs)]))
+
+
+def _decoded_matches_frame_decode(idx, absent=("zzqabsent", "qqnothere")):
+    """Every term of each segment of ``idx`` plus two absent ones: the
+    one-call Arrow decode behind _decoded_terms equals the pandas
+    per-term decode, array- and dtype-exact, whatever the mix of terms
+    a load carries and whatever order its rows arrive in."""
+    from sparkfts.query import (_DECODE_COLS, _decode_term_rows,
+                                _decode_term_table)
+
+    def check(got, want, t):
+        for g, w in zip(got, want):
+            assert g.dtype == w.dtype == np.int64, t
+            np.testing.assert_array_equal(g, w, err_msg=t)
+
+    for s in idx.subs:
+        terms = _terms(s.root) + list(absent)
+        want = {t: _decode_term_rows(s._read_term_rows([t]))
+                for t in terms}
+        assert all(a.size == 0 for t in absent for a in want[t])
+        rng = random.Random(len(terms))
+        loads = [terms] + [rng.sample(terms, rng.randint(1, 6))
+                           for _ in range(20)]
+        for load in loads:
+            s._dec_cache.clear()
+            s._dec_cache_sz.clear()
+            got = s._decoded_terms(load)
+            for t in load:
+                check(got[t], want[t], t)
+        # rows shuffled: chunk ids repeat across shards, so only the
+        # (term, shard, chunk) sort restores the docid order
+        tbl, ti = s._term_table(terms, _DECODE_COLS)
+        perm = np.random.default_rng(len(terms)).permutation(tbl.num_rows)
+        for t, got in zip(terms, _decode_term_table(
+                tbl.take(perm), ti[perm], len(terms))):
+            check(got, want[t], t)
+
+
+def test_decoded_terms_bit_exact(spark, plain, tmp_path, tmp_path_factory):
+    """_decoded_terms against _decode_term_rows(_read_term_rows([t])):
+    on the default layout, on a copy whose postings are rewritten in
+    512-row row groups (one term's rows span row groups), and on each
+    segment of a base + delta CombinedIndex."""
+    _decoded_matches_frame_decode(FTSIndex(spark, plain))
+
+    root = str(tmp_path / "post512")
+    shutil.copytree(plain, root)
+    n_rg, n_files = 0, 0
+    for f in glob.glob(os.path.join(root, "postings", "*", "*.parquet")):
+        pq.write_table(pq.read_table(f), f, row_group_size=512)
+        crc = os.path.join(os.path.dirname(f),
+                           f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+        n_rg += pq.ParquetFile(f).num_row_groups
+        n_files += 1
+    assert n_rg > n_files
+    _decoded_matches_frame_decode(FTSIndex(spark, root))
+
+    from sparkfts.streaming import CombinedIndex, make_batch_indexer
+    croot = str(tmp_path_factory.mktemp("rg_dec_combined"))
+    build_index(spark, spark.createDataFrame(make_transcripts(30, seed=4)),
+                croot, order_cols=ORDER,
+                cfg=BuildConfig(num_shards=2, partitions=2))
+    make_batch_indexer(croot, cfg=BuildConfig(num_shards=2, partitions=2))(
+        spark.createDataFrame(make_transcripts(10, seed=7)), batch_id=0)
+    ci = CombinedIndex(spark, croot)
+    assert len(ci.subs) == 2
+    _decoded_matches_frame_decode(ci)
+
+
+def test_decode_counters_one_codec_call(spark, plain, monkeypatch):
+    """A cold 3-term topk_local decodes its terms in one codec call and
+    counts them: terms_decoded 3, postings_decoded the terms' summed
+    df. Repeating the query decodes nothing."""
+    from sparkfts import codec
+    ts = pq.read_table(os.path.join(plain, "term_stats"),
+                       columns=["term", "df"]).to_pandas()
+    pick = ts.sort_values(["df", "term"], ascending=[False, True]) \
+        .iloc[[3, 20, 60]]
+    idx = FTSIndex(spark, plain)
+    calls = []
+    real = codec.decode_postings
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(codec, "decode_postings", counting)
+    idx.topk_local(" ".join(pick["term"]), k=10)
+    c = idx.read_counters()
+    assert len(calls) == 1
+    assert c["terms_decoded"] == 3
+    assert c["postings_decoded"] == int(pick["df"].sum())
+    idx.topk_local(" ".join(pick["term"]), k=10)
+    again = idx.read_counters()
+    assert len(calls) == 1
+    assert again["terms_decoded"] == 3
+    assert again["postings_decoded"] == c["postings_decoded"]
