@@ -163,42 +163,83 @@ def _decode_term_rows(rows: pd.DataFrame
 _DECODE_COLS = ["term", "shard", "chunk", "blob", "block_off", "block_n"]
 
 
-def _decode_term_table(tbl, ti: np.ndarray, nterms: int
-                       ) -> list[tuple[np.ndarray, np.ndarray, np.ndarray]]:
-    """Decode the Arrow dictionary rows ``tbl`` (_DECODE_COLS) of
-    ``nterms`` terms, row r belonging to term ti[r], in ONE codec call
-    → per term its (docids, tfs, dls), equal to _decode_term_rows of
-    the term's rows. The rows are ordered by (term, shard, chunk) —
-    per term the _row_order — and decode straight from the ``blob``
-    column's data buffer, each block offset shifted by its row's blob
-    start. Exact because every blob ends on a varint terminator, so
-    blob boundaries survive the concatenation, and each block's first
-    gap is absolute, so the blocks decode independently."""
+def _np_views(tbl, columns) -> dict:
+    """Zero-copy numpy views of ``columns`` of a null-free Arrow table
+    whose columns hold at most one chunk: a primitive column → its
+    values; a binary or string column → (offsets, data bytes); a list
+    column → (offsets, flat values). Offsets are absolute into the
+    data or values."""
+    import pyarrow as pa
+    out = {}
+    for c in columns:
+        col = tbl.column(c)
+        a = col.chunk(0) if col.num_chunks else pa.array([], col.type)
+        if pa.types.is_list(a.type):
+            out[c] = (a.offsets.to_numpy(), a.values.to_numpy())
+        elif pa.types.is_binary(a.type) or pa.types.is_string(a.type):
+            _, offs, data = a.buffers()
+            out[c] = (np.frombuffer(offs, dtype=np.int32, count=len(a) + 1,
+                                    offset=4 * a.offset),
+                      np.frombuffer(data or b"", dtype=np.uint8))
+        else:
+            out[c] = a.to_numpy()
+    return out
+
+
+def _decode_rows(parts, nterms: int
+                 ) -> list[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """Decode dictionary rows of ``nterms`` terms in ONE codec call →
+    per term its (docids, tfs, dls), equal to _decode_term_rows of the
+    term's rows. ``parts`` holds (views, rows, ti): the _np_views of
+    one table's shard/chunk/blob/block_off/block_n columns, the rows
+    to decode and each row's term index. The rows are ordered by
+    (term, shard, chunk) — per term the _row_order — and their blob
+    byte ranges gathered into one buffer, each block offset (relative
+    to its blob) shifted by its blob's start there. Exact because every
+    blob ends on a varint terminator, so blob boundaries survive the
+    concatenation, and each block's first gap is absolute, so the
+    blocks decode independently. A load holds a few rows per term, so
+    the gather slices per row: at that size numpy's per-call dispatch,
+    not the bytes copied, is the cost."""
     e = np.empty(0, dtype=np.int64)
-    if tbl.num_rows == 0:
+    recs = []
+    for v, rows, ti in parts:
+        (bo, data), (oo, off), (no, n) = (
+            v[c] for c in ("blob", "block_off", "block_n"))
+        for t, sh, ch, b0, b1, o0, o1, n0, n1 in zip(
+                ti.tolist(), v["shard"][rows].tolist(),
+                v["chunk"][rows].tolist(),
+                bo[rows].tolist(), bo[rows + 1].tolist(),
+                oo[rows].tolist(), oo[rows + 1].tolist(),
+                no[rows].tolist(), no[rows + 1].tolist()):
+            recs.append((t, sh, ch, data[b0:b1], off[o0:o1], n[n0:n1]))
+    if not recs:
         return [(e, e, e)] * nterms
-    o = np.lexsort((tbl.column("chunk").to_numpy(),
-                    tbl.column("shard").to_numpy(), ti))
-    t = tbl.take(o).combine_chunks()
-    blob = t.column("blob").chunk(0)
-    _, boffs, data = blob.buffers()
-    starts = np.frombuffer(boffs, dtype=np.int32, count=len(blob) + 1,
-                           offset=4 * blob.offset).astype(np.int64)
-    bn = t.column("block_n").chunk(0)
-    nb = bn.value_lengths().to_numpy()
-    n = bn.flatten().to_numpy()
-    off = (t.column("block_off").chunk(0).flatten().to_numpy()
-           + np.repeat(starts[:-1] - starts[0], nb))
+    recs.sort(key=lambda x: x[:3])
+    ti, _, _, blobs, offs, ns = zip(*recs)
+    size = np.fromiter(map(len, blobs), dtype=np.int64, count=len(recs))
+    nb = np.fromiter(map(len, offs), dtype=np.int64, count=len(recs))
+    n = np.concatenate(ns)
     d, tf, dl = codec.decode_postings(
-        np.frombuffer(data, dtype=np.uint8)[starts[0]:starts[-1]], off, n)
+        np.concatenate(blobs),
+        np.concatenate(offs) + np.repeat(np.cumsum(size) - size, nb), n)
     # posting bounds of each term: rows → blocks → postings
-    rows = np.searchsorted(ti[o], np.arange(nterms + 1))
+    rows = np.searchsorted(ti, np.arange(nterms + 1))
     blocks = np.concatenate(([0], np.cumsum(nb)))[rows]
     p = np.concatenate(([0], np.cumsum(n)))[blocks]
     # copies: a cached view would keep the whole load's arrays alive
     # under one term's byte count
     return [tuple(a[p[j]:p[j + 1]].copy() for a in (d, tf, dl))
             for j in range(nterms)]
+
+
+def _decode_term_table(tbl, ti: np.ndarray, nterms: int
+                       ) -> list[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """_decode_rows of every row of the Arrow dictionary table ``tbl``
+    (_DECODE_COLS), row r belonging to term ti[r]."""
+    t = tbl.combine_chunks()
+    return _decode_rows([(_np_views(t, _DECODE_COLS[1:]),
+                          np.arange(t.num_rows), np.asarray(ti))], nterms)
 
 
 def _stab(lo: np.ndarray, hi: np.ndarray, first: np.ndarray,
@@ -1626,6 +1667,17 @@ class _RowGroup(NamedTuple):
     nbytes: int
 
 
+class _Loaded(NamedTuple):
+    """A row group as the row-group cache holds it: the Arrow table
+    (one chunk per column), its key column sorted, the sort order (None
+    when the rows already are sorted) and zero-copy numpy views of the
+    catalogue's view columns (_np_views), over buffers of ``tbl``."""
+    tbl: object
+    keys: np.ndarray
+    order: np.ndarray | None
+    views: dict
+
+
 class _RowGroupCatalog:
     """The row groups of one parquet table, listed once per handle from
     a pyarrow dataset's fragments (in the dataset's file order), with
@@ -1633,12 +1685,15 @@ class _RowGroupCatalog:
     within a file: docid (docstore), th (postings), term (term_stats).
     Pruning by those summary statistics is the footer-only half of a
     point lookup; ``load`` decodes one surviving row group together
-    with its sorted key array, and ``take`` answers a lookup on loaded
-    row groups with searchsorted + Table.take."""
+    with its sorted key array and numpy views of the ``views`` columns,
+    ``locate`` answers a lookup on loaded row groups with index
+    arithmetic (searchsorted on the sorted keys), and ``take`` gathers
+    located rows as Arrow for the readers that return tables."""
 
-    def __init__(self, dataset, key: str):
+    def __init__(self, dataset, key: str, views=()):
         self.schema = dataset.schema
         self.key = key
+        self.views = views
         self.groups: list[_RowGroup] = []
         for frag in dataset.get_fragments():
             md = frag.metadata
@@ -1652,21 +1707,33 @@ class _RowGroupCatalog:
                 self.groups.append(_RowGroup(
                     (frag.path, i), frag, i, lo, hi,
                     sum(c.total_compressed_size for c in cols)))
+        # footer bounds as arrays, for the groups that have them
+        self._stat = np.flatnonzero([g.lo is not None for g in self.groups])
+        self._lo, self._hi = (
+            self._bounds([getattr(self.groups[i], f) for i in self._stat])
+            for f in ("lo", "hi"))
+
+    @staticmethod
+    def _bounds(vals: list) -> np.ndarray:
+        a = np.array(vals)
+        # str keys compare as Python objects, like the wanted term keys
+        return a.astype(object) if a.dtype.kind in "US" else a
 
     def candidates(self, want: np.ndarray) -> list[_RowGroup]:
         """Row groups whose [min, max] may hold a key of ``want``
-        (sorted, unique)."""
-        return [g for g in self.groups
-                if g.lo is None
-                or (np.searchsorted(want, g.lo, "left")
-                    < np.searchsorted(want, g.hi, "right"))]
+        (sorted, unique); groups without footer statistics always."""
+        keep = np.ones(len(self.groups), dtype=bool)
+        keep[self._stat] = (want.searchsorted(self._lo, "left")
+                            < want.searchsorted(self._hi, "right"))
+        return [self.groups[i] for i in np.flatnonzero(keep)]
 
     def load(self, g: _RowGroup):
-        """((table, sorted keys, sort order or None), bytes held) for
-        one row group, read with the dataset schema so hive partition
-        columns come back exactly as a dataset scan gives them."""
+        """(_Loaded, bytes held) for one row group, read with the
+        dataset schema so hive partition columns come back exactly as a
+        dataset scan gives them. The views add no bytes: they share the
+        table's buffers."""
         tbl = g.frag.subset(row_group_ids=[g.rg]).to_table(
-            schema=self.schema)
+            schema=self.schema).combine_chunks()
         keys = tbl.column(self.key).to_numpy(zero_copy_only=False)
         order = (None if np.all(keys[:-1] <= keys[1:])
                  else np.argsort(keys, kind="stable"))
@@ -1675,24 +1742,37 @@ class _RowGroupCatalog:
                                             else order.nbytes)
         if skeys.dtype == object:   # one str object per key
             held += tbl.column(self.key).nbytes + 56 * skeys.size
-        return (tbl, skeys, order), held
+        return _Loaded(tbl, skeys, order, _np_views(tbl, self.views)), held
 
-    def take(self, entries: list, want: np.ndarray,
+    @staticmethod
+    def locate(entries: list, want: np.ndarray
+               ) -> list[tuple[np.ndarray, np.ndarray]]:
+        """Per loaded entry, (rows, w): the rows whose key is in
+        ``want`` (sorted, unique), ascending, and the index in ``want``
+        of each row's key."""
+        out = []
+        for e in entries:
+            lo = e.keys.searchsorted(want, "left")
+            n = e.keys.searchsorted(want, "right") - lo
+            # the concatenated ranges [lo, lo + n), one per wanted key
+            c = n.cumsum()
+            rows = np.arange(c[-1:].sum()) + (lo - c + n).repeat(n)
+            w = np.arange(n.size).repeat(n)
+            if e.order is not None:
+                rows = e.order[rows]
+                o = rows.argsort()
+                rows, w = rows[o], w[o]
+            out.append((rows, w))
+        return out
+
+    def take(self, entries: list, rows: list,
              columns: list[str] | None = None):
-        """Rows whose key is in ``want`` from the loaded ``entries``,
-        concatenated in entry then row order; ``columns`` (None: all)
+        """Rows ``rows[i]`` of each loaded entries[i] as one Arrow
+        table, in entry then row order; ``columns`` (None: all)
         projects before the take, so other columns are never copied."""
         import pyarrow as pa
-        parts = []
-        for tbl, skeys, order in entries:
-            lo = np.searchsorted(skeys, want, "left")
-            n = np.searchsorted(skeys, want, "right") - lo
-            sel = np.arange(n.sum()) + np.repeat(lo - (np.cumsum(n) - n), n)
-            if order is not None:
-                sel = np.sort(order[sel])
-            if sel.size:
-                parts.append((tbl if columns is None
-                              else tbl.select(columns)).take(sel))
+        parts = [(e.tbl if columns is None else e.tbl.select(columns))
+                 .take(r) for e, r in zip(entries, rows) if r.size]
         if parts:
             return pa.concat_tables(parts)
         empty = self.schema.empty_table()
@@ -4232,27 +4312,29 @@ class FTSIndex(SegmentedIndex):
 
     def _catalog(self, table: str) -> _RowGroupCatalog:
         """The row-group catalogue of one of the three driver-read
-        tables, listed on first use."""
+        tables, listed on first use, with numpy views of the columns
+        the point lookups read: the decode columns of postings, the df
+        of term_stats."""
         with self._lock:
             cat = self._catalogs.get(table)
             if cat is None:
                 if table == "docstore":
-                    dset, key = self._pa_docstore_ds(), "docid"
+                    cat = _RowGroupCatalog(self._pa_docstore_ds(), "docid")
                 else:
                     post, ts = self._pa_datasets()
-                    dset, key = ((post, "th") if table == "postings"
-                                 else (ts, "term"))
-                cat = self._catalogs[table] = _RowGroupCatalog(dset, key)
+                    cat = (_RowGroupCatalog(post, "th", _DECODE_COLS)
+                           if table == "postings"
+                           else _RowGroupCatalog(ts, "term", ("df",)))
+                self._catalogs[table] = cat
         return cat
 
-    def _rg_take(self, table: str, want: np.ndarray,
-                 columns: list[str] | None = None):
-        """Rows of ``table`` whose key is in ``want`` (sorted, unique),
-        in file then row order — what a pyarrow dataset scan filtered on
-        ``key.isin(want)`` returns — as Arrow, projected to ``columns``
-        (None: all) before the take. Row groups whose footer min/max
-        holds no wanted key are pruned; the rest are read once, whole,
-        and then served decoded from the row-group LRU."""
+    def _rg_entries(self, table: str, want: np.ndarray
+                    ) -> tuple[_RowGroupCatalog, list[_Loaded]]:
+        """(catalogue, loaded row groups) of ``table`` that may hold a
+        key in ``want`` (sorted, unique), in file order. Row groups
+        whose footer min/max holds no wanted key are pruned; the rest
+        are read once, whole, and then served decoded from the
+        row-group LRU."""
         cat = self._catalog(table)
         groups = cat.candidates(want)
         byk = {g.key: g for g in groups}
@@ -4270,28 +4352,54 @@ class FTSIndex(SegmentedIndex):
             c["row_groups_read"] += len(read)
             c["row_groups_cached"] += len(groups) - len(read)
             c["bytes_read"] += sum(g.nbytes for g in read)
-        return cat.take([got[g.key] for g in groups], want, columns)
+        return cat, [got[g.key] for g in groups]
+
+    def _rg_take(self, table: str, want: np.ndarray):
+        """Rows of ``table`` whose key is in ``want`` (sorted, unique),
+        as Arrow in file then row order — what a pyarrow dataset scan
+        filtered on ``key.isin(want)`` returns."""
+        cat, entries = self._rg_entries(table, want)
+        return cat.take(entries, [r for r, _ in cat.locate(entries, want)])
+
+    def _term_rows(self, terms: list[str]
+                   ) -> list[tuple[_Loaded, np.ndarray, np.ndarray]]:
+        """The dictionary rows of ``terms`` on the row-group cache: per
+        postings row group holding a th of ``terms``, (entry, rows, ti)
+        — the located rows whose term equals one of ``terms``, compared
+        from the term column's data buffer (a th collision never leaks
+        another term's rows), and each row's index in ``terms``."""
+        hs = np.unique(np.array([codec.term_hash(t) for t in terms],
+                                dtype=np.int64))
+        index_of: dict[bytes, int] = {}
+        for i, t in enumerate(terms):
+            index_of.setdefault(t.encode("utf-8"), i)
+        cat, entries = self._rg_entries("postings", hs)
+        out = []
+        for e, (rows, _) in zip(entries, cat.locate(entries, hs)):
+            if not rows.size:
+                continue
+            off, data = e.views["term"]
+            ti = np.fromiter(
+                (index_of.get(data[a:b].tobytes(), -1) for a, b in
+                 zip(off[rows].tolist(), off[rows + 1].tolist())),
+                dtype=np.int64, count=rows.size)
+            keep = ti >= 0
+            out.append((e, rows[keep], ti[keep]))
+        return out
 
     def _term_table(self, terms: list[str],
                     columns: list[str] | None = None):
-        """(rows, ti): the dictionary rows of ``terms`` as Arrow — th
-        match on the row-group cache, then the exact term check (a th
-        collision never leaks another term's rows) — and each row's
-        index in ``terms``. ``columns`` (None: all; else ``term``
-        among them) projects the rows."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        hs = np.unique(np.array([codec.term_hash(t) for t in terms],
-                                dtype=np.int64))
-        tbl = self._rg_take("postings", hs, columns)
-        ti = pc.fill_null(pc.index_in(
-            tbl.column("term"), value_set=pa.array(terms, pa.string())),
-            -1).to_numpy()
-        keep = ti >= 0
-        return tbl.filter(keep), ti[keep]
+        """(rows, ti): the dictionary rows of ``terms`` (_term_rows) as
+        Arrow, projected to ``columns`` (None: all), and each row's
+        index in ``terms``."""
+        parts = self._term_rows(terms)
+        tbl = self._catalog("postings").take(
+            [e for e, _, _ in parts], [r for _, r, _ in parts], columns)
+        return tbl, np.concatenate([t for _, _, t in parts]
+                                   or [np.empty(0, dtype=np.int64)])
 
     def _read_term_rows(self, terms: list[str]) -> pd.DataFrame:
-        """Dictionary rows of ``terms`` as pandas (see _term_table)."""
+        """Dictionary rows of ``terms`` as pandas (see _term_rows)."""
         return self._term_table(terms)[0].to_pandas()
 
     def _local_term_rows(self, terms: list[str]) -> pd.DataFrame:
@@ -4302,14 +4410,16 @@ class FTSIndex(SegmentedIndex):
         keeps its segments hot; this is the snapshot-reader analog).
         Negative entries (absent terms) are cached too."""
         def load(miss):
-            got = self._read_term_rows(miss)
-            out = {}
-            for t in miss:
-                # per-term frame keeps its chunk/file order (scoring
-                # paths re-order by (shard, chunk) where needed)
-                sub = got[got["term"] == t]
-                out[t] = (sub, int(sub["nbytes"].sum()) if len(sub) else 0)
-            return out
+            tbl, ti = self._term_table(miss)
+            got = tbl.to_pandas()
+            nbytes = tbl.column("nbytes").to_numpy()
+            # per-term frames keep their chunk/file order (scoring
+            # paths re-order by (shard, chunk) where needed)
+            o = np.argsort(ti, kind="stable")
+            b = np.searchsorted(ti[o], np.arange(len(miss) + 1))
+            return {t: (got.iloc[o[b[j]:b[j + 1]]],
+                        int(nbytes[o[b[j]:b[j + 1]]].sum()))
+                    for j, t in enumerate(miss)}
 
         got = self._cached(self._term_cache, self._term_cache_sz, terms,
                            load, self.TERM_CACHE_CAP)
@@ -4320,14 +4430,14 @@ class FTSIndex(SegmentedIndex):
         """term → decoded (docids, tfs, dls) in globally ascending docid
         order, behind a per-handle LRU: the second hit on a term skips
         BOTH the dictionary lookup and the varint decode. A miss load
-        stays in Arrow and numpy: the missed terms' rows, projected to
-        the decode columns, go through _decode_term_table — one codec
-        call for the whole load. Absent terms cache empty arrays. The
-        raw-frame cache is bypassed, so hot terms aren't stored
-        twice."""
+        never leaves numpy: _term_rows locates the missed terms' rows
+        in the cached row groups' views, and _decode_rows decodes them
+        from the blob buffers in one codec call. Absent terms cache
+        empty arrays. The raw-frame cache is bypassed, so hot terms
+        aren't stored twice."""
         def load(miss):
-            tbl, ti = self._term_table(miss, _DECODE_COLS)
-            dec = _decode_term_table(tbl, ti, len(miss))
+            dec = _decode_rows([(e.views, r, t) for e, r, t in
+                                self._term_rows(miss)], len(miss))
             with self._lock:
                 c = self._read_counters
                 c["terms_decoded"] += len(miss)
@@ -4367,16 +4477,19 @@ class FTSIndex(SegmentedIndex):
 
     def _df_counts(self, terms: list[str]) -> dict[str, float]:
         """term → df for the terms present in term_stats: a driver-side
-        pyarrow point read (term-sorted row groups, cached per handle) —
-        the dictionary df lookup is vocab-scale, so a Spark job for it
+        point read on the row-group cache (term-sorted row groups) —
+        locate the terms among the sorted keys, read the df view. The
+        dictionary df lookup is vocab-scale, so a Spark job for it
         would double every distributed query's fixed latency."""
         if not terms:
             return {}
-        tbl = self._rg_take("term_stats",
-                            np.array(sorted(set(terms)), dtype=object))
-        got = dict(zip(tbl.column("term").to_pylist(),
-                       tbl.column("df").to_numpy().astype(float)))
-        return {t: got[t] for t in terms if got.get(t, 0.0) > 0.0}
+        want = np.array(sorted(set(terms)), dtype=object)
+        cat, entries = self._rg_entries("term_stats", want)
+        df = np.zeros(want.size, dtype=np.float64)
+        for e, (rows, w) in zip(entries, cat.locate(entries, want)):
+            df[w] = e.views["df"][rows]
+        got = dict(zip(want.tolist(), df))
+        return {t: got[t] for t in terms if got[t] > 0.0}
 
     def _pa_docstore_ds(self):
         import pyarrow.dataset as ds

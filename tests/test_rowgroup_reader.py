@@ -340,3 +340,62 @@ def test_decode_counters_one_codec_call(spark, plain, monkeypatch):
     assert len(calls) == 1
     assert again["terms_decoded"] == 3
     assert again["postings_decoded"] == c["postings_decoded"]
+
+
+def test_th_collision_keeps_terms_apart(spark, plain, tmp_path,
+                                        monkeypatch):
+    """Two terms whose dictionary rows share one th (a term_hash
+    collision): on a copy of the index whose postings give term b the th
+    of term a, re-sorted and rewritten, _decoded_terms, _local_term_rows
+    and topk_local return each term's own rows and results, equal to the
+    original index."""
+    import pyarrow as pa
+    from sparkfts import codec
+    ts = pq.read_table(os.path.join(plain, "term_stats"),
+                       columns=["term", "df"]).to_pandas()
+    a, b = ts.sort_values(["df", "term"], ascending=[False, True]) \
+        ["term"].iloc[[5, 6]].tolist()
+    queries = [(q, m) for q in (a, b, f"{a} {b}") for m in ("or", "and")]
+
+    def rows(idx, terms):
+        return (idx._local_term_rows(terms).drop(columns="th")
+                .sort_values(["term", "shard", "chunk"])
+                .reset_index(drop=True))
+
+    orig = FTSIndex(spark, plain)
+    want_dec = orig._decoded_terms([a, b])
+    want_rows = rows(orig, [a, b])
+    want_top = [orig.topk_local(q, k=10, mode=m) for q, m in queries]
+
+    root = str(tmp_path / "collide")
+    shutil.copytree(plain, root)
+    ha = codec.term_hash(a)
+    for f in glob.glob(os.path.join(root, "postings", "*", "*.parquet")):
+        t = pq.read_table(f)
+        th = np.where(t.column("term").to_numpy(zero_copy_only=False) == b,
+                      ha, t.column("th").to_numpy())
+        t = t.set_column(t.schema.get_field_index("th"), "th",
+                         pa.array(th, pa.int64())).sort_by("th")
+        pq.write_table(t, f)
+        crc = os.path.join(os.path.dirname(f),
+                           f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+    real = codec.term_hash
+    monkeypatch.setattr(codec, "term_hash",
+                        lambda t: ha if t == b else real(t))
+    idx = FTSIndex(spark, root)
+    # the collision is real: one th locates both terms' rows
+    assert (idx._rg_take("postings", np.array([ha])).num_rows
+            == len(want_rows))
+    for load in ([b], [a, b]):
+        idx._dec_cache.clear()
+        idx._dec_cache_sz.clear()
+        got = idx._decoded_terms(load)
+        for t in load:
+            for g, w in zip(got[t], want_dec[t]):
+                assert g.dtype == w.dtype
+                np.testing.assert_array_equal(g, w, err_msg=t)
+    pd.testing.assert_frame_equal(rows(idx, [a, b]), want_rows)
+    for (q, m), want in zip(queries, want_top):
+        pd.testing.assert_frame_equal(idx.topk_local(q, k=10, mode=m), want)
