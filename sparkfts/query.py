@@ -233,15 +233,6 @@ def _decode_rows(parts, nterms: int
             for j in range(nterms)]
 
 
-def _decode_term_table(tbl, ti: np.ndarray, nterms: int
-                       ) -> list[tuple[np.ndarray, np.ndarray, np.ndarray]]:
-    """_decode_rows of every row of the Arrow dictionary table ``tbl``
-    (_DECODE_COLS), row r belonging to term ti[r]."""
-    t = tbl.combine_chunks()
-    return _decode_rows([(_np_views(t, _DECODE_COLS[1:]),
-                          np.arange(t.num_rows), np.asarray(ti))], nterms)
-
-
 def _stab(lo: np.ndarray, hi: np.ndarray, first: np.ndarray,
           last: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Sorted disjoint inclusive intervals [lo, hi] against spans
@@ -1765,18 +1756,12 @@ class _RowGroupCatalog:
             out.append((rows, w))
         return out
 
-    def take(self, entries: list, rows: list,
-             columns: list[str] | None = None):
+    def take(self, entries: list, rows: list):
         """Rows ``rows[i]`` of each loaded entries[i] as one Arrow
-        table, in entry then row order; ``columns`` (None: all)
-        projects before the take, so other columns are never copied."""
+        table, in entry then row order."""
         import pyarrow as pa
-        parts = [(e.tbl if columns is None else e.tbl.select(columns))
-                 .take(r) for e, r in zip(entries, rows) if r.size]
-        if parts:
-            return pa.concat_tables(parts)
-        empty = self.schema.empty_table()
-        return empty if columns is None else empty.select(columns)
+        parts = [e.tbl.take(r) for e, r in zip(entries, rows) if r.size]
+        return pa.concat_tables(parts) if parts else self.schema.empty_table()
 
 
 _TOPK_SCHEMA = "docid long, score double"
@@ -4387,14 +4372,12 @@ class FTSIndex(SegmentedIndex):
             out.append((e, rows[keep], ti[keep]))
         return out
 
-    def _term_table(self, terms: list[str],
-                    columns: list[str] | None = None):
+    def _term_table(self, terms: list[str]):
         """(rows, ti): the dictionary rows of ``terms`` (_term_rows) as
-        Arrow, projected to ``columns`` (None: all), and each row's
-        index in ``terms``."""
+        Arrow, and each row's index in ``terms``."""
         parts = self._term_rows(terms)
         tbl = self._catalog("postings").take(
-            [e for e, _, _ in parts], [r for _, r, _ in parts], columns)
+            [e for e, _, _ in parts], [r for _, r, _ in parts])
         return tbl, np.concatenate([t for _, _, t in parts]
                                    or [np.empty(0, dtype=np.int64)])
 

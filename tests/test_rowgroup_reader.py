@@ -248,8 +248,7 @@ def _decoded_matches_frame_decode(idx, absent=("zzqabsent", "qqnothere")):
     one-call Arrow decode behind _decoded_terms equals the pandas
     per-term decode, array- and dtype-exact, whatever the mix of terms
     a load carries and whatever order its rows arrive in."""
-    from sparkfts.query import (_DECODE_COLS, _decode_term_rows,
-                                _decode_term_table)
+    from sparkfts.query import _decode_rows, _decode_term_rows
 
     def check(got, want, t):
         for g, w in zip(got, want):
@@ -272,10 +271,12 @@ def _decoded_matches_frame_decode(idx, absent=("zzqabsent", "qqnothere")):
                 check(got[t], want[t], t)
         # rows shuffled: chunk ids repeat across shards, so only the
         # (term, shard, chunk) sort restores the docid order
-        tbl, ti = s._term_table(terms, _DECODE_COLS)
-        perm = np.random.default_rng(len(terms)).permutation(tbl.num_rows)
-        for t, got in zip(terms, _decode_term_table(
-                tbl.take(perm), ti[perm], len(terms))):
+        prng = np.random.default_rng(len(terms))
+        parts = []
+        for e, r, ti in s._term_rows(terms)[::-1]:
+            p = prng.permutation(r.size)
+            parts.append((e.views, r[p], ti[p]))
+        for t, got in zip(terms, _decode_rows(parts, len(terms))):
             check(got, want[t], t)
 
 

@@ -1,24 +1,27 @@
 """Interleaved serving A/B of two source trees on one index.
 
-    python tools/serve_ab.py A_TREE B_TREE --seed N [--requests 2000] [--block 50]
+    python tools/serve_ab.py A_TREE B_TREE --seed N
 
 Builds one serve_zipf-sized index (perfbench's corpus for ``--seed``,
 perfbench's shard count) with tree A's sparkfts, then opens it in two
 worker processes, one importing sparkfts from each tree, and feeds both
-the seeded perfbench query stream in alternating short blocks: block i
-runs on A then B when i is even, B then A when it is odd, so a slow
-spell of a shared machine falls on both sides alike. A request is what
-serve_zipf times: ``topk_local``, then ``fetch_docs_local`` of its
-hits. After perfbench's warm-up requests (untimed, on both sides), it
-prints each side's QPS (requests ÷ summed request time), p50 and p90,
-and how many blocks each side won. It exits 1 if any ranking or fetch
-differs between the sides (docids equal, scores within 1e-9).
+the seeded perfbench query stream in alternating blocks of BLOCK
+requests, REQUESTS timed per side: block i runs on A then B when i is
+even, B then A when it is odd, so a slow spell of a shared machine
+falls on both sides alike. A request is what serve_zipf times:
+``topk_local``, then ``fetch_docs_local`` of its hits. After
+perfbench's warm-up requests (untimed, on both sides), it prints each
+side's QPS (requests ÷ summed request time), p50 and p90, and how many
+blocks each side won. It exits 1 if any ranking or fetch differs
+between the sides (perfbench's ``same_ranking``, and the same fetched
+docids).
 
-The corpus, the query stream and the serve_zipf constants come from
-this checkout's ``perfbench``; only ``sparkfts`` comes from the trees.
-Every file goes under a temporary directory removed at exit. Nothing
-under ``perfbench/`` or in BENCHMARK.json is read for its bounds or
-changed.
+The corpus, the query stream, the serve_zipf constants and the Spark
+session (perfbench's ``make_spark``, so the build and the serving run
+under serve_zipf's settings) come from this checkout's ``perfbench``;
+only ``sparkfts`` comes from the trees. Every file goes under a
+temporary directory removed at exit. Nothing under ``perfbench/`` or in
+BENCHMARK.json is read for its bounds or changed.
 """
 from __future__ import annotations
 
@@ -32,39 +35,35 @@ import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+REQUESTS = 2000     # timed requests per side
+BLOCK = 50          # requests per alternating block
 
 
-def _spark(work: str, cpus: int):
-    from pyspark.sql import SparkSession
-    tmp = os.path.join(work, "tmp")
-    os.makedirs(tmp, exist_ok=True)
-    spark = (SparkSession.builder
-             .master(f"local[{cpus}]")
-             .appName("serve_ab")
-             .config("spark.sql.shuffle.partitions", str(cpus))
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.local.dir", os.path.join(work, "spark-local"))
-             .config("spark.sql.warehouse.dir",
-                     os.path.join(work, "warehouse"))
-             .config("spark.driver.extraJavaOptions",
-                     f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData")
-             .config("spark.ui.enabled", "false")
-             .config("spark.ui.showConsoleProgress", "false")
-             .getOrCreate())
+def _spark(work: str):
+    """(session, stop) from this checkout's perfbench.run, imported
+    before sparkfts so that sparkfts still resolves from the tree on
+    PYTHONPATH (perfbench.run imports no sparkfts)."""
+    sys.path.insert(0, ROOT)
+    try:
+        from perfbench import run
+    finally:
+        sys.path.remove(ROOT)
+    os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
+    spark = run.make_spark(work)
     spark.sparkContext.setLogLevel("ERROR")
-    return spark
+    return spark, lambda: run.stop_spark(spark)
 
 
 def build_worker(src: str, root: str, work: str, shards: int,
                  order: list[str]) -> None:
     """Build the index from the corpus with the sparkfts on PYTHONPATH."""
+    spark, stop = _spark(work)
     from sparkfts import BuildConfig, build_index
-    spark = _spark(work, len(os.sched_getaffinity(0)))
     try:
         build_index(spark, spark.read.parquet(src), root, order_cols=order,
                     cfg=BuildConfig(num_shards=shards))
     finally:
-        spark.stop()
+        stop()
 
 
 def serve_worker(root: str, work: str, k: int) -> None:
@@ -72,8 +71,8 @@ def serve_worker(root: str, work: str, k: int) -> None:
     JSON list of [query, mode] per line, with one JSON line per block:
     each request's wall ms and its (docids, scores, fetched docids)."""
     proto, sys.stdout = sys.stdout, sys.stderr   # stdout carries replies
+    spark, stop = _spark(work)
     from sparkfts import FTSIndex
-    spark = _spark(work, 1)
     try:
         idx = FTSIndex(spark, root)
         print("ready", file=proto, flush=True)
@@ -91,7 +90,7 @@ def serve_worker(root: str, work: str, k: int) -> None:
             print(json.dumps({"ms": ms, "res": res}), file=proto,
                   flush=True)
     finally:
-        spark.stop()
+        stop()
 
 
 def _launch(tree: str, args: list[str], log: str, **kw):
@@ -140,12 +139,6 @@ class Side:
                 self.proc.wait()
 
 
-def same(a, b) -> bool:
-    (ida, sa, fa), (idb, sb, fb) = a, b
-    return (ida == idb and fa == fb
-            and all(abs(x - y) <= 1e-9 for x, y in zip(sa, sb)))
-
-
 def main(argv=None) -> int:
     if argv is None:
         argv = sys.argv[1:]
@@ -161,17 +154,20 @@ def main(argv=None) -> int:
     ap.add_argument("a_tree")
     ap.add_argument("b_tree")
     ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--requests", type=int, default=2000,
-                    help="timed requests per side (default 2000)")
-    ap.add_argument("--block", type=int, default=50,
-                    help="requests per block (default 50)")
     args = ap.parse_args(argv)
     for tree in (args.a_tree, args.b_tree):
         if not os.path.isfile(os.path.join(tree, "sparkfts", "__init__.py")):
             ap.error(f"{tree} has no sparkfts package")
     sys.path.insert(0, ROOT)
     import numpy as np
+    import pandas as pd
     from perfbench import inputs, workloads
+
+    def same(a, b) -> bool:
+        (ida, sa, fa), (idb, sb, fb) = a, b
+        return fa == fb and workloads.same_ranking(
+            pd.DataFrame({"docid": ida, "score": sa}),
+            pd.DataFrame({"docid": idb, "score": sb}))
 
     work = tempfile.mkdtemp(prefix="serve_ab-")
     sides: list[Side] = []
@@ -190,12 +186,12 @@ def main(argv=None) -> int:
         sides = [Side(n, t, root, work, inputs.K)
                  for n, t in (("A", args.a_tree), ("B", args.b_tree))]
         warm = workloads.WARMUP_REQUESTS
-        stream = inputs.query_stream(args.seed, warm + args.requests)
+        stream = inputs.query_stream(args.seed, warm + REQUESTS)
         for s in sides:
             s.run(stream[:warm])
         diffs, wins = [], {"A": 0, "B": 0}
-        for i, lo in enumerate(range(warm, len(stream), args.block)):
-            block = stream[lo:lo + args.block]
+        for i, lo in enumerate(range(warm, len(stream), BLOCK)):
+            block = stream[lo:lo + BLOCK]
             got = {s.name: s.run(block)
                    for s in (sides if i % 2 == 0 else sides[::-1])}
             for s in sides:
@@ -211,8 +207,8 @@ def main(argv=None) -> int:
             s.close()
         shutil.rmtree(work, ignore_errors=True)
 
-    print(f"seed {args.seed}: {args.requests} timed requests per side "
-          f"in blocks of {args.block}, after {warm} warm-up requests")
+    print(f"seed {args.seed}: {REQUESTS} timed requests per side "
+          f"in blocks of {BLOCK}, after {warm} warm-up requests")
     print("| side | tree | QPS | p50 ms | p90 ms | blocks won |")
     print("|---|---|---|---|---|---|")
     qps = {}
