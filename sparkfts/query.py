@@ -70,7 +70,7 @@ import os
 import re
 import threading
 from collections import OrderedDict
-from typing import Iterable, NamedTuple
+from typing import Callable, Iterable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -367,16 +367,15 @@ def _after_mask(docids: np.ndarray, scores: np.ndarray,
     return (scores < s0) | ((scores == s0) & (docids > d0))
 
 
-def _finish_topk(uniq: np.ndarray, scores: np.ndarray, k: int,
-                 mode: str, n_query_terms: int, hits: np.ndarray | None,
-                 after: tuple[float, int] | None,
-                 excl: np.ndarray | None, min_hits: int | None,
-                 req_hits: np.ndarray | None = None,
-                 n_req: int = 0) -> pd.DataFrame:
-    """The tail of every exhaustive aggregation: per-doc summed
-    ``scores`` and match counts ``hits`` → keep the docs that qualify,
-    drop tombstones, apply the cursor, take top-k (see _aggregate_topk
-    for the qualification rules)."""
+def _qualify(uniq: np.ndarray, scores: np.ndarray, mode: str,
+             n_query_terms: int, hits: np.ndarray | None,
+             after: tuple[float, int] | None, excl: np.ndarray | None,
+             min_hits: int | None, req_hits: np.ndarray | None = None,
+             n_req: int = 0) -> tuple[np.ndarray, np.ndarray]:
+    """(docids, scores) of the docs among ``uniq`` that qualify: every
+    AND term or ``min_hits`` matched (``req_hits``: every required
+    term, then ``min_hits`` optional ones; see _aggregate_topk), not
+    tombstoned, ranked after the cursor."""
     m = None
     if req_hits is not None:
         m = req_hits == n_req
@@ -394,7 +393,23 @@ def _finish_topk(uniq: np.ndarray, scores: np.ndarray, k: int,
     if after is not None:
         m = _after_mask(uniq, scores, after)
         uniq, scores = uniq[m], scores[m]
-    return _topk_frame(uniq, scores, k)
+    return uniq, scores
+
+
+def _finish_topk(uniq: np.ndarray, scores: np.ndarray, k: int,
+                 mode: str, n_query_terms: int, hits: np.ndarray | None,
+                 after: tuple[float, int] | None,
+                 excl: np.ndarray | None, min_hits: int | None,
+                 req_hits: np.ndarray | None = None,
+                 n_req: int = 0) -> pd.DataFrame:
+    """The tail of every exhaustive aggregation: per-doc summed
+    ``scores`` and match counts ``hits`` → the top-k of the docs that
+    _qualify. score_partials' floor path runs _qualify on its
+    candidates first and builds a frame only once it knows whether
+    they suffice."""
+    return _topk_frame(*_qualify(uniq, scores, mode, n_query_terms, hits,
+                                 after, excl, min_hits, req_hits, n_req),
+                       k)
 
 
 def _aggregate_topk(docids: np.ndarray, contribs: np.ndarray, k: int,
@@ -438,11 +453,11 @@ def _aggregate_topk(docids: np.ndarray, contribs: np.ndarray, k: int,
             # pure OR: every contribution is idf*partial > 0 (BM25 idf
             # is strictly positive for df <= N), so presence == nonzero
             # summed score — the hits bincount is dead weight here
-            uniq = np.flatnonzero(dscore)
+            uniq = np.flatnonzero(dscore != 0)
             hits = None
         else:
             dhits = np.bincount(off, minlength=rng)
-            uniq = np.flatnonzero(dhits)
+            uniq = np.flatnonzero(dhits != 0)
             hits = dhits[uniq]
         scores = dscore[uniq]
         if req_mask is not None:
@@ -466,26 +481,50 @@ def score_partials(pp: dict[str, tuple[np.ndarray, np.ndarray]],
                    after: tuple[float, int] | None = None,
                    excl: np.ndarray | None = None,
                    min_hits: int | None = None,
-                   req_terms: frozenset | None = None) -> pd.DataFrame:
-    """Exhaustive BM25 top-k over pre-computed per-term (docids, BM25
+                   req_terms: frozenset | None = None,
+                   count: Callable[[str], None] | None = None
+                   ) -> pd.DataFrame:
+    """Exact BM25 top-k over pre-computed per-term (docids, BM25
     partial) pairs (the partial-cache serving path): contribution =
-    idf * partial in the same ascending-term concatenation feeding
-    _aggregate_topk that the frame-based paths use, so results are
-    bit-identical. ``req_terms`` (bool must+should): the required
-    subset of the terms — docs must match all of them; min_hits then
-    counts the remaining (should) terms.
+    idf * partial, summed per doc in the ascending-term order of the
+    concatenation feeding _aggregate_topk that the frame-based paths
+    use, so results are bit-identical. ``req_terms`` (bool
+    must+should): the required subset of the terms — docs must match
+    all of them; min_hits then counts the remaining (should) terms.
 
-    Dense fast path (or/and without must): per-term docids are sorted,
-    so (min, max) across terms is O(#terms); when the covered docid
-    range is near-dense, each term scatter-adds idf*partial straight
-    into one dense score array — no concatenation, no bincount pass.
-    Per-doc accumulation still happens in ascending-term order, so
-    float summation (hence every score bit) matches the concat path."""
+    Without ``req_terms``:
+
+    - A query needing more matched terms than have postings (an
+      absent AND term, min_hits above the live terms) is empty; one
+      live term's contributions are its docs' scores, selected
+      directly.
+    - Dense path: per-term docids are sorted, so (min, max) across
+      terms is O(#terms); when the covered docid range is near-dense,
+      each term scatters idf*partial straight into one dense score
+      array (the first assigns: 0.0 + c == c) — no concatenation, no
+      bincount pass, the same per-doc summation order.
+    - Selection by a score floor θ (MaxScore's threshold, Turtle &
+      Flood 1995): θ is the k-th largest contribution of the shortest
+      list holding at least k postings. Contributions are >= 0 and
+      rounding is monotone (fl(a + c) >= c for a >= 0), so k docs end
+      with a score >= θ, and the top k lie among the docs scoring
+      >= θ. When at least k of those qualify, they are the answer,
+      ties at the k-th score included; otherwise (or with no such
+      list, or an idf <= 0) the selection scans the whole range.
+      ``count(name)`` is told which selection ran:
+      ``topk_floor_used`` or ``topk_floor_fallback``."""
     live = [(t, pp[t][0], pp[t][1]) for t in sorted(pp)
             if pp[t][0].size]
     if not live:
         return _EMPTY_TOPK.copy()
     if req_terms is None:
+        if (n_query_terms if mode == "and" else (min_hits or 1)) \
+                > len(live):
+            return _EMPTY_TOPK.copy()
+        if len(live) == 1:
+            t, d, part = live[0]
+            return _finish_topk(d, idf[t] * part, k, "or", 1, None,
+                                after, excl, None)
         n = sum(d.shape[0] for _, d, _ in live)
         mn = min(int(d[0]) for _, d, _ in live)
         rng = max(int(d[-1]) for _, d, _ in live) - mn + 1
@@ -494,20 +533,40 @@ def score_partials(pp: dict[str, tuple[np.ndarray, np.ndarray]],
             need_hits = (mode == "and"
                          or (min_hits is not None and min_hits > 1))
             dhits = np.zeros(rng, dtype=np.int64) if need_hits else None
-            for t, d, part in live:
+            floor_t = (min(((d.size, t) for t, d, _ in live
+                            if d.size >= k), default=(0, None))[1]
+                       if all(idf[t] > 0 for t, _, _ in live) else None)
+            theta = 0.0
+            for i, (t, d, part) in enumerate(live):
                 off = d - mn
-                dscore[off] += idf[t] * part
+                c = idf[t] * part
+                if i == 0:
+                    dscore[off] = c
+                else:
+                    dscore[off] += c
                 if dhits is not None:
                     dhits[off] += 1
-            if need_hits:
-                uniq = np.flatnonzero(dhits)
-                hits = dhits[uniq]
-            else:
-                uniq = np.flatnonzero(dscore)
-                hits = None
+                if t == floor_t:
+                    theta = np.partition(c, c.size - k)[c.size - k]
+            used = False
+            if theta > 0:
+                cand = np.flatnonzero(dscore >= theta)
+                got = _qualify(cand + mn, dscore[cand], mode,
+                               n_query_terms,
+                               None if dhits is None else dhits[cand],
+                               after, excl, min_hits)
+                used = got[0].size >= k
+            if count is not None:
+                count("topk_floor_used" if used
+                      else "topk_floor_fallback")
+            if used:
+                return _topk_frame(*got, k)
+            uniq = np.flatnonzero((dscore if dhits is None else dhits)
+                                  != 0)
             return _finish_topk(uniq + mn, dscore[uniq], k, mode,
-                                n_query_terms, hits, after, excl,
-                                min_hits)
+                                n_query_terms,
+                                None if dhits is None else dhits[uniq],
+                                after, excl, min_hits)
     all_d, all_c, all_r = [], [], []
     for t, d, part in live:
         all_d.append(d)
@@ -1788,10 +1847,17 @@ def _top(tops: pd.DataFrame, k: int) -> pd.DataFrame:
 
 def _merge_local(parts: list[pd.DataFrame], k: int) -> pd.DataFrame:
     """_top over driver-side kernel outputs; a lone non-empty part is
-    already its group's final top-k, so it passes through."""
+    already its group's final top-k, so it passes through — as it is
+    when its index is the default RangeIndex (the kernels build fresh
+    frames, so no caller shares it), else re-indexed."""
     parts = [p for p in parts if len(p)]
     if len(parts) == 1:
-        return parts[0].reset_index(drop=True)
+        p = parts[0]
+        ix = p.index
+        if (isinstance(ix, pd.RangeIndex) and ix.start == 0
+                and ix.step == 1):
+            return p
+        return p.reset_index(drop=True)
     return _top(pd.concat(parts) if parts else _EMPTY_TOPK, k)
 
 
@@ -2257,9 +2323,12 @@ class SegmentedIndex:
         segments: row groups read from disk, pruned by footer min/max,
         served from the row-group cache, and the compressed bytes
         read; filter docid sets computed by a Spark job or served
-        from the memo (one count per segment and filtered call); and
-        the terms the decoded-postings cache loaded on a miss (absent
-        terms included) with the postings decoded for them."""
+        from the memo (one count per segment and filtered call); the
+        terms the decoded-postings cache loaded on a miss (absent
+        terms included) with the postings decoded for them; and how
+        topk_local's multi-term dense selections ran (score_partials):
+        from the score floor's candidates or by the full-range
+        fallback."""
         out: dict[str, int] = {}
         for s in self.subs:
             with s._lock:
@@ -2324,7 +2393,8 @@ class SegmentedIndex:
                 excl, [d for d, _, _ in s._decoded_terms(neg).values()])
                 if neg else excl)
             return score_partials(s._decoded_partials(terms, avgdl), idf,
-                                  k, mode, nq, excl=ex, **kw)
+                                  k, mode, nq, excl=ex, count=s._bump,
+                                  **kw)
 
         return sorted(set(terms) | negs), kernel, cached
 
@@ -3756,18 +3826,25 @@ class SegmentedIndex:
         """Doc-store point fetch with NO Spark job: docid lookup on each
         owning segment's row-group cache (docstore rows are docid-sorted
         per shard, so footer min/max prunes every row group but the
-        owners). Each stored row comes back once, in docid order;
-        deleted docs are dropped. Completes the ms-latency serving
-        path."""
+        owners), one ``take`` per row group holding a wanted docid,
+        one concatenation. Each stored row comes back once, in docid
+        order; deleted docs are dropped. Docids that route but match
+        no stored row give an empty frame with the docstore's columns
+        and dtypes. Completes the ms-latency serving path."""
         import pyarrow as pa
-        parts = [s._rg_take("docstore", ids) for s, ids in
-                 self._route(docids)]
+        parts = [t for s, ids in self._route(docids)
+                 for t in s._rg_take("docstore", ids)]
         if not parts:
             return pd.DataFrame()
         # generations built from different inputs may type a column
         # differently (e.g. an all-null one); promote to a common schema
-        return (pa.concat_tables(parts, promote_options="permissive")
-                .sort_by("docid").to_pandas(use_threads=False))
+        tbl = pa.concat_tables(parts, promote_options="permissive")
+        d = tbl.column("docid").to_numpy()
+        if not np.all(d[:-1] < d[1:]):
+            # file order is hive path order: shard=10 sorts before
+            # shard=2, so past ten shards rows can arrive out of order
+            tbl = tbl.sort_by("docid")
+        return tbl.to_pandas(use_threads=False)
 
     def fetch_docs(self, docids: Iterable[int]) -> DataFrame:
         """Doc-store fetch (B9): per owning segment, a shard-pruned +
@@ -4029,7 +4106,8 @@ class FTSIndex(SegmentedIndex):
         self._read_counters = dict.fromkeys(
             ("row_groups_read", "row_groups_pruned", "row_groups_cached",
              "bytes_read", "filter_sets_computed", "filter_sets_cached",
-             "terms_decoded", "postings_decoded"),
+             "terms_decoded", "postings_decoded", "topk_floor_used",
+             "topk_floor_fallback"),
             0)
 
     @property
@@ -4339,12 +4417,21 @@ class FTSIndex(SegmentedIndex):
             c["bytes_read"] += sum(g.nbytes for g in read)
         return cat, [got[g.key] for g in groups]
 
-    def _rg_take(self, table: str, want: np.ndarray):
+    def _bump(self, key: str) -> None:
+        """Add one to a read counter, under the handle lock."""
+        with self._lock:
+            self._read_counters[key] += 1
+
+    def _rg_take(self, table: str, want: np.ndarray) -> list:
         """Rows of ``table`` whose key is in ``want`` (sorted, unique),
-        as Arrow in file then row order — what a pyarrow dataset scan
-        filtered on ``key.isin(want)`` returns."""
+        as one Arrow table per row group holding any, in file then row
+        order — what a pyarrow dataset scan filtered on
+        ``key.isin(want)`` returns, before its concatenation; the
+        table's empty table when no row group holds one."""
         cat, entries = self._rg_entries(table, want)
-        return cat.take(entries, [r for r, _ in cat.locate(entries, want)])
+        return [e.tbl.take(r) for e, (r, _) in
+                zip(entries, cat.locate(entries, want))
+                if r.size] or [cat.schema.empty_table()]
 
     def _term_rows(self, terms: list[str]
                    ) -> list[tuple[_Loaded, np.ndarray, np.ndarray]]:

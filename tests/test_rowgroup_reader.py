@@ -1,7 +1,7 @@
 """Driver-local row-group reader of FTSIndex: fetch_docs_local's
 contract against the pyarrow dataset scan it replaced, the read
-counters (footer pruning, cache hits), and one handle shared by
-several threads."""
+counters (footer pruning, cache hits, topk_local's score-floor
+selection), and one handle shared by several threads."""
 import glob
 import os
 import random
@@ -17,6 +17,7 @@ import pytest
 
 from sparkfts import BuildConfig, FTSIndex, build_index
 from sparkfts.fixtures import make_transcripts
+from sparkfts.streaming import CombinedIndex
 
 ORDER = ["conv_id", "turn_idx"]
 
@@ -112,6 +113,66 @@ def test_fetch_contract_routed(spark, routed):
     ids = live[::7].tolist() + gaps[::11][:10].tolist()
     got = check_fetch(idx, ids)
     assert set(got["docid"]) == set(live[::7].tolist())
+
+
+def test_fetch_docid_order_past_ten_shards(spark, tmp_path):
+    """Twelve shards: hive path order puts shard=10 and shard=11
+    before shard=2, so the docstore row groups arrive out of docid
+    order; the fetch still returns docid order."""
+    root = str(tmp_path / "s12")
+    build_index(spark, spark.createDataFrame(make_transcripts(24, seed=7)),
+                root, order_cols=ORDER,
+                cfg=BuildConfig(num_shards=12, partitions=2))
+    idx = FTSIndex(spark, root)
+    los = [g.lo for g in idx._catalog("docstore").groups]
+    assert los != sorted(los)
+    got = check_fetch(idx, stored_docids(root)[::3].tolist())
+    assert got["docid"].is_monotonic_increasing
+    assert got["shard"].nunique() == 12
+
+
+def test_fetch_unstored_docid_keeps_docstore_schema(spark, plain):
+    """A docid past the last stored one routes to the segment but
+    matches no row: zero rows, the docstore's columns and dtypes."""
+    idx = FTSIndex(spark, plain)
+    got = idx.fetch_docs_local([idx.N + 5])
+    want = (ds.dataset(os.path.join(plain, "docstore"), format="parquet",
+                       partitioning="hive")
+            .schema.empty_table().to_pandas())
+    assert len(got) == 0 and len(want.columns) > 1
+    pd.testing.assert_frame_equal(got, want)
+
+
+def test_topk_local_floor_counters(spark, plain, tmp_path):
+    """topk_local counts its selection per segment: a plain OR query
+    answers from the score floor's candidates; once tombstones remove
+    every ranked doc but three, the floor's candidates no longer fill
+    k and the selection falls back to the full scan — same answer as
+    the exhaustive ranking with the deletes dropped."""
+    root = str(tmp_path / "del")
+    shutil.copytree(plain, root)
+    ci = CombinedIndex(spark, root)
+    q = "index query"
+
+    def delta(call):
+        before = ci.read_counters()
+        got = call()
+        after = ci.read_counters()
+        return got, tuple(after[c] - before[c] for c in
+                          ("topk_floor_used", "topk_floor_fallback"))
+
+    full = ci.topk_pandas(q, k=10 ** 6, method="exact")
+    assert len(full) > 20
+    got, n = delta(lambda: ci.topk_local(q, k=10))
+    assert n == (1, 0)
+    pd.testing.assert_frame_equal(got, full.head(10))
+    ci.delete_docs(full["docid"].iloc[:-3].tolist())
+    got, n = delta(lambda: ci.topk_local(q, k=10))
+    assert n == (0, 1)
+    pd.testing.assert_frame_equal(got,
+                                  full.tail(3).reset_index(drop=True))
+    pd.testing.assert_frame_equal(
+        got, ci.topk_pandas(q, k=10, method="exact"))
 
 
 def test_read_counters_cache_and_pruning(spark, plain, tmp_path):
@@ -387,8 +448,8 @@ def test_th_collision_keeps_terms_apart(spark, plain, tmp_path,
                         lambda t: ha if t == b else real(t))
     idx = FTSIndex(spark, root)
     # the collision is real: one th locates both terms' rows
-    assert (idx._rg_take("postings", np.array([ha])).num_rows
-            == len(want_rows))
+    located = idx._rg_take("postings", np.array([ha]))
+    assert sum(t.num_rows for t in located) == len(want_rows)
     for load in ([b], [a, b]):
         idx._dec_cache.clear()
         idx._dec_cache_sz.clear()

@@ -12,9 +12,11 @@ falls on both sides alike. A request is what serve_zipf times:
 ``topk_local``, then ``fetch_docs_local`` of its hits. After
 perfbench's warm-up requests (untimed, on both sides), it prints each
 side's QPS (requests ÷ summed request time), p50 and p90, and how many
-blocks each side won. It exits 1 if any ranking or fetch differs
-between the sides (perfbench's ``same_ranking``, and the same fetched
-docids).
+blocks each side won, and each side's ``read_counters()`` delta over
+the timed requests (which selection ``topk_local`` ran, how many terms
+and postings it decoded), so an A/B shows which path served. It exits
+1 if any ranking or fetch differs between the sides (perfbench's
+``same_ranking``, and the same fetched docids).
 
 The corpus, the query stream, the serve_zipf constants and the Spark
 session (perfbench's ``make_spark``, so the build and the serving run
@@ -37,6 +39,10 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 REQUESTS = 2000     # timed requests per side
 BLOCK = 50          # requests per alternating block
+# read_counters() keys printed as timed deltas; a tree without one
+# prints "-"
+COUNTERS = ("topk_floor_used", "topk_floor_fallback", "terms_decoded",
+            "postings_decoded")
 
 
 def _spark(work: str):
@@ -69,7 +75,8 @@ def build_worker(src: str, root: str, work: str, shards: int,
 def serve_worker(root: str, work: str, k: int) -> None:
     """Open ``root`` and answer blocks of requests read from stdin, one
     JSON list of [query, mode] per line, with one JSON line per block:
-    each request's wall ms and its (docids, scores, fetched docids)."""
+    each request's wall ms, its (docids, scores, fetched docids), and
+    the handle's read counters after the block."""
     proto, sys.stdout = sys.stdout, sys.stderr   # stdout carries replies
     spark, stop = _spark(work)
     from sparkfts import FTSIndex
@@ -87,8 +94,9 @@ def serve_worker(root: str, work: str, k: int) -> None:
                 res.append((ids, hits["score"].tolist(),
                             [] if docs is None
                             else sorted(docs["docid"].tolist())))
-            print(json.dumps({"ms": ms, "res": res}), file=proto,
-                  flush=True)
+            print(json.dumps({"ms": ms, "res": res,
+                              "counters": idx.read_counters()}),
+                  file=proto, flush=True)
     finally:
         stop()
 
@@ -115,6 +123,9 @@ class Side:
         self.proc = _launch(tree, ["--serve", root, wdir, str(k)], self.log,
                             stdin=subprocess.PIPE, stdout=subprocess.PIPE)
         self.ms: list[float] = []
+        # read_counters() after the warm-up and after the last block
+        self.warm: dict = {}
+        self.last: dict = {}
         self._read()
 
     def _read(self) -> str:
@@ -188,7 +199,7 @@ def main(argv=None) -> int:
         warm = workloads.WARMUP_REQUESTS
         stream = inputs.query_stream(args.seed, warm + REQUESTS)
         for s in sides:
-            s.run(stream[:warm])
+            s.warm = s.run(stream[:warm])["counters"]
         diffs, wins = [], {"A": 0, "B": 0}
         for i, lo in enumerate(range(warm, len(stream), BLOCK)):
             block = stream[lo:lo + BLOCK]
@@ -196,6 +207,7 @@ def main(argv=None) -> int:
                    for s in (sides if i % 2 == 0 else sides[::-1])}
             for s in sides:
                 s.ms.extend(got[s.name]["ms"])
+                s.last = got[s.name]["counters"]
             ta, tb = (sum(got[n]["ms"]) for n in ("A", "B"))
             if ta != tb:
                 wins["A" if ta < tb else "B"] += 1
@@ -219,6 +231,13 @@ def main(argv=None) -> int:
               f"{np.percentile(ms, 50):.2f} | {np.percentile(ms, 90):.2f} | "
               f"{wins[s.name]} |")
     print(f"B/A QPS: {qps['B'] / qps['A'] - 1:+.1%}")
+    print("\nread_counters() delta over the timed requests:")
+    print("| side | " + " | ".join(COUNTERS) + " |")
+    print("|---|" + "---|" * len(COUNTERS))
+    for s in sides:
+        print(f"| {s.name} | " + " | ".join(
+            str(s.last[c] - s.warm[c]) if c in s.last else "-"
+            for c in COUNTERS) + " |")
     if diffs:
         print(f"FAIL: {len(diffs)} requests ranked differently, first: "
               f"{diffs[0]!r}")
