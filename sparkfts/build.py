@@ -21,7 +21,9 @@ one-reducer-builds-one-shard model (README.md:29-33) but from scratch:
      docs_per_shard.
   3. Doc store written as a pure relational pass (no tokenization: doc
      lengths live inside the posting streams, Lucene-norms style, and
-     avgdl falls out of the dictionary as sum(cf)/N).
+     avgdl falls out of the dictionary as sum(cf)/N) — or, on the
+     direct shard-span feed, by the postings tasks from the span read
+     they already make (_direct_reader).
   4. ONE shuffle at doc granularity — exact-placement hash repartition
      (placement.repartition_exact) of (shard, docid, text) rows: the
      contiguous balanced layout rangepartitioning would pick, WITHOUT
@@ -226,8 +228,9 @@ def _conv_sizes_local(files: list[str], conv_col: str, turn_col: str,
     When that holds the postings kernel can read its own shard row
     spans straight from the files — docid = row index — and the
     build's doc-granularity shuffle is pure overhead; ``direct``
-    carries the file/row-group layout the readers need and the
-    column names every file physically holds (``columns``)."""
+    carries the file/row-group layout the readers need, the column
+    names every file physically holds (``columns``) and the Arrow type
+    of each column that has one type in every file (``types``)."""
     try:
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -235,12 +238,15 @@ def _conv_sizes_local(files: list[str], conv_col: str, turn_col: str,
         file_rows: list[int] = []
         rg_rows: list[list[int]] = []
         physical: set[str] | None = None
+        types: dict | None = None   # column → its Arrow type in every file
         for f in files:
             md = pq.ParquetFile(f)
-            names = set(md.schema_arrow.names)
-            if conv_col not in names or turn_col not in names:
+            ft = {fl.name: fl.type for fl in md.schema_arrow}
+            if conv_col not in ft or turn_col not in ft:
                 return None
-            physical = names if physical is None else physical & names
+            physical = set(ft) if physical is None else physical & set(ft)
+            types = ft if types is None else {
+                c: t for c, t in types.items() if ft.get(c) == t}
             m = md.metadata
             file_rows.append(m.num_rows)
             rg_rows.append([m.row_group(i).num_rows
@@ -285,7 +291,8 @@ def _conv_sizes_local(files: list[str], conv_col: str, turn_col: str,
                     direct = {"files": list(files),
                               "file_rows": file_rows,
                               "rg_rows": rg_rows, "n": int(total),
-                              "columns": sorted(physical)}
+                              "columns": sorted(physical),
+                              "types": types}
         except Exception:   # noqa: BLE001 — order proof is optional
             direct = None
         return out, direct
@@ -443,18 +450,18 @@ def _make_shard_kernel(cfg: BuildConfig,
             from . import query  # noqa: F401
         except Exception:   # noqa: BLE001 — warmup only, never fatal
             pass
-        t0 = time.perf_counter()
         cur: int | None = None
         cur_spec: list = default_spec
         acc_ids: list[np.ndarray] = []
         acc_txt: dict[str, list] = {}
 
-        def invert_field(shard, docids, texts, prefix, ftok):
+        def invert_field(shard, docids, texts, prefix, ftok, t0):
             """One field's dictionary rows for one shard, emitted as a
             single Arrow RecordBatch built columnar (blob = one
             zero-copy binary array over the shard's contiguous byte
             buffer; block metadata = ListArrays from flat arrays +
-            offsets) — no per-term Python emit loop."""
+            offsets) — no per-term Python emit loop. ``enc_us`` is the
+            time since ``t0``, the start of the shard's processing."""
             flat, counts = tokenize_arrow(texts, ftok)
             if len(flat) == 0:
                 return None
@@ -557,6 +564,7 @@ def _make_shard_kernel(cfg: BuildConfig,
         def process_shard():
             if not acc_ids:
                 return []
+            t0 = time.perf_counter()
             shard = int(cur)
             docids = np.concatenate(acc_ids)
             # docid uniqueness guard (cost ≪ the token lexsort below):
@@ -575,7 +583,7 @@ def _make_shard_kernel(cfg: BuildConfig,
                     [a.combine_chunks()
                      if isinstance(a, pa.ChunkedArray) else a
                      for a in acc_txt[fname]])
-                rb = invert_field(shard, docids, texts, prefix, ftok)
+                rb = invert_field(shard, docids, texts, prefix, ftok, t0)
                 if rb is not None:
                     out.append(rb)
             acc_ids.clear()
@@ -606,19 +614,112 @@ def _make_shard_kernel(cfg: BuildConfig,
     return kernel
 
 
-def _direct_postings_df(spark: SparkSession, direct: dict,
-                        text_col: str, todo_sorted: list[int],
-                        docs_per_shard: int, docid_offset: int,
-                        cfg: BuildConfig, p: int) -> DataFrame:
-    """Postings job as a one-stage shard-span fan-out over the input
-    files: spark.range over shard RANKS (contiguous rank chunks ==
-    repartition_exact's balanced contiguous grouping) → each task
-    reconstructs (shard, docid, text) for its shards by reading only
-    the row groups covering [shard*dps, (shard+1)*dps) — valid because
-    the caller proved docid == file row index — and streams them
-    through the UNCHANGED shard kernel. Output rows are identical to
-    the exchange plan's (same per-shard row sets in docid order; the
-    kernel sorts internally either way)."""
+# Spark's parquet codecs that pyarrow writes in the same format
+# (Spark's "lz4" is Hadoop-framed, not pyarrow's LZ4_RAW).
+_PA_CODECS = {"snappy": "snappy", "gzip": "gzip", "zstd": "zstd",
+              "uncompressed": "none", "none": "none"}
+
+
+def _docstore_safe_types() -> dict:
+    """Arrow type → the Spark type spark.read.parquet gives a column of
+    that type — in the input files, in a Spark-written docstore and in
+    a pyarrow-written one alike. Only columns of these types are written
+    by the in-task docstore writer (each pair is pinned through Spark by
+    tests/test_build_query.py::test_docstore_safe_types_round_trip). A
+    timestamp without a time zone reads back as timestamp_ntz; one with
+    a zone, nanosecond units, decimals, unsigned and nested types are
+    left to the Spark job."""
+    import pyarrow as pa
+    return {pa.bool_(): T.BooleanType(), pa.int8(): T.ByteType(),
+            pa.int16(): T.ShortType(), pa.int32(): T.IntegerType(),
+            pa.int64(): T.LongType(), pa.float32(): T.FloatType(),
+            pa.float64(): T.DoubleType(), pa.string(): T.StringType(),
+            pa.binary(): T.BinaryType(), pa.date32(): T.DateType(),
+            pa.timestamp("us"): T.TimestampNTZType()}
+
+
+def _docstore_in_task_gate(df: DataFrame, store_cols: list[str],
+                           direct: dict | None, use_direct: bool,
+                           n_docs: int, codec: str
+                           ) -> tuple[bool, str | None]:
+    """(True, None) when the direct-feed tasks may write the docstore
+    themselves, else (False, why not) and the Spark docstore job runs.
+    The in-task file must read back in Spark as the job's file would:
+    every store column is physical, with one type, in every input file,
+    and that type reads back in Spark as the input column's type.
+    ``codec`` is the session's parquet codec."""
+    if not use_direct:
+        return False, "exchange feed"
+    if n_docs == 0:
+        return False, "empty input"
+    if codec not in _PA_CODECS:
+        return False, f"parquet codec {codec!r} has no pyarrow twin"
+    safe = _docstore_safe_types()
+    for c in store_cols:
+        if c in ("shard", "docid"):
+            return False, f"input column {c!r} clashes with the docstore's"
+        if c not in direct["columns"]:
+            return False, f"column {c!r} is not in every input file"
+        t = direct["types"].get(c)
+        if t is None:
+            return False, f"column {c!r} differs in type across files"
+        if safe.get(t) != df.schema[c].dataType:
+            return False, (f"column {c!r}: Arrow type {t} is outside "
+                           "the docstore's safe set")
+    return True, None
+
+
+def _write_docstore_shard(tbl, dirpath: str, name: str,
+                          codec: str) -> None:
+    """Write one docstore shard file the way storage._write_table_atomic
+    writes: a hidden temp file unique to this task attempt, then
+    os.replace under ``name`` — a retried or speculative attempt lands
+    the same file under the same name. The settings keep the file no
+    larger than the Spark job's: dictionary pages only for columns
+    whose strided sample repeats (at most half its values distinct), no
+    min/max for string/binary columns with values past 64 bytes
+    (parquet-mr's column-index truncation length; docid keeps its
+    statistics, which _RowGroupCatalog pruning and
+    storage._footer_max_docid read), row groups of about Spark's
+    128 MB, and no Arrow schema blob (Spark's files carry none)."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    n = tbl.num_rows
+    sample = np.arange(0, n, max(1, n // 4096))
+    dict_cols, stat_cols = [], []
+    for cname, col in zip(tbl.column_names, tbl.columns):
+        if 2 * pc.count_distinct(col.take(sample)).as_py() <= sample.size:
+            dict_cols.append(cname)
+        if not (pa.types.is_string(col.type)
+                or pa.types.is_binary(col.type)) \
+                or (pc.max(pc.binary_length(col)).as_py() or 0) <= 64:
+            stat_cols.append(cname)
+    os.makedirs(dirpath, exist_ok=True)
+    tmp = os.path.join(dirpath, f"_tmp-{uuid.uuid4().hex}")
+    pq.write_table(tbl, tmp, compression=codec,
+                   use_dictionary=dict_cols, write_statistics=stat_cols,
+                   row_group_size=max(1, (128 << 20) * n
+                                      // max(1, tbl.nbytes)),
+                   store_schema=False)
+    os.replace(tmp, os.path.join(dirpath, name))
+
+
+def _direct_reader(direct: dict, text_col: str, todo_sorted: list[int],
+                   docs_per_shard: int, docid_offset: int,
+                   cfg: BuildConfig, store: dict | None = None):
+    """The mapInArrow function of _direct_postings_df: for each shard
+    RANK in its input batches, one read of the shard's row span
+    [shard*dps, (shard+1)*dps) from the input files (only the row groups
+    covering it) feeds the UNCHANGED shard kernel the (shard, docid,
+    text) rows — valid because the caller proved docid == file row
+    index. With ``store`` (dir, cols, schema, name, codec) the same
+    read also carries the store columns, and the task writes the
+    shard's docstore file ``<dir>/shard=S/<name>``: docid, then the
+    store columns, in docid order — the rows and order the Spark
+    docstore job writes."""
     import pyarrow as pa
 
     files = direct["files"]
@@ -629,6 +730,8 @@ def _direct_postings_df(spark: SparkSession, direct: dict,
     kernel = _make_shard_kernel(cfg)
     dps = int(docs_per_shard)
     off = int(docid_offset)
+    read = [text_col] if store is None else list(
+        dict.fromkeys([*store["cols"], text_col]))
 
     def reader(batches):
         import pyarrow.compute as _pc
@@ -636,9 +739,10 @@ def _direct_postings_df(spark: SparkSession, direct: dict,
 
         open_files: dict[int, object] = {}
 
-        def rows_for(lo: int, hi: int):
-            """Concatenated text array for global rows [lo, hi)."""
-            parts = []
+        def rows_for(lo: int, hi: int) -> dict:
+            """The ``read`` columns of global rows [lo, hi), one array
+            each."""
+            parts: dict[str, list] = {c: [] for c in read}
             for j in range(len(files)):
                 f0, f1 = int(file_starts[j]), int(file_starts[j + 1])
                 a, b = max(lo, f0), min(hi, f1)
@@ -654,20 +758,28 @@ def _direct_postings_df(spark: SparkSession, direct: dict,
                                          side="right") - 1)
                 g1 = int(np.searchsorted(bounds, b - f0, side="left"))
                 t = pf.read_row_groups(list(range(g0, g1)),
-                                       columns=[text_col])
-                col = t.column(0).slice(int(a - f0 - bounds[g0]),
-                                        int(b - a))
-                parts.append(col.combine_chunks()
-                             if isinstance(col, pa.ChunkedArray)
-                             else col)
-            if not parts:
-                return pa.array([], type=pa.string())
-            out = (pa.concat_arrays(parts) if len(parts) > 1
-                   else parts[0])
-            out = _pc.fill_null(out, "")
-            if out.type != pa.string():
-                out = out.cast(pa.string())
-            return out
+                                       columns=read).slice(
+                    int(a - f0 - bounds[g0]), int(b - a))
+                for c in read:
+                    parts[c].extend(t.column(c).chunks)
+            return {c: pa.chunked_array(v).combine_chunks()
+                    for c, v in parts.items()}
+
+        def shard_text(s: int, lo: int, hi: int, ids: np.ndarray):
+            """Shard ``s``'s text column; writes its docstore file
+            first when ``store`` is set (the other columns are dropped
+            before the kernel runs)."""
+            cols = rows_for(lo, hi)
+            if store is not None:
+                _write_docstore_shard(
+                    pa.Table.from_arrays(
+                        [pa.array(ids)] + [cols[c] for c in store["cols"]],
+                        schema=store["schema"]),
+                    os.path.join(store["dir"], f"shard={s}"),
+                    store["name"], store["codec"])
+            texts = _pc.fill_null(cols[text_col], "")
+            return (texts if texts.type == pa.string()
+                    else texts.cast(pa.string()))
 
         def gen():
             for rb in batches:
@@ -676,15 +788,14 @@ def _direct_postings_df(spark: SparkSession, direct: dict,
                     lo, hi = s * dps, min((s + 1) * dps, n)
                     if lo >= hi:
                         continue
-                    texts = rows_for(lo, hi)
+                    ids = np.arange(lo + off, hi + off, dtype=np.int64)
+                    texts = shard_text(s, lo, hi, ids)
                     for c0 in range(0, hi - lo, 65536):
                         c1 = min(c0 + 65536, hi - lo)
                         yield pa.RecordBatch.from_arrays(
                             [pa.array(np.full(c1 - c0, s,
                                               dtype=np.int32)),
-                             pa.array(np.arange(lo + c0 + off,
-                                                lo + c1 + off,
-                                                dtype=np.int64)),
+                             pa.array(ids[c0:c1]),
                              texts.slice(c0, c1 - c0)],
                             # the single-field kernel spec reads the
                             # field as "text" (the exchange plan
@@ -697,6 +808,23 @@ def _direct_postings_df(spark: SparkSession, direct: dict,
             for pf in open_files.values():
                 pf.close()
 
+    return reader
+
+
+def _direct_postings_df(spark: SparkSession, direct: dict,
+                        text_col: str, todo_sorted: list[int],
+                        docs_per_shard: int, docid_offset: int,
+                        cfg: BuildConfig, p: int,
+                        store: dict | None = None) -> DataFrame:
+    """Postings job as a one-stage shard-span fan-out over the input
+    files: spark.range over shard RANKS (contiguous rank chunks ==
+    repartition_exact's balanced contiguous grouping) → each task runs
+    _direct_reader over its shards (and, with ``store``, writes their
+    docstore files). Output rows are identical to the exchange plan's
+    (same per-shard row sets in docid order; the kernel sorts
+    internally either way)."""
+    reader = _direct_reader(direct, text_col, todo_sorted,
+                            docs_per_shard, docid_offset, cfg, store)
     return (spark.range(0, len(todo_sorted),
                         numPartitions=max(1, min(p, len(todo_sorted))))
             .mapInArrow(reader, schema=POSTING_SCHEMA))
@@ -846,19 +974,28 @@ def build_index(spark: SparkSession, df: DataFrame, out_dir: str,
 
     Job structure (the serial floor between parallel stages is what caps
     N-vs-4N scaling efficiency, so the count matters): (1) conv-sizes agg
-    for docid assignment, (2) docstore write — a narrow scan+broadcast-
-    join pass, no exchange, (3) postings write — the ONE doc-granularity
-    range shuffle + Arrow kernel, (4) global term_stats write, (5)
-    per-shard manifest aggregate (collected from a cached narrow
-    projection shared with 4). Stats + manifest parquet are written
-    driver-side (pyarrow, atomic rename) — tiny tables don't get Spark
-    jobs.
+    for docid assignment (driver-side pyarrow for a bare local parquet
+    scan), (2) docstore write — a narrow scan+broadcast-join pass, no
+    exchange, (3) postings write — the ONE doc-granularity range
+    shuffle + Arrow kernel, (4) global term_stats write, (5) per-shard
+    manifest aggregate (collected from a cached narrow projection
+    shared with 4). On the direct shard-span feed (docid proven equal
+    to the file row index) (3) needs no shuffle, and when
+    _docstore_in_task_gate passes its tasks also write the docstore
+    from the same span read, so (2) is no job at all and the build
+    runs ONE write job. ``summary["plan"]`` reports the choice:
+    {"feed": "direct"|"exchange", "docstore": "in_task"|"spark",
+    "declined": the gate's reason or None}. Stats + manifest parquet
+    are written driver-side (pyarrow, atomic rename) — tiny tables
+    don't get Spark jobs; on small dictionaries so are (4) and (5).
 
-    Crash-safe resume: docstore/postings use dynamic partition overwrite,
-    so re-running a shard REPLACES its partition directory instead of
-    appending — a build killed mid-write leaves uncommitted shard dirs
-    that the resume rewrites rather than duplicates; a shard is visible
-    to readers iff its manifest row says committed.
+    Crash-safe resume: docstore/postings use dynamic partition overwrite
+    (the in-task docstore: the driver clears the todo shards' dirs and
+    each task renames its one file into place), so re-running a shard
+    REPLACES its partition directory instead of appending — a build
+    killed mid-write leaves uncommitted shard dirs that the resume
+    rewrites rather than duplicates; a shard is visible to readers iff
+    its manifest row says committed.
     """
     from . import storage
     build_id = storage.new_build_id(out_dir)
@@ -976,10 +1113,43 @@ def build_index(spark: SparkSession, df: DataFrame, out_dir: str,
 
     N = n_docs
 
+    # Direct shard-span feed (r8): when the grouped bare-scan path
+    # PROVED docid == file row index (see _conv_sizes_local), each
+    # kernel task pyarrow-reads exactly its own shards' row spans
+    # (row-group pruned) from the input files — same rows, same kernel,
+    # but the scan → broadcast-join → doc-granularity exchange that
+    # existed only to re-group rows the file already groups is gone
+    # (guide §2 "remove shuffles outright"). Tasks read only their own
+    # spans, so there is no read amplification at any scale; the
+    # DataFrame plan below stays for every input the proof does not
+    # cover.
+    use_direct = (direct_meta is not None
+                  and cfg.fields is None
+                  and text_col in direct_meta["columns"]
+                  and isinstance(df.schema[text_col].dataType,
+                                 T.StringType))
+    # routed builds mint internal docids, so the user's original id
+    # column stays in the doc store for mapping back
+    store_cols = [c for c in df.columns
+                  if c != docid_col or cfg.routing_col is not None]
+    # On the direct feed the docstore is a column subset of the input
+    # in file order, so the postings tasks write it from the same span
+    # read (the reference's reducer likewise writes its whole shard in
+    # one pass, BaseESReducer.java:135-166) whenever the gate proves
+    # the file reads back in Spark as the Spark job's would.
+    ds_codec = spark.conf.get("spark.sql.parquet.compression.codec",
+                              "snappy").lower()
+    in_task, declined = _docstore_in_task_gate(
+        df, store_cols, direct_meta, use_direct, N, ds_codec)
+    plan = {"feed": "direct" if use_direct else "exchange",
+            "docstore": "in_task" if in_task else "spark",
+            "declined": declined}
+
     if todo:
-        # Two independent write jobs over `doc`, submitted CONCURRENTLY
-        # (Spark schedules jobs from separate driver threads; tasks
-        # interleave on free slots):
+        # Job structure. Direct feed with the in-task docstore: ONE
+        # write job. Otherwise two independent write jobs over `doc`,
+        # submitted CONCURRENTLY (Spark schedules jobs from separate
+        # driver threads; tasks interleave on free slots):
         #   docstore — the reference's _source / fetch path
         #     (BaseESReducer keeps JSON in ES; ours is the input row
         #     keyed by docid, sorted so parquet row-group min/max stats
@@ -1008,29 +1178,37 @@ def build_index(spark: SparkSession, df: DataFrame, out_dir: str,
         import threading
         pmode = "dynamic" if committed else "static"
         sub = doc.where(F.col("shard").isin(todo))
-        # routed builds mint internal docids, so the user's original id
-        # column stays in the doc store for mapping back
-        store_cols = [c for c in df.columns
-                      if c != docid_col or cfg.routing_col is not None]
+        ds_dir = storage.path(out_dir, "docstore")
         errs: list[BaseException] = []
+        th = None
+        if in_task:
+            # the overwrite semantics of the Spark write, applied by
+            # the driver before the job: a fresh build clears the
+            # docstore (static), a resume only its todo shards
+            # (dynamic). A shard's rows are live once its manifest row
+            # commits, as on the Spark path.
+            import shutil as _shutil
+            for d in ([ds_dir] if not committed else
+                      [os.path.join(ds_dir, f"shard={s}") for s in todo]):
+                _shutil.rmtree(d, ignore_errors=True)
+            os.makedirs(ds_dir, exist_ok=True)
+        else:
+            def _write_docstore() -> None:
+                try:
+                    (sub.select("shard", "docid", *store_cols)
+                        .sortWithinPartitions("docid")
+                        .write.mode("overwrite")
+                        .option("partitionOverwriteMode", pmode)
+                        .partitionBy("shard")
+                        .parquet(ds_dir))
+                except BaseException as e:   # surfaced after join()
+                    errs.append(e)
 
-        def _write_docstore() -> None:
-            try:
-                (sub.select("shard", "docid", *store_cols)
-                    .sortWithinPartitions("docid")
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", pmode)
-                    .partitionBy("shard")
-                    .parquet(storage.path(out_dir, "docstore")))
-            except BaseException as e:   # surfaced after join()
-                errs.append(e)
-
-        import os as _os
-        overlap = _os.environ.get("SPARKFTS_NO_OVERLAP") != "1"
-        th = threading.Thread(target=_write_docstore, name="docstore")
-        th.start()
-        if not overlap:
-            th.join()   # sequential (diagnostics / constrained memory)
+            th = threading.Thread(target=_write_docstore,
+                                  name="docstore")
+            th.start()
+            if os.environ.get("SPARKFTS_NO_OVERLAP") == "1":
+                th.join()   # sequential (diagnostics / constrained memory)
         p = cfg.partitions or int(
             spark.conf.get("spark.sql.shuffle.partitions"))
         if cfg.fields:
@@ -1039,21 +1217,6 @@ def build_index(spark: SparkSession, df: DataFrame, out_dir: str,
         else:
             fsel = [F.coalesce(F.col(text_col).cast("string"), F.lit(""))
                     .alias("text")]
-        # Direct shard-span feed (r8): when the grouped bare-scan path
-        # PROVED docid == file row index (see _conv_sizes_local), each
-        # kernel task pyarrow-reads exactly its own shards' row spans
-        # (row-group pruned) from the input files — same rows, same
-        # kernel, but the scan → broadcast-join → doc-granularity
-        # exchange that existed only to re-group rows the file already
-        # groups is gone (guide §2 "remove shuffles outright"). Tasks
-        # read only their own spans, so there is no read amplification
-        # at any scale; the DataFrame plan below stays for every input
-        # the proof does not cover.
-        use_direct = (direct_meta is not None
-                      and cfg.fields is None
-                      and text_col in direct_meta["columns"]
-                      and isinstance(df.schema[text_col].dataType,
-                                     T.StringType))
         if use_direct:
             # fan-out width: the direct feed has no exchange, so its
             # width is a pure task-count choice — follow the session's
@@ -1063,11 +1226,23 @@ def build_index(spark: SparkSession, df: DataFrame, out_dir: str,
             # because defaultParallelism <= partitions there). More
             # tasks also means FEWER shards per task, i.e. a smaller
             # per-task memory footprint than the exchange plan's.
+            import pyarrow as pa
             dp = spark.sparkContext.defaultParallelism
             width = max(1, min(len(todo), max(p, dp)))
+            store = None
+            if in_task:
+                store = {
+                    "dir": ds_dir, "cols": store_cols,
+                    "schema": pa.schema(
+                        [("docid", pa.int64())]
+                        + [(c, direct_meta["types"][c])
+                           for c in store_cols]),
+                    "name": f"part-00000-{build_id}.parquet",
+                    "codec": _PA_CODECS[ds_codec]}
             enc_out = _direct_postings_df(
                 spark, direct_meta, text_col, sorted(todo_set),
-                int(docs_per_shard), int(docid_offset), cfg, width)
+                int(docs_per_shard), int(docid_offset), cfg, width,
+                store)
         else:
             from .placement import repartition_exact
             enc_in = (repartition_exact(
@@ -1081,7 +1256,8 @@ def build_index(spark: SparkSession, df: DataFrame, out_dir: str,
                 .option("compression", POSTINGS_CODEC)
                 .partitionBy("shard")
                 .parquet(storage.path(out_dir, "postings")))
-        th.join()
+        if th is not None:
+            th.join()
         if errs:
             raise errs[0]
     if cfg.routing_col is not None:
@@ -1217,7 +1393,7 @@ def build_index(spark: SparkSession, df: DataFrame, out_dir: str,
     return {"n_docs": N, "avgdl": avgdl, "num_shards": cfg.num_shards,
             "docs_per_shard": docs_per_shard, "built_shards": sorted(todo_set),
             "docid_span": docid_span,
-            "build_id": build_id, "phases": phases,
+            "build_id": build_id, "phases": phases, "plan": plan,
             "wall_sec": time.perf_counter() - t_start}
 
 

@@ -354,7 +354,8 @@ def _topk_frame(uniq: np.ndarray, scores: np.ndarray,
         m = scores >= kth
         uniq, scores = uniq[m], scores[m]
     order = np.lexsort((uniq, -scores))[:k]
-    return pd.DataFrame({"docid": uniq[order], "score": scores[order]})
+    return pd.DataFrame({"docid": uniq[order], "score": scores[order]},
+                        copy=False)
 
 
 def _after_mask(docids: np.ndarray, scores: np.ndarray,

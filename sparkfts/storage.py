@@ -5,7 +5,7 @@ and query-side reads use ``os`` and pyarrow directly, so a root is a
 driver-local or shared-mount path that every executor sees at the same
 name — not a Hadoop URI (s3a://, hdfs://, file://):
 
-  <root>/docstore/shard=K/    input rows + docid + dl, sorted by docid
+  <root>/docstore/shard=K/    docid + the input columns, sorted by docid
   <root>/postings/shard=K/    dictionary + compressed posting rows
   <root>/term_stats/          global (term, df, cf) — idf source
   <root>/stats/               single row: N, avgdl, shard geometry, k1/b

@@ -417,7 +417,6 @@ def _merge_posting_kernel(dps_new: int, block: int, max_chunk: int,
 
     def kernel(batches):
         import time as _time
-        t0 = _time.perf_counter()
         cols: dict[str, list] = {n: [] for n, _ in out_fields}
         cur: tuple[int, str] | None = None
         acc: list[tuple] = []   # (gen, shift, blob, boff, bn)
@@ -426,6 +425,7 @@ def _merge_posting_kernel(dps_new: int, block: int, max_chunk: int,
         def flush_term():
             if cur is None or not acc:
                 return
+            t0 = _time.perf_counter()   # enc_us times this run only
             nshard, term = cur
             lo = nshard * dps_new
             hi = lo + dps_new

@@ -464,9 +464,9 @@ def test_direct_feed_needs_physical_text_column(spark, tmp_path,
 def test_direct_postings_feed_matches_exchange_plan(spark, tmp_path):
     """The no-shuffle shard-span postings feed (engaged when the bare
     scan's rows are proven to be in grouped-docid order) must produce
-    an index identical to the exchange plan's, and must NOT engage
-    when the file order breaks the proof."""
-    import pyarrow.dataset as ds
+    an index identical to the exchange plan's — postings bytes, the
+    in-task docstore's rows and Spark schema, query rows — and must
+    NOT engage when the file order breaks the proof."""
     import pyarrow.parquet as pq
     from sparkfts import BuildConfig, build_index
     from sparkfts.build import assign_docids_grouped
@@ -487,30 +487,273 @@ def test_direct_postings_feed_matches_exchange_plan(spark, tmp_path):
     g2 = assign_docids_grouped(spark.read.parquet(src2),
                                "conv_id", "turn_idx")
     assert g2._sparkfts_direct is None
-    # direct vs exchange: identical postings + identical query rows
+    # direct vs exchange: identical postings, docstore and query rows
     cfg = BuildConfig(num_shards=8, partitions=4)
     r1, r2 = str(tmp_path / "i1"), str(tmp_path / "i2")
-    build_index(spark, bare, r1, order_cols=["conv_id", "turn_idx"],
-                cfg=cfg)
-    mem = spark.createDataFrame(bare.toPandas())   # non-bare plan
-    build_index(spark, mem, r2, order_cols=["conv_id", "turn_idx"],
-                cfg=cfg)
+    s1 = build_index(spark, bare, r1, order_cols=["conv_id", "turn_idx"],
+                     cfg=cfg)
+    mem = spark.createDataFrame(bare.toPandas(), schema=bare.schema)
+    s2 = build_index(spark, mem, r2, order_cols=["conv_id", "turn_idx"],
+                     cfg=cfg)   # non-bare plan
+    assert s1["plan"] == {"feed": "direct", "docstore": "in_task",
+                          "declined": None}
+    assert s2["plan"] == {"feed": "exchange", "docstore": "spark",
+                          "declined": "exchange feed"}
+    assert_same_docstore(spark, r1, r2)
 
-    def postings(root):
-        t = (ds.dataset(root + "/postings", format="parquet",
-                        partitioning="hive").to_table().to_pandas()
-             .drop(columns=["enc_us"]))
-        for c in ("block_first", "block_last", "block_off", "block_n",
-                  "block_max_tf", "block_min_dl"):
-            t[c] = t[c].map(tuple)
-        return t.sort_values(["shard", "term", "chunk"],
-                             ignore_index=True)
-
-    pd.testing.assert_frame_equal(postings(r1), postings(r2))
+    pd.testing.assert_frame_equal(_postings(r1), _postings(r2))
     from sparkfts import FTSIndex
     a = FTSIndex(spark, r1).topk_pandas("batch window", k=8, mode="or")
     b = FTSIndex(spark, r2).topk_pandas("batch window", k=8, mode="or")
     pd.testing.assert_frame_equal(a, b)
+
+
+def docstore_files(root):
+    """The visible parquet files under each docstore shard directory."""
+    import os
+    d = os.path.join(root, "docstore")
+    return {sd: sorted(f for f in os.listdir(os.path.join(d, sd))
+                       if not f.startswith(("_", ".")))
+            for sd in os.listdir(d) if sd.startswith("shard=")}
+
+
+def assert_same_docstore(spark, r1, r2):
+    """Same rows, each file in docid order, and the same Spark schema in
+    both roots' docstores."""
+    import os
+
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    tabs = []
+    for root in (r1, r2):
+        tabs.append(ds.dataset(root + "/docstore", format="parquet",
+                               partitioning="hive").to_table()
+                    .sort_by("docid"))
+        for sd, names in docstore_files(root).items():
+            for f in names:
+                ids = pq.read_table(os.path.join(root, "docstore", sd, f),
+                                    columns=["docid"]).column(0)
+                assert (np.diff(ids.to_numpy()) > 0).all()
+    assert tabs[0].num_rows and tabs[0].equals(tabs[1])
+    d1 = spark.read.parquet(r1 + "/docstore")
+    d2 = spark.read.parquet(r2 + "/docstore")
+    assert d1.schema == d2.schema
+    assert d1.exceptAll(d2).count() == 0 == d2.exceptAll(d1).count()
+
+
+def _postings(root):
+    import pyarrow.dataset as ds
+    t = (ds.dataset(root + "/postings", format="parquet",
+                    partitioning="hive").to_table().to_pandas()
+         .drop(columns=["enc_us"]))
+    for c in ("block_first", "block_last", "block_off", "block_n",
+              "block_max_tf", "block_min_dl"):
+        t[c] = t[c].map(tuple)
+    return t.sort_values(["shard", "term", "chunk"], ignore_index=True)
+
+
+def _jobs_of(spark, fn):
+    """(fn's result, number of Spark jobs submitted while it ran, from
+    any driver thread)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    n0 = dag.numTotalJobs()
+    out = fn()
+    return out, dag.numTotalJobs() - n0
+
+
+def test_docstore_gate_declines_unsafe_type(spark, tmp_path):
+    """A store column whose Arrow type is outside the safe set (here a
+    decimal) keeps the direct postings feed but sends the docstore to
+    the Spark job, records the reason, and builds the same index; with
+    every column safe, the build runs one Spark job (no docstore job,
+    no broadcast of the conv offsets it joins).
+    A tz-aware timestamp declines the same way."""
+    import decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from sparkfts import build
+    from sparkfts.fixtures import write_transcripts_parquet
+    src = str(tmp_path / "t.parquet")
+    write_transcripts_parquet(src, 30, seed=3)
+    t = pq.read_table(src)
+    src2 = str(tmp_path / "dec.parquet")
+    pq.write_table(t.append_column("amt", pa.array(
+        [decimal.Decimal(i) / 100 for i in range(len(t))],
+        pa.decimal128(10, 2))), src2)
+    cfg = BuildConfig(num_shards=4, partitions=2)
+    order = ["conv_id", "turn_idx"]
+    bare = spark.read.parquet(src2)
+    r1, r2, r3 = (str(tmp_path / n) for n in ("i1", "i2", "i3"))
+    s1, jobs_spark = _jobs_of(spark, lambda: build_index(
+        spark, bare, r1, order_cols=order, cfg=cfg))
+    assert s1["plan"]["feed"] == "direct"
+    assert s1["plan"]["docstore"] == "spark"
+    assert "'amt'" in s1["plan"]["declined"]
+    s2 = build_index(spark, spark.createDataFrame(bare.toPandas(),
+                                                  schema=bare.schema),
+                     r2, order_cols=order, cfg=cfg)
+    assert s2["plan"]["feed"] == "exchange"
+    assert_same_docstore(spark, r1, r2)
+    pd.testing.assert_frame_equal(_postings(r1), _postings(r2))
+    # the same corpus without the decimal: the one postings write job
+    plain = spark.read.parquet(src)
+    s3, jobs_in_task = _jobs_of(spark, lambda: build_index(
+        spark, plain, r3, order_cols=order, cfg=cfg))
+    assert s3["plan"]["docstore"] == "in_task"
+    assert jobs_in_task == 1 < jobs_spark   # the postings write only
+    pd.testing.assert_frame_equal(_postings(r3), _postings(r1))
+    # a tz-aware timestamp column is outside the safe set too
+    src3 = str(tmp_path / "tz.parquet")
+    pq.write_table(t.set_column(
+        t.schema.get_field_index("ts"), "ts",
+        t.column("ts").cast(pa.timestamp("us", tz="UTC"))), src3)
+    tz = spark.read.parquet(src3)
+    g = build.assign_docids_grouped(tz, "conv_id", "turn_idx")
+    ok, why = build._docstore_in_task_gate(
+        tz, tz.columns, g._sparkfts_direct, True, 1, "snappy")
+    assert not ok and "'ts'" in why
+
+
+def test_docstore_safe_types_round_trip(spark, tmp_path, monkeypatch):
+    """Each Arrow type of the in-task docstore's safe set reads back in
+    Spark as the type the set maps it to, and the in-task docstore
+    equals the Spark docstore job's output on the same input: rows,
+    order within each shard and Spark schema."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+    from sparkfts import build
+    from sparkfts.fixtures import write_transcripts_parquet
+    src = str(tmp_path / "t.parquet")
+    write_transcripts_parquet(src, 20, seed=4)
+    t = pq.read_table(src)
+    n = len(t)
+    vals = pa.array(np.arange(n, dtype=np.int32) % 7)
+    nulls = pa.array(np.arange(n) % 11 == 0)
+    safe = build._docstore_safe_types()
+    for i, at in enumerate(safe):
+        v = (vals.cast(pa.string()) if pa.types.is_binary(at)
+             else vals.cast(pa.int64()) if pa.types.is_timestamp(at)
+             else vals).cast(at)
+        t = t.append_column(f"c{i}", pc.if_else(nulls, None, v))
+    src2 = str(tmp_path / "typed.parquet")
+    pq.write_table(t, src2)
+    bare = spark.read.parquet(src2)
+    for i, st in enumerate(safe.values()):
+        assert bare.schema[f"c{i}"].dataType == st
+    assert isinstance(bare.schema["ts"].dataType, T.TimestampNTZType)
+    cfg = BuildConfig(num_shards=4, partitions=2)
+    r1, r2 = str(tmp_path / "i1"), str(tmp_path / "i2")
+    s1 = build_index(spark, bare, r1, order_cols=["conv_id", "turn_idx"],
+                     cfg=cfg)
+    assert s1["plan"]["docstore"] == "in_task"
+    monkeypatch.setattr(build, "_docstore_in_task_gate",
+                        lambda *a: (False, "forced"))
+    s2 = build_index(spark, bare, r2, order_cols=["conv_id", "turn_idx"],
+                     cfg=cfg)
+    assert s2["plan"] == {"feed": "direct", "docstore": "spark",
+                          "declined": "forced"}
+    assert_same_docstore(spark, r1, r2)
+    assert all(len(v) == 1 for v in docstore_files(r1).values())
+
+
+def test_direct_docstore_resume_one_file_per_shard(spark, tmp_path):
+    """Resume on the direct feed: the driver clears only the todo
+    shards' docstore directories (a stale uncommitted file included),
+    each shard directory ends with exactly one visible file, and the
+    rows equal a clean build's."""
+    import os
+    import shutil
+
+    from sparkfts.fixtures import write_transcripts_parquet
+    src = str(tmp_path / "t.parquet")
+    write_transcripts_parquet(src, 30, seed=6)
+    cfg = BuildConfig(num_shards=4, partitions=2)
+    order = ["conv_id", "turn_idx"]
+    r, clean = str(tmp_path / "r"), str(tmp_path / "clean")
+    s = build_index(spark, spark.read.parquet(src), r, order_cols=order,
+                    cfg=cfg, _only_shards=[0, 2])
+    assert s["plan"]["docstore"] == "in_task"
+    files = docstore_files(r)
+    assert sorted(files) == ["shard=0", "shard=2"]
+    # a killed build's uncommitted shard-1 file
+    os.makedirs(os.path.join(r, "docstore", "shard=1"))
+    shutil.copy(os.path.join(r, "docstore", "shard=0", files["shard=0"][0]),
+                os.path.join(r, "docstore", "shard=1", "part-stale.parquet"))
+    s = build_index(spark, spark.read.parquet(src), r, order_cols=order,
+                    cfg=cfg, resume=True)
+    assert s["built_shards"] == [1, 3]
+    assert s["plan"]["docstore"] == "in_task"
+    files = docstore_files(r)
+    assert sorted(files) == [f"shard={i}" for i in range(4)]
+    assert all(len(v) == 1 for v in files.values())
+    build_index(spark, spark.read.parquet(src), clean, order_cols=order,
+                cfg=cfg)
+    assert_same_docstore(spark, r, clean)
+
+
+def test_direct_reader_rerun_keeps_one_file(tmp_path):
+    """A retried or speculative attempt re-runs the reader for its
+    shards: the shard's docstore directory still holds one file, named
+    as before, with the span's rows (no Spark needed)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from sparkfts.build import _conv_sizes_local, _direct_reader
+    from sparkfts.fixtures import write_transcripts_parquet
+    src = str(tmp_path / "t.parquet")
+    write_transcripts_parquet(src, 20, seed=SEED)
+    _, direct = _conv_sizes_local([src], "conv_id", "turn_idx")
+    cols = pq.read_schema(src).names
+    d = str(tmp_path / "docstore")
+    store = {"dir": d, "cols": cols, "name": "part-00000-b.parquet",
+             "codec": "snappy",
+             "schema": pa.schema([("docid", pa.int64())]
+                                 + [(c, direct["types"][c]) for c in cols])}
+    n = direct["n"]
+    dps = -(-n // 2)
+    reader = _direct_reader(direct, "text", [0, 1], dps, 100,
+                            BuildConfig(num_shards=2), store)
+    ranks = pa.RecordBatch.from_arrays([pa.array([1], pa.int64())],
+                                       names=["id"])
+    for _ in range(2):
+        assert {rb.column("shard")[0].as_py()
+                for rb in reader(iter([ranks]))} == {1}
+        assert os.listdir(d) == ["shard=1"]
+        assert os.listdir(os.path.join(d, "shard=1")) == [store["name"]]
+    got = pq.read_table(os.path.join(d, "shard=1", store["name"]))
+    assert got.column("docid").to_pylist() == list(range(100 + dps,
+                                                          100 + n))
+    assert got.drop(["docid"]).equals(pq.read_table(src).slice(dps))
+
+
+def test_enc_us_times_one_shard():
+    """Each shard's enc_us times that shard alone: a one-doc shard read
+    after a large one in the same kernel call takes less (a timer
+    started once per call would carry the first shard's time on)."""
+    import pyarrow as pa
+    from sparkfts.build import _make_shard_kernel
+    texts = make_transcripts(300, seed=SEED)["text"]
+    n = len(texts)
+
+    def batch(shard, ids, txt):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(np.full(len(ids), shard, np.int32)),
+             pa.array(np.asarray(ids, np.int64)),
+             pa.array(list(txt), pa.string())],
+            names=["shard", "docid", "text"])
+
+    enc: dict[int, list] = {}
+    for rb in _make_shard_kernel(BuildConfig())(iter(
+            [batch(0, range(n), texts), batch(1, [n], ["alpha query"])])):
+        for sh, us in zip(rb.column("shard").to_pylist(),
+                          rb.column("enc_us").to_pylist()):
+            enc.setdefault(sh, []).append(us)
+    assert sorted(enc) == [0, 1]
+    assert max(enc[1]) < min(enc[0])
 
 
 def test_direct_feed_multi_file_input(spark, tmp_path):
